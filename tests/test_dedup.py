@@ -212,14 +212,3 @@ def test_ngram_jaccard_bitmap_filter_lossless_on_repetitive_corpus(spark):
     assert set(got) == set(want) and want
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9
-
-
-def test_ngram_jaccard_dfreq_broadcast_parity(spark, docs):
-    """r6: broadcast_dfreq only changes the prefix join's physical shape;
-    the pair set must be identical to the shuffle-join default."""
-    base = {(r.id_a, r.id_b, r.jaccard)
-            for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()}
-    bcast = {(r.id_a, r.id_b, r.jaccard)
-             for r in ngram_jaccard_pairs(
-                 docs, threshold=0.5, broadcast_dfreq=True).collect()}
-    assert base == bcast and base

@@ -130,3 +130,25 @@ def test_list_segments_skips_hidden_and_inflight_paths(tmp_path):
     (wal / "_SUCCESS").write_bytes(b"")
     got = list_segments(str(wal))
     assert got == [str(wal / "segment=0" / "part-00000.parquet")]
+
+
+def test_parquet_stats_reads_tombstones_and_max_lsn_from_footer(tmp_path):
+    """Tombstones are the _row_hash null count (row groups that are all
+    tombstones carry only a null count, no min/max); a footer without
+    statistics is an error, not a silent zero."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table({
+        "conv_id": ["a", "b", "c", "d"],
+        "_lsn": pa.array([7, 3, 9, 5], pa.int64()),
+        "_row_hash": pa.array([11, None, None, None], pa.int64()),
+    })
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(t, path, row_group_size=2)  # row group 2 is all NULL
+    rows, nbytes, tombstones, max_lsn = LocalManifestIO().parquet_stats(path)
+    assert (rows, tombstones, max_lsn) == (4, 3, 9) and nbytes == os.path.getsize(path)
+
+    pq.write_table(t, path, write_statistics=False)
+    with pytest.raises(ValueError, match="footer statistics"):
+        LocalManifestIO().parquet_stats(path)

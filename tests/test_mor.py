@@ -146,8 +146,12 @@ def test_mor_apply_runs_single_action_no_collect(spark, tmp_path, monkeypatch):
     """The MOR fast path must run exactly ONE action per batch (the delta
     write) and ZERO driver collects — the touched-bucket set and observe()
     metrics ride the write. Regression guard against reintroducing the
-    separate touched-buckets scan (a full extra pass over every batch)."""
-    from pyspark.sql import DataFrame
+    separate touched-buckets scan (a full extra pass over every batch).
+    The same holds for compact() and rebucket(): no stats pass after the
+    rewrite."""
+    # the concrete class: Spark 4's classic DataFrame overrides collect and
+    # count, so patching the pyspark.sql.DataFrame base would count nothing
+    DataFrame = type(spark.range(0))
 
     lake = LakeTable.create(spark, str(tmp_path / "lake_jobs"), TRANSCRIPT_SCHEMA, num_buckets=4)
     batch = make_events(spark, [
@@ -166,6 +170,15 @@ def test_mor_apply_runs_single_action_no_collect(spark, tmp_path, monkeypatch):
     res = apply_batch(lake, batch, batch_id=1, mode="mor")
     assert calls == {"collect": 0, "count": 0}, calls
     assert res["rows_written"] == 3 and res["buckets_touched"] >= 1
+
+    # maintenance: compact() and rebucket() take their manifest stats from
+    # the written files' footers, so the rewrite is their only action
+    snap = lake.compact()
+    assert calls == {"collect": 0, "count": 0}, calls
+    assert sum(b["rows"] for b in snap["buckets"].values()) == 3
+    snap = lake.rebucket(8)
+    assert calls == {"collect": 0, "count": 0}, calls
+    assert sum(b["rows"] for b in snap["buckets"].values()) == 3
 
 
 def test_crash_between_compaction_write_and_commit(spark, tmp_path, wal_dir, monkeypatch):

@@ -78,8 +78,7 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
                         n: int = 3, threshold: float = 0.8,
                         max_doc_freq: int | None = None,
                         prefix_filter: bool = True,
-                        broadcast_candidates: bool = True,
-                        broadcast_dfreq: bool = False):
+                        broadcast_candidates: bool = True):
     """All pairs with word-n-gram Jaccard ≥ threshold. EXACT output.
 
     Scale shape = prefix-filtered similarity join (Bayardo et al. AllPairs /
@@ -98,16 +97,6 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     default — the prefix filter already bounds hot-shingle fanout).
     ``prefix_filter=False`` falls back to the plain inverted-index join
     (useful for tiny corpora / debugging).
-
-    ``broadcast_dfreq=True`` broadcasts the per-shingle document-frequency
-    table into the prefix-ranking join, removing the postings' shuffle by
-    shingle hash (r6: −0.7 s of q21 at a 50k-doc corpus). Caller
-    knowledge, OFF by default: the df table has one row per DISTINCT
-    shingle, which is unbounded on an open-vocabulary corpus (billions of
-    shingles at 100 TB → broadcast OOM) but tightly bounded when the
-    caller knows the vocabulary is small (the bench corpus draws from a
-    31-token vocabulary, ≤ ~30k distinct 3-gram shingles at ANY scale
-    factor).
     """
     df = _spread(df)  # single-row-group inputs: shingle on every core
     sh = df.select(
@@ -134,8 +123,6 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
         ex = ex.join(keep, "_gh")
     if prefix_filter:
         dfreq = ex.groupBy("_gh").agg(F.count(F.lit(1)).alias("_df"))
-        if broadcast_dfreq:
-            dfreq = F.broadcast(dfreq)
         wdoc = W.partitionBy("_id").orderBy("_df", "_gh")
         prefix_len = F.floor((1.0 - threshold) * F.col("_size")).cast("int") + 1
         ex = (

@@ -8,8 +8,9 @@ in-batch dedup to a full cross-batch CDC apply.
 Execution design (what survives 100 TB):
 
 1. **LWW as partial aggregation.** ``max_by(struct(payload), struct(ts,
-   lsn))`` under ``groupBy`` — Catalyst plans a hash aggregate with a
-   map-side partial phase, so a hot key (one turn updated millions of times)
+   lsn))`` under ``groupBy`` (``lww_reduce``/``lww_order`` in
+   sources/lake.py, shared with the MOR read path) — Catalyst plans a hash
+   aggregate with a map-side partial phase, so a hot key (one turn updated millions of times)
    is reduced on every input partition *before* the shuffle: skew-safe
    without manual salting, AQE mops up residual imbalance. A window
    (`row_number`) would sort every event of the hot key into one task.
@@ -19,7 +20,9 @@ Execution design (what survives 100 TB):
    row-hash) is merged against a hash-only read of the current state
    (parquet column pruning — the text column is not read). One shuffle of
    ~40 bytes/key instead of the full row. Output: per-bucket changed-row
-   counts, live-row counts, and high-watermark LSNs, in one collect.
+   counts, event counts and high-watermark LSNs, in one collect. The
+   rewritten buckets' live-row and tombstone counts are not aggregated at
+   all: the lake reads them from the written files' parquet footers.
 
 3. **Copy-on-write restricted to changed buckets.** Only buckets with real
    changes are rewritten (redelivered/no-op batches rewrite nothing — the
@@ -58,7 +61,14 @@ from ..schema import (
     META_LSN,
     META_ROW_HASH,
 )
-from ..sources.lake import LakeTable, SnapshotConflict, bucket_expr, row_hash_expr
+from ..sources.lake import (
+    LakeTable,
+    SnapshotConflict,
+    bucket_expr,
+    lww_order,
+    lww_reduce,
+    row_hash_expr,
+)
 
 ENVELOPE_COLS = ("op", "lsn", "event_ts")
 
@@ -74,36 +84,6 @@ ENVELOPE_COLS = ("op", "lsn", "event_ts")
 #: ~8M × 30 B ≈ 240 MB spread over the cluster; deployments can tune it
 #: per-table via this module constant.
 FUSED_DETECT_MAX_ROWS = 8_000_000
-
-_TS_FLOOR = "CAST('1970-01-01 00:00:00' AS TIMESTAMP)"
-
-
-def _order_struct(ts_col, lsn_col):
-    """LWW ordering key: (coalesce(ts, epoch), lsn) — the reference's
-    desc(coalesce(last_modified_t, 0)) with the WAL position as tiebreaker."""
-    return F.struct(
-        F.coalesce(ts_col, F.expr(_TS_FLOOR)).alias("o_ts"), lsn_col.alias("o_lsn")
-    )
-
-
-def lww_winners(env_df, payload_cols: list[str]):
-    """One surviving event per (conv_id, turn_idx): greatest (ts, lsn).
-
-    Partial-aggregate formulation (module docstring #1). Exact duplicate
-    redeliveries (same lsn) are absorbed: identical order key + payload →
-    identical winner either way.
-    """
-    nonkey = [c for c in payload_cols if c not in KEY_COLS]
-    carried = F.struct(*[F.col(c) for c in nonkey], F.col("op"), F.col("lsn"))
-    agg = env_df.groupBy(*KEY_COLS).agg(
-        F.max_by(carried, _order_struct(F.col("ts"), F.col("lsn"))).alias("_w"),
-    )
-    return agg.select(
-        *KEY_COLS,
-        *[F.col(f"_w.{c}").alias(c) for c in nonkey],
-        F.col("_w.op").alias("op"),
-        F.col("_w.lsn").alias(META_LSN),
-    )
 
 
 def apply_batch(
@@ -185,6 +165,10 @@ def _apply_batch_once(
     )
     snap, unified = lake.evolve_schema(snap, incoming_user)
     payload_cols = [f.name for f in unified.fields]
+    state_nonkey = [
+        *[c for c in payload_cols if c not in KEY_COLS],
+        META_LSN, META_DELETED, META_ROW_HASH,
+    ]
     num_buckets = snap["num_buckets"]
 
     # ---- quality gate (reference P3: null/empty/sentinel key filter) ---------
@@ -203,9 +187,13 @@ def _apply_batch_once(
         F.max("ts").alias("max_ts"),
     )
     have = set(batch_df.columns)
+    # events as physical lake rows (the layout lake.read(with_meta=True)
+    # returns). The tombstone encoding lives here only: a winning op='D'
+    # persists as _deleted=true with a NULL _row_hash.
+    deleted = F.col("op") == "D"
     env = batch_df.filter(gate).select(
         F.col("op"),
-        F.col("lsn").cast("long").alias("lsn"),
+        F.col("lsn").cast("long").alias(META_LSN),
         *[
             (
                 F.col(f.name).cast(f.dataType)
@@ -214,6 +202,13 @@ def _apply_batch_once(
             ).alias(f.name)
             for f in unified.fields
         ],
+    ).select(
+        *payload_cols,
+        META_LSN,
+        deleted.alias(META_DELETED),
+        F.when(deleted, F.lit(None).cast("long"))
+        .otherwise(row_hash_expr(payload_cols))
+        .alias(META_ROW_HASH),
     )
 
     def _obs_pre():
@@ -226,7 +221,7 @@ def _apply_batch_once(
 
     def _commit_empty(pre):
         new_snap = lake.commit(
-            snap, {}, {}, {}, stream_id, batch_id,
+            snap, {}, {}, stream_id, batch_id,
             {"batch_id": batch_id, "events_in": int(pre["n_raw"]), "empty_batch": True},
             stream_hwm=segment_hwm, watermark_ts=_batch_watermark(pre),
         )
@@ -237,91 +232,90 @@ def _apply_batch_once(
             "buckets_rewritten": 0,
         }
 
-    _t["plan"] = time.time()
+    def _write_winners(rows):
+        """LWW-reduce physical rows per key and write them bucket by bucket.
 
-    # ---- MOR fast path: append in-batch winners as delta files ---------------
-    # One Spark job total: the winners write IS the first action (no separate
-    # touched-buckets scan — write_bucket_files already reports the buckets
-    # it produced, which is exactly the touched set after LWW). ONE shuffle
-    # total: the batch is repartitioned by bucket up front (bucket is a
-    # function of conv_id, so adding it to the LWW groupBy changes no
-    # group), the aggregate reuses that exchange (subset rule) and the
-    # bucket-partitioned write needs no further shuffle — the previous
-    # lww_winners-then-repartition form shuffled the winners a second time
-    # just to lay them out by bucket.
-    if mode == "mor":
-        nonkey_m = [c for c in payload_cols if c not in KEY_COLS]
-        carried_m = F.struct(*[F.col(c) for c in nonkey_m], F.col("op"), F.col("lsn"))
-        env_b = env.withColumn(META_BUCKET, bucket_expr(num_buckets)).repartition(
+        ONE shuffle: the rows are repartitioned by bucket up front (bucket
+        is a function of conv_id, so leading the LWW groupBy with it changes
+        no group), the aggregate reuses that exchange (HashPartitioning
+        (_bucket) satisfies the ClusteredDistribution of groupBy(_bucket,
+        conv_id, turn_idx) by the subset rule) and the bucket-partitioned
+        write needs no further shuffle. With files_per_bucket == 1 the
+        partitioning is _bucket ALONE: each bucket lands in exactly one
+        task, so the dynamic-partition writer emits exactly one file per
+        bucket (spread over (_bucket, conv_id), every task writes its own
+        file per bucket: 13 files/bucket/epoch measured on a 200k-row
+        table). A hot bucket is one task, the same unit compact()/rebucket()
+        use; skew across keys within a bucket is absorbed by map-side
+        partial aggregation, and maybe_rebucket is the scale lever. Callers
+        that ask for files_per_bucket > 1 want several writer tasks per
+        bucket and keep the conv_id spread."""
+        by_bucket = rows.withColumn(META_BUCKET, bucket_expr(num_buckets)).repartition(
             *(
                 [F.col(META_BUCKET)]
                 if files_per_bucket <= 1
                 else [F.col(META_BUCKET), F.col("conv_id")]
             )
         )
-        winners = (
-            env_b.groupBy(META_BUCKET, *KEY_COLS)
-            .agg(
-                F.max_by(carried_m, _order_struct(F.col("ts"), F.col("lsn"))).alias("_w")
-            )
-            .select(
-                META_BUCKET,
-                *KEY_COLS,
-                *[F.col(f"_w.{c}").alias(c) for c in nonkey_m],
-                F.col("_w.op").alias("op"),
-                F.col("_w.lsn").alias(META_LSN),
-            )
-            .withColumn(META_DELETED, F.col("op") == "D")
-            .withColumn(
-                META_ROW_HASH,
-                F.when(F.col("op") == "D", F.lit(None).cast("long")).otherwise(
-                    row_hash_expr(payload_cols)
-                ),
-            )
-            .drop("op")
-        )
-        replaced = lake.write_bucket_files(
-            winners, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket,
+        return lake.write_bucket_files(
+            lww_reduce(by_bucket, [META_BUCKET, *KEY_COLS], state_nonkey),
+            snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket,
             pre_partitioned=True,
         )
+
+    def _commit(pre, replaced, bucket_hwm, per_mode, append=False):
+        """The tail both modes share: batch metrics, the manifest commit,
+        then the commit phase."""
+
+        def phases():
+            ks = list(_t)
+            return {ks[i]: round(_t[ks[i]] - _t[ks[i - 1]], 3) for i in range(1, len(ks))}
+
+        wall = round(time.time() - t0, 3)
+        metrics = {
+            "batch_id": batch_id,
+            "events_in": int(pre["n_raw"]),
+            "gated_out": int(pre["n_gated_out"] or 0),
+            **per_mode,
+            "rows_written": int(sum(fe["rows"] for fs in replaced.values() for fe in fs)),
+            "wall_sec": wall,
+            # pre-commit phases land IN the manifest (post-hoc regression
+            # attribution from committed metrics); the commit duration is
+            # added to the returned dict once the commit completes
+            "phase_sec": phases(),
+            "events_per_sec": round(int(pre["n_raw"]) / wall, 1) if wall > 0 else None,
+        }
+        new_snap = lake.commit(
+            snap, replaced, bucket_hwm, stream_id, batch_id, metrics,
+            append=append, stream_hwm=segment_hwm, watermark_ts=_batch_watermark(pre),
+        )
+        _t["commit"] = time.time()
+        metrics["phase_sec"] = phases()
+        metrics["snapshot_id"] = new_snap["snapshot_id"]
+        return metrics
+
+    _t["plan"] = time.time()
+
+    # ---- MOR fast path: append in-batch winners as delta files ---------------
+    # One Spark job total: the winners write IS the first action (no separate
+    # touched-buckets scan — write_bucket_files already reports the buckets
+    # it produced, which is exactly the touched set after LWW).
+    if mode == "mor":
+        replaced = _write_winners(env)
         pre = _obs_pre()
         _t["delta_write"] = time.time()
         if not replaced:
             return _commit_empty(pre)
-        rows_written = sum(fe["rows"] for fs in replaced.values() for fe in fs)
         hwm = int(pre["max_lsn"] or 0)
-        metrics = {
-            "batch_id": batch_id,
-            "mode": "mor",
-            "events_in": int(pre["n_raw"]),
-            "gated_out": int(pre["n_gated_out"] or 0),
-            "buckets_touched": len(replaced),
-            "delta_files": sum(len(fs) for fs in replaced.values()),
-            "rows_written": int(rows_written),
-            "wall_sec": round(time.time() - t0, 3),
-            "phase_sec": {
-                _pk[i]: round(_t[_pk[i]] - _t[_pk[i - 1]], 3)
-                for _pk in [list(_t)]
-                for i in range(1, len(_pk))
+        return _commit(
+            pre, replaced, {b: hwm for b in replaced},
+            {
+                "mode": "mor",
+                "buckets_touched": len(replaced),
+                "delta_files": sum(len(fs) for fs in replaced.values()),
             },
-        }
-        metrics["events_per_sec"] = (
-            round(metrics["events_in"] / metrics["wall_sec"], 1)
-            if metrics["wall_sec"] > 0
-            else None
+            append=True,
         )
-        new_snap = lake.commit(
-            snap, replaced, {b: hwm for b in replaced}, {}, stream_id, batch_id,
-            metrics, append=True, stream_hwm=segment_hwm,
-            watermark_ts=_batch_watermark(pre),
-        )
-        _t["commit"] = time.time()
-        ks = list(_t)
-        metrics["phase_sec"] = dict(
-            metrics["phase_sec"], commit=round(_t["commit"] - _t[ks[-2]], 3)
-        )
-        metrics["snapshot_id"] = new_snap["snapshot_id"]
-        return metrics
 
     # ---- action 1 (COW only): skinny in-batch LWW pre-aggregate --------------
     # ONE narrow scan of the batch serves BOTH the touched-bucket set and the
@@ -352,18 +346,22 @@ def _apply_batch_once(
         for fe in b["files"]
     )
     fused = total_state_rows <= FUSED_DETECT_MAX_ROWS
-    sk_rows = env.select(
-        *KEY_COLS,
-        F.when(F.col("op") == "D", F.lit(None).cast("long"))
-        .otherwise(row_hash_expr(payload_cols))
-        .alias("_h"),
-        (F.col("op") == "D").alias("_d"),
-        F.coalesce(F.col("ts"), F.expr(_TS_FLOOR)).alias("_ts"),
-        F.col("lsn").alias("_lsn_w"),
-        F.lit(1).cast("long").alias("_n_events"),
-        F.col("lsn").alias("_max_lsn"),
-        F.lit("new").alias("_src"),
-    )
+
+    def _skinny(rows, cur: bool):
+        """Hash-only projection of physical rows (module docstring #2).
+        Batch rows count as events and carry their lsn into the HWM."""
+        return rows.select(
+            *KEY_COLS,
+            F.col(META_ROW_HASH).alias("_h"),
+            F.col(META_DELETED).alias("_d"),
+            "ts",
+            META_LSN,
+            F.lit(0 if cur else 1).cast("long").alias("_n_events"),
+            (F.lit(None).cast("long") if cur else F.col(META_LSN)).alias("_max_lsn"),
+            F.lit(cur).alias("_cur"),
+        )
+
+    sk_rows = _skinny(env, cur=False)
     if fused:
         # RAW batch rows feed the detection aggregate directly: a per-key
         # pre-aggregate here would shuffle the batch by key only for the
@@ -377,22 +375,16 @@ def _apply_batch_once(
         sk_batch = (
             sk_rows.groupBy(*KEY_COLS)
             .agg(
-                F.max_by(
-                    F.struct("_h", "_d", "_ts", "_lsn_w"),
-                    F.struct(F.col("_ts"), F.col("_lsn_w")),
-                ).alias("_w"),
+                F.max_by(F.struct("_h", "_d", "ts", META_LSN), lww_order()).alias("_w"),
                 F.sum("_n_events").alias("_n_events"),
                 F.max("_max_lsn").alias("_max_lsn"),
             )
             .select(
                 *KEY_COLS,
-                F.col("_w._h").alias("_h"),
-                F.col("_w._d").alias("_d"),
-                F.col("_w._ts").alias("_ts"),
-                F.col("_w._lsn_w").alias("_lsn_w"),
+                *[F.col(f"_w.{c}").alias(c) for c in ("_h", "_d", "ts", META_LSN)],
                 "_n_events",
                 "_max_lsn",
-                F.lit("new").alias("_src"),
+                F.lit(False).alias("_cur"),
             )
             .localCheckpoint(eager=True)
         )
@@ -410,32 +402,23 @@ def _apply_batch_once(
 
     # ---- action 2: skinny change detection (hash-only, no payload moves) -----
     # Batch winners union current state (touched buckets only on the large-
-    # table path) → one LWW aggregate; output: per-bucket changed/live/dead
-    # counts + HWMs.
-    sk_cur = (
-        lake.read(buckets=read_buckets, include_deleted=True, with_meta=True, snap=snap)
-        .select(
-            *KEY_COLS,
-            F.col(META_ROW_HASH).alias("_h"),
-            F.col(META_DELETED).alias("_d"),
-            F.coalesce(F.col("ts"), F.expr(_TS_FLOOR)).alias("_ts"),
-            F.col(META_LSN).alias("_lsn_w"),
-            F.lit(0).cast("long").alias("_n_events"),
-            F.lit(None).cast("long").alias("_max_lsn"),
-            F.lit("cur").alias("_src"),
-        )
+    # table path) → one LWW aggregate; output: per-bucket changed-row and
+    # event counts + HWMs.
+    sk_cur = _skinny(
+        lake.read(buckets=read_buckets, include_deleted=True, with_meta=True, snap=snap),
+        cur=True,
     )
+    cur = F.col("_cur")
     sk = (
         sk_batch.unionByName(sk_cur)
         .groupBy(*KEY_COLS)
         .agg(
             F.max_by(
-                F.struct(F.col("_h").alias("h"), F.col("_d").alias("d")),
-                F.struct(F.col("_ts"), F.col("_lsn_w")),
+                F.struct(F.col("_h").alias("h"), F.col("_d").alias("d")), lww_order()
             ).alias("_w"),
-            F.max(F.when(F.col("_src") == "cur", F.col("_h"))).alias("_cur_h"),
-            F.max(F.when(F.col("_src") == "cur", F.col("_d").cast("int"))).alias("_cur_d"),
-            F.max((F.col("_src") == "cur").cast("int")).alias("_cur_exists"),
+            F.max(F.when(cur, F.col("_h"))).alias("_cur_h"),
+            F.max(F.when(cur, F.col("_d").cast("int"))).alias("_cur_d"),
+            F.max(cur.cast("int")).alias("_cur_exists"),
             F.sum("_n_events").alias("_n_events"),
             F.max("_max_lsn").alias("_max_lsn"),
         )
@@ -446,15 +429,12 @@ def _apply_batch_once(
                 | ~F.col("_w.h").eqNullSafe(F.col("_cur_h"))
                 | (F.col("_w.d").cast("int") != F.coalesce(F.col("_cur_d"), F.lit(0)))
             ).alias("_changed"),
-            F.col("_w.d").alias("_del"),
             "_n_events",
             "_max_lsn",
         )
         .groupBy(META_BUCKET)
         .agg(
             F.sum(F.col("_changed").cast("int")).alias("n_changed"),
-            F.sum(F.when(~F.col("_del"), 1).otherwise(0)).alias("live_rows"),
-            F.sum(F.when(F.col("_del"), 1).otherwise(0)).alias("dead_rows"),
             F.sum("_n_events").alias("n_events"),
             F.max("_max_lsn").alias("hwm"),
         )
@@ -471,114 +451,26 @@ def _apply_batch_once(
         if not touched:
             return _commit_empty(pre)
     changed_buckets = sorted(int(r[META_BUCKET]) for r in sk if r["n_changed"] > 0)
-    bucket_rows = {int(r[META_BUCKET]): int(r["live_rows"]) for r in sk}
-    bucket_dead = {int(r[META_BUCKET]): int(r["dead_rows"]) for r in sk}
     bucket_hwm = {int(r[META_BUCKET]): int(r["hwm"]) for r in sk if r["hwm"] is not None}
 
     # ---- action 3: full-payload merge + write, changed buckets only ----------
-    # ONE payload shuffle end-to-end: raw batch events union current state,
-    # repartitioned by the bucket column. HashPartitioning(_bucket) satisfies
-    # the ClusteredDistribution of groupBy(_bucket, conv_id, turn_idx)
-    # (subset rule), so the LWW aggregate reuses that exchange, its output
-    # stays bucket-clustered, and the partitioned write needs no further
-    # shuffle. With files_per_bucket == 1 the partitioning is _bucket ALONE:
-    # each bucket lands in exactly one task, so the dynamic-partition writer
-    # emits exactly one file per bucket — partitioning by (_bucket, conv_id)
-    # here spread every bucket over every shuffle task and each task wrote
-    # its own file per bucket (~tasks × buckets tiny files per epoch; the
-    # next batch then re-read them all and the driver footer-stat'ed each —
-    # the guide §6 small-files trap, measured at 13 files/bucket/epoch and
-    # a3_write 6.5 s for a 200k-row table). A hot bucket is one task, the
-    # same unit compact()/rebucket() already use; within-bucket skew across
-    # keys is still absorbed by map-side partial aggregation, and bucket
-    # count evolution (maybe_rebucket) is the scale lever. Callers that ask
-    # for files_per_bucket > 1 keep the conv_id spread — they explicitly
-    # want multiple writer tasks per bucket.
+    # ONE payload shuffle end-to-end (see _write_winners): raw batch events
+    # of the changed buckets union their current state.
     replaced: dict[int, list[dict]] = {}
-    rows_written = 0
     if changed_buckets:
-        nonkey = [c for c in payload_cols if c not in KEY_COLS]
-        state_nonkey = [*nonkey, META_LSN, META_DELETED, META_ROW_HASH]
-        in_changed = bucket_expr(num_buckets).isin([int(b) for b in changed_buckets])
-        batch_side = env.filter(in_changed).select(
-            *KEY_COLS,
-            *nonkey,
-            F.col("lsn").alias(META_LSN),
-            (F.col("op") == "D").alias(META_DELETED),
-            F.when(F.col("op") == "D", F.lit(None).cast("long"))
-            .otherwise(row_hash_expr(payload_cols))
-            .alias(META_ROW_HASH),
-        )
-        current_side = lake.read(
-            buckets=list(changed_buckets), include_deleted=True, with_meta=True, snap=snap
-        ).select(*batch_side.columns)
-        carried = F.struct(*[F.col(c) for c in state_nonkey])
-        merged = (
-            batch_side.unionByName(current_side)
-            .withColumn(META_BUCKET, bucket_expr(num_buckets))
-            .repartition(
-                *(
-                    [F.col(META_BUCKET)]
-                    if files_per_bucket <= 1
-                    else [F.col(META_BUCKET), F.col("conv_id")]
+        replaced = _write_winners(
+            env.filter(bucket_expr(num_buckets).isin(changed_buckets)).unionByName(
+                lake.read(
+                    buckets=changed_buckets, include_deleted=True, with_meta=True, snap=snap
                 )
             )
-            .groupBy(META_BUCKET, *KEY_COLS)
-            .agg(
-                F.max_by(carried, _order_struct(F.col("ts"), F.col(META_LSN))).alias("_w")
-            )
-            .select(
-                META_BUCKET,
-                *KEY_COLS,
-                *[F.col(f"_w.{c}").alias(c) for c in state_nonkey],
-            )
         )
-        replaced = lake.write_bucket_files(
-            merged, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket,
-            pre_partitioned=True,
-        )
-        rows_written = sum(fe["rows"] for fs in replaced.values() for fe in fs)
     _t["a3_write"] = time.time()
-
-    metrics = {
-        "batch_id": batch_id,
-        "events_in": int(pre["n_raw"]),
-        "gated_out": int(pre["n_gated_out"] or 0),
-        "buckets_touched": len(touched),
-        "buckets_rewritten": len(changed_buckets),
-        "rows_written": int(rows_written),
-        "per_bucket_events": {int(r[META_BUCKET]): int(r["n_events"]) for r in sk},
-        "wall_sec": round(time.time() - t0, 3),
-        # pre-commit phases land IN the manifest (post-hoc regression
-        # attribution from committed metrics); the commit duration itself is
-        # appended to the returned dict after the commit completes
-        "phase_sec": {
-            _pk[i]: round(_t[_pk[i]] - _t[_pk[i - 1]], 3)
-            for _pk in [list(_t)]
-            for i in range(1, len(_pk))
+    return _commit(
+        pre, replaced, bucket_hwm,
+        {
+            "buckets_touched": len(touched),
+            "buckets_rewritten": len(changed_buckets),
+            "per_bucket_events": {int(r[META_BUCKET]): int(r["n_events"]) for r in sk},
         },
-    }
-    metrics["events_per_sec"] = (
-        round(metrics["events_in"] / metrics["wall_sec"], 1)
-        if metrics["wall_sec"] > 0
-        else None
     )
-    new_snap = lake.commit(
-        snap,
-        replaced,
-        bucket_hwm,
-        {b: bucket_rows[b] for b in changed_buckets},
-        stream_id,
-        batch_id,
-        metrics,
-        stream_hwm=segment_hwm,
-        watermark_ts=_batch_watermark(pre),
-        bucket_tombstones={b: bucket_dead[b] for b in changed_buckets},
-    )
-    _t["commit"] = time.time()
-    ks = list(_t)
-    metrics["phase_sec"] = dict(
-        metrics["phase_sec"], commit=round(_t["commit"] - _t[ks[-2]], 3)
-    )
-    metrics["snapshot_id"] = new_snap["snapshot_id"]
-    return metrics

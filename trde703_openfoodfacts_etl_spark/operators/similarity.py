@@ -1,23 +1,22 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, per the training-data-pipeline requirement:
+Every operator here takes its hyperplanes or centroids from corpus rows
+with fixed ids, so the exact result is recomputable in SQL (the DuckDB
+oracle of q28/q29):
 
-- :func:`cosine_topk` — exact brute force: broadcast the (small) probe set
-  against the corpus; dot products via ``zip_with``/``aggregate`` higher-order
-  functions (JVM, codegen — no Python in the hot path). O(|probes|·|corpus|):
-  the correctness baseline and fine whenever |probes| is bounded.
+- :func:`corpus_lsh_topk` — random-hyperplane LSH: a sign-bit bucket per
+  band, candidates share a band bucket, exact cosine re-ranks them. The
+  corpus is bucketed once (buckets are a pure function of the vector), so
+  the candidate search is an equi-join on bucket ids, not a cross join.
+- :func:`corpus_ivf_topk` — IVF: every vector goes to its nearest
+  pseudo-centroid; probes search only their ``nprobe`` nearest cells.
+- :func:`cosine_neardup_pairs` / :func:`cosine_neardup_pairs_matmul` —
+  blocked-exact near-duplicate pairs.
 
-- :func:`lsh_topk` — random-hyperplane LSH: sign-bit signature over H seeded
-  hyperplanes (vectorized pandas UDF → one int bucket per band), candidates
-  share a band bucket, exact cosine re-ranks candidates. The corpus is
-  bucketed ONCE (signatures are a pure function of the vector), so at scale
-  this is an equi-join on bucket ids instead of a cross join — the same
-  inverted-index shape as MinHash LSH.
-
-- :func:`ivf_topk` — IVF-style: k seeded pseudo-centroids (deterministic,
-  hash-derived), every vector assigned to its nearest centroid (pandas UDF,
-  numpy matmul per Arrow batch); probes search only the ``nprobe`` nearest
-  cells. The classic FAISS-IVF layout expressed as DataFrame joins.
+Dot products run either as JVM higher-order functions (the ``*_expr``
+forms, kept as parity references) or as numpy twins that sum left to right
+and so return bit-identical doubles (:func:`cosine_vec`,
+:func:`corpus_plane_buckets`).
 """
 
 from __future__ import annotations
@@ -65,21 +64,6 @@ def cosine_vec(a, b):
             return pd.Series(dot / (na * nb))
 
     return _cos(a, b)
-
-
-def cosine_topk(corpus, probes, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Exact top-k cosine neighbors of each probe (probe set broadcast)."""
-    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_p"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v"))
-    j = F.broadcast(p).crossJoin(c).filter(F.col("probe_id") != F.col("neighbor_id"))
-    w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        j.select("probe_id", "neighbor_id", cosine_expr(F.col("_p"), F.col("_v")).alias("cos"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
 
 
 def cosine_neardup_pairs(df, threshold: float, block_col: str | None = None,
@@ -171,67 +155,6 @@ def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str,
     return df.groupBy(block_col).applyInPandas(kernel, out_schema)
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def make_lsh_signature_udf(dim: int, n_planes: int = 16, seed: int = 42):
-    """Returns a pandas UDF: array<float> → int bucket (sign-bit signature).
-    The hyperplanes are captured once per executor (broadcast via closure)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    @F.pandas_udf(T.LongType())
-    def lsh_bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim) — one matmul per Arrow batch
-        bits = (m @ planes.T) > 0
-        out = np.zeros(len(m), dtype=np.int64)
-        for i in range(n_planes):
-            out |= bits[:, i].astype(np.int64) << i
-        return pd.Series(out)
-
-    return lsh_bucket
-
-
-def lsh_topk(corpus, probes, k: int = 10, dim: int = 64, n_planes: int = 12,
-             bands: int = 3, id_col: str = "vec_id", vec_col: str = "embedding",
-             seed: int = 42):
-    """Approximate top-k: multi-band random-hyperplane LSH + exact re-rank.
-
-    Recall/cost is tuned by (n_planes, bands): more bands → more candidates.
-    """
-    def banded(df, prefix):
-        cols = [F.col(id_col).alias(f"{prefix}_id"), F.col(vec_col).alias(f"_{prefix}v")]
-        out = df.select(*cols)
-        for bi in range(bands):
-            udf = make_lsh_signature_udf(dim, n_planes, seed + 1000 * bi)
-            out = out.withColumn(f"bk_{bi}", udf(F.col(f"_{prefix}v")))
-        return out.select(
-            f"{prefix}_id", f"_{prefix}v",
-            F.explode(
-                F.array(*[F.concat(F.lit(f"{bi}:"), F.col(f"bk_{bi}").cast("string"))
-                          for bi in range(bands)])
-            ).alias("_bucket"),
-        )
-
-    cand = (
-        banded(probes, "probe")
-        .join(banded(corpus, "neighbor"), "_bucket")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .dropDuplicates(["probe_id", "neighbor_id"])
-    )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        cand.select(
-            "probe_id", "neighbor_id",
-            cosine_expr(F.col("_probev"), F.col("_neighborv")).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
-    )
-
-
 def _plane_map(spark, plane_ids: list[int], per_band: int):
     """(plane_id, band, weight=2^pos) literal mapping for data-derived LSH."""
     rows = [
@@ -305,9 +228,7 @@ def corpus_lsh_topk(corpus, probes, plane_ids: list[int], bands: int = 3,
                     vec_col: str = "embedding"):
     """Random-hyperplane LSH top-k with corpus-vector hyperplanes.
 
-    Same inverted-index shape as :func:`lsh_topk` (bucket equi-join, exact
-    cosine re-rank) but with every step a DataFrame op, no UDF — the
-    oracle-checkable twin of the pandas-UDF production path. No spread():
+    Bucket equi-join, then exact cosine re-rank of the candidates. No spread():
     the plane join + bucket aggregate shuffle the corpus anyway, so the
     extra round-robin stage only adds latency (r6 A/B at both SFs)."""
     per_band = len(plane_ids) // bands
@@ -349,8 +270,7 @@ def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3,
     centroid choice (corpus rows, deterministic ids) makes the exact result
     recomputable in the SQL oracle. A production deployment replaces the
     fixed ids with sampled/k-means centroids and writes the corpus bucketed
-    by cell (shuffle-free probes); see :func:`ivf_topk` for the pandas-UDF
-    assignment variant."""
+    by cell (shuffle-free probes)."""
     centsrc = corpus
     corpus = _spread(corpus)  # single-row-group inputs: dot on every core
     cents = F.broadcast(
@@ -413,56 +333,4 @@ def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3,
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("probe_id", "rank", "neighbor_id")
-    )
-
-
-def make_centroid_assign_udf(dim: int, n_cells: int = 16, seed: int = 7):
-    """IVF cell assignment: nearest of n_cells seeded pseudo-centroids."""
-    rng = np.random.default_rng(seed)
-    cents = rng.standard_normal((n_cells, dim))
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return pd.Series(np.argmax(m @ cents.T, axis=1).astype(np.int32))
-
-    return assign, cents
-
-
-def ivf_topk(corpus, probes, k: int = 10, dim: int = 64, n_cells: int = 16,
-             nprobe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding",
-             seed: int = 7):
-    """IVF: corpus partitioned into cells by nearest centroid; each probe
-    scans only its nprobe nearest cells. At lake scale, the corpus side
-    would be written bucketed by cell for shuffle-free probes."""
-    assign, cents = make_centroid_assign_udf(dim, n_cells, seed)
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_v")
-    ).withColumn("_cell", assign(F.col("_v")))
-
-    planes = cents  # reuse centroids for probe cell ranking (driver-side numpy)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_cells(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(m @ planes.T), axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(order))
-
-    p = (
-        probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_p"))
-        .withColumn("_cell", F.explode(probe_cells(F.col("_p"))))
-    )
-    w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        F.broadcast(p)
-        .join(c, "_cell")
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "neighbor_id", cosine_expr(F.col("_p"), F.col("_v")).alias("cos"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "rank", "neighbor_id", F.round("cos", 6).alias("cos"))
     )

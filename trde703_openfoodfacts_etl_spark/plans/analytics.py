@@ -576,9 +576,7 @@ def q21_ngram_jaccard(spark, sf_dir):
     from ..operators.dedup import ngram_jaccard_pairs
 
     d = load(spark, sf_dir, "documents")
-    # broadcast_dfreq: the corpus vocabulary is 31 tokens, so the shingle
-    # space is bounded (~30k) at any scale factor — see the operator doc
-    return ngram_jaccard_pairs(d, threshold=0.5, broadcast_dfreq=True).select(
+    return ngram_jaccard_pairs(d, threshold=0.5).select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     )
 
@@ -1423,7 +1421,7 @@ def q59_dedup_clusters(spark, sf_dir):
     from ..operators.dedup import connected_components, ngram_jaccard_pairs
 
     d = load(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, threshold=0.5, broadcast_dfreq=True).select("id_a", "id_b")
+    pairs = ngram_jaccard_pairs(d, threshold=0.5).select("id_a", "id_b")
     cc = connected_components(pairs)
     return (
         cc.groupBy("cluster_id")

@@ -15,7 +15,7 @@ the engine:
 | ``list_names``         | ``os.listdir``          | ListObjectsV2 under prefix           |
 | ``read_json``          | ``open`` + ``json``     | GET object                           |
 | ``write_json_if_absent``| tmp + fsync + ``os.link`` (EEXIST = lost CAS) | conditional PUT (``If-None-Match: *`` / GCS ``ifGenerationMatch=0``) or catalog CAS |
-| ``parquet_stats``      | ``pq.read_metadata`` + ``os.path.getsize`` | same via pyarrow's fsspec, or trust the committer's manifest |
+| ``parquet_stats``      | ``pq.read_metadata`` + ``os.path.getsize``: rows, bytes, ``_row_hash`` null count (= tombstones), max ``_lsn`` | same footer read via pyarrow's fsspec (a ranged GET of the footer) |
 | ``walk_files``         | ``os.walk``             | paginated ListObjectsV2              |
 | ``remove``             | ``os.remove``           | DELETE object                        |
 | ``makedirs``           | ``os.makedirs``         | no-op (object stores have no dirs)   |
@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import json
 import os
+
+from ..schema import META_LSN, META_ROW_HASH
 
 
 class LocalManifestIO:
@@ -70,11 +72,41 @@ class LocalManifestIO:
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
 
-    def parquet_stats(self, path: str) -> tuple[int, int]:
-        """(num_rows, file_bytes) from the parquet footer."""
+    def parquet_stats(self, path: str) -> tuple[int, int, int, int | None]:
+        """(num_rows, file_bytes, tombstones, max_lsn) from the parquet
+        footer of a lake data file. ``tombstones`` is the null count of
+        ``_row_hash``, which is NULL exactly on tombstone rows (``xxhash64``
+        never returns NULL); ``max_lsn`` is the largest ``_lsn`` (None if
+        every ``_lsn`` is NULL). Raises ``ValueError`` if a row group lacks
+        either statistic — Spark's parquet writer always records both."""
         import pyarrow.parquet as pq
 
-        return pq.read_metadata(path).num_rows, os.path.getsize(path)
+        md = pq.read_metadata(path)
+        tombstones, max_lsn = 0, None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            st = {
+                rg.column(i).path_in_schema: rg.column(i).statistics
+                for i in range(rg.num_columns)
+            }
+            h, lsn = st.get(META_ROW_HASH), st.get(META_LSN)
+            if (
+                h is None
+                or not h.has_null_count
+                or lsn is None
+                or not lsn.has_null_count
+                or (lsn.null_count < rg.num_rows and not lsn.has_min_max)
+            ):
+                raise ValueError(
+                    f"{path}: row group {g} has no {META_ROW_HASH} null count "
+                    f"or no {META_LSN} max in its footer statistics; manifest "
+                    "stats are read from these — rewrite the file with a "
+                    "parquet writer that records column statistics"
+                )
+            tombstones += h.null_count
+            if lsn.has_min_max:
+                max_lsn = lsn.max if max_lsn is None else max(max_lsn, lsn.max)
+        return md.num_rows, os.path.getsize(path), tombstones, max_lsn
 
     def walk_files(self, root: str) -> list[str]:
         out = []

@@ -95,6 +95,42 @@ def row_hash_expr(payload_cols: list[str]):
     return F.xxhash64(*[F.col(c) for c in payload_cols])
 
 
+def lww_order():
+    """The last-writer-wins order key ``(coalesce(ts, epoch), _lsn)`` over
+    physical rows: the reference's ``desc(coalesce(last_modified_t, 0))``
+    with the WAL position as tiebreaker. The one place the engine states
+    that order."""
+    epoch = F.lit("1970-01-01 00:00:00").cast("timestamp")
+    return F.struct(
+        F.coalesce(F.col("ts"), epoch).alias("o_ts"), F.col(META_LSN).alias("o_lsn")
+    )
+
+
+def lww_reduce(df, keys: list[str], carried: list[str]):
+    """One row per ``keys`` group: the ``carried`` columns of the row with
+    the greatest :func:`lww_order`. ``max_by`` under ``groupBy`` plans a
+    hash aggregate with a map-side partial phase, so a hot key is reduced on
+    every input partition before the shuffle. Exact duplicate redeliveries
+    (same lsn) tie on identical rows, so either winner is the same row."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.max_by(F.struct(*[F.col(c) for c in carried]), lww_order()).alias("_w"))
+        .select(*keys, *[F.col(f"_w.{c}").alias(c) for c in carried])
+    )
+
+
+def _bucket_entry(files: list[dict], hwm_lsn: int) -> dict:
+    """Bucket manifest entry for a fully rewritten (key-unique) bucket:
+    live rows and tombstones summed from the files' footer stats."""
+    tombstones = sum(fe["tombstones"] for fe in files)
+    return {
+        "files": files,
+        "hwm_lsn": int(hwm_lsn),
+        "rows": sum(fe["rows"] for fe in files) - tombstones,
+        "tombstones": tombstones,
+    }
+
+
 def _physical_schema(user_schema: T.StructType) -> T.StructType:
     return T.StructType(
         list(user_schema.fields)
@@ -299,19 +335,6 @@ class LakeTable:
                 split_ok = False
 
             nonkey = [f.name for f in phys_unified.fields if f.name not in KEY_COLS]
-            order = F.struct(
-                F.coalesce(F.col("ts"), F.lit("1970-01-01 00:00:00").cast("timestamp")),
-                F.col(META_LSN),
-            )
-            carried = F.struct(*[F.col(c) for c in nonkey])
-
-            def _lww(df_):
-                return (
-                    df_.groupBy(*KEY_COLS)
-                    .agg(F.max_by(carried, order).alias("_w"))
-                    .select(*KEY_COLS, *[F.col(f"_w.{c}").alias(c) for c in nonkey])
-                )
-
             if split_ok:
                 # contested-key split: the compacted base within a delta
                 # bucket is key-unique (every replace commit — COW merge,
@@ -330,7 +353,7 @@ class LakeTable:
                 ddf = _assemble(delta_g)
                 bdf = _assemble(base_g)
                 if bdf is None:
-                    ddf = _lww(ddf)
+                    ddf = lww_reduce(ddf, KEY_COLS, nonkey)
                 else:
                     hk = F.xxhash64(*KEY_COLS)
                     contested = F.broadcast(
@@ -339,12 +362,14 @@ class LakeTable:
                     b_h = bdf.withColumn("_mor_hk", hk)
                     clean_b = b_h.join(contested, "_mor_hk", "left_anti").drop("_mor_hk")
                     hot_b = b_h.join(contested, "_mor_hk", "left_semi").drop("_mor_hk")
-                    ddf = clean_b.unionByName(_lww(ddf.unionByName(hot_b)))
+                    ddf = clean_b.unionByName(
+                        lww_reduce(ddf.unionByName(hot_b), KEY_COLS, nonkey)
+                    )
             else:
                 merged_g: dict[int, list[str]] = {}
                 for sid_, paths in list(base_g.items()) + list(delta_g.items()):
                     merged_g.setdefault(sid_, []).extend(paths)
-                ddf = _lww(_assemble(merged_g))
+                ddf = lww_reduce(_assemble(merged_g), KEY_COLS, nonkey)
             cdf = _assemble(clean_g)
             df = ddf if cdf is None else cdf.unionByName(ddf)
         else:
@@ -369,7 +394,10 @@ class LakeTable:
     ) -> dict[int, list[dict]]:
         """Write a physical DataFrame (user cols + meta cols + _bucket) as
         per-bucket parquet under data/epoch=<snapshot_id>/, return
-        {bucket: [file entries]} for the manifest.
+        {bucket: [file entries]} for the manifest. Each entry carries the
+        file's footer stats: physical ``rows``, ``bytes``, ``tombstones``
+        (the ``_row_hash`` null count) and ``max_lsn`` — everything the
+        manifest's per-bucket stats derive from, with no extra Spark job.
 
         ``pre_partitioned=True`` means the caller's plan is already
         bucket-clustered (e.g. the merge reuses its aggregate exchange) — no
@@ -408,12 +436,16 @@ class LakeTable:
             for fn in self.io.list_names(os.path.join(out, d)):
                 if not fn.endswith(".parquet"):
                     continue
-                rows, nbytes = self.io.parquet_stats(os.path.join(out, d, fn))
+                rows, nbytes, tombstones, max_lsn = self.io.parquet_stats(
+                    os.path.join(out, d, fn)
+                )
                 entries.setdefault(b, []).append(
                     {
                         "path": os.path.join(rel_epoch, d, fn),
                         "rows": rows,
                         "bytes": nbytes,
+                        "tombstones": tombstones,
+                        "max_lsn": max_lsn,
                         "schema_id": schema_id,
                     }
                 )
@@ -429,19 +461,18 @@ class LakeTable:
         snap: dict,
         replaced_buckets: dict[int, list[dict]],
         bucket_hwm: dict[int, int],
-        bucket_rows: dict[int, int],
         stream_id: str,
         batch_id: int,
         metrics: dict,
         append: bool = False,
         stream_hwm: str | None = None,
         watermark_ts: float | None = None,
-        bucket_tombstones: dict[int, int] | None = None,
     ) -> dict:
         """Produce + atomically write the child snapshot: replace (COW) or
         append (MOR delta) file lists for written buckets, bump per-bucket
         high-watermark LSN, record the applied batch id (idempotence marker)
-        and batch metrics."""
+        and batch metrics. A replaced bucket's live-row and tombstone counts
+        are summed from its file entries' footer stats."""
         new = dict(snap)
         new["parent"] = snap["snapshot_id"]
         new["snapshot_id"] = snap["snapshot_id"] + 1
@@ -459,12 +490,9 @@ class LakeTable:
                     "delta": True,
                 }
                 continue
-            bks[str(b)] = {
-                "files": files,
-                "hwm_lsn": int(bucket_hwm.get(b, bks.get(str(b), {}).get("hwm_lsn", 0))),
-                "rows": int(bucket_rows.get(b, 0)),
-                "tombstones": int((bucket_tombstones or {}).get(b, 0)),
-            }
+            bks[str(b)] = _bucket_entry(
+                files, bucket_hwm.get(b, bks.get(str(b), {}).get("hwm_lsn", 0))
+            )
         for b, hwm in bucket_hwm.items():
             if str(b) in bks and b not in replaced_buckets:
                 bks[str(b)] = dict(bks[str(b)], hwm_lsn=max(bks[str(b)]["hwm_lsn"], int(hwm)))
@@ -709,7 +737,11 @@ class LakeTable:
         ``drop_tombstones_ts_before`` (event-time watermark horizon — see
         :meth:`gc_tombstones`). ``include_non_delta`` lets the GC rewrite
         already-compacted buckets that still carry old tombstones.
-        Returns the new snapshot."""
+
+        One Spark action, the rewrite itself: the new buckets' ``rows``,
+        ``tombstones`` and ``hwm_lsn`` (max of the footers' ``_lsn`` and the
+        bucket's previous high-watermark) come from the footer stats that
+        :meth:`write_bucket_files` returns. Returns the new snapshot."""
         snap = self.snapshot()
         todo = [
             int(b)
@@ -739,33 +771,18 @@ class LakeTable:
         # buckets whose resolved state is empty (e.g. everything tombstoned
         # and GC'd) still replace their file lists — with an empty list
         replaced = {b: written.get(b, []) for b in todo}
-        stats = (
-            resolved.groupBy(META_BUCKET)
-            .agg(
-                F.sum(F.when(~F.col(META_DELETED), 1).otherwise(0)).alias("live"),
-                F.sum(F.when(F.col(META_DELETED), 1).otherwise(0)).alias("dead"),
-                F.max(META_LSN).alias("hwm"),
-            )
-            .collect()
-        )
-        rows = {int(r[META_BUCKET]): int(r["live"]) for r in stats}
-        rows = {b: rows.get(b, 0) for b in todo}
-        dead = {int(r[META_BUCKET]): int(r["dead"]) for r in stats}
-        dead = {b: dead.get(b, 0) for b in todo}
         hwm = {
             b: max(
-                next((int(r["hwm"]) for r in stats if int(r[META_BUCKET]) == b), 0),
-                int(snap["buckets"].get(str(b), {}).get("hwm_lsn") or 0),
+                [int(snap["buckets"].get(str(b), {}).get("hwm_lsn") or 0)]
+                + [fe["max_lsn"] or 0 for fe in replaced[b]]
             )
             for b in todo
         }
-        new = self.commit(
-            snap, replaced, hwm, rows, "compaction",
+        return self.commit(
+            snap, replaced, hwm, "compaction",
             self.last_batch_id("compaction", snap) + 1,
             {"compacted_buckets": todo},
-            bucket_tombstones=dead,
         )
-        return new
 
     def rebucket(self, new_num_buckets: int, files_per_bucket: int = 1) -> dict:
         """Bucket-count evolution as a committed snapshot operation — the
@@ -773,11 +790,13 @@ class LakeTable:
         :meth:`create` time; a table that grows 100× would otherwise be stuck
         with COW rewrite units and pruning granularity sized for day one.
 
-        One Spark job: read the full current state (tombstones kept, MOR
+        One Spark action: read the full current state (tombstones kept, MOR
         deltas resolved by the read path), re-hash every row under
         ``bucket_expr(new_num_buckets)``, write all buckets into one new
         epoch, and commit a child snapshot whose ENTIRE buckets map is
-        replaced and which carries the new ``num_buckets``. Because
+        replaced and which carries the new ``num_buckets``; per-bucket
+        ``rows``, ``tombstones`` and ``hwm_lsn`` come from the new files'
+        footer stats, not from a second pass over the data. Because
         ``num_buckets`` is per-snapshot and every reader/writer derives
         bucketing from the snapshot it reads, everything downstream follows
         automatically: time travel to a pre-rebucket snapshot reads the old
@@ -792,7 +811,7 @@ class LakeTable:
         it. Concurrency: single CAS attempt; a concurrent writer winning the
         race raises :class:`SnapshotConflict` (re-run against the new head —
         same contract as :meth:`compact`). Per-new-bucket ``hwm_lsn`` is
-        re-derived from the data; the table-wide high-watermark is preserved
+        the max ``_lsn`` of its files; the table-wide high-watermark is preserved
         via the rebucket metrics entry (resume correctness rides
         ``stream_hwm``/batch markers, which carry over untouched).
         """
@@ -808,34 +827,6 @@ class LakeTable:
         written = self.write_bucket_files(
             resolved, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket
         )
-        # Manifest stats come from a skinny re-read of the files just
-        # written (3 columns, no shuffle-heavy MOR resolve) — re-running the
-        # `resolved` plan here would repeat the full-table read + LWW
-        # aggregate the write job already executed, doubling rebucket cost.
-        # The files carry no _bucket column (it was the partition dir), so
-        # recompute it from conv_id — byte-identical to what was written.
-        if written:
-            paths = [
-                os.path.join(self.root, fe["path"])
-                for files in written.values()
-                for fe in files
-            ]
-            skinny = (
-                self.spark.read.parquet(*paths)
-                .select("conv_id", META_DELETED, META_LSN)
-                .withColumn(META_BUCKET, bucket_expr(int(new_num_buckets)))
-            )
-            stats = (
-                skinny.groupBy(META_BUCKET)
-                .agg(
-                    F.sum(F.when(~F.coalesce(F.col(META_DELETED), F.lit(False)), 1).otherwise(0)).alias("live"),
-                    F.sum(F.when(F.coalesce(F.col(META_DELETED), F.lit(False)), 1).otherwise(0)).alias("dead"),
-                    F.max(META_LSN).alias("hwm"),
-                )
-                .collect()
-            )
-        else:
-            stats = []
         table_hwm = max(
             (int(b.get("hwm_lsn") or 0) for b in snap["buckets"].values()), default=0
         )
@@ -844,20 +835,15 @@ class LakeTable:
         new["snapshot_id"] = snap["snapshot_id"] + 1
         new["num_buckets"] = int(new_num_buckets)
         new["buckets"] = {
-            str(int(r[META_BUCKET])): {
-                "files": written.get(int(r[META_BUCKET]), []),
-                "hwm_lsn": int(r["hwm"] or 0),
-                "rows": int(r["live"]),
-                "tombstones": int(r["dead"]),
-            }
-            for r in stats
+            str(b): _bucket_entry(files, max(fe["max_lsn"] or 0 for fe in files))
+            for b, files in written.items()
         }
         new["metrics"] = {
             "rebucket": {
                 "from_buckets": old_p,
                 "to_buckets": int(new_num_buckets),
                 "table_hwm_lsn": table_hwm,
-                "rows": sum(int(r["live"]) for r in stats),
+                "rows": sum(binfo["rows"] for binfo in new["buckets"].values()),
             }
         }
         new["created_unix"] = time.time()
