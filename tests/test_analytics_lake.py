@@ -1,16 +1,14 @@
-"""Transcript-lake analytics (the reference's 7 queries re-expressed) +
-watermarked streaming metrics, over replayed state."""
+"""Transcript-lake analytics (the reference's 7 queries re-expressed) over
+replayed state."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from trde703_openfoodfacts_etl_spark.plans import transcript_analytics as ta
-from trde703_openfoodfacts_etl_spark.schema import CDC_SCHEMA, TRANSCRIPT_SCHEMA
+from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
 from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable
-from trde703_openfoodfacts_etl_spark.streaming.metrics import run_metrics_stream
 from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental
 
 
@@ -49,41 +47,3 @@ def test_role_distribution_shares_sum_to_100(state):
 def test_weekly_evolution_covers_feed(state):
     rows = ta.weekly_evolution(state).collect()
     assert sum(r["n_turns"] for r in rows) == state.count()
-
-
-def test_windowed_metrics_with_watermark(spark, wal_dir, tmp_path):
-    out = run_metrics_stream(
-        spark, wal_dir, CDC_SCHEMA, str(tmp_path / "ckpt"),
-        query_name="t_metrics", window="1 hour", watermark="2 hours",
-    )
-    rows = out.collect()
-    assert {r["op"] for r in rows} <= {"I", "U", "D"}
-    assert sum(r["n_events"] for r in rows) > 0
-    assert all(r["window_end"] > r["window_start"] for r in rows)
-
-
-def test_stateful_conversation_summaries(spark, wal_dir, tmp_path):
-    """applyInPandasWithState: per-conversation durable state across
-    microbatches equals a batch recomputation over the same feed."""
-    from trde703_openfoodfacts_etl_spark.streaming.stateful import run_conversation_state
-
-    out = run_conversation_state(
-        spark, wal_dir, CDC_SCHEMA, str(tmp_path / "ckpt_state"), query_name="t_state"
-    ).toPandas().set_index("conv_id")
-
-    batch = (
-        spark.read.parquet(f"{wal_dir}/*.parquet")
-        .groupBy("conv_id")
-        .agg(
-            F.count(F.lit(1)).alias("events_seen"),
-            F.max("turn_idx").cast("long").alias("max_turn"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes_seen"),
-        )
-        .toPandas()
-        .set_index("conv_id")
-    )
-    assert len(out) == len(batch)
-    joined = out.join(batch, lsuffix="_s", rsuffix="_b")
-    assert (joined["events_seen_s"] == joined["events_seen_b"]).all()
-    assert (joined["max_turn_s"] == joined["max_turn_b"]).all()
-    assert (joined["deletes_seen_s"] == joined["deletes_seen_b"]).all()

@@ -420,3 +420,22 @@ def test_asof_right_tiebreak_matches_pre_dedup(spark):
                 skew_bucket_seconds=skew,
             ).orderBy("key", "ts").collect()
             assert [tuple(r) for r in got] == [tuple(r) for r in want], (strict, skew)
+
+
+def test_range_count_is_zero_past_the_span(spark):
+    """A probe whose low bucket falls in the k-bucket extension above the
+    last point finds its LUT row with the full prefix count as _Plo and no
+    _Phi; its count must be 0, not minus the number of points."""
+    from trde703_openfoodfacts_etl_spark.plans.analytics import (
+        _attach_range_count,
+        _range_count_lut,
+    )
+
+    # sub-buckets of 10 µs, ranges 40 µs wide (k = 4); points in buckets 0-2
+    pts = spark.createDataFrame([(5,), (15,), (25,)], "t long")
+    lut = _range_count_lut(pts, [], 10, 40)
+    probes = spark.createDataFrame(
+        [(0, 0, 40), (1, 45, 85), (2, 62, 102)], "id int, _lo long, _hi long"
+    )
+    got = {r["id"]: r["_rc"] for r in _attach_range_count(probes, lut, [], 10).collect()}
+    assert got == {0: 3, 1: 0, 2: 0}

@@ -1,67 +1,12 @@
-"""Bulk CSV/JSON backfill (reference S1 parity) and changelog reads."""
+"""Changelog reads and mixed-format (parquet / JSON-lines / ORC) WAL replay."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
 from trde703_openfoodfacts_etl_spark.operators.merge import apply_batch
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
-from trde703_openfoodfacts_etl_spark.sources.bulk import (
-    as_backfill_batch,
-    backfill,
-    read_csv_dump,
-)
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable
 
 from helpers import make_events
-
-
-def _write_csv_dump(tmp_path) -> str:
-    p = tmp_path / "dump.csv"
-    rows = [
-        "conv_id\tturn_idx\trole\ttext\ttool\tts",
-        'c1\t0\tuser\t"hello\tworld"\t\t2024-01-01 00:00:00',
-        "c1\t1\tassistant\thi there\t\t2024-01-01 00:00:05",
-        "c2\t0\tuser\tbonjour\t\t2024-01-02 10:00:00",
-    ]
-    p.write_text("\n".join(rows))
-    return str(p)
-
-
-def test_csv_backfill(spark, tmp_path):
-    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    raw = read_csv_dump(spark, _write_csv_dump(tmp_path), multiline=False)
-    m = backfill(lake, raw, batch_id=0)
-    assert m["rows_written"] == 3
-    st = lake.read().orderBy("conv_id", "turn_idx").collect()
-    assert [r["text"] for r in st] == ["hello\tworld", "hi there", "bonjour"]
-
-    # re-running the same backfill with a new batch id is a no-op
-    # (row-hash no-op skip: identical winners, nothing rewritten)
-    m2 = backfill(lake, raw, batch_id=1)
-    assert m2["buckets_rewritten"] == 0
-
-
-def test_backfill_lsn_is_partitioning_independent(spark, tmp_path):
-    raw = read_csv_dump(spark, _write_csv_dump(tmp_path), multiline=False)
-    a = {(r["conv_id"], r["turn_idx"]): r["lsn"] for r in as_backfill_batch(raw).collect()}
-    b = {
-        (r["conv_id"], r["turn_idx"]): r["lsn"]
-        for r in as_backfill_batch(raw.repartition(7)).collect()
-    }
-    assert a == b
-
-
-def test_backfill_plan_has_no_window(spark, tmp_path):
-    """Scale guard (VERDICT r1 #4): the backfill lsn must be a per-row
-    projection, never a single-partition row_number window — that funnels
-    the whole dump through one task at 100 TB."""
-    raw = read_csv_dump(spark, _write_csv_dump(tmp_path), multiline=False)
-    plan = as_backfill_batch(raw)._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "SinglePartition" not in plan
 
 
 def test_changelog_between_snapshots(spark, tmp_path):
@@ -85,22 +30,6 @@ def test_changelog_between_snapshots(spark, tmp_path):
     upd = {(r["conv_id"], r["turn_idx"]): r["text"]
            for r in lake.changes(s1).filter("change_type = 'update'").collect()}
     assert upd[("c1", 0)] == "a2"
-
-
-def test_backfill_then_stream_updates(spark, tmp_path):
-    """Backfill + live CDC compose: stream updates win over backfill rows."""
-    lake = LakeTable.create(spark, str(tmp_path / "lake2"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    raw = read_csv_dump(spark, _write_csv_dump(tmp_path), multiline=False)
-    backfill(lake, raw, batch_id=0)
-    apply_batch(
-        lake,
-        make_events(spark, [("U", 10_000, "c1", 0, "user", "hello v2", None, 999_999)]),
-        0,
-        stream_id="live",
-    )
-    st = {(r["conv_id"], r["turn_idx"]): r["text"] for r in lake.read().collect()}
-    assert st[("c1", 0)] == "hello v2"
-    assert st[("c2", 0)] == "bonjour"
 
 
 def test_jsonl_wal_segments_replay(spark, tmp_path):

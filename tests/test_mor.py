@@ -120,26 +120,14 @@ def test_tombstone_gc_at_compaction(spark, tmp_path):
         ("I", 2, "c2", 0, "user", "b", None, 110),
     ]), 0, mode="mor")
     apply_batch(lake, make_events(spark, [("D", 3, "c1", 0, None, None, None, 300)]), 1, mode="mor")
-    lake.compact(drop_tombstones_below_lsn=100)  # horizon above the delete lsn=3
+    # one later event moves the watermark to ts=10000: the GC horizon
+    # (10000 - 5000) passes the delete's ts=300
+    apply_batch(lake, make_events(spark, [("U", 4, "c2", 0, "user", "b2", None, 10_000)]), 2, mode="mor")
+    assert lake.gc_tombstones(allowed_lateness_sec=5000) is not None
+    assert not any(b.get("delta") for b in lake.snapshot()["buckets"].values())
     # tombstone dropped: physical rows == live rows
     phys = lake.read(include_deleted=True).count()
     assert phys == lake.read().count() == 1
-
-
-def test_streaming_session_window(spark, tmp_path):
-    from trde703_openfoodfacts_etl_spark.schema import CDC_SCHEMA
-    from trde703_openfoodfacts_etl_spark.streaming.metrics import run_session_stream
-
-    wal = str(tmp_path / "walss")
-    generate_segments(wal, n_convs=30, n_events=1500, n_segments=1, seed=3)
-    out = run_session_stream(
-        spark, wal, CDC_SCHEMA, str(tmp_path / "ckpt"),
-        query_name="t_sessions", gap="10 minutes", watermark="1 hour",
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    assert all(r["session_end"] > r["session_start"] for r in rows)
-    assert all(r["n_events"] >= 1 for r in rows)
 
 
 def test_mor_apply_runs_single_action_no_collect(spark, tmp_path, monkeypatch):

@@ -180,10 +180,12 @@ def test_rebucket_cas_conflict_raises(spark, tmp_path, monkeypatch):
     assert list(lake_state_pdf(lake)["text"]) == ["a"]
 
 
-def test_maybe_rebucket_policy(spark, tmp_path):
+def test_maybe_rebucket_policy(spark, tmp_path, monkeypatch):
     """maybe_rebucket grows the bucket count geometrically once mean bytes
     per occupied bucket crosses the target; below target / at cap it is a
     no-op returning None."""
+    from trde703_openfoodfacts_etl_spark.sources import lake as lake_mod
+
     lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=2)
     apply_batch(lake, make_events(
         spark, [("I", i, f"c{i}", 0, "user", "x" * 200, None, i) for i in range(1, 60)]
@@ -191,7 +193,8 @@ def test_maybe_rebucket_policy(spark, tmp_path):
     assert lake.maybe_rebucket(target_bucket_bytes=1 << 40) is None  # under target
     snap = lake.maybe_rebucket(target_bucket_bytes=1)  # over target
     assert snap is not None and snap["num_buckets"] == 8  # 2 * factor 4
-    assert lake.maybe_rebucket(target_bucket_bytes=1, max_buckets=8) is None  # at cap
+    monkeypatch.setattr(lake_mod, "REBUCKET_MAX_BUCKETS", 8)
+    assert lake.maybe_rebucket(target_bucket_bytes=1) is None  # at cap
     assert lake.read().count() == 59
 
 
@@ -245,29 +248,38 @@ def test_maybe_rebucket_skew_guards(spark, tmp_path):
     assert lake2.maybe_rebucket(target_bucket_bytes=max(1, median // 2)) is not None
 
 
-def test_drivers_thread_files_per_bucket_to_maintenance(spark, tmp_path, wal_dir, monkeypatch):
-    """run_incremental's configured files_per_bucket must reach the
-    auto-maintenance calls (maybe_compact / maybe_rebucket) — otherwise a
-    rewrite silently collapses the operator's file-size policy back to one
-    file per bucket."""
-    from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental
+def test_both_drivers_run_the_same_upkeep(spark, tmp_path, wal_dir, monkeypatch):
+    """run_incremental and run_stream share one per-batch step: over the
+    same WAL, batch size and MOR upkeep settings they call the lake's
+    upkeep methods in the same order with the same arguments."""
+    from trde703_openfoodfacts_etl_spark.schema import CDC_SCHEMA
+    from trde703_openfoodfacts_etl_spark.streaming.pipeline import (
+        run_incremental,
+        run_stream,
+    )
 
-    seen = {}
-    orig_rb, orig_c = LakeTable.maybe_rebucket, LakeTable.maybe_compact
+    calls = []
+    for name in ("maybe_compact", "maybe_rebucket", "vacuum"):
+        def spy(self, *a, _name=name, _orig=getattr(LakeTable, name), **kw):
+            calls.append((_name, a, kw))
+            return _orig(self, *a, **kw)
 
-    def spy_rb(self, **kw):
-        seen["rebucket"] = kw
-        return orig_rb(self, **kw)
+        monkeypatch.setattr(LakeTable, name, spy)
+    upkeep = dict(mode="mor", auto_compact_after=1, auto_vacuum_every=2,
+                  vacuum_keep_snapshots=3, auto_rebucket_target_bytes=20_000)
 
-    def spy_c(self, **kw):
-        seen["compact"] = kw
-        return orig_c(self, **kw)
+    lake = LakeTable.create(spark, str(tmp_path / "inc"), TRANSCRIPT_SCHEMA, num_buckets=2)
+    assert len(run_incremental(lake, wal_dir, segments_per_batch=1, **upkeep)) == 4
+    incremental = list(calls)
+    calls.clear()
+    lake = LakeTable.create(spark, str(tmp_path / "stream"), TRANSCRIPT_SCHEMA, num_buckets=2)
+    assert len(run_stream(lake, wal_dir, CDC_SCHEMA, str(tmp_path / "ckpt"),
+                          max_files_per_trigger=1, **upkeep)) == 4
 
-    monkeypatch.setattr(LakeTable, "maybe_rebucket", spy_rb)
-    monkeypatch.setattr(LakeTable, "maybe_compact", spy_c)
-    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    run_incremental(lake, wal_dir, segments_per_batch=2, mode="mor",
-                    files_per_bucket=3, auto_compact_after=1,
-                    auto_rebucket_target_bytes=1 << 40, max_batches=1)
-    assert seen["rebucket"]["files_per_bucket"] == 3
-    assert seen["compact"]["files_per_bucket"] == 3
+    per_batch = [
+        ("maybe_compact", (), {"max_delta_files": 1}),
+        ("maybe_rebucket", (), {"target_bucket_bytes": 20_000}),
+    ]
+    vacuum = [("vacuum", (), {"keep_snapshots": 3})]
+    assert incremental == (per_batch * 2 + vacuum) * 2
+    assert calls == incremental

@@ -68,6 +68,30 @@ def test_mid_stream_evolution_replay(spark, tmp_path):
     assert any("tool_meta:string" in e["added"] for e in snap["evolution"])
 
 
+def test_read_batch_rereads_a_rewritten_segment_dir(spark, tmp_path):
+    """read_batch keeps no footer schema across calls: a Spark segment
+    directory rewritten with an added column between two reads in one
+    process shows the new column instead of silently dropping it."""
+    from trde703_openfoodfacts_etl_spark.streaming.pipeline import (
+        list_segments,
+        read_batch,
+    )
+
+    wal = str(tmp_path / "wal")
+    seg = f"{wal}/segment=0"
+    spark.createDataFrame(
+        [("I", 1, "c1")], "op string, lsn long, conv_id string"
+    ).coalesce(1).write.parquet(seg)
+    assert read_batch(spark, list_segments(wal)).columns == ["op", "lsn", "conv_id"]
+
+    spark.createDataFrame(
+        [("I", 2, "c1", "search")], "op string, lsn long, conv_id string, tool string"
+    ).coalesce(1).write.mode("overwrite").parquet(seg)
+    df = read_batch(spark, list_segments(wal))
+    assert df.columns == ["op", "lsn", "conv_id", "tool"]
+    assert [r["tool"] for r in df.collect()] == ["search"]
+
+
 def test_widen_decimal_lattice():
     from decimal import Decimal  # noqa: F401
 

@@ -1,5 +1,4 @@
-"""Pluggable sinks (reference S4/S8/S9 seam), Kafka-envelope source
-plumbing, and the manifest introspection tool."""
+"""Kafka-envelope source plumbing and the manifest introspection tool."""
 
 from __future__ import annotations
 
@@ -7,16 +6,8 @@ import json
 import subprocess
 import sys
 
-from pyspark.sql import functions as F
-
 from trde703_openfoodfacts_etl_spark.inspect_cli import inspect_lake
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
-from trde703_openfoodfacts_etl_spark.sinks import (
-    FanoutSink,
-    JdbcSink,
-    LakeMergeSink,
-    ParquetDirSink,
-)
 from trde703_openfoodfacts_etl_spark.sources.kafka import (
     envelope_schema,
     parse_cdc_envelope,
@@ -24,37 +15,6 @@ from trde703_openfoodfacts_etl_spark.sources.kafka import (
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable
 
 from helpers import make_events
-
-
-def test_lake_and_parquet_sinks_fanout(spark, tmp_path):
-    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    sink = FanoutSink(
-        LakeMergeSink(lake),
-        ParquetDirSink(str(tmp_path / "export")),
-    )
-    ev = make_events(spark, [("I", 1, "c1", 0, "user", "hello", None, 100)])
-    out = sink.write(ev, 0)
-    assert lake.read().count() == 1
-    exported = spark.read.parquet(out["fanout"][1]["path"])
-    assert exported.count() == 1
-    # redelivery: lake no-ops (exactly-once), parquet overwrites (idempotent)
-    sink.write(ev, 0)
-    assert lake.read().count() == 1
-    assert spark.read.parquet(out["fanout"][1]["path"]).count() == 1
-
-
-def test_jdbc_sink_builds_standard_writer(spark):
-    """No database in the sandbox: assert the writer plan is the standard
-    Spark JDBC shape and that save() fails loudly (no silent no-op)."""
-    import pytest
-
-    ev = make_events(spark, [("I", 1, "c1", 0, "user", "x", None, 100)])
-    sink = JdbcSink("jdbc:mysql://db.example/gold", "transcripts",
-                    properties={"user": "etl"})
-    w = sink.writer(ev)
-    assert w is not None
-    with pytest.raises(Exception):
-        sink.write(ev, 0)
 
 
 def test_parse_cdc_envelope_roundtrip(spark):
@@ -99,34 +59,3 @@ def test_inspect_lake_manifest_only(spark, tmp_path):
     )
     assert out.returncode == 0
     assert json.loads(out.stdout)["current_snapshot"] == 2
-
-
-def test_jdbc_sink_roundtrip_derby(spark, tmp_path):
-    """EXECUTED JDBC endpoint (reference S4, etl/silver_to_gold.py:48-61):
-    Spark bundles the Derby driver, so the sink writes a real database —
-    append mode, batchsize option, then read back via spark.read.jdbc and
-    compare values. Graduates S4 from plan-construction-only to exercised."""
-    url = f"jdbc:derby:{tmp_path}/gold_db;create=true"
-    props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver", "batchsize": "500"}
-    rows = [("c1", 0, "user", "hello"), ("c1", 1, "assistant", "hi there"),
-            ("c2", 0, "user", "yo")]
-    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, role string, text string")
-
-    sink = JdbcSink(url, "transcripts_gold", mode="append", properties=props)
-    out = sink.write(df, 0)
-    assert out == {"batch_id": 0, "table": "transcripts_gold"}
-
-    back = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "transcripts_gold")
-        .option("driver", props["driver"])
-        .load()
-    )
-    got = sorted((r.CONV_ID, r.TURN_IDX, r.ROLE, r.TEXT) if hasattr(r, "CONV_ID")
-                 else (r.conv_id, r.turn_idx, r.role, r.text) for r in back.collect())
-    assert got == sorted(rows)
-
-    # append mode really appends (second batch doubles the rows)
-    sink.write(df, 1)
-    assert back.count() == 6

@@ -91,7 +91,6 @@ def apply_batch(
     batch_df,
     batch_id: int,
     stream_id: str = "default",
-    files_per_bucket: int = 1,
     mode: str = "cow",
     segment_hwm: str | None = None,
     max_commit_retries: int = 3,
@@ -103,8 +102,7 @@ def apply_batch(
     for attempt in range(max_commit_retries + 1):
         try:
             return _apply_batch_once(
-                lake, batch_df, batch_id, stream_id, files_per_bucket, mode,
-                segment_hwm,
+                lake, batch_df, batch_id, stream_id, mode, segment_hwm
             )
         except SnapshotConflict:
             if attempt == max_commit_retries:
@@ -129,7 +127,6 @@ def _apply_batch_once(
     batch_df,
     batch_id: int,
     stream_id: str = "default",
-    files_per_bucket: int = 1,
     mode: str = "cow",
     segment_hwm: str | None = None,
 ) -> dict:
@@ -240,27 +237,20 @@ def _apply_batch_once(
         no group), the aggregate reuses that exchange (HashPartitioning
         (_bucket) satisfies the ClusteredDistribution of groupBy(_bucket,
         conv_id, turn_idx) by the subset rule) and the bucket-partitioned
-        write needs no further shuffle. With files_per_bucket == 1 the
-        partitioning is _bucket ALONE: each bucket lands in exactly one
-        task, so the dynamic-partition writer emits exactly one file per
-        bucket (spread over (_bucket, conv_id), every task writes its own
-        file per bucket: 13 files/bucket/epoch measured on a 200k-row
-        table). A hot bucket is one task, the same unit compact()/rebucket()
-        use; skew across keys within a bucket is absorbed by map-side
-        partial aggregation, and maybe_rebucket is the scale lever. Callers
-        that ask for files_per_bucket > 1 want several writer tasks per
-        bucket and keep the conv_id spread."""
+        write needs no further shuffle. The partitioning is _bucket ALONE:
+        each bucket lands in exactly one task, so the dynamic-partition
+        writer emits exactly one file per bucket (spread over (_bucket,
+        conv_id), every task writes its own file per bucket: 13
+        files/bucket/epoch measured on a 200k-row table). A hot bucket is
+        one task, the same unit compact()/rebucket() use; skew across keys
+        within a bucket is absorbed by map-side partial aggregation, and
+        maybe_rebucket is the scale lever."""
         by_bucket = rows.withColumn(META_BUCKET, bucket_expr(num_buckets)).repartition(
-            *(
-                [F.col(META_BUCKET)]
-                if files_per_bucket <= 1
-                else [F.col(META_BUCKET), F.col("conv_id")]
-            )
+            META_BUCKET
         )
         return lake.write_bucket_files(
             lww_reduce(by_bucket, [META_BUCKET, *KEY_COLS], state_nonkey),
-            snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket,
-            pre_partitioned=True,
+            snap["snapshot_id"] + 1, snap["schema_id"], pre_partitioned=True,
         )
 
     def _commit(pre, replaced, bucket_hwm, per_mode, append=False):

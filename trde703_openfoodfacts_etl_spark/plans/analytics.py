@@ -1631,9 +1631,9 @@ def _range_count_lut(points, keys, sub_us, span_us):
     because the frame has every bucket of the span (consecutive ints).
     The dense span is extended k buckets BELOW the first point too, so a
     probe whose range starts before all points but overlaps them still
-    finds its row (prefix 0 there); probes outside the extended span miss
-    the join and resolve to _rc ≤ 0, which is exact-or-negative only when
-    the true count is 0 (callers filter on _rc ≥ 1)."""
+    finds its row (prefix 0 there); a probe whose low bucket lies above
+    the last point's bucket (in the extension above the span, or past it)
+    has a true count of 0, which :func:`_attach_range_count` returns."""
     k = span_us // sub_us
     pts = points.withColumn("_pb", F.expr(f"t div {sub_us}"))
     per_b = pts.groupBy(*keys, "_pb").agg(
@@ -1672,17 +1672,21 @@ def _attach_range_count(probes, lut, keys, sub_us):
     difference _Phi − _Plo. The boundary splits are exact because within
     bucket bl every point is ≤ _hi (bucket end ≤ _lo + span) and within
     bh every point is ≥ _lo. A null probe _lo/_hi yields _rc = 0 (the
-    join misses), matching a null-timestamp row matching no interval."""
+    join misses), matching a null-timestamp row matching no interval. The
+    count is clamped at 0: past the last point the prefix difference
+    _Phi − _Plo goes negative (_Phi runs off the dense frame) where the
+    true count is 0."""
     pr = probes.withColumn("_bl", F.expr(f"_lo div {sub_us}"))
     j = pr.join(
         F.broadcast(lut.withColumnRenamed("_pb", "_bl")), [*keys, "_bl"], "left"
     )
     lo, hi = F.col("_lo"), F.col("_hi")
     scan = lambda arr, pred: F.coalesce(F.size(F.filter(arr, pred)), F.lit(0))  # noqa: E731
-    rc = (
+    rc = F.greatest(
         scan(F.col("_al"), lambda x: x >= lo)
         + F.coalesce("_Phi", F.lit(0)) - F.coalesce("_Plo", F.lit(0))
-        + scan(F.col("_ah"), lambda x: x <= hi)
+        + scan(F.col("_ah"), lambda x: x <= hi),
+        F.lit(0),
     )
     return j.withColumn("_rc", rc).drop("_al", "_ah", "_Plo", "_Phi", "_bl")
 
@@ -2028,10 +2032,10 @@ REGISTRY.update(_TG)
 # Family coverage that keeps each honest inside the cap: q02 top-k groupBy →
 # q04/q18/q31; q07 anti join → q06 semi (same plan family, engine addition);
 # q10 CASE ladder → q51 anomaly listing; q14 JSON extract → engine addition,
-# pytest-oracled; q16 sessionize → stateful sessionization in
-# test_analytics_lake; q17 text metrics → q22/q26/q27; q19 lang profile →
-# q01 (avg) + q26 (lang id); q32/q34/q35 cube/pivot/exact-percentile →
-# engine additions (q46 gates the production percentile sketch).
+# pytest-oracled; q16 sessionize → pytest-oracled (test_entry); q17 text
+# metrics → q22/q26/q27; q19 lang profile → q01 (avg) + q26 (lang id);
+# q32/q34/q35 cube/pivot/exact-percentile → engine additions (q46 gates the
+# production percentile sketch).
 REGISTRY.update(
     {
         "q02_top_brands": (q02_top_brands, SQL_Q02),

@@ -73,6 +73,15 @@ MOR_SPLIT_MAX_DELTA_ROWS = 4_000_000
 MOR_SPLIT_MAX_DELTA_FRACTION = 0.1
 MOR_SPLIT_MIN_BASE_ROWS = 2_000_000
 
+#: maybe_rebucket growth: each rewrite multiplies the bucket count by
+#: REBUCKET_GROWTH, never past REBUCKET_MAX_BUCKETS.
+REBUCKET_GROWTH = 4
+REBUCKET_MAX_BUCKETS = 4096
+
+#: vacuum removes a commit temp older than this: a live CAS holds its temp
+#: for milliseconds, so an older one was left by a writer that died.
+COMMIT_TEMP_ORPHAN_SEC = 3600.0
+
 
 class SnapshotConflict(Exception):
     """Another writer committed the same snapshot id first (CAS lost)."""
@@ -389,11 +398,10 @@ class LakeTable:
         df,
         snapshot_id: int,
         schema_id: int,
-        files_per_bucket: int = 1,
         pre_partitioned: bool = False,
     ) -> dict[int, list[dict]]:
         """Write a physical DataFrame (user cols + meta cols + _bucket) as
-        per-bucket parquet under data/epoch=<snapshot_id>/, return
+        one parquet file per bucket under data/epoch=<snapshot_id>/, return
         {bucket: [file entries]} for the manifest. Each entry carries the
         file's footer stats: physical ``rows``, ``bytes``, ``tombstones``
         (the ``_row_hash`` null count) and ``max_lsn`` — everything the
@@ -403,7 +411,7 @@ class LakeTable:
         bucket-clustered (e.g. the merge reuses its aggregate exchange) — no
         extra shuffle is added; each task's rows split into per-bucket files
         by the dynamic-partition writer. Otherwise one repartition by bucket
-        yields one file per bucket per task."""
+        puts each bucket in one task."""
         # unique suffix: two writers racing toward the same child snapshot id
         # must never share a data directory (the CAS on the manifest decides
         # the winner; the loser's files stay orphaned until vacuum)
@@ -411,14 +419,7 @@ class LakeTable:
             DATA_DIR, f"epoch={snapshot_id}-{uuid.uuid4().hex[:8]}"
         )
         out = os.path.join(self.root, rel_epoch)
-        writer = df
-        if not pre_partitioned:
-            if files_per_bucket > 1:
-                writer = writer.repartition(
-                    files_per_bucket * 64, META_BUCKET, F.col("conv_id")
-                )
-            else:
-                writer = writer.repartition(META_BUCKET)
+        writer = df if pre_partitioned else df.repartition(META_BUCKET)
         (
             # prefixing the sort with the partition column satisfies the file
             # writer's required ordering, so Spark skips its own re-sort and
@@ -543,25 +544,21 @@ class LakeTable:
             if binfo.get("delta")
         }
 
-    def maybe_compact(self, max_delta_files: int = 8, files_per_bucket: int = 1) -> dict | None:
+    def maybe_compact(self, max_delta_files: int = 8) -> dict | None:
         """Auto-compaction policy: fold buckets whose delta file count
         exceeds the threshold (read amplification bound). In production this
         runs as an async maintenance job; inline here."""
         todo = [b for b, n in self.delta_pressure().items() if n > max_delta_files]
         if not todo:
             return None
-        return self.compact(buckets=todo, files_per_bucket=files_per_bucket)
+        return self.compact(buckets=todo)
 
     def watermark_ts(self, snap: dict | None = None) -> float:
         """Max event-time (unix seconds) ever applied to the table."""
         snap = snap or self.snapshot()
         return float(snap.get("watermark_ts") or 0.0)
 
-    def gc_tombstones(
-        self,
-        allowed_lateness_sec: float,
-        files_per_bucket: int = 1,
-    ) -> dict | None:
+    def gc_tombstones(self, allowed_lateness_sec: float) -> dict | None:
         """Retention-policy tombstone GC, driven by the manifest watermark.
 
         A tombstone must outlive every event that could still lose to it:
@@ -584,10 +581,7 @@ class LakeTable:
         if not todo:
             return None
         return self.compact(
-            buckets=todo,
-            files_per_bucket=files_per_bucket,
-            drop_tombstones_ts_before=horizon,
-            include_non_delta=True,
+            buckets=todo, drop_tombstones_ts_before=horizon, include_non_delta=True
         )
 
     # -- SCD2 / history ------------------------------------------------------
@@ -724,16 +718,12 @@ class LakeTable:
     def compact(
         self,
         buckets: list[int] | None = None,
-        files_per_bucket: int = 1,
-        drop_tombstones_below_lsn: int | None = None,
         drop_tombstones_ts_before: float | None = None,
         include_non_delta: bool = False,
     ) -> dict:
         """Merge-on-read compaction: rewrite delta-carrying buckets into a
         single resolved generation (LWW applied once). Tombstones are
-        retained by default — they keep late zombies out. GC knobs:
-        ``drop_tombstones_below_lsn`` (WAL retention horizon — no event
-        below that position can still arrive) and
+        retained by default — they keep late zombies out; the GC knob is
         ``drop_tombstones_ts_before`` (event-time watermark horizon — see
         :meth:`gc_tombstones`). ``include_non_delta`` lets the GC rewrite
         already-compacted buckets that still carry old tombstones.
@@ -754,10 +744,6 @@ class LakeTable:
         resolved = self.read(
             buckets=todo, include_deleted=True, with_meta=True, snap=snap
         ).withColumn(META_BUCKET, bucket_expr(snap["num_buckets"]))
-        if drop_tombstones_below_lsn is not None:
-            resolved = resolved.filter(
-                ~(F.col(META_DELETED) & (F.col(META_LSN) < drop_tombstones_below_lsn))
-            )
         if drop_tombstones_ts_before is not None:
             ts_unix = F.coalesce(
                 F.col("ts").cast("timestamp_ltz").cast("double"), F.lit(0.0)
@@ -766,7 +752,7 @@ class LakeTable:
                 ~(F.col(META_DELETED) & (ts_unix < drop_tombstones_ts_before))
             )
         written = self.write_bucket_files(
-            resolved, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket
+            resolved, snap["snapshot_id"] + 1, snap["schema_id"]
         )
         # buckets whose resolved state is empty (e.g. everything tombstoned
         # and GC'd) still replace their file lists — with an empty list
@@ -784,7 +770,7 @@ class LakeTable:
             {"compacted_buckets": todo},
         )
 
-    def rebucket(self, new_num_buckets: int, files_per_bucket: int = 1) -> dict:
+    def rebucket(self, new_num_buckets: int) -> dict:
         """Bucket-count evolution as a committed snapshot operation — the
         Iceberg partition-spec-evolution analog. ``num_buckets`` is chosen at
         :meth:`create` time; a table that grows 100× would otherwise be stuck
@@ -825,7 +811,7 @@ class LakeTable:
             include_deleted=True, with_meta=True, snap=snap
         ).withColumn(META_BUCKET, bucket_expr(new_num_buckets))
         written = self.write_bucket_files(
-            resolved, snap["snapshot_id"] + 1, snap["schema_id"], files_per_bucket
+            resolved, snap["snapshot_id"] + 1, snap["schema_id"]
         )
         table_hwm = max(
             (int(b.get("hwm_lsn") or 0) for b in snap["buckets"].values()), default=0
@@ -850,19 +836,14 @@ class LakeTable:
         self._write_snapshot(new)
         return new
 
-    def maybe_rebucket(
-        self,
-        target_bucket_bytes: int = 1 << 30,
-        growth_factor: int = 4,
-        max_buckets: int = 4096,
-        files_per_bucket: int = 1,
-    ) -> dict | None:
+    def maybe_rebucket(self, target_bucket_bytes: int = 1 << 30) -> dict | None:
         """Rebucket policy (the :meth:`maybe_compact` analog for layout):
         when the MEDIAN bytes per occupied bucket exceeds
-        ``target_bucket_bytes``, grow the bucket count by ``growth_factor``
-        (geometric — each rewrite buys factor× headroom, so total rewrite
-        work over the table's lifetime is O(size · log_factor(growth)))
-        capped at ``max_buckets``. Pure manifest arithmetic — no scan; in
+        ``target_bucket_bytes``, grow the bucket count by
+        :data:`REBUCKET_GROWTH` (geometric — each rewrite buys factor×
+        headroom, so total rewrite work over the table's lifetime is
+        O(size · log_factor(growth))) capped at
+        :data:`REBUCKET_MAX_BUCKETS`. Pure manifest arithmetic — no scan; in
         production this runs on the maintenance cadence next to
         ``maybe_compact``/``vacuum``. Returns the new snapshot or None.
 
@@ -884,11 +865,9 @@ class LakeTable:
         sizes = sorted(sum(fe["bytes"] for fe in b["files"]) for b in occupied)
         if sizes[len(sizes) // 2] <= target_bucket_bytes:
             return None
-        if cur >= max_buckets:
+        if cur >= REBUCKET_MAX_BUCKETS:
             return None
-        return self.rebucket(
-            min(cur * growth_factor, max_buckets), files_per_bucket=files_per_bucket
-        )
+        return self.rebucket(min(cur * REBUCKET_GROWTH, REBUCKET_MAX_BUCKETS))
 
     def changes(self, from_snapshot: int, to_snapshot: int | None = None):
         """Changelog between two snapshots (CDC-out): one row per key whose
@@ -934,28 +913,24 @@ class LakeTable:
             .select(*KEY_COLS, *[F.col(f"n.{c}").alias(c) for c in user_cols], "change_type")
         )
 
-    def vacuum(self, keep_snapshots: int = 2, orphan_tmp_age_sec: float = 3600.0) -> list[str]:
+    def vacuum(self, keep_snapshots: int = 2) -> list[str]:
         """Delete data files referenced only by snapshots older than the
         newest `keep_snapshots` (and those manifests). Returns removed paths.
 
         Also sweeps commit-temp litter: a writer that died between its CAS
         temp write and the link leaves ``snapshot-*.json.tmp.*`` behind
         (chaos-campaign finding — the old id parse choked on it). Temps
-        older than ``orphan_tmp_age_sec`` are orphans by definition (a live
-        CAS holds its temp for milliseconds) and are removed; younger ones
-        are left for the in-flight writer."""
+        older than :data:`COMMIT_TEMP_ORPHAN_SEC` are removed; younger ones
+        are left for the in-flight writer. The temp-name convention is the
+        IO backend's private business, so the sweep asks the seam."""
         mdir = os.path.join(self.root, MANIFEST_DIR)
         names = self.io.list_names(mdir)
         now = time.time()
-        # the temp-name convention is the IO backend's private business —
-        # ask the seam (older duck-typed backends without the method simply
-        # have no litter to sweep)
-        is_temp = getattr(self.io, "is_commit_temp", lambda _n: False)
         for f in names:
-            if is_temp(f):
+            if self.io.is_commit_temp(f):
                 p = os.path.join(mdir, f)
                 try:
-                    if now - self.io.mtime(p) > orphan_tmp_age_sec:
+                    if now - self.io.mtime(p) > COMMIT_TEMP_ORPHAN_SEC:
                         self.io.remove(p)
                 except OSError:
                     pass  # raced with the writer's own cleanup

@@ -1,6 +1,7 @@
 """Change-feed tailing: Structured Streaming and incremental microbatch drivers.
 
-Two drivers share the same :func:`..operators.merge.apply_batch` sink:
+Two drivers share one per-batch step (:func:`_batch_step`: transform →
+:func:`..operators.merge.apply_batch` → inline upkeep):
 
 - :func:`run_stream` — idiomatic Structured Streaming: parquet file source
   over the WAL directory, ``foreachBatch`` apply, Spark checkpoint for
@@ -72,17 +73,16 @@ def list_segments(segments_dir: str) -> list[str]:
     return sorted(out, key=_natural_key)
 
 
-_FOOTER_CACHE: dict[str, str] = {}
-
-
 def read_batch(spark, paths: list[str], json_payload_schema=None):
     """Read one microbatch of segment files, unifying footer schemas
     (per-batch Arrow-schema diff; v1/v2 boundary can fall inside a batch).
 
-    Footer reads are driver-side and serial, so Spark-written segment
-    directories (``part-*`` files — one writer, one schema per directory)
-    are cached: one footer read covers the directory. Individually named
-    segment files (schema may differ file-to-file) are always read.
+    Footer reads are driver-side and serial, so within one call the
+    ``part-*`` files of a Spark-written segment directory (one writer, one
+    schema per directory) share one footer read. Individually named
+    segment files (schema may differ file-to-file) are always read. Nothing
+    is remembered across calls: a directory rewritten between two batches
+    is read afresh.
 
     ``.jsonl`` segments (one JSON CDC envelope per line — the
     Debezium-export wire shape) are parsed against the DECLARED
@@ -116,22 +116,15 @@ def read_batch(spark, paths: list[str], json_payload_schema=None):
             return json_df
     by_schema: dict[tuple[str, str], list[str]] = {}
     schemas = {}
+    footer_json: dict[str, str] = {}  # segment dir (part-* files) or file
     for p in paths:
         fmt = "orc" if p.endswith(".orc") else "parquet"
-        cacheable = os.path.basename(p).startswith("part-")
-        key = os.path.dirname(p) if cacheable else p
-        sj = _FOOTER_CACHE.get(key)
-        if sj is None:
+        key = os.path.dirname(p) if os.path.basename(p).startswith("part-") else p
+        if key not in footer_json:
             s = arrow_schema_of_segment(p)
-            sj = s.json()
-            if cacheable:
-                _FOOTER_CACHE[key] = sj
-            schemas[sj] = s
-        elif sj not in schemas:
-            from ..schema import schema_from_json
-
-            schemas[sj] = schema_from_json(sj)
-        by_schema.setdefault((sj, fmt), []).append(p)
+            footer_json[key] = s.json()
+            schemas.setdefault(footer_json[key], s)
+        by_schema.setdefault((footer_json[key], fmt), []).append(p)
     unified = None
     for s in schemas.values():
         unified = s if unified is None else merge_schemas(unified, s)[0]
@@ -151,6 +144,47 @@ def read_batch(spark, paths: list[str], json_payload_schema=None):
     return df
 
 
+def _batch_step(
+    lake: LakeTable,
+    stream_id: str,
+    transform,
+    mode: str,
+    auto_compact_after: int | None,
+    auto_vacuum_every: int | None,
+    vacuum_keep_snapshots: int,
+    auto_rebucket_target_bytes: int | None,
+):
+    """The per-batch step both drivers run, in this order: ``transform``
+    (optional) → :func:`apply_batch` → inline upkeep after the batch's
+    commit — ``maybe_compact`` (MOR only), ``maybe_rebucket``, and
+    ``vacuum`` every ``auto_vacuum_every`` batches. Upkeep is state-derived
+    (delta depth, bytes/bucket, snapshot count), so a crash between a
+    commit and its upkeep loses nothing: the next batch re-evaluates the
+    same conditions.
+
+    Returns ``(step, applied)``: ``step(df, batch_id, segment_hwm=None)``
+    applies one batch and appends its metrics to the ``applied`` list."""
+    applied: list[dict] = []
+
+    def step(df, batch_id: int, segment_hwm: str | None = None) -> None:
+        if transform is not None:
+            df = transform(df)
+        applied.append(
+            apply_batch(
+                lake, df, batch_id, stream_id=stream_id, mode=mode,
+                segment_hwm=segment_hwm,
+            )
+        )
+        if auto_compact_after is not None and mode == "mor":
+            lake.maybe_compact(max_delta_files=auto_compact_after)
+        if auto_rebucket_target_bytes is not None:
+            lake.maybe_rebucket(target_bucket_bytes=auto_rebucket_target_bytes)
+        if auto_vacuum_every is not None and len(applied) % auto_vacuum_every == 0:
+            lake.vacuum(keep_snapshots=vacuum_keep_snapshots)
+
+    return step, applied
+
+
 def run_incremental(
     lake: LakeTable,
     segments_dir: str,
@@ -158,7 +192,6 @@ def run_incremental(
     segments_per_batch: int = 1,
     transform=None,
     max_batches: int | None = None,
-    files_per_bucket: int = 1,
     mode: str = "cow",
     auto_compact_after: int | None = None,
     auto_vacuum_every: int | None = None,
@@ -177,6 +210,8 @@ def run_incremental(
     batch id). Requires only that new segments sort after applied ones in
     natural order — true of any sequence-numbered binlog.
 
+    Each batch runs the step shared with :func:`run_stream`
+    (:func:`_batch_step`), right after :func:`read_batch` returns.
     ``transform`` (optional) maps the raw batch DataFrame → enriched batch
     (e.g. vectorized text normalization / quality columns) before the merge.
     ``auto_compact_after`` (MOR): fold buckets down once their delta file
@@ -187,9 +222,10 @@ def run_incremental(
     count while time travel stays available inside the keep window (the
     maintenance-job analog of ``maybe_compact``).
     ``auto_rebucket_target_bytes``: after each batch, grow the bucket count
-    (``LakeTable.maybe_rebucket``, geometric ×4) once mean bytes per
+    (``LakeTable.maybe_rebucket``, geometric) once the median bytes per
     occupied bucket crosses the target — the table's layout keeps pace with
-    unbounded growth without operator intervention.
+    unbounded growth without operator intervention. Every batch is one file
+    per bucket per epoch.
     """
     segs = list_segments(segments_dir)
     hwm = lake.last_segment_hwm(stream_id)
@@ -203,28 +239,18 @@ def run_incremental(
         segs[i : i + segments_per_batch] for i in range(0, len(segs), segments_per_batch)
     ]
     next_id = lake.last_batch_id(stream_id) + 1
-    out = []
+    step, out = _batch_step(
+        lake, stream_id, transform, mode, auto_compact_after,
+        auto_vacuum_every, vacuum_keep_snapshots, auto_rebucket_target_bytes,
+    )
     for i, paths in enumerate(batches):
         if max_batches is not None and len(out) >= max_batches:
             break
-        df = read_batch(lake.spark, paths, json_payload_schema=json_payload_schema)
-        if transform is not None:
-            df = transform(df)
-        out.append(
-            apply_batch(
-                lake, df, next_id + i, stream_id=stream_id,
-                files_per_bucket=files_per_bucket, mode=mode,
-                segment_hwm=os.path.relpath(paths[-1], segments_dir),
-            )
+        step(
+            read_batch(lake.spark, paths, json_payload_schema=json_payload_schema),
+            next_id + i,
+            segment_hwm=os.path.relpath(paths[-1], segments_dir),
         )
-        if auto_compact_after is not None and mode == "mor":
-            lake.maybe_compact(max_delta_files=auto_compact_after,
-                               files_per_bucket=files_per_bucket)
-        if auto_rebucket_target_bytes is not None:
-            lake.maybe_rebucket(target_bucket_bytes=auto_rebucket_target_bytes,
-                                files_per_bucket=files_per_bucket)
-        if auto_vacuum_every is not None and len(out) % auto_vacuum_every == 0:
-            lake.vacuum(keep_snapshots=vacuum_keep_snapshots)
     return out
 
 
@@ -236,7 +262,6 @@ def run_stream(
     stream_id: str = "stream",
     transform=None,
     max_files_per_trigger: int = 4,
-    files_per_bucket: int = 1,
     mode: str = "cow",
     auto_compact_after: int | None = None,
     auto_vacuum_every: int | None = None,
@@ -249,15 +274,13 @@ def run_stream(
     WAL directory, then stops) so tests and bench runs are synchronous; a
     production deployment drops the trigger for continuous tailing.
 
-    The maintenance knobs mirror :func:`run_incremental` — a continuous
-    deployment never returns to an operator between batches, so compaction
-    (``auto_compact_after``, MOR only), snapshot/file GC
-    (``auto_vacuum_every`` / ``vacuum_keep_snapshots``) and bucket-layout
-    growth (``auto_rebucket_target_bytes``) run inside ``foreachBatch``,
-    after the batch's lake commit. A crash between the commit and its
-    maintenance loses nothing: maintenance is state-derived (delta depth,
-    snapshot count, bytes/bucket), so the next batch's pass re-evaluates
-    the same conditions.
+    Each microbatch runs the step shared with :func:`run_incremental`
+    (:func:`_batch_step`) inside ``foreachBatch``, so the maintenance knobs
+    are the same — a continuous deployment never returns to an operator
+    between batches, so compaction (``auto_compact_after``, MOR only),
+    snapshot/file GC (``auto_vacuum_every`` / ``vacuum_keep_snapshots``)
+    and bucket-layout growth (``auto_rebucket_target_bytes``) run after the
+    batch's lake commit.
 
     A Spark streaming source cannot change schema mid-query, so the declared
     ``source_schema`` is fixed — a segment whose parquet footer carries
@@ -273,7 +296,10 @@ def run_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(segments_dir)
     )
-    metrics: list[dict] = []
+    step, metrics = _batch_step(
+        lake, stream_id, transform, mode, auto_compact_after,
+        auto_vacuum_every, vacuum_keep_snapshots, auto_rebucket_target_bytes,
+    )
     declared = {f.name: f.dataType for f in source_schema.fields}
     checked: set[str] = set()
 
@@ -328,21 +354,7 @@ def run_stream(
 
     def _apply(batch_df, batch_id: int):
         _assert_footer_schemas()
-        df = transform(batch_df) if transform is not None else batch_df
-        metrics.append(
-            apply_batch(
-                lake, df, batch_id, stream_id=stream_id,
-                files_per_bucket=files_per_bucket, mode=mode,
-            )
-        )
-        if auto_compact_after is not None and mode == "mor":
-            lake.maybe_compact(max_delta_files=auto_compact_after,
-                               files_per_bucket=files_per_bucket)
-        if auto_rebucket_target_bytes is not None:
-            lake.maybe_rebucket(target_bucket_bytes=auto_rebucket_target_bytes,
-                                files_per_bucket=files_per_bucket)
-        if auto_vacuum_every is not None and len(metrics) % auto_vacuum_every == 0:
-            lake.vacuum(keep_snapshots=vacuum_keep_snapshots)
+        step(batch_df, batch_id)
 
     q = (
         stream.writeStream.foreachBatch(_apply)
