@@ -63,6 +63,27 @@ def test_asof_preserves_left_columns(spark):
     assert set(out.columns) == {"key", "ts", "ev", "state"}
 
 
+def test_asof_plan_size_does_not_grow_with_left_width(spark):
+    """The right side's NULL fill for left-only columns is one projection:
+    a left input with 60 payload columns builds an analyzed plan with as
+    many Project nodes as a left input with one."""
+    import re
+
+    def n_projects(width):
+        left = _left(spark).select(
+            "key", "ts", *[(F.col("ev") + i).alias(f"p{i}") for i in range(width)]
+        )
+        out = asof_join(left, _right(spark), on="key", left_ts="ts", right_ts="rts")
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return len(re.findall(r"(?m)^[\s:+\-]*Project \[", plan)), out
+
+    narrow, _ = n_projects(1)
+    wide, out = n_projects(60)
+    assert wide == narrow
+    got = {(r.key, r.p59): r.state for r in out.collect()}
+    assert got[("k1", 160)] == "s5" and got[("k3", 163)] is None
+
+
 def test_interval_join_exact_once(spark):
     # interval longer than the bucket: the pair must still appear exactly once
     left = spark.createDataFrame(
@@ -190,51 +211,6 @@ def test_asof_carries_rows_atomically(spark):
     tol = asof_join(left, right, on="key", left_ts="ts", right_ts="rts",
                     tolerance_seconds=1).collect()[0]
     assert tol.tag == "b" and tol.price is None  # ts=2 is 1s stale: fresh
-
-
-def test_asof_skew_bucketed_matches_plain(spark):
-    """The hot-key escape hatch (skew_bucket_seconds) must be a pure
-    performance knob: identical output to the plain one-window form on a
-    single-hot-key fixture, including carry across empty buckets, strict
-    mode, tolerance, and NULL-ts rows."""
-    left_rows = [("hot", _ts(s), s) for s in range(0, 120, 3)] + [
-        ("cold", _ts(7), 999), ("hot", None, 998)]
-    right_rows = [("hot", _ts(s), f"s{s}") for s in (0, 5, 40, 41, 90)] + [
-        ("cold", _ts(2), "c2")]
-    left = spark.createDataFrame(left_rows, "key string, ts timestamp, ev int")
-    right = spark.createDataFrame(right_rows, "key string, rts timestamp, state string")
-    for kw in (
-        {},
-        {"strict": True},
-        {"tolerance_seconds": 10},
-        {"strict": True, "tolerance_seconds": 4},
-    ):
-        plain = {r.ev: r.state for r in asof_join(
-            left, right, on="key", left_ts="ts", right_ts="rts", **kw).collect()}
-        for bucket in (1, 7, 1000):
-            bucketed = {r.ev: r.state for r in asof_join(
-                left, right, on="key", left_ts="ts", right_ts="rts",
-                skew_bucket_seconds=bucket, **kw).collect()}
-            assert bucketed == plain, (kw, bucket)
-
-
-def test_asof_skew_bucketed_plan_partitions_by_bucket(spark):
-    """The bucketed form's main window must partition by (key, bucket) —
-    i.e. the hot key's rows genuinely spread across tasks — and the plain
-    form must stay window-only (no join)."""
-    left = spark.createDataFrame([("hot", _ts(1), 1)], "key string, ts timestamp, ev int")
-    right = spark.createDataFrame([("hot", _ts(0), "s")], "key string, rts timestamp, state string")
-    bucketed_plan = (
-        asof_join(left, right, on="key", left_ts="ts", right_ts="rts",
-                  skew_bucket_seconds=60)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "__asof_bucket" in bucketed_plan
-    plain_plan = (
-        asof_join(left, right, on="key", left_ts="ts", right_ts="rts")
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "Join" not in plain_plan
 
 
 def test_interval_join_drops_inverted_and_null_intervals(spark):
@@ -387,8 +363,8 @@ def test_q39_count_form_matches_on_random_events(spark, tmp_path):
 
 def test_asof_right_tiebreak_matches_pre_dedup(spark):
     """r6: right_tiebreak folds the right-side max_by dedup into the window
-    sort. For every mode (inclusive/strict × plain/skew-bucketed) the
-    result must equal deduping upstream with max_by(payload, tiebreak)."""
+    sort. In both modes (inclusive/strict) the result must equal deduping
+    upstream with max_by(payload, tiebreak)."""
     import pyspark.sql.functions as SF
 
     left = spark.createDataFrame(
@@ -408,18 +384,15 @@ def test_asof_right_tiebreak_matches_pre_dedup(spark):
         .select("key", "rts", SF.col("s.tb").alias("tb"), SF.col("s.state").alias("state"))
     )
     for strict in (False, True):
-        for skew in (None, 3):
-            got = asof_join(
-                left, right, on="key", left_ts="ts", right_ts="rts",
-                payload_cols=["tb", "state"], strict=strict,
-                skew_bucket_seconds=skew, right_tiebreak="tb",
-            ).orderBy("key", "ts").collect()
-            want = asof_join(
-                left, latest, on="key", left_ts="ts", right_ts="rts",
-                payload_cols=["tb", "state"], strict=strict,
-                skew_bucket_seconds=skew,
-            ).orderBy("key", "ts").collect()
-            assert [tuple(r) for r in got] == [tuple(r) for r in want], (strict, skew)
+        got = asof_join(
+            left, right, on="key", left_ts="ts", right_ts="rts",
+            payload_cols=["tb", "state"], strict=strict, right_tiebreak="tb",
+        ).orderBy("key", "ts").collect()
+        want = asof_join(
+            left, latest, on="key", left_ts="ts", right_ts="rts",
+            payload_cols=["tb", "state"], strict=strict,
+        ).orderBy("key", "ts").collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want], strict
 
 
 def test_range_count_is_zero_past_the_span(spark):

@@ -3,15 +3,48 @@ codecs — schema contracts, batch shapes, determinism."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from trde703_openfoodfacts_etl_spark.operators.multimodal import (
-    decode_features,
-    frame_sample,
-    resize_stub,
-    synth_media,
+from trde703_openfoodfacts_etl_spark.operators.multimodal import decode_features
+
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),  # image|audio|video
+        T.StructField("mime", T.StringType(), True),
+        T.StructField("width", T.IntegerType(), True),
+        T.StructField("height", T.IntegerType(), True),
+        T.StructField("duration_ms", T.IntegerType(), True),
+        T.StructField("payload", T.BinaryType(), True),  # opaque bytes
+    ]
 )
+
+
+def synth_media(spark, n: int = 64, seed: int = 42):
+    """Deterministic fake media table (payload = seeded bytes)."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    kinds = ["image", "audio", "video"]
+    for i in range(n):
+        kind = kinds[i % 3]
+        # Tuples, not a pandas frame: pd.DataFrame upcasts int+None columns
+        # to float64, which the non-Arrow createDataFrame path rejects for
+        # IntegerType. Tuples keep ints integral on every conversion path.
+        rows.append(
+            (
+                i,
+                kind,
+                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
+                int(rng.integers(64, 1920)) if kind != "audio" else None,
+                int(rng.integers(64, 1080)) if kind != "audio" else None,
+                int(rng.integers(1000, 60000)) if kind != "image" else None,
+                bytes(rng.integers(0, 256, size=int(rng.integers(256, 2048)), dtype=np.uint8)),
+            )
+        )
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -35,16 +68,3 @@ def test_decode_features_contract(media):
     # deterministic: same input → same features
     again = decode_features(media).collect()
     assert {r["media_id"]: r["feat"] for r in feats} == {r["media_id"]: r["feat"] for r in again}
-
-
-def test_frame_sample(media):
-    frames = frame_sample(media, every_ms=5000)
-    rows = frames.collect()
-    assert all(r["frame_ms"] % 5000 == 0 for r in rows)
-    n_videos = media.filter("kind = 'video'").count()
-    assert frames.select("media_id").distinct().count() == n_videos
-
-
-def test_resize_is_explicit_stub(media):
-    with pytest.raises(NotImplementedError):
-        resize_stub(media, 64, 64)

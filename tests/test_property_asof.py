@@ -126,32 +126,3 @@ def test_interval_join_matches_naive(spark, lts, ivs, bucket):
         if rs <= s <= rs + ln
     )
     assert got == want
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(left=left_strategy, right=right_strategy,
-       bucket=st.sampled_from([1, 4, 13, 1000]),
-       strict=st.booleans())
-def test_asof_skew_bucketed_equals_plain_property(spark, left, right, bucket, strict):
-    """skew_bucket_seconds is a pure performance knob: for ANY input and ANY
-    bucket width (finer than, comparable to, and coarser than the data's
-    time span) the bucketed as-of equals the plain one-window as-of."""
-    l = spark.createDataFrame(
-        [(k, _ts(s), i) for i, (k, s) in enumerate(left)],
-        "key int, ts timestamp, ev int",
-    )
-    r_rows = [(k, _ts(s), f"s{k}_{s}") for k, s in right]
-    r = spark.createDataFrame(r_rows or [(None, None, None)],
-                              "key int, rts timestamp, state string")
-    if not r_rows:
-        r = r.filter("key is not null")
-    plain = {int(row.ev): row.state for row in asof_join(
-        l, r, on="key", left_ts="ts", right_ts="rts", strict=strict).collect()}
-    bucketed = {int(row.ev): row.state for row in asof_join(
-        l, r, on="key", left_ts="ts", right_ts="rts", strict=strict,
-        skew_bucket_seconds=bucket).collect()}
-    assert bucketed == plain

@@ -50,7 +50,12 @@ def test_random_groups_with_ties(spark):
     ]
     df = spark.createDataFrame(rows, "g string, v double")
     # many partitions: ranks cross partition boundaries constantly
-    _compare(df, ["g"], "v", num_partitions=16)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        _compare(df, ["g"], "v")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_tiny_and_skewed_groups(spark):
@@ -60,7 +65,7 @@ def test_tiny_and_skewed_groups(spark):
         + [("hot", float(i % 37)) for i in range(3_000)]
     )
     df = spark.createDataFrame(rows, "g string, v double")
-    _compare(df, ["g"], "v", num_partitions=8)
+    _compare(df, ["g"], "v")
 
 
 def test_nulls_ignored_and_null_group_key(spark):
@@ -76,7 +81,7 @@ def test_multi_column_group_and_int_values(spark):
         for _ in range(2_000)
     ]
     df = spark.createDataFrame(rows, "g1 string, g2 int, v int")
-    _compare(df, ["g1", "g2"], "v", num_partitions=8)
+    _compare(df, ["g1", "g2"], "v")
 
 
 def test_plan_has_no_value_buffer_aggregate(spark):
@@ -86,7 +91,7 @@ def test_plan_has_no_value_buffer_aggregate(spark):
     df = spark.createDataFrame(
         [("a", float(i)) for i in range(100)], "g string, v double"
     )
-    out = exact_quantiles(df, ["g"], "v", [0.5], num_partitions=4)
+    out = exact_quantiles(df, ["g"], "v", [0.5])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "percentile" not in plan.lower()
     assert "Window" not in plan

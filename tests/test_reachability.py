@@ -1,9 +1,15 @@
-"""Every package module is reached from a shipping entry point.
+"""Every package module and top-level function is reached from a shipping
+entry point.
 
-A pure-AST import walk (nothing is imported, no Spark) from the driver
-contract, the benchmark, the two CLIs and the streaming drivers. A module
-that only tests import fails this check: it belongs under ``tests/`` or
-nowhere.
+Pure AST (nothing is imported, no Spark), starting from the driver
+contract, the benchmark, the two CLIs and the streaming drivers:
+
+- the module check walks imports; a module that only tests import fails;
+- the function check walks names over the reached modules; a top-level
+  ``def`` or ``class`` that no shipping path names fails, unless it is a
+  parity reference a test compares a shipping fast path against.
+
+Code that fails either check belongs under ``tests/`` or nowhere.
 """
 
 from __future__ import annotations
@@ -16,6 +22,16 @@ PKG = "trde703_openfoodfacts_etl_spark"
 
 ENTRY_FILES = ["__spark_entry__.py", "bench.py"]
 ENTRY_MODULES = [f"{PKG}.pipeline_cli", f"{PKG}.inspect_cli", f"{PKG}.streaming.pipeline"]
+
+#: package functions no shipping path calls, kept because a test compares a
+#: shipping fast path against them: name -> that test
+PARITY_REFERENCES = {
+    "reference_normalize": "tests/test_normalize.py::test_vectorized_matches_reference_scalar",
+    "mingram_fingerprint_expr": "tests/test_text_functions.py::test_mingram_fingerprint_vec_matches_expr",
+    "corpus_plane_buckets_expr": "tests/test_similarity.py::test_corpus_plane_buckets_vectorized_matches_expr",
+    "cosine_neardup_pairs": "tests/test_asof_interval.py::test_cosine_neardup_matmul_matches_declarative",
+    "interval_join": "tests/test_asof_interval.py::test_q39_count_form_matches_pair_enumeration",
+}
 
 
 def _package_modules() -> dict[str, str]:
@@ -34,12 +50,16 @@ def _package_modules() -> dict[str, str]:
     return out
 
 
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read(), filename=path)
+
+
 def _imported_names(path: str, module: str | None) -> set[str]:
     """Absolute dotted names a file imports, anywhere in its body. For
     ``from X import Y`` both ``X`` and ``X.Y`` are candidates (Y may be a
     submodule); the caller keeps the ones that are modules."""
-    with open(path) as fh:
-        tree = ast.parse(fh.read(), filename=path)
+    tree = _parse(path)
     is_pkg = os.path.basename(path) == "__init__.py"
     names: set[str] = set()
     for node in ast.walk(tree):
@@ -86,3 +106,79 @@ def test_every_package_module_is_reached_from_a_shipping_path():
         f"modules no shipping path imports: {unreached}; wire them into a "
         "shipping path, move them under tests/, or delete them"
     )
+
+
+def _names(nodes) -> set[str]:
+    """Every ``ast.Name`` id and ``ast.Attribute`` attr under ``nodes``."""
+    out: set[str] = set()
+    for node in nodes:
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+    return out
+
+
+def _unreached_defs() -> dict[str, str]:
+    """Top-level def/class name -> its module, for every one in a reached
+    module that no shipping path names.
+
+    Roots: every name in an entry file or entry module, the public defs of
+    an entry module (the drivers themselves), and every name in the
+    module-level code (``REGISTRY``, constants) or a decorator of a reached
+    module. A def under a bare decorator (``@atexit.register``) is a root
+    too: the decorator gets the function itself at import. A def whose
+    name a reached def uses is reached."""
+    mods = _package_modules()
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    used: set[str] = set()
+    for f in ENTRY_FILES:
+        used |= _names([_parse(os.path.join(REPO, f))])
+    for m in sorted(_reached()):
+        tree = _parse(mods[m])
+        if m in ENTRY_MODULES:
+            used |= _names([tree])
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((m, stmt))
+                used |= _names(stmt.decorator_list)
+                if (m in ENTRY_MODULES and not stmt.name.startswith("_")) or any(
+                    not isinstance(d, ast.Call) for d in stmt.decorator_list
+                ):
+                    used.add(stmt.name)
+            else:
+                used |= _names([stmt])
+    todo = [n for n in defs if n in used]
+    seen = set(todo)
+    while todo:
+        for _, node in defs[todo.pop()]:
+            new = (_names([node]) & defs.keys()) - seen
+            seen |= new
+            todo += new
+    return {n: defs[n][0][0] for n in sorted(defs.keys() - seen)}
+
+
+def test_every_package_function_is_reached_from_a_shipping_path():
+    unreached = [
+        f"{m}.{n}" for n, m in _unreached_defs().items() if n not in PARITY_REFERENCES
+    ]
+    assert unreached == [], (
+        f"functions no shipping path calls: {unreached}; call them from a "
+        "shipping path, move them under tests/, or delete them (a parity "
+        "reference a test compares against goes into PARITY_REFERENCES)"
+    )
+
+
+def test_parity_references_are_unreached_and_compared_by_their_test():
+    unreached = _unreached_defs()
+    for name, test_id in PARITY_REFERENCES.items():
+        assert name in unreached, (
+            f"{name} is reached from a shipping path; drop it from PARITY_REFERENCES"
+        )
+        path, test = test_id.split("::")
+        tree = _parse(os.path.join(REPO, path))
+        assert any(
+            isinstance(n, ast.FunctionDef) and n.name == test for n in tree.body
+        ), f"{test_id} does not exist"
+        assert name in _names([tree]), f"{path} does not call {name}"

@@ -22,7 +22,11 @@ import os
 __version__ = "0.1.0"
 
 
-def spread(df, min_fill: float = 0.5):
+#: share of the default parallelism at which spread() leaves an input alone
+SPREAD_MIN_FILL = 0.5
+
+
+def spread(df):
     """Round-robin repartition a pathologically under-partitioned input up
     to the session's default parallelism — and a NO-OP otherwise.
 
@@ -35,7 +39,7 @@ def spread(df, min_fill: float = 0.5):
     cluster-wide parallelism for the expensive per-row stage.
 
     The guard keeps this scale-safe: an input that already has at least
-    ``min_fill``·defaultParallelism partitions (e.g. a real multi-file
+    ``SPREAD_MIN_FILL``·defaultParallelism partitions (e.g. a real multi-file
     100 TB corpus) is returned unchanged — this must never become a
     forced full-corpus shuffle."""
     sc = df.sparkSession.sparkContext
@@ -44,7 +48,7 @@ def spread(df, min_fill: float = 0.5):
         cur = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — inspection only; fall back to no-op
         return df
-    return df if cur >= max(1, int(target * min_fill)) else df.repartition(target)
+    return df if cur >= max(1, int(target * SPREAD_MIN_FILL)) else df.repartition(target)
 
 
 def build_session(

@@ -26,14 +26,6 @@ def token_count_expr(col):
     ).cast("int")
 
 
-def bpe_ish_token_count_expr(col):
-    """BPE-ish token estimate: count maximal runs of word chars, digits, or
-    single punctuation — a deterministic regex proxy for subword tokenizers."""
-    return F.when(F.trim(col) == "", F.lit(0)).otherwise(
-        F.size(F.regexp_extract_all(col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)))
-    ).cast("int")
-
-
 #: the exact character set of Java regex [\w\s] without UNICODE flags:
 #: \w = [A-Za-z0-9_], \s = [ \t\n\x0B\f\r] — enumerable, so the punct count
 #: can skip the regex engine entirely
@@ -59,16 +51,6 @@ def punct_ratio_expr(col):
 
 
 _STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "it", "for", "on"]
-
-
-def stopword_ratio_expr(col):
-    """stopword tokens / tokens — higher-order functions, no UDF."""
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    n = F.size(toks)
-    sw = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS)))
-    return F.when((F.trim(col) == "") | (n == 0), F.lit(0.0)).otherwise(
-        sw.cast("double") / n.cast("double")
-    )
 
 
 def quality_score_expr(col):
@@ -121,8 +103,8 @@ def mingram_fingerprint_expr(col, n: int = 3):
     = whole document; equivalently MinHash with k=1 over shingles). Robust
     to small edits anywhere but at the selected gram; md5-hex string min is
     engine-portable, so the exact same value is computable in ANSI SQL
-    (DuckDB oracle parity) — unlike the Karp-Rabin numeric variant
-    (:func:`rolling_fingerprint`), whose uint64 wrap-around isn't SQL.
+    (DuckDB oracle parity) — unlike a Karp-Rabin numeric fingerprint,
+    whose uint64 wrap-around isn't SQL.
     Word grams, not char grams: ~15× fewer md5 evaluations per document
     for the same near-dup sensitivity. Texts shorter than n words hash
     whole."""
@@ -261,27 +243,3 @@ def simhash64(texts: pd.Series) -> pd.Series:
         return int.from_bytes(sig, "little", signed=True)
 
     return pd.Series([one(toks) for toks in toks_per_doc], index=texts.index, dtype=object)
-
-
-@F.pandas_udf(T.LongType())
-def rolling_fingerprint(texts: pd.Series) -> pd.Series:
-    """Winnowing-style document fingerprint: min 8-gram Karp-Rabin rolling
-    hash over the normalized character stream (robust to small edits at the
-    ends). Vectorized per Arrow batch with a numpy rolling kernel."""
-    B, M, K = np.uint64(257), np.uint64((1 << 61) - 1), 8
-
-    def one(t):
-        if t is None:
-            return None
-        b = np.frombuffer(" ".join(t.lower().split()).encode("utf-8"), dtype=np.uint8)
-        if len(b) < K:
-            h = np.uint64(0)
-            for c in b:
-                h = (h * B + np.uint64(c)) % M
-            return int(np.int64(h))
-        pows = np.power(B, np.arange(K - 1, -1, -1, dtype=np.uint64), dtype=np.uint64)
-        win = np.lib.stride_tricks.sliding_window_view(b, K).astype(np.uint64)
-        hashes = (win * pows).sum(axis=1) % M
-        return int(np.int64(hashes.min()))
-
-    return texts.map(one)

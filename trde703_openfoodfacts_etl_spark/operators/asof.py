@@ -18,13 +18,8 @@ never a join explosion:
 
 At 100 TB this is shuffle-optimal: volume is |left| + |right| rows exactly
 once, partitioned by key; a sort-merge or broadcast as-of would still need
-the same exchange plus an O(matches) join. Hot keys cost O(key size) in one
-task — for pathological single-key skew pass ``skew_bucket_seconds`` to
-pre-bucket by (key, time-range) and as-of within buckets, carrying the last
-right state of all previous buckets via a tiny per-(key, bucket) prefix
-window (the salting analog of the merge engine's (bucket, conv_id)
-repartition). Semantics are identical (property-tested); the hot key's work
-spreads across ceil(key_span / skew_bucket_seconds) tasks.
+the same exchange plus an O(matches) join. A hot key costs O(key size) in
+one task.
 
 Interval join (left.ts ∈ [right.start, right.end], **no equi key**) would
 fall to BroadcastNestedLoopJoin in vanilla Spark — O(|L|·|R|) comparisons.
@@ -55,7 +50,6 @@ def asof_join(
     payload_cols: list[str] | None = None,
     strict: bool = False,
     tolerance_seconds: float | None = None,
-    skew_bucket_seconds: int | None = None,
     right_tiebreak: str | None = None,
 ):
     """For every left row, attach the latest right row with
@@ -84,16 +78,6 @@ def asof_join(
     they sort nulls-first in the window, before every right row, and with a
     tolerance set the freshness comparison is NULL too. This matches DuckDB
     ASOF; pandas ``merge_asof`` would instead raise on NULL keys.
-
-    ``skew_bucket_seconds`` is the hot-key escape hatch: instead of one
-    window task per key (all rows of a pathological key in one task), rows
-    are sub-bucketed by ``floor(ts / skew_bucket_seconds)`` and the window
-    runs per (key, bucket); the right state carried into each bucket from
-    all earlier buckets is computed by a per-(key, bucket) aggregate plus a
-    prefix window over the (tiny) bucket summaries. Output is identical to
-    the plain form for every input (property-tested) — choose a bucket
-    width that splits the hottest key's time span into a few hundred
-    buckets.
     """
     from pyspark.sql import types as T
 
@@ -142,14 +126,14 @@ def asof_join(
         )
         r_tagged = r_tagged.withColumn(_TB, F.col(right_tiebreak))
     r_keep = [*keys, _SIDE, _TS, _PAY] + ([_TB] if right_tiebreak is not None else [])
-    r_tagged = r_tagged.select(*r_keep)
-    for c in l_tagged.columns:
-        if c not in r_tagged.columns:
-            r_tagged = r_tagged.withColumn(c, F.lit(None).cast(dict(
-                zip(l_tagged.columns, [f.dataType for f in l_tagged.schema.fields])
-            )[c]))
+    # right rows carry NULLs for the left-only columns: one select, so the
+    # plan does not grow with the width of the left schema
+    r_tagged = r_tagged.select(*[
+        F.col(f.name) if f.name in r_keep else F.lit(None).cast(f.dataType).alias(f.name)
+        for f in l_tagged.schema.fields
+    ])
     cols = l_tagged.columns
-    u = l_tagged.select(cols).unionByName(r_tagged.select(cols))
+    u = l_tagged.unionByName(r_tagged)
 
     # Inclusive: a right row at the same ts is visible to the left row
     # (side 0 sorts before side 1). Strict: left sorts first. The optional
@@ -158,64 +142,11 @@ def asof_join(
     order = [F.col(_TS).asc(), F.col(_SIDE).asc() if not strict else F.col(_SIDE).desc()]
     if right_tiebreak is not None:
         order.append(F.col(_TB).asc_nulls_first())
-    if skew_bucket_seconds is None:
-        w = W.partitionBy(*keys).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
-        filled = u.select(
-            *[c for c in cols if c != _PAY],
-            F.last(_PAY, ignorenulls=True).over(w).alias(_PAY),
-        )
-    else:
-        _BKT = "__asof_bucket"
-        _BL = "__asof_bucket_last"
-        _CARRY = "__asof_carry"
-        u = u.withColumn(
-            _BKT, F.floor(F.col(_TS).cast("double") / F.lit(int(skew_bucket_seconds)))
-        )
-        # Within-bucket as-of: same window, partitioned by (key, bucket) —
-        # a hot key's rows now spread over its time buckets.
-        w_in = (
-            W.partitionBy(*keys, _BKT).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
-        )
-        in_bucket = u.select(
-            *[c for c in cols if c != _PAY],
-            F.col(_BKT),
-            F.last(_PAY, ignorenulls=True).over(w_in).alias(_PAY),
-        )
-        # Carry-in per bucket: the latest right payload of each (key, bucket)
-        # (max_by skips left rows — their ordering expr is NULL), then a
-        # prefix window over the bucket summaries (one row per key×bucket,
-        # tiny) takes the newest right state from all STRICTLY EARLIER
-        # buckets. A carried row is always strictly older than anything in
-        # the bucket (equal ts ⇒ equal bucket), so strict/inclusive modes
-        # need no extra handling.
-        _bl_order = (
-            F.col(_TS)
-            if right_tiebreak is None
-            else F.struct(F.col(_TS), F.col(_TB))
-        )
-        bucket_last = u.groupBy(*keys, _BKT).agg(
-            F.max_by(_PAY, F.when(F.col(_SIDE) == 0, _bl_order)).alias(_BL)
-        )
-        w_carry = W.partitionBy(*keys).orderBy(_BKT).rowsBetween(W.unboundedPreceding, -1)
-        carry = bucket_last.withColumn(
-            _CARRY, F.last(_BL, ignorenulls=True).over(w_carry)
-        ).select(
-            *[F.col(k).alias(f"__c_{k}") for k in keys],
-            F.col(_BKT).alias("__c_bkt"),
-            _CARRY,
-        )
-        # Null-safe join: the plain window form groups NULL keys into one
-        # partition, so NULL keys must match NULL keys here too. NULL-ts
-        # left rows live in the NULL bucket, which sorts first in the carry
-        # window → carry NULL → payload NULL, same as the plain form.
-        cond = F.col(_BKT).eqNullSafe(F.col("__c_bkt"))
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"__c_{k}"))
-        filled = (
-            in_bucket.join(carry, cond, "left")
-            .withColumn(_PAY, F.coalesce(F.col(_PAY), F.col(_CARRY)))
-            .drop(_BKT, _CARRY, "__c_bkt", *[f"__c_{k}" for k in keys])
-        )
+    w = W.partitionBy(*keys).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
+    filled = u.select(
+        *[c for c in cols if c != _PAY],
+        F.last(_PAY, ignorenulls=True).over(w).alias(_PAY),
+    )
     out = filled.filter(F.col(_SIDE) == 1)
     pay = F.col(_PAY)
     if tolerance_seconds is not None:

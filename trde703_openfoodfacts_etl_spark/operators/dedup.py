@@ -4,17 +4,19 @@ Scalable designs only: every method reduces to hash-groupBy or
 bucket-equi-join shapes — never an O(n²) cross join — so they survive
 100 TB corpora on a real cluster. (The reference's only dedup is LWW/
 dropDuplicates, SURVEY.md §2.4 A5; these generalize to content dedup.)
+Exact dedup is a plain ``groupBy(fingerprint_expr(text))``, written
+inline by q18.
 
-- exact: groupBy(md5(normalized text)) — one shuffle on a 128-bit key.
-- n-gram Jaccard: word-shingle inverted index join; candidate pairs share
-  ≥1 shingle, verified by exact Jaccard on shingle-set sizes. JVM-side
-  higher-order functions (transform/slice/array_distinct), no UDF.
+- n-gram Jaccard: prefix-filtered word-shingle inverted index join;
+  candidate pairs share ≥1 rare shingle, verified by exact Jaccard on the
+  shingle sets. JVM-side higher-order functions, no UDF.
 - MinHash + LSH: k hash functions over shingles (universal hashing of
-  xxhash64 shingle hashes — all columnar expressions), banded into b bands;
-  docs sharing a band bucket are candidates → verified with signature
-  similarity. One explode + two shuffles, never pairwise over the corpus.
+  xxhash64 shingle hashes), banded into b bands; docs sharing a band
+  bucket are candidates. q24 composes :func:`minhash_signatures` and
+  :func:`minhash_lsh_candidates` and verifies with exact Jaccard.
 - SimHash: 64-bit signature (vectorized pandas UDF, functions/text.py),
   near-dups = equal 16-bit chunk (Hamming ≤ 3 in expectation) → band join.
+- connected components: near-dup pairs → dedup clusters (q59).
 - embedding cosine near-dup: random-hyperplane LSH buckets (see
   operators/similarity.py) + in-bucket verification.
 """
@@ -25,24 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .. import spread as _spread
-from ..functions.text import fingerprint_expr, simhash64
-
-
-def exact_duplicates(df, text_col: str = "text", id_col: str = "doc_id"):
-    """Groups of byte-identical (modulo case/whitespace) documents.
-
-    No spread(): the per-row work is ONE normalize+md5, which a single
-    core clears faster than the extra round-robin stage costs (r6 A/B:
-    spread 1.47 s vs 0.74 s at a 50k-doc single-row-group corpus)."""
-    return (
-        df.groupBy(fingerprint_expr(F.col(text_col)).alias("fingerprint"))
-        .agg(
-            F.count(F.lit(1)).alias("n_copies"),
-            F.min(id_col).alias("keeper"),
-            F.collect_list(id_col).alias("members"),
-        )
-        .filter(F.col("n_copies") > 1)
-    )
+from ..functions.text import simhash64
 
 
 def word_shingles(col, n: int = 3):
@@ -75,10 +60,7 @@ def word_shingles(col, n: int = 3):
 
 
 def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 3, threshold: float = 0.8,
-                        max_doc_freq: int | None = None,
-                        prefix_filter: bool = True,
-                        broadcast_candidates: bool = True):
+                        n: int = 3, threshold: float = 0.8):
     """All pairs with word-n-gram Jaccard ≥ threshold. EXACT output.
 
     Scale shape = prefix-filtered similarity join (Bayardo et al. AllPairs /
@@ -91,12 +73,6 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     without giving up exactness. Candidates are then verified with the
     exact Jaccard via one shingle-array join. A length filter
     (t·|B| ≤ |A|) prunes mismatched sizes before verification.
-
-    ``max_doc_freq`` optionally also drops ultra-hot shingles from the
-    *verification-independent* candidate index (approximation; off by
-    default — the prefix filter already bounds hot-shingle fanout).
-    ``prefix_filter=False`` falls back to the plain inverted-index join
-    (useful for tiny corpora / debugging).
     """
     df = _spread(df)  # single-row-group inputs: shingle on every core
     sh = df.select(
@@ -106,33 +82,22 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     ex = sh.select("_id", "_size", F.explode("_sh").alias("_g")).withColumn(
         "_gh", F.xxhash64("_g")
     ).drop("_g")
-    # The exploded set feeds BOTH the document-frequency aggregate and the
-    # prefix join (and, in plain mode, both join sides): materialize it once
-    # — three longs per (doc, shingle), so storage is ~24 B/shingle — or the
-    # regex shingling of the WHOLE corpus re-runs per consumer. Same
-    # executor-local-persist tradeoff as the candidate list below. Measured
-    # ~30% off q21 wall at sf0.1 with exact pair parity.
+    # The exploded set feeds the document-frequency aggregate, the prefix
+    # ranking and the per-doc bitmap: materialize it once — three longs per
+    # (doc, shingle), so storage is ~24 B/shingle — or the regex shingling
+    # of the WHOLE corpus re-runs per consumer. Same executor-local-persist
+    # tradeoff as the candidate list below. Measured ~30% off q21 wall at
+    # sf0.1 with exact pair parity.
     ex = ex.localCheckpoint(eager=False)
-    if max_doc_freq is not None:
-        keep = (
-            ex.groupBy("_gh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("_gh")
-        )
-        ex = ex.join(keep, "_gh")
-    if prefix_filter:
-        dfreq = ex.groupBy("_gh").agg(F.count(F.lit(1)).alias("_df"))
-        wdoc = W.partitionBy("_id").orderBy("_df", "_gh")
-        prefix_len = F.floor((1.0 - threshold) * F.col("_size")).cast("int") + 1
-        ex = (
-            ex.join(dfreq, "_gh")
-            .withColumn("_rk", F.row_number().over(wdoc))
-            .filter(F.col("_rk") <= prefix_len)
-            .select("_id", "_size", "_gh", "_rk")
-        )
-    else:
-        ex = ex.withColumn("_rk", F.lit(None).cast("int"))
+    dfreq = ex.groupBy("_gh").agg(F.count(F.lit(1)).alias("_df"))
+    wdoc = W.partitionBy("_id").orderBy("_df", "_gh")
+    prefix_len = F.floor((1.0 - threshold) * F.col("_size")).cast("int") + 1
+    ex = (
+        ex.join(dfreq, "_gh")
+        .withColumn("_rk", F.row_number().over(wdoc))
+        .filter(F.col("_rk") <= prefix_len)
+        .select("_id", "_size", "_gh", "_rk")
+    )
     a = ex.select(
         F.col("_id").alias("id_a"), F.col("_size").alias("size_a"), "_gh",
         F.col("_rk").alias("_rka"),
@@ -154,61 +119,58 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
             F.col("size_a") - F.col("_rka"), F.col("size_b") - F.col("_rkb")
         )
     ) >= overlap_needed
-    if prefix_filter:
-        # 256-bit per-doc shingle bitmap → a SECOND lossless overlap upper
-        # bound, evaluated per collision row inside the candidate join
-        # (bit_count on 4 longs — codegen, ~ns/pair). Pigeonhole: common
-        # shingles occupy ≥ o − (|A| − popcount(bmA)) distinct bit
-        # positions (within-A same-bit multiplicity bounds the common
-        # set's), and every such position survives in bmA & bmB, so
-        #   o ≤ popcount(bmA & bmB) + min(|A|−popcount(bmA), |B|−popcount(bmB)).
-        # Exact for ANY hash (collisions only weaken pruning, never drop a
-        # true pair). At low thresholds (t=0.5 ⇒ prefixes are half the
-        # doc) the positional filter alone passes millions of single-rare-
-        # shingle coincidences — ~19M candidate pairs at a 50k-doc corpus,
-        # 28 s of array_intersect verification; the bitmap bound kills
-        # chance collisions (expected AND-popcount ≈ |A|·|B|/256 bits ≪
-        # o_needed) so only true near-dups reach the exact verify.
-        _words = 4  # 256 bits
-        _bm_aggs = [
-            F.bit_or(
-                F.when(
-                    F.expr("pmod(_gh, 256) div 64") == w,
-                    F.expr("shiftleft(1L, cast(pmod(_gh, 64) as int))"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias(f"_bm{w}")
-            for w in range(_words)
-        ]
-        bm = ex.groupBy("_id").agg(*_bm_aggs)
-        bm = bm.withColumn(
-            "_pc", sum(F.bit_count(F.col(f"_bm{w}")) for w in range(_words))
+    # 256-bit per-doc shingle bitmap → a SECOND lossless overlap upper
+    # bound, evaluated per collision row inside the candidate join
+    # (bit_count on 4 longs — codegen, ~ns/pair). Pigeonhole: common
+    # shingles occupy ≥ o − (|A| − popcount(bmA)) distinct bit
+    # positions (within-A same-bit multiplicity bounds the common
+    # set's), and every such position survives in bmA & bmB, so
+    #   o ≤ popcount(bmA & bmB) + min(|A|−popcount(bmA), |B|−popcount(bmB)).
+    # Exact for ANY hash (collisions only weaken pruning, never drop a
+    # true pair). At low thresholds (t=0.5 ⇒ prefixes are half the
+    # doc) the positional filter alone passes millions of single-rare-
+    # shingle coincidences — ~19M candidate pairs at a 50k-doc corpus,
+    # 28 s of array_intersect verification; the bitmap bound kills
+    # chance collisions (expected AND-popcount ≈ |A|·|B|/256 bits ≪
+    # o_needed) so only true near-dups reach the exact verify.
+    _words = 4  # 256 bits
+    _bm_aggs = [
+        F.bit_or(
+            F.when(
+                F.expr("pmod(_gh, 256) div 64") == w,
+                F.expr("shiftleft(1L, cast(pmod(_gh, 64) as int))"),
+            ).otherwise(F.lit(0).cast("long"))
+        ).alias(f"_bm{w}")
+        for w in range(_words)
+    ]
+    bm = ex.groupBy("_id").agg(*_bm_aggs)
+    bm = bm.withColumn(
+        "_pc", sum(F.bit_count(F.col(f"_bm{w}")) for w in range(_words))
+    )
+    a = a.join(
+        bm.select(
+            F.col("_id").alias("id_a"), F.col("_pc").alias("_pca"),
+            *[F.col(f"_bm{w}").alias(f"_a{w}") for w in range(_words)],
+        ),
+        "id_a",
+    )
+    b = b.join(
+        bm.select(
+            F.col("_id").alias("id_b"), F.col("_pc").alias("_pcb"),
+            *[F.col(f"_bm{w}").alias(f"_b{w}") for w in range(_words)],
+        ),
+        "id_b",
+    )
+    pc_and = sum(
+        F.bit_count(F.col(f"_a{w}").bitwiseAND(F.col(f"_b{w}")))
+        for w in range(_words)
+    )
+    bitmap_ok = (
+        pc_and
+        + F.least(
+            F.col("size_a") - F.col("_pca"), F.col("size_b") - F.col("_pcb")
         )
-        a = a.join(
-            bm.select(
-                F.col("_id").alias("id_a"), F.col("_pc").alias("_pca"),
-                *[F.col(f"_bm{w}").alias(f"_a{w}") for w in range(_words)],
-            ),
-            "id_a",
-        )
-        b = b.join(
-            bm.select(
-                F.col("_id").alias("id_b"), F.col("_pc").alias("_pcb"),
-                *[F.col(f"_bm{w}").alias(f"_b{w}") for w in range(_words)],
-            ),
-            "id_b",
-        )
-        pc_and = sum(
-            F.bit_count(F.col(f"_a{w}").bitwiseAND(F.col(f"_b{w}")))
-            for w in range(_words)
-        )
-        bitmap_ok = (
-            pc_and
-            + F.least(
-                F.col("size_a") - F.col("_pca"), F.col("size_b") - F.col("_pcb")
-            )
-        ) >= overlap_needed
-    else:
-        bitmap_ok = F.lit(True)
+    ) >= overlap_needed
     cand = (
         a.join(b, "_gh")
         .filter(
@@ -216,28 +178,12 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
             # length filter: J ≥ t needs t·max(|A|,|B|) ≤ min(|A|,|B|)
             & (F.least("size_a", "size_b")
                >= threshold * F.greatest("size_a", "size_b"))
-            & (positional_ok if prefix_filter else F.lit(True))
+            & positional_ok
             & bitmap_ok
         )
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    if not prefix_filter:
-        # plain mode: every common shingle is indexed, count directly
-        common = (
-            a.join(b, "_gh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "size_a", "size_b")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        jac = F.col("n_common") / (
-            F.col("size_a") + F.col("size_b") - F.col("n_common")
-        )
-        return (
-            common.withColumn("jaccard", F.round(jac, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
     # Verification only needs the shingle arrays of CANDIDATE docs — a tiny
     # set after prefix filtering. Semi-join the raw docs down to candidates
     # first, then shingle just those. cand feeds two consumers (the id set
@@ -247,19 +193,12 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     # dynamic-allocation cluster where executor loss must be survivable,
     # swap for reliable .checkpoint() or accept the recompute).
     cand = cand.localCheckpoint(eager=False)
-    cids = (
+    # caveat: the broadcast candidate set is unbounded on boilerplate-heavy corpora
+    cids = F.broadcast(
         cand.select(F.col("id_a").alias("_id"))
         .union(cand.select(F.col("id_b").alias("_id")))
         .distinct()
     )
-    # Candidate ids are broadcast on the fast path. CAVEAT for extreme
-    # corpora: the candidate set is not theoretically bounded (boilerplate-
-    # heavy corpora can implicate most docs); pass
-    # ``broadcast_candidates=False`` there to use a shuffle semi-join —
-    # AQE cannot size the checkpoint-backed subplan up front, so this is an
-    # explicit knob rather than a runtime decision.
-    if broadcast_candidates:
-        cids = F.broadcast(cids)
     csh = (
         df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
         .join(cids, "_id", "left_semi")
@@ -381,39 +320,6 @@ def minhash_lsh_candidates(sig, id_col: str = "doc_id",
     )
 
 
-def minhash_lsh_pairs(df, text_col: str = "text", id_col: str = "doc_id",
-                      num_hashes: int = 64, bands: int = 16,
-                      threshold: float = 0.5, shingle_n: int = 3):
-    """Near-duplicate pairs via banded MinHash LSH.
-
-    bands × rows (rows = num_hashes/bands); docs agreeing on all rows of any
-    band collide → candidates (shuffle on band-bucket hash); candidates are
-    verified by estimated Jaccard = fraction of matching signature
-    components, joined onto the deduped candidate set (signatures never ride
-    the band explode). Tune bands/rows for the target s ≈ (1/b)^(1/r)."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    cand = minhash_lsh_candidates(sig, id_col, num_hashes, bands)
-    sigs = sig.select(
-        F.col(id_col).alias("_sid"),
-        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("_sig"),
-    )
-    paired = (
-        cand.join(sigs.withColumnRenamed("_sid", "id_a").withColumnRenamed("_sig", "sig_a"),
-                  "id_a")
-        .join(sigs.withColumnRenamed("_sid", "id_b").withColumnRenamed("_sig", "sig_b"),
-              "id_b")
-    )
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m))
-        / F.lit(float(num_hashes))
-    )
-    return (
-        paired.withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
 def simhash_near_dups(df, text_col: str = "text", id_col: str = "doc_id",
                       chunks: int = 4, max_hamming: int | None = None):
     """SimHash near-dup candidates: equal 16-bit chunk of the 64-bit
@@ -494,44 +400,28 @@ _free_local_checkpoint.failures = 0
 
 
 def connected_components(edges, src: str = "id_a", dst: str = "id_b",
-                         max_iter: int = 50, method: str = "label_propagation",
-                         stats: dict | None = None):
+                         max_iter: int = 50):
     """Connected components over an undirected edge list — the cluster
     step of document dedup (near-dup PAIRS → dedup GROUPS, so one
     representative per group survives). Returns (id, cluster_id) with
     cluster_id = the component's minimum node id (canonical, algorithm-
     independent).
 
-    Spark has no built-in CC, so both methods are driver-coordinated
-    DataFrame loops with per-round eager localCheckpoints (without lineage
-    truncation the plan would grow 3x per round — labels feeds the message
-    join, the union, and the changed-count join):
-
-    - ``label_propagation`` (default): Pregel-shaped min-label flood — each
-      round sends every node's label to its neighbors and keeps the min.
-      ONE shuffle join per round; rounds = graph diameter. The right cost
-      model for near-dup clusters, which are shallow (diameter 2–4).
-    - ``pointer_doubling``: adds a shortcut step — label'(v) =
-      min(label(v), min-neighbor label, label(label(v))). The self-join
-      halves the remaining distance to the component minimum each round
-      (path-doubling), so convergence is O(log d): a 10k-node chain closes
-      in ~14 rounds instead of 10k. TWO shuffle joins per round, so it only
-      wins when diameter ≫ 2·rounds — adversarial chain-shaped graphs.
-      Correctness: label(v) is always a node id inside v's component
-      (shortcutting composes reachability), and the fixpoint condition is
-      identical to label_propagation's, so both converge to the same
-      canonical minima.
+    Spark has no built-in CC, so this is a driver-coordinated DataFrame
+    loop with per-round eager localCheckpoints (without lineage truncation
+    the plan would grow 3x per round — labels feeds the message join, the
+    union, and the changed-count join). Pregel-shaped min-label flood:
+    each round sends every node's label to its neighbors and keeps the
+    min. ONE shuffle join per round; rounds = graph diameter. The right
+    cost model for near-dup clusters, which are shallow (diameter 2–4).
 
     Convergence is detected with a count of changed labels (an aggregate,
-    never a collect of the labels themselves); ``stats``, when passed, gets
-    ``{"rounds": n}`` recorded for observability/tests.
+    never a collect of the labels themselves).
 
     Not expressible as one SQL query in Spark — the DuckDB oracle uses a
     recursive CTE (UNION-deduped label reachability) and must agree
     exactly: CC is unique for a given graph regardless of algorithm.
     """
-    if method not in ("label_propagation", "pointer_doubling"):
-        raise ValueError(f"connected_components: unknown method {method!r}")
     a, b = F.col(src).alias("a"), F.col(dst).alias("b")
     # Materialize the symmetric edge list ONCE: it is consumed every round
     # (and its upstream plan — e.g. the whole near-dup similarity join in
@@ -546,23 +436,12 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
         sym.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
     ).localCheckpoint(eager=True)
     changed = 0
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         neigh = (
             sym.join(labels, sym["a"] == labels["id"])
             .select(F.col("b").alias("id"), F.col("label"))
         )
         candidates = labels.select("id", "label").union(neigh)
-        if method == "pointer_doubling":
-            # shortcut: v adopts its label's label. labels covers every
-            # node id and label(v) IS a node id, so the inner join is total.
-            shortcut = (
-                labels.alias("x")
-                .join(labels.alias("y"), F.col("x.label") == F.col("y.id"))
-                .select(F.col("x.id").alias("id"), F.col("y.label").alias("label"))
-            )
-            candidates = candidates.union(shortcut)
         new_labels = (
             candidates.groupBy("id")
             .agg(F.min("label").alias("label"))
@@ -581,13 +460,10 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
         labels = new_labels
         if changed == 0:
             break
-    if stats is not None:
-        stats["rounds"] = rounds
     if changed != 0:
         # Returning here would hand back NON-minimal labels (one component
         # reported as several clusters) with no indication — fail loudly;
-        # diameter > max_iter means the caller should raise max_iter (or
-        # switch to pointer-doubling, which converges in O(log d) rounds).
+        # diameter > max_iter means the caller should raise max_iter.
         # The raise path frees its checkpoints too: the error message
         # invites catch-and-retry, and a retry loop must not accumulate
         # pinned edge-list + label snapshots per failed attempt.
@@ -596,7 +472,7 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
         raise RuntimeError(
             f"connected_components: not converged after {max_iter} rounds "
             f"({changed} labels still changing — graph diameter exceeds "
-            "max_iter); raise max_iter or use method='pointer_doubling'"
+            "max_iter); raise max_iter"
         )
     # the returned frame is backed by its own checkpoint; the edge list is
     # no longer needed

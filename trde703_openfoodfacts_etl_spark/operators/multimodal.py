@@ -2,9 +2,8 @@
 
 The Spark-side plumbing is real and tested — schema, partition-friendly
 layout, Arrow batch shapes, mapInPandas signatures; only the codec kernels
-are stubbed (image/audio libraries are not in this container) behind
-clearly-marked deterministic fakes / NotImplementedError, per the driver's
-instruction.
+are stubbed (no image/audio codec library is a dependency) behind
+clearly-marked deterministic fakes.
 
 Design for 100 TB: media bytes live in their own column so Parquet column
 pruning skips them unless the query touches them; decode/feature steps are
@@ -24,48 +23,12 @@ from pyspark.sql import types as T
 
 from .. import spread as _spread
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-        T.StructField("payload", T.BinaryType(), True),  # opaque bytes
-    ]
-)
-
-
-def synth_media(spark, n: int = 64, seed: int = 42):
-    """Deterministic fake media table (payload = seeded bytes)."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        # Tuples, not a pandas frame: pd.DataFrame upcasts int+None columns
-        # to float64, which the non-Arrow createDataFrame path rejects for
-        # IntegerType. Tuples keep ints integral on every conversion path.
-        rows.append(
-            (
-                i,
-                kind,
-                {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
-                int(rng.integers(64, 1920)) if kind != "audio" else None,
-                int(rng.integers(64, 1080)) if kind != "audio" else None,
-                int(rng.integers(1000, 60000)) if kind != "image" else None,
-                bytes(rng.integers(0, 256, size=int(rng.integers(256, 2048)), dtype=np.uint8)),
-            )
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
 
 def media_from_documents(docs, payload_chars: int = 2048):
-    """Derive a deterministic media table FROM the documents table — the
-    oracle-able variant of :func:`synth_media`: every column is a pure
-    Spark-native expression of (doc_id, text), so an independent SQL engine
-    can reproduce the exact same table and verify the decode output.
+    """Derive a deterministic media table FROM the documents table: every
+    column is a pure Spark-native expression of (doc_id, text), so an
+    independent SQL engine can reproduce the exact same table and verify
+    the decode output.
 
     payload = UTF-8 bytes of the ASCII-stripped text (an opaque stand-in
     for real image/audio bytes); kind/width/height/duration are arithmetic
@@ -95,14 +58,14 @@ def media_from_documents(docs, payload_chars: int = 2048):
     )
 
 
-def _decode_image_stub(payload: bytes, width, height) -> np.ndarray:
+def _decode_image_stub(payload: bytes) -> np.ndarray:
     """STUB: real impl would be PIL/opencv decode. Deterministic fake:
     payload bytes tiled into a (8, 8, 3) uint8 'thumbnail'."""
     arr = np.frombuffer(payload[:192].ljust(192, b"\0"), dtype=np.uint8)
     return arr.reshape(8, 8, 3)
 
 
-def decode_features(df, batch_size_hint: int = 256):
+def decode_features(df):
     """image/audio → fixed-width feature vector via mapInPandas.
 
     Output schema: media_id, kind, feat array<float> (16-dim). The decode
@@ -125,9 +88,7 @@ def decode_features(df, batch_size_hint: int = 256):
         for pdf in batches:
             feats = []
             byte_sums = []
-            for payload, kind, w, h in zip(
-                pdf["payload"], pdf["kind"], pdf["width"], pdf["height"]
-            ):
+            for payload, kind in zip(pdf["payload"], pdf["kind"]):
                 if payload is None:
                     feats.append(None)
                     byte_sums.append(None)
@@ -136,7 +97,7 @@ def decode_features(df, batch_size_hint: int = 256):
                     int(np.frombuffer(payload[:192], dtype=np.uint8).sum())
                 )
                 if kind == "image":
-                    thumb = _decode_image_stub(payload, w, h)
+                    thumb = _decode_image_stub(payload)
                     f = thumb.mean(axis=(0, 1)).tolist() + thumb.std(axis=(0, 1)).tolist()
                     f = (f * 3)[:16]
                 else:
@@ -154,44 +115,3 @@ def decode_features(df, batch_size_hint: int = 256):
             )
 
     return df.mapInPandas(op, out_schema)
-
-
-def frame_sample(df, every_ms: int = 1000):
-    """video → sampled frame timestamps (plumbing real, decode stubbed):
-    one row per sampled frame with a deterministic fake frame hash."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_ms", T.IntegerType(), False),
-            T.StructField("frame_hash", T.LongType(), True),
-        ]
-    )
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_ms": [], "frame_hash": []}
-            for mid, dur, payload in zip(pdf["media_id"], pdf["duration_ms"], pdf["payload"]):
-                if dur is None or payload is None:
-                    continue
-                for ms in range(0, int(dur), every_ms):
-                    rows["media_id"].append(mid)
-                    rows["frame_ms"].append(ms)
-                    # STUB frame decode: hash of payload slice stands in for
-                    # the decoded frame content
-                    off = ms % max(len(payload) - 8, 1)
-                    rows["frame_hash"].append(
-                        int.from_bytes(payload[off : off + 8].ljust(8, b"\0"), "big", signed=True)
-                    )
-            yield pd.DataFrame(rows, dtype=object) if not rows["media_id"] else pd.DataFrame(rows)
-
-    return df.filter(F.col("kind") == "video").mapInPandas(op, out_schema)
-
-
-def resize_stub(df, width: int, height: int):
-    """image resize — not implementable without an image codec in this
-    container; the schema contract is kept and the call fails loudly."""
-    raise NotImplementedError(
-        "image resize requires PIL/opencv (not in container); "
-        "plumbing contract: mapInPandas(payload binary -> payload binary) "
-        "with width/height metadata rewritten"
-    )

@@ -12,8 +12,9 @@ exact ``quantile_cont`` semantics, no per-group value buffer anywhere:
 
 1. project to (group_cols, value) — column pruning means the shuffled data
    is a few bytes/row regardless of table width;
-2. ``repartitionByRange(P, *group, value)`` + ``sortWithinPartitions`` — a
-   distributed sort; each task holds one range partition, never one group;
+2. ``repartitionByRange(P, *group, value)`` + ``sortWithinPartitions``, with
+   P = ``spark.sql.shuffle.partitions`` — a distributed sort; each task
+   holds one range partition, never one group;
 3. one pass counts rows per (partition, group) — P×G count rows to the
    driver, which turns each target rank r = p·(n−1) into (partition,
    local offset) coordinates by prefix-summing counts in partition order;
@@ -45,8 +46,7 @@ _PID = "_pid"
 _GRANK = "_grank"
 
 
-def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float],
-                    num_partitions: int | None = None):
+def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float]):
     """Exact interpolated quantiles of ``value_col`` per ``group_cols``.
 
     Returns a DataFrame (group_cols…, _qi int, _q double): one row per group
@@ -59,7 +59,7 @@ def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float
     vals = df.select(
         *[F.col(c) for c in gcols], F.col(value_col).cast("double").alias(_V)
     ).filter(F.col(_V).isNotNull())
-    P = int(num_partitions or spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     rp = (
         vals.repartitionByRange(P, *gcols, _V)
         .sortWithinPartitions(*gcols, _V)

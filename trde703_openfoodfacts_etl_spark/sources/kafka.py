@@ -1,19 +1,12 @@
-"""Kafka-shaped change-feed source (Debezium-style envelope).
+"""Kafka-shaped change-feed envelope (Debezium-style).
 
-The steady-state WAL tail in this sandbox is a parquet segment directory
+The steady-state WAL tail is a parquet segment directory
 (streaming/pipeline.py), but a production CDC feed usually arrives on a
-Kafka topic. This module provides the Spark-idiomatic plumbing:
-
-- :func:`parse_cdc_envelope` — pure DataFrame transform from the raw Kafka
-  wire shape (``key: binary, value: binary, timestamp``) to the engine's
-  CDC envelope (op, lsn, event_ts + payload), via ``from_json``. Testable
-  without a broker (any DataFrame with those columns).
-- :func:`kafka_change_stream` — ``readStream.format("kafka")`` wired to the
-  parser. The kafka-sql connector jar is not in this sandbox, so ``load()``
-  fails there; the call shape is the standard public API and works wherever
-  ``spark-sql-kafka-0-10`` is on the classpath. Pair with
-  ``run_stream``-style ``foreachBatch(apply_batch)`` for exactly-once into
-  the lake (Spark checkpoint = source offsets, manifest marker = sink).
+Kafka topic. :func:`parse_cdc_envelope` is the pure DataFrame transform
+from the raw Kafka wire shape (``key: binary, value: binary, timestamp``)
+to the engine's CDC envelope (op, lsn, event_ts + payload), via
+``from_json``. ``read_batch`` uses it for JSON segments; any DataFrame with
+those columns works, so it needs no broker.
 """
 
 from __future__ import annotations
@@ -54,24 +47,3 @@ def parse_cdc_envelope(raw_df, payload_schema: T.StructType):
         F.coalesce(F.col("_e.event_ts"), F.col("_kafka_ts")).alias("event_ts"),
         *[F.col(f"_e.{f.name}").alias(f.name) for f in payload_schema.fields],
     ).filter(F.col("op").isNotNull() & F.col("lsn").isNotNull())
-
-
-def kafka_change_stream(
-    spark,
-    bootstrap_servers: str,
-    topic: str,
-    payload_schema: T.StructType,
-    starting_offsets: str = "earliest",
-    max_offsets_per_trigger: int | None = None,
-):
-    """readStream from a Kafka topic into the CDC envelope. Requires the
-    spark-sql-kafka connector on the classpath (not in this sandbox)."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    if max_offsets_per_trigger is not None:
-        reader = reader.option("maxOffsetsPerTrigger", max_offsets_per_trigger)
-    return parse_cdc_envelope(reader.load(), payload_schema)

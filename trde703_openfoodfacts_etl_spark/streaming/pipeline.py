@@ -86,8 +86,8 @@ def read_batch(spark, paths: list[str], json_payload_schema=None):
 
     ``.jsonl`` segments (one JSON CDC envelope per line — the
     Debezium-export wire shape) are parsed against the DECLARED
-    ``json_payload_schema`` via the same ``from_json`` path as the Kafka
-    source (sources/kafka.py) — never schema inference, which would scan
+    ``json_payload_schema`` via the Kafka envelope parser's ``from_json``
+    (sources/kafka.py) — never schema inference, which would scan
     the data twice and mistype int32/timestamp columns (JSON has neither).
     A JSON feed that evolves needs the superset schema passed in, exactly
     like a Kafka topic; footer-diff live evolution is the columnar paths'
