@@ -132,6 +132,27 @@ def test_list_segments_skips_hidden_and_inflight_paths(tmp_path):
     assert got == [str(wal / "segment=0" / "part-00000.parquet")]
 
 
+def test_list_segments_refuses_non_parquet_data_files(tmp_path):
+    """The WAL is parquet only: a non-hidden file of another format next to
+    valid segments makes the listing raise, naming the file, so neither
+    driver skips it silently. Hidden files stay skipped."""
+    from trde703_openfoodfacts_etl_spark.streaming.pipeline import list_segments
+
+    wal = tmp_path / "wal"
+    (wal / "segment=0").mkdir(parents=True)
+    (wal / "segment=0" / "part-00000.parquet").write_bytes(b"x")
+    (wal / "segment=0" / ".part-00000.parquet.crc").write_bytes(b"x")
+    (wal / "_SUCCESS").write_bytes(b"")
+    (wal / "segment=3.parquet").write_bytes(b"x")
+    assert len(list_segments(str(wal))) == 2
+
+    for foreign in ("segment=1.orc", "segment=2.jsonl"):
+        (wal / foreign).write_bytes(b"x")
+        with pytest.raises(ValueError, match=foreign):
+            list_segments(str(wal))
+        (wal / foreign).unlink()
+
+
 def test_parquet_stats_reads_tombstones_and_max_lsn_from_footer(tmp_path):
     """Tombstones are the _row_hash null count (row groups that are all
     tombstones carry only a null count, no min/max); a footer without

@@ -113,23 +113,6 @@ def test_mor_delete_and_late_event(spark, tmp_path):
     assert lake_state_pdf(lake)["text"].tolist() == ["b"]
 
 
-def test_tombstone_gc_at_compaction(spark, tmp_path):
-    lake = LakeTable.create(spark, str(tmp_path / "lakegc"), TRANSCRIPT_SCHEMA, num_buckets=4)
-    apply_batch(lake, make_events(spark, [
-        ("I", 1, "c1", 0, "user", "a", None, 100),
-        ("I", 2, "c2", 0, "user", "b", None, 110),
-    ]), 0, mode="mor")
-    apply_batch(lake, make_events(spark, [("D", 3, "c1", 0, None, None, None, 300)]), 1, mode="mor")
-    # one later event moves the watermark to ts=10000: the GC horizon
-    # (10000 - 5000) passes the delete's ts=300
-    apply_batch(lake, make_events(spark, [("U", 4, "c2", 0, "user", "b2", None, 10_000)]), 2, mode="mor")
-    assert lake.gc_tombstones(allowed_lateness_sec=5000) is not None
-    assert not any(b.get("delta") for b in lake.snapshot()["buckets"].values())
-    # tombstone dropped: physical rows == live rows
-    phys = lake.read(include_deleted=True).count()
-    assert phys == lake.read().count() == 1
-
-
 def test_mor_apply_runs_single_action_no_collect(spark, tmp_path, monkeypatch):
     """The MOR fast path must run exactly ONE action per batch (the delta
     write) and ZERO driver collects — the touched-bucket set and observe()
@@ -344,11 +327,8 @@ def test_mor_split_resolve_contested_keys_only(spark, tmp_path, monkeypatch):
 
 def test_mor_split_fallback_paths_agree(spark, tmp_path, monkeypatch):
     """Guarded fallbacks produce the identical state: delta rows over the
-    broadcast bound, a widely-contested base (delta over the fraction
-    guard), and a pre-tag (legacy) manifest with no per-file delta
-    markers."""
-    import copy
-
+    broadcast bound, a base under the min-base floor, and a widely-contested
+    base (delta over the fraction guard)."""
     from trde703_openfoodfacts_etl_spark.sources import lake as lake_mod
 
     lake, expect = _split_fixture(spark, tmp_path)
@@ -371,12 +351,3 @@ def test_mor_split_fallback_paths_agree(spark, tmp_path, monkeypatch):
     plan = lake.read()._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" not in plan
     assert _state(lake.read()) == expect
-    # legacy manifest: strip the per-file tags — indistinguishable files
-    # must take the full-aggregate path and still resolve exactly
-    snap = copy.deepcopy(lake.snapshot())
-    for binfo in snap["buckets"].values():
-        for fe in binfo["files"]:
-            fe.pop("delta", None)
-    df = lake.read(snap=snap)
-    assert "LeftAnti" not in df._jdf.queryExecution().executedPlan().toString()
-    assert _state(df) == expect

@@ -1,5 +1,5 @@
-"""Every package module and top-level function is reached from a shipping
-entry point.
+"""Every package module, top-level function and class method is reached
+from a shipping entry point.
 
 Pure AST (nothing is imported, no Spark), starting from the driver
 contract, the benchmark, the two CLIs and the streaming drivers:
@@ -7,9 +7,13 @@ contract, the benchmark, the two CLIs and the streaming drivers:
 - the module check walks imports; a module that only tests import fails;
 - the function check walks names over the reached modules; a top-level
   ``def`` or ``class`` that no shipping path names fails, unless it is a
-  parity reference a test compares a shipping fast path against.
+  parity reference a test compares a shipping fast path against;
+- the method check applies the same walk to each method of a top-level
+  class: a method is its own def, reached when reached code names it
+  (dunder methods are roots), and a class reaches only what its bases,
+  decorators and non-def body name.
 
-Code that fails either check belongs under ``tests/`` or nowhere.
+Code that fails any check belongs under ``tests/`` or nowhere.
 """
 
 from __future__ import annotations
@@ -120,18 +124,38 @@ def _names(nodes) -> set[str]:
     return out
 
 
-def _unreached_defs() -> dict[str, str]:
-    """Top-level def/class name -> its module, for every one in a reached
-    module that no shipping path names.
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _own_names(node) -> set[str]:
+    """Names a reached def makes reachable. A class reaches only what its
+    bases, keywords, decorators and non-def body name: each method is a def
+    of its own, reached only if reached code names it."""
+    if isinstance(node, ast.ClassDef):
+        return _names(
+            node.bases
+            + node.keywords
+            + node.decorator_list
+            + [s for s in node.body if not isinstance(s, _FUNCS)]
+        )
+    return _names([node])
+
+
+def _unreached_defs() -> dict[str, list[tuple[str, bool]]]:
+    """Def name -> ``(qualified name, is_method)`` of each def by that name,
+    for every top-level def/class, and every method of a top-level class,
+    in a reached module that no shipping path names.
 
     Roots: every name in an entry file or entry module, the public defs of
-    an entry module (the drivers themselves), and every name in the
+    an entry module (the drivers themselves), every name in the
     module-level code (``REGISTRY``, constants) or a decorator of a reached
-    module. A def under a bare decorator (``@atexit.register``) is a root
-    too: the decorator gets the function itself at import. A def whose
-    name a reached def uses is reached."""
+    module, and every dunder method (Python calls those itself). A
+    top-level def under a bare decorator (``@atexit.register``) is a root
+    too: the decorator gets the function itself at import. A def whose name
+    a reached def uses is reached. Names are not resolved to objects, so a
+    method is reached by any reached ``x.name`` or ``name``."""
     mods = _package_modules()
-    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    defs: dict[str, list[tuple[str, ast.AST, bool]]] = {}
     used: set[str] = set()
     for f in ENTRY_FILES:
         used |= _names([_parse(os.path.join(REPO, f))])
@@ -140,33 +164,62 @@ def _unreached_defs() -> dict[str, str]:
         if m in ENTRY_MODULES:
             used |= _names([tree])
         for stmt in tree.body:
-            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                defs.setdefault(stmt.name, []).append((m, stmt))
+            if isinstance(stmt, (*_FUNCS, ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((f"{m}.{stmt.name}", stmt, False))
                 used |= _names(stmt.decorator_list)
                 if (m in ENTRY_MODULES and not stmt.name.startswith("_")) or any(
                     not isinstance(d, ast.Call) for d in stmt.decorator_list
                 ):
                     used.add(stmt.name)
+                if isinstance(stmt, ast.ClassDef):
+                    for sub in stmt.body:
+                        if not isinstance(sub, _FUNCS):
+                            continue
+                        qual = f"{m}.{stmt.name}.{sub.name}"
+                        defs.setdefault(sub.name, []).append((qual, sub, True))
+                        used |= _names(sub.decorator_list)
+                        if sub.name.startswith("__") and sub.name.endswith("__"):
+                            used.add(sub.name)
             else:
                 used |= _names([stmt])
     todo = [n for n in defs if n in used]
     seen = set(todo)
     while todo:
-        for _, node in defs[todo.pop()]:
-            new = (_names([node]) & defs.keys()) - seen
+        for _, node, _ in defs[todo.pop()]:
+            new = (_own_names(node) & defs.keys()) - seen
             seen |= new
             todo += new
-    return {n: defs[n][0][0] for n in sorted(defs.keys() - seen)}
+    return {
+        n: [(qual, is_method) for qual, _, is_method in defs[n]]
+        for n in sorted(defs.keys() - seen)
+    }
 
 
 def test_every_package_function_is_reached_from_a_shipping_path():
     unreached = [
-        f"{m}.{n}" for n, m in _unreached_defs().items() if n not in PARITY_REFERENCES
+        qual
+        for n, found in _unreached_defs().items()
+        if n not in PARITY_REFERENCES
+        for qual, is_method in found
+        if not is_method
     ]
     assert unreached == [], (
         f"functions no shipping path calls: {unreached}; call them from a "
         "shipping path, move them under tests/, or delete them (a parity "
         "reference a test compares against goes into PARITY_REFERENCES)"
+    )
+
+
+def test_every_package_method_is_reached_from_a_shipping_path():
+    unreached = [
+        qual
+        for found in _unreached_defs().values()
+        for qual, is_method in found
+        if is_method
+    ]
+    assert unreached == [], (
+        f"methods no shipping path calls: {unreached}; call them from a "
+        "shipping path or delete them"
     )
 
 

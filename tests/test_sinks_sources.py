@@ -1,4 +1,4 @@
-"""Kafka-envelope source plumbing and the manifest introspection tool."""
+"""The manifest introspection tool."""
 
 from __future__ import annotations
 
@@ -8,36 +8,9 @@ import sys
 
 from trde703_openfoodfacts_etl_spark.inspect_cli import inspect_lake
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
-from trde703_openfoodfacts_etl_spark.sources.kafka import (
-    envelope_schema,
-    parse_cdc_envelope,
-)
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable
 
 from helpers import make_events
-
-
-def test_parse_cdc_envelope_roundtrip(spark):
-    """Kafka wire rows (binary JSON value) → CDC envelope, malformed dropped."""
-    payload = TRANSCRIPT_SCHEMA
-    good = {
-        "op": "I", "lsn": 7, "event_ts": "2024-01-01T00:00:05",
-        "conv_id": "c1", "turn_idx": 0, "role": "user",
-        "text": "hi", "tool": None, "ts": "2024-01-01T00:00:00",
-    }
-    raw = spark.createDataFrame(
-        [
-            (b"k1", json.dumps(good).encode()),
-            (b"k2", b"{not json"),
-        ],
-        "key binary, value binary",
-    )
-    env = parse_cdc_envelope(raw, payload)
-    rows = env.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["op"], r["lsn"], r["conv_id"], r["text"]) == ("I", 7, "c1", "hi")
-    assert set(env.columns) == {f.name for f in envelope_schema(payload).fields}
 
 
 def test_inspect_lake_manifest_only(spark, tmp_path):

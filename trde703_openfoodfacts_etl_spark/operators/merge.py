@@ -85,6 +85,10 @@ ENVELOPE_COLS = ("op", "lsn", "event_ts")
 #: per-table via this module constant.
 FUSED_DETECT_MAX_ROWS = 8_000_000
 
+#: apply_batch re-applies a batch at most this many times after losing the
+#: manifest CAS to another writer, then raises the SnapshotConflict.
+MAX_COMMIT_RETRIES = 3
+
 
 def apply_batch(
     lake: LakeTable,
@@ -93,19 +97,18 @@ def apply_batch(
     stream_id: str = "default",
     mode: str = "cow",
     segment_hwm: str | None = None,
-    max_commit_retries: int = 3,
 ) -> dict:
     """Apply one CDC microbatch with optimistic-concurrency retry: if
     another writer wins the manifest CAS, re-read the new head and re-apply
     (the loser's data files are orphans until vacuum). See
     :func:`_apply_batch_once` for the merge itself."""
-    for attempt in range(max_commit_retries + 1):
+    for attempt in range(MAX_COMMIT_RETRIES + 1):
         try:
             return _apply_batch_once(
                 lake, batch_df, batch_id, stream_id, mode, segment_hwm
             )
         except SnapshotConflict:
-            if attempt == max_commit_retries:
+            if attempt == MAX_COMMIT_RETRIES:
                 raise
     raise AssertionError("unreachable")
 

@@ -32,15 +32,13 @@ def main() -> None:
                          "(committed snapshot op; see LakeTable.rebucket)")
     ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     ap.add_argument("--normalize", action="store_true")
-    ap.add_argument("--spark-generator", action="store_true",
-                    help="generate the feed with the Spark-native generator")
     args = ap.parse_args()
 
     from . import build_session
     from .plans import transcript_analytics as ta
     from .quality import table_quality_report, write_report
     from .schema import TRANSCRIPT_SCHEMA
-    from .sources.genfeed import generate_segments, generate_segments_spark
+    from .sources.genfeed import generate_segments
     from .sources.lake import LakeTable
     from .streaming.pipeline import run_incremental
 
@@ -52,12 +50,8 @@ def main() -> None:
 
     # 1. feed
     if not os.path.isdir(wal) or not os.listdir(wal):
-        if args.spark_generator:
-            generate_segments_spark(spark, wal, n_events=args.events,
-                                    n_convs=args.convs, n_segments=args.segments)
-        else:
-            generate_segments(wal, n_convs=args.convs, n_events=args.events,
-                              n_segments=args.segments)
+        generate_segments(wal, n_convs=args.convs, n_events=args.events,
+                          n_segments=args.segments)
         print(f"[feed] generated ~{args.events} events (requested; per-segment rounding may add a few) in {wal}")
     else:
         print(f"[feed] reusing {wal}")

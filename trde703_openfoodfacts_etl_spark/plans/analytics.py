@@ -1464,8 +1464,7 @@ def q36_scd2_intervals(spark, sf_dir):
     derived declaratively): per key, LWW-ordered events collapse into
     versions at every payload change; effective_to = next version's
     effective_from; the last version is current. Windows shuffle per key
-    with small per-key partitions — skew-safe. The lake's snapshot-lineage
-    variant is LakeTable.key_history (pytest-covered)."""
+    with small per-key partitions — skew-safe."""
     from .flagship import _as_cdc
 
     ev = _as_cdc(load(spark, sf_dir, "events"))

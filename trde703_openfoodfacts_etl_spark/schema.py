@@ -215,37 +215,3 @@ def arrow_schema_of_parquet(path: str) -> T.StructType:
     from pyspark.sql.pandas.types import from_arrow_schema
 
     return from_arrow_schema(pq.read_schema(path))
-
-
-def arrow_schema_of_orc(path: str) -> T.StructType:
-    """ORC twin of :func:`arrow_schema_of_parquet`: read the ORC file
-    footer's Arrow schema driver-side (no Spark job).
-
-    ORC has no TIMESTAMP_NTZ physical type — Spark writes it as int64 and
-    annotates the field with ``spark.sql.catalyst.type`` metadata, which
-    Spark's own reader honors. Honor it here too, or an NTZ column's
-    footer diff would report bigint and hard-fail schema evolution."""
-    import pyarrow.orc as po
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    sch = po.ORCFile(path).schema
-    base = from_arrow_schema(sch)
-    fields: list[T.StructField] = []
-    for i, f in enumerate(base.fields):
-        meta = sch.field(i).metadata or {}
-        catalyst = meta.get(b"spark.sql.catalyst.type")
-        if catalyst:
-            from pyspark.sql.types import _parse_datatype_string
-
-            dt = _parse_datatype_string(catalyst.decode())
-            fields.append(T.StructField(f.name, dt, f.nullable))
-        else:
-            fields.append(f)
-    return T.StructType(fields)
-
-
-def arrow_schema_of_segment(path: str) -> T.StructType:
-    """Footer schema of a columnar WAL segment (parquet or ORC)."""
-    if path.endswith(".orc"):
-        return arrow_schema_of_orc(path)
-    return arrow_schema_of_parquet(path)

@@ -64,10 +64,6 @@ def generate_segments(
     n_segments: int = 3,
     seed: int = 42,
     v2_from_segment: int | None = None,
-    update_frac: float = 0.25,
-    delete_frac: float = 0.05,
-    dup_frac: float = 0.02,
-    late_frac: float = 0.03,
 ) -> list[str]:
     """Write ``n_segments`` ordered WAL segment parquet files; return paths."""
     rng = np.random.default_rng(seed)
@@ -93,10 +89,10 @@ def generate_segments(
         live_list = list(live)
         for i in range(n):
             c = int(convs[i])
-            if kinds[i] < update_frac and live_list:
+            if kinds[i] < 0.25 and live_list:  # 25% updates
                 op = "U"
                 c, t = live_list[int(rng.integers(len(live_list)))]
-            elif kinds[i] < update_frac + delete_frac and live_list:
+            elif kinds[i] < 0.3 and live_list:  # 5% deletes
                 op = "D"
                 c, t = live_list[int(rng.integers(len(live_list)))]
                 live.discard((c, t))
@@ -114,7 +110,7 @@ def generate_segments(
                 live_list.append((c, t))
             lsn += 1
             base_ts = EPOCH_2024 + lsn * 10
-            if rng.random() < late_frac:
+            if rng.random() < 0.03:
                 base_ts -= int(rng.integers(100, 10_000))  # out-of-order event
             ops.append(op)
             conv_ids.append(c)
@@ -154,7 +150,7 @@ def generate_segments(
         # duplicate (redelivered) events: re-append a sample of this segment's
         # rows verbatim — same lsn, must be idempotently absorbed.
         tbl = pa.table(cols)
-        n_dup = int(n * dup_frac)
+        n_dup = int(n * 0.02)
         if n_dup:
             idx = rng.integers(0, n, size=n_dup)
             tbl = pa.concat_tables([tbl, tbl.take(pa.array(idx, pa.int64()))])
@@ -171,8 +167,6 @@ def generate_segments_spark(
     n_events: int,
     n_convs: int,
     n_segments: int = 8,
-    update_frac: float = 0.25,
-    delete_frac: float = 0.05,
     seed: int = 42,
     hot_conv_frac: float | None = None,
     v2_from_segment: int | None = None,
@@ -212,8 +206,8 @@ def generate_segments_spark(
         .withColumn("conv", conv)
         .withColumn(
             "op",
-            F.when(opf < update_frac, F.lit("U"))
-            .when(opf < update_frac + delete_frac, F.lit("D"))
+            F.when(opf < 0.25, F.lit("U"))
+            .when(opf < 0.3, F.lit("D"))
             .otherwise(F.lit("I")),
         )
         .withColumn("conv_id", F.format_string("conv_%08d", F.col("conv")))

@@ -31,7 +31,6 @@ reference's md5 row_hash, etl/bronze_to_silver.py:255-263).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -272,22 +271,30 @@ class LakeTable:
         snap = snap or self.snapshot(snapshot_id)
         unified = self.user_schema(snap)
         phys_unified = _physical_schema(unified)
-        groups: dict[int, list[str]] = {}
+        # one pass over the file entries, each classified as clean (its
+        # bucket has no pending deltas), base (the key-unique compacted
+        # part of a delta bucket) or delta (appended, delta-tagged): only
+        # delta buckets pay the merge-on-read LWW aggregate, clean buckets
+        # stream straight through (union afterwards)
+        clean: dict[int, list[str]] = {}
+        base: dict[int, list[str]] = {}
+        delta: dict[int, list[str]] = {}
+        base_rows = delta_rows = 0
         for b, binfo in snap["buckets"].items():
             if buckets is not None and int(b) not in buckets:
                 continue
             for fe in binfo["files"]:
-                groups.setdefault(fe["schema_id"], []).append(
+                if not binfo.get("delta"):
+                    group = clean
+                elif fe.get("delta"):
+                    group = delta
+                    delta_rows += fe["rows"]
+                else:
+                    group = base
+                    base_rows += fe["rows"]
+                group.setdefault(fe["schema_id"], []).append(
                     os.path.join(self.root, fe["path"])
                 )
-        # merge-on-read: buckets carrying unmerged delta files resolve LWW at
-        # read time — selectively: only delta buckets pay the aggregate,
-        # compacted buckets stream straight through (union afterwards).
-        delta_buckets = {
-            int(b)
-            for b, binfo in snap["buckets"].items()
-            if binfo.get("delta") and (buckets is None or int(b) in buckets)
-        }
 
         def _assemble(groups_: dict[int, list[str]]):
             df_ = None
@@ -297,54 +304,18 @@ class LakeTable:
                 df_ = part if df_ is None else df_.unionByName(part)
             return df_
 
-        if delta_buckets:
-            clean_g: dict[int, list[str]] = {}
-            base_g: dict[int, list[str]] = {}
-            delta_g: dict[int, list[str]] = {}
-            delta_rows = 0
-            base_rows = 0
-            split_ok = True
-            for b, binfo in snap["buckets"].items():
-                if buckets is not None and int(b) not in buckets:
-                    continue
-                if int(b) not in delta_buckets:
-                    for fe in binfo["files"]:
-                        clean_g.setdefault(fe["schema_id"], []).append(
-                            os.path.join(self.root, fe["path"])
-                        )
-                    continue
-                tagged = 0
-                for fe in binfo["files"]:
-                    if fe.get("rows") is None:
-                        split_ok = False
-                    if fe.get("delta"):
-                        tagged += 1
-                        delta_rows += int(fe.get("rows") or 0)
-                        delta_g.setdefault(fe["schema_id"], []).append(
-                            os.path.join(self.root, fe["path"])
-                        )
-                    else:
-                        base_rows += int(fe.get("rows") or 0)
-                        base_g.setdefault(fe["schema_id"], []).append(
-                            os.path.join(self.root, fe["path"])
-                        )
-                if tagged == 0:
-                    # pre-tag manifest (no per-file delta markers): base and
-                    # delta files are indistinguishable — full-agg fallback
-                    split_ok = False
-            if delta_rows > MOR_SPLIT_MAX_DELTA_ROWS:
-                split_ok = False
-            if delta_rows > MOR_SPLIT_MAX_DELTA_FRACTION * base_rows:
+        df = _assemble(clean)
+        if base or delta:
+            nonkey = [f.name for f in phys_unified.fields if f.name not in KEY_COLS]
+            if (
+                delta_rows <= MOR_SPLIT_MAX_DELTA_ROWS
                 # widely-contested base: the broadcast build + second base
                 # scan would cost more than the full aggregate (measured)
-                split_ok = False
-            if base_rows < MOR_SPLIT_MIN_BASE_ROWS:
+                and delta_rows <= MOR_SPLIT_MAX_DELTA_FRACTION * base_rows
                 # small base: the avoided shuffle is cheaper than the
                 # split's fixed overheads (measured A/B) — full agg wins
-                split_ok = False
-
-            nonkey = [f.name for f in phys_unified.fields if f.name not in KEY_COLS]
-            if split_ok:
+                and base_rows >= MOR_SPLIT_MIN_BASE_ROWS
+            ):
                 # contested-key split: the compacted base within a delta
                 # bucket is key-unique (every replace commit — COW merge,
                 # compaction, rebucket — writes LWW-resolved state), so only
@@ -359,8 +330,8 @@ class LakeTable:
                 # unchanged — never a correctness effect. This keeps the MOR
                 # scan cost ∝ delta size instead of a step function on "any
                 # delta exists".
-                ddf = _assemble(delta_g)
-                bdf = _assemble(base_g)
+                ddf = _assemble(delta)
+                bdf = _assemble(base)
                 if bdf is None:
                     ddf = lww_reduce(ddf, KEY_COLS, nonkey)
                 else:
@@ -375,14 +346,12 @@ class LakeTable:
                         lww_reduce(ddf.unionByName(hot_b), KEY_COLS, nonkey)
                     )
             else:
-                merged_g: dict[int, list[str]] = {}
-                for sid_, paths in list(base_g.items()) + list(delta_g.items()):
-                    merged_g.setdefault(sid_, []).extend(paths)
-                ddf = lww_reduce(_assemble(merged_g), KEY_COLS, nonkey)
-            cdf = _assemble(clean_g)
-            df = ddf if cdf is None else cdf.unionByName(ddf)
-        else:
-            df = _assemble(groups)
+                merged = {
+                    sid_: base.get(sid_, []) + delta.get(sid_, [])
+                    for sid_ in base.keys() | delta.keys()
+                }
+                ddf = lww_reduce(_assemble(merged), KEY_COLS, nonkey)
+            df = ddf if df is None else df.unionByName(ddf)
         if df is None:
             df = self.spark.createDataFrame([], phys_unified)
         if not include_deleted:
@@ -507,10 +476,8 @@ class LakeTable:
                 snap.get("stream_hwm", {}), **{stream_id: stream_hwm}
             )
         if watermark_ts is not None:
-            # event-time watermark (max event ts ever applied): the tombstone
-            # GC horizon derives from it (Structured Streaming watermark
-            # semantics — an event older than watermark - lateness is late
-            # beyond tolerance and may no longer resurrect a GC'd key)
+            # event-time watermark (max event ts ever applied), reported by
+            # inspect_cli
             new["watermark_ts"] = max(
                 float(snap.get("watermark_ts") or 0.0), float(watermark_ts)
             )
@@ -523,24 +490,22 @@ class LakeTable:
         snap = snap or self.snapshot()
         return int(snap.get("streams", {}).get(stream_id, -1))
 
-    def last_segment_hwm(self, stream_id: str, snap: dict | None = None) -> str | None:
+    def last_segment_hwm(self, stream_id: str) -> str | None:
         """Last applied WAL segment (relative path) for ``stream_id``."""
-        snap = snap or self.snapshot()
-        return snap.get("stream_hwm", {}).get(stream_id)
+        return self.snapshot().get("stream_hwm", {}).get(stream_id)
 
-    def total_rows(self, snap: dict | None = None) -> int:
-        snap = snap or self.snapshot()
+    def total_rows(self) -> int:
+        snap = self.snapshot()
         if any(b.get("delta") for b in snap["buckets"].values()):
             # MOR deltas pending: exact live count needs the read-time merge
             return self.read(snap=snap).count()
         return sum(b.get("rows") or 0 for b in snap["buckets"].values())
 
-    def delta_pressure(self, snap: dict | None = None) -> dict[int, int]:
+    def delta_pressure(self) -> dict[int, int]:
         """Delta file count per MOR bucket (compaction-policy signal)."""
-        snap = snap or self.snapshot()
         return {
             int(b): len(binfo["files"])
-            for b, binfo in snap["buckets"].items()
+            for b, binfo in self.snapshot()["buckets"].items()
             if binfo.get("delta")
         }
 
@@ -553,180 +518,10 @@ class LakeTable:
             return None
         return self.compact(buckets=todo)
 
-    def watermark_ts(self, snap: dict | None = None) -> float:
-        """Max event-time (unix seconds) ever applied to the table."""
-        snap = snap or self.snapshot()
-        return float(snap.get("watermark_ts") or 0.0)
-
-    def gc_tombstones(self, allowed_lateness_sec: float) -> dict | None:
-        """Retention-policy tombstone GC, driven by the manifest watermark.
-
-        A tombstone must outlive every event that could still lose to it:
-        under LWW order (event_ts, lsn), that is any late event with an
-        older ts. Once the table watermark (max applied event ts) has moved
-        ``allowed_lateness_sec`` past a tombstone's ts, such an event is
-        late beyond tolerance (same contract as a streaming watermark) and
-        the tombstone can go. Buckets are selected from manifest tombstone
-        counts — no scan; returns the new snapshot, or None if nothing to do.
-        """
-        snap = self.snapshot()
-        horizon = self.watermark_ts(snap) - allowed_lateness_sec
-        if horizon <= 0:
-            return None
-        todo = [
-            int(b)
-            for b, binfo in snap["buckets"].items()
-            if binfo.get("delta") or (binfo.get("tombstones") or 0) > 0
-        ]
-        if not todo:
-            return None
-        return self.compact(
-            buckets=todo, drop_tombstones_ts_before=horizon, include_non_delta=True
-        )
-
-    # -- SCD2 / history ------------------------------------------------------
-
-    def snapshot_lineage(self) -> list[dict]:
-        """Snapshot chain root → latest (parent pointers, time travel axis).
-        Stops at the retention horizon: a parent manifest removed by
-        :meth:`vacuum` ends the chain (history beyond the keep window is
-        gone by policy, not an error)."""
-        chain = [self.snapshot()]
-        while chain[-1]["parent"] is not None:
-            try:
-                chain.append(self.snapshot(chain[-1]["parent"]))
-            except FileNotFoundError:
-                break  # vacuumed beyond retention
-        return list(reversed(chain))
-
-    def key_history(self, conv_id: str, turn_idx: int, max_versions: int = 10_000):
-        """Per-key SCD2 version history across the snapshot lineage.
-
-        The reference tracks row versions with effective_from/effective_to/
-        is_current (etl/bronze_to_silver.py:255-263,
-        sql/ddl/01_create_dimensions.sql:78-81); this lake derives the same
-        lineage from its snapshots instead of storing it per row. Manifest
-        pruning twice over: only the key's bucket is read, and only at
-        snapshots where that bucket's file list actually changed (unchanged
-        bucket ⇒ unchanged version). One Spark job (a union over the changed
-        snapshots); interval stitching is driver-side over ≤ lineage-length
-        rows, bounded by ``max_versions`` — a pathological key whose bucket
-        changed in more snapshots than that raises instead of ballooning the
-        driver (vacuum the lineage, or use read_asof for point lookups).
-        Returns a DataFrame: one row per distinct version with
-        valid_from/valid_to snapshot ids + commit times and is_current.
-        """
-        chain = self.snapshot_lineage()
-
-        # the key's bucket: same xxhash64-pmod the engine writes with —
-        # PER SNAPSHOT: num_buckets can change across the chain (rebucket),
-        # moving the key to a different bucket id mid-lineage
-        bcache: dict[int, int] = {}
-
-        def _bucket_of(p: int) -> int:
-            if p not in bcache:
-                bcache[p] = (
-                    self.spark.createDataFrame([(conv_id,)], "c string")
-                    .select(bucket_expr(p, col="c").alias("b"))
-                    .first()["b"]
-                )
-            return bcache[p]
-
-        reads = []
-        prev_files = object()
-        for snap in chain:
-            b = _bucket_of(int(snap["num_buckets"]))
-            entry = snap["buckets"].get(str(b), {})
-            files = tuple(fe["path"] for fe in entry.get("files", []))
-            if files == prev_files:
-                continue
-            prev_files = files
-            if len(reads) >= max_versions:
-                raise ValueError(
-                    f"key_history({conv_id!r}, {turn_idx}): bucket {b} changed "
-                    f"in more than max_versions={max_versions} snapshots; "
-                    "raise max_versions, vacuum the lineage, or use "
-                    "read_asof for point-in-time lookups"
-                )
-            df = self.read(
-                snap=snap, buckets=[b], include_deleted=True, with_meta=True
-            ).filter(
-                (F.col("conv_id") == conv_id) & (F.col("turn_idx") == turn_idx)
-            )
-            reads.append(
-                df.withColumn("_snapshot_id", F.lit(snap["snapshot_id"]))
-                .withColumn("_committed_unix", F.lit(float(snap["created_unix"])))
-            )
-        user = self.user_schema(chain[-1])
-        out_schema = T.StructType(
-            list(user.fields)
-            + [
-                T.StructField(META_LSN, T.LongType(), True),
-                T.StructField(META_DELETED, T.BooleanType(), True),
-                T.StructField("valid_from_snapshot", T.LongType(), True),
-                T.StructField("valid_from_unix", T.DoubleType(), True),
-                T.StructField("valid_to_snapshot", T.LongType(), True),
-                T.StructField("valid_to_unix", T.DoubleType(), True),
-                T.StructField("is_current", T.BooleanType(), True),
-            ]
-        )
-        if not reads:
-            return self.spark.createDataFrame([], out_schema)
-        allv = reads[0]
-        for r in reads[1:]:
-            allv = allv.unionByName(r)
-        rows = sorted(allv.collect(), key=lambda r: r["_snapshot_id"])
-        # stitch: a new version starts when the row hash / deleted flag flips
-        versions: list[dict] = []
-        prev_key = object()
-        for r in rows:
-            cur_key = (r[META_ROW_HASH], bool(r[META_DELETED]))
-            if cur_key != prev_key:
-                if versions:
-                    versions[-1]["valid_to_snapshot"] = r["_snapshot_id"]
-                    versions[-1]["valid_to_unix"] = r["_committed_unix"]
-                d = r.asDict()
-                versions.append(
-                    {
-                        **{k: d.get(k) for k in [f.name for f in user.fields]},
-                        META_LSN: d.get(META_LSN),
-                        META_DELETED: bool(d.get(META_DELETED) or False),
-                        "valid_from_snapshot": d["_snapshot_id"],
-                        "valid_from_unix": d["_committed_unix"],
-                        "valid_to_snapshot": None,
-                        "valid_to_unix": None,
-                    }
-                )
-                prev_key = cur_key
-        for v in versions:
-            v["is_current"] = v["valid_to_snapshot"] is None
-        data = [tuple(v[f.name] for f in out_schema.fields) for v in versions]
-        return self.spark.createDataFrame(data, out_schema)
-
-    def read_asof(self, as_of_unix: float, **read_kwargs):
-        """Table state as of a wall-clock time: the latest snapshot whose
-        commit time ≤ ``as_of_unix`` (reference SCD2 'AS OF' reads over
-        effective_from/effective_to, sql/ddl/01_create_dimensions.sql:78-81)."""
-        best = None
-        for snap in self.snapshot_lineage():
-            if float(snap["created_unix"]) <= as_of_unix:
-                best = snap
-        if best is None:
-            raise ValueError(f"no snapshot committed at or before {as_of_unix}")
-        return self.read(snap=best, **read_kwargs)
-
-    def compact(
-        self,
-        buckets: list[int] | None = None,
-        drop_tombstones_ts_before: float | None = None,
-        include_non_delta: bool = False,
-    ) -> dict:
+    def compact(self, buckets: list[int] | None = None) -> dict:
         """Merge-on-read compaction: rewrite delta-carrying buckets into a
-        single resolved generation (LWW applied once). Tombstones are
-        retained by default — they keep late zombies out; the GC knob is
-        ``drop_tombstones_ts_before`` (event-time watermark horizon — see
-        :meth:`gc_tombstones`). ``include_non_delta`` lets the GC rewrite
-        already-compacted buckets that still carry old tombstones.
+        single resolved generation (LWW applied once). Tombstones are always
+        kept: they keep late zombies out.
 
         One Spark action, the rewrite itself: the new buckets' ``rows``,
         ``tombstones`` and ``hwm_lsn`` (max of the footers' ``_lsn`` and the
@@ -736,36 +531,27 @@ class LakeTable:
         todo = [
             int(b)
             for b, binfo in snap["buckets"].items()
-            if (binfo.get("delta") or include_non_delta)
-            and (buckets is None or int(b) in buckets)
+            if binfo.get("delta") and (buckets is None or int(b) in buckets)
         ]
         if not todo:
             return snap
         resolved = self.read(
             buckets=todo, include_deleted=True, with_meta=True, snap=snap
         ).withColumn(META_BUCKET, bucket_expr(snap["num_buckets"]))
-        if drop_tombstones_ts_before is not None:
-            ts_unix = F.coalesce(
-                F.col("ts").cast("timestamp_ltz").cast("double"), F.lit(0.0)
-            )
-            resolved = resolved.filter(
-                ~(F.col(META_DELETED) & (ts_unix < drop_tombstones_ts_before))
-            )
         written = self.write_bucket_files(
             resolved, snap["snapshot_id"] + 1, snap["schema_id"]
         )
-        # buckets whose resolved state is empty (e.g. everything tombstoned
-        # and GC'd) still replace their file lists — with an empty list
-        replaced = {b: written.get(b, []) for b in todo}
+        # tombstones are kept, so every bucket in todo resolves to at least
+        # one row and gets its new file
         hwm = {
             b: max(
-                [int(snap["buckets"].get(str(b), {}).get("hwm_lsn") or 0)]
-                + [fe["max_lsn"] or 0 for fe in replaced[b]]
+                [int(snap["buckets"][str(b)].get("hwm_lsn") or 0)]
+                + [fe["max_lsn"] or 0 for fe in files]
             )
-            for b in todo
+            for b, files in written.items()
         }
         return self.commit(
-            snap, replaced, hwm, "compaction",
+            snap, written, hwm, "compaction",
             self.last_batch_id("compaction", snap) + 1,
             {"compacted_buckets": todo},
         )
@@ -788,9 +574,8 @@ class LakeTable:
         automatically: time travel to a pre-rebucket snapshot reads the old
         layout (its file lists are pinned in the old manifest), resumed
         ingest merges under the new bucketing (``apply_batch`` re-reads the
-        head snapshot per batch and on CAS retry), ``key_history`` hashes
-        each snapshot with its own bucket count, and vacuum reclaims the old
-        layout's files once the pre-rebucket snapshots age out.
+        head snapshot per batch and on CAS retry), and vacuum reclaims the
+        old layout's files once the pre-rebucket snapshots age out.
 
         Cost model at scale: one full-table rewrite — the same price as a
         global compaction, amortized over the 100× of growth that motivated

@@ -21,6 +21,10 @@ Two drivers share one per-batch step (:func:`_batch_step`: transform →
   uncommitted batch (whose data files, if any, were never referenced by a
   manifest).
 
+The WAL is a directory of parquet segments. Both drivers list it with
+:func:`list_segments`, which refuses any other non-hidden file, so a
+foreign file fails either driver loudly instead of being skipped.
+
 This closes the reference's declared gap "Pas de mode incrémental: Full
 reload à chaque run" (docs/architecture.md:265,273) and replaces its bash
 stage sequencing (run-pipeline.sh:59-77).
@@ -35,7 +39,7 @@ from ..operators.merge import apply_batch
 from ..schema import (
     SchemaEvolutionError,
     arrow_schema_of_parquet,
-    arrow_schema_of_segment,
+    conform,
     merge_schemas,
     widen,
 )
@@ -51,31 +55,39 @@ def _natural_key(path: str) -> str:
 
 
 def list_segments(segments_dir: str) -> list[str]:
-    """WAL segments in commit order (natural numeric order on path).
-    Parquet, ORC, and JSON-lines (``.jsonl`` — Debezium-export-style)
-    segments may be mixed in one WAL; each batch unifies all of them.
+    """WAL segments in commit order (natural numeric order on path). The
+    WAL is parquet only: any other non-hidden file raises ``ValueError``
+    naming it, so a foreign file fails both drivers loudly instead of being
+    skipped (the incremental driver) or misread (the streaming source).
 
     Path components starting with ``_`` or ``.`` are skipped — the
-    Hadoop/Spark hidden-path convention. A concurrent Spark writer stages
-    in-flight task files under ``_temporary/``; Spark's own file source
-    filters those, but this listing feeds EXPLICIT-path reads
-    (``spark.read.parquet(*files)``) which do not, so without the filter a
-    concurrent append could leak uncommitted (or footer-less, mid-write)
-    task files into a batch."""
-    out = []
+    Hadoop/Spark hidden-path convention (``_SUCCESS``, ``.crc``). A
+    concurrent Spark writer stages in-flight task files under
+    ``_temporary/``; Spark's own file source filters those, but this listing
+    feeds EXPLICIT-path reads (``spark.read.parquet(*files)``) which do not,
+    so without the filter a concurrent append could leak uncommitted (or
+    footer-less, mid-write) task files into a batch."""
+    out, foreign = [], []
     for dirpath, dirnames, files in os.walk(segments_dir):
         dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
         for f in files:
-            if f.endswith((".parquet", ".orc", ".jsonl")) and not f.startswith(
-                ("_", ".")
-            ):
-                out.append(os.path.join(dirpath, f))
+            if not f.startswith(("_", ".")):
+                p = os.path.join(dirpath, f)
+                (out if f.endswith(".parquet") else foreign).append(p)
+    if foreign:
+        raise ValueError(
+            f"list_segments: {sorted(foreign, key=_natural_key)} under "
+            f"{segments_dir} are not parquet segments; the WAL holds parquet "
+            "segments only — convert or move these files"
+        )
     return sorted(out, key=_natural_key)
 
 
-def read_batch(spark, paths: list[str], json_payload_schema=None):
-    """Read one microbatch of segment files, unifying footer schemas
-    (per-batch Arrow-schema diff; v1/v2 boundary can fall inside a batch).
+def read_batch(spark, paths: list[str]):
+    """Read one microbatch of parquet segment files, unifying footer
+    schemas (per-batch Arrow-schema diff; v1/v2 boundary can fall inside a
+    batch): files are grouped by footer schema, each group is read with its
+    exact schema and conformed to the batch's unified schema.
 
     Footer reads are driver-side and serial, so within one call the
     ``part-*`` files of a Spark-written segment directory (one writer, one
@@ -83,63 +95,23 @@ def read_batch(spark, paths: list[str], json_payload_schema=None):
     segment files (schema may differ file-to-file) are always read. Nothing
     is remembered across calls: a directory rewritten between two batches
     is read afresh.
-
-    ``.jsonl`` segments (one JSON CDC envelope per line — the
-    Debezium-export wire shape) are parsed against the DECLARED
-    ``json_payload_schema`` via the Kafka envelope parser's ``from_json``
-    (sources/kafka.py) — never schema inference, which would scan
-    the data twice and mistype int32/timestamp columns (JSON has neither).
-    A JSON feed that evolves needs the superset schema passed in, exactly
-    like a Kafka topic; footer-diff live evolution is the columnar paths'
-    feature. Malformed lines parse to a NULL envelope and are dropped by
-    the parser's op/lsn filter — never crashed on, never merged.
-
-    ``.orc`` segments get the full parquet treatment — footer schema read
-    driver-side via pyarrow.orc, per-schema-group reads, live evolution —
-    ORC carries real types, so nothing needs declaring.
     """
-    jsonl = [p for p in paths if p.endswith(".jsonl")]
-    paths = [p for p in paths if not p.endswith(".jsonl")]
-    json_df = None
-    if jsonl:
-        if json_payload_schema is None:
-            raise ValueError(
-                "read_batch: .jsonl segments need json_payload_schema= "
-                "(declared payload schema; JSON carries no types)"
-            )
-        from ..sources.kafka import parse_cdc_envelope
-
-        json_df = parse_cdc_envelope(
-            spark.read.text(jsonl), json_payload_schema
-        )
-        if not paths:
-            return json_df
-    by_schema: dict[tuple[str, str], list[str]] = {}
+    by_schema: dict[str, list[str]] = {}
     schemas = {}
     footer_json: dict[str, str] = {}  # segment dir (part-* files) or file
     for p in paths:
-        fmt = "orc" if p.endswith(".orc") else "parquet"
         key = os.path.dirname(p) if os.path.basename(p).startswith("part-") else p
         if key not in footer_json:
-            s = arrow_schema_of_segment(p)
+            s = arrow_schema_of_parquet(p)
             footer_json[key] = s.json()
             schemas.setdefault(footer_json[key], s)
-        by_schema.setdefault((footer_json[key], fmt), []).append(p)
+        by_schema.setdefault(footer_json[key], []).append(p)
     unified = None
     for s in schemas.values():
         unified = s if unified is None else merge_schemas(unified, s)[0]
-    from ..schema import conform
-
     df = None
-    if json_df is not None:
-        # a batch can straddle formats: unify the JSON envelope schema with
-        # the parquet footers' and conform both sides
-        unified = merge_schemas(unified, json_df.schema)[0]
-        df = conform(json_df, unified)
-    for (sj, fmt), group in by_schema.items():
-        reader = spark.read.schema(schemas[sj])
-        raw = reader.orc(*group) if fmt == "orc" else reader.parquet(*group)
-        part = conform(raw, unified)
+    for sj, group in by_schema.items():
+        part = conform(spark.read.schema(schemas[sj]).parquet(*group), unified)
         df = part if df is None else df.unionByName(part)
     return df
 
@@ -197,7 +169,6 @@ def run_incremental(
     auto_vacuum_every: int | None = None,
     vacuum_keep_snapshots: int = 4,
     auto_rebucket_target_bytes: int | None = None,
-    json_payload_schema=None,
 ) -> list[dict]:
     """Tail the WAL directory batch by batch; resumable + idempotent.
 
@@ -247,7 +218,7 @@ def run_incremental(
         if max_batches is not None and len(out) >= max_batches:
             break
         step(
-            read_batch(lake.spark, paths, json_payload_schema=json_payload_schema),
+            read_batch(lake.spark, paths),
             next_id + i,
             segment_hwm=os.path.relpath(paths[-1], segments_dir),
         )
@@ -288,7 +259,9 @@ def run_stream(
     conformed (extra columns dropped). Each microbatch therefore verifies
     its input files' footers against the declared schema and raises
     :class:`SchemaEvolutionError` pointing to :func:`run_incremental` (the
-    driver that evolves schema live) instead of dropping data.
+    driver that evolves schema live) instead of dropping data. The same
+    check lists the WAL with :func:`list_segments`, so a non-parquet file
+    in it fails the microbatch with a ``ValueError`` that names the file.
     """
     spark = lake.spark
     stream = (
@@ -317,15 +290,6 @@ def run_stream(
         for p in list_segments(segments_dir):
             if p in checked:
                 continue
-            if p.endswith((".jsonl", ".orc")):
-                # the parquet streaming source would NEVER read this file —
-                # silent data loss, so refuse
-                raise ValueError(
-                    f"run_stream: {p} is a non-parquet segment; the parquet "
-                    "streaming source cannot consume it — use "
-                    "run_incremental (orc: works directly; jsonl: pass "
-                    "json_payload_schema=...)"
-                )
             try:
                 footer = arrow_schema_of_parquet(p)
             except FileNotFoundError:
