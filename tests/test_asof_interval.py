@@ -12,8 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from trde703_openfoodfacts_etl_spark.operators.asof import asof_join, interval_join  # noqa: E402
-from trde703_openfoodfacts_etl_spark.operators.similarity import cosine_neardup_pairs  # noqa: E402
+from parity_references import cosine_neardup_pairs, interval_join  # noqa: E402
+from trde703_openfoodfacts_etl_spark.operators.asof import asof_join  # noqa: E402
 
 
 def _ts(sec: int) -> dt.datetime:
@@ -246,6 +246,7 @@ def test_cosine_neardup_matmul_drops_null_blocks(spark):
     rows = [
         (1, [1.0, 0.0], None), (2, [1.0, 0.001], None),  # near-dup but NULL block
         (3, [1.0, 0.0], "a"), (4, [1.0, 0.002], "a"),
+        (5, [1.0, 0.0], "b"),  # a single-row block emits no pair
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label string")
     mm = sorted((r.id_a, r.id_b) for r in

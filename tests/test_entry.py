@@ -4,17 +4,16 @@ values) — a local replica of the driver's correctness gate."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 import duckdb
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from helpers import assert_matches_oracle  # noqa: E402
 from trde703_openfoodfacts_etl_spark.plans.analytics import TABLES  # noqa: E402
 
 QUERIES = entrymod.queries()
@@ -28,26 +27,6 @@ def _duck(sf_dir: str):
     return con
 
 
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if str(df[c].dtype).startswith("datetime64"):
-            df[c] = df[c].astype("datetime64[us]")
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif str(df[c].dtype).startswith(("int", "uint", "Int")):
-            df[c] = df[c].astype("int64")
-    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
-def _values_equal(a, b) -> bool:
-    if pd.isna(a) and pd.isna(b):  # None/NaN/NaT all count as equal nulls
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        return abs(a - b) <= 1e-9 * max(1.0, abs(a), abs(b))
-    return a == b
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, name):
     got = QUERIES[name](spark, sf_dir).toPandas()
@@ -57,24 +36,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     con = _duck(sf_dir)
     want = con.sql(ORACLES[name]).df()
     con.close()
-    g, w = _canon(got), _canon(want)
-    assert list(g.columns) == list(w.columns), f"{name}: column mismatch {g.columns} vs {w.columns}"
-    assert g.shape == w.shape, f"{name}: shape {g.shape} vs {w.shape}"
-    for col in g.columns:
-        # dtype-KIND parity: the driver's value hash is typed, so an int64
-        # Spark column vs a float64/HUGEINT oracle column is a driver red
-        # even when values are numerically equal (round-3 q57 lesson).
-        # Only enforced null-free: a null-bearing int column legitimately
-        # arrives as float64/object from either side.
-        if not g[col].isna().any() and not w[col].isna().any():
-            assert g[col].dtype.kind == w[col].dtype.kind, (
-                f"{name}.{col}: dtype kind {g[col].dtype} (spark) vs "
-                f"{w[col].dtype} (oracle) — typed hash would mismatch; "
-                f"CAST the oracle (or the plan) so kinds agree"
-            )
-    for col in g.columns:
-        for i, (x, y) in enumerate(zip(g[col], w[col])):
-            assert _values_equal(x, y), f"{name}.{col}[{i}]: {x!r} != {y!r}"
+    assert_matches_oracle(name, got, want)
 
 
 def test_entry_smoke(spark):

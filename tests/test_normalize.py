@@ -6,13 +6,13 @@ from __future__ import annotations
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
+from parity_references import reference_normalize
 from pyspark.sql import functions as F
 
 from trde703_openfoodfacts_etl_spark.functions.normalize import (
     _normalize_series,
     normalize_key,
     normalize_text,
-    reference_normalize,
 )
 
 CASES = [

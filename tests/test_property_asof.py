@@ -104,7 +104,7 @@ def test_interval_join_matches_naive(spark, lts, ivs, bucket):
     """Bucketed interval join == the naive all-pairs range check, for ANY
     timestamps, interval layouts (touching, nested, zero-length, disjoint)
     and bucket width (smaller, comparable, and larger than the intervals)."""
-    from trde703_openfoodfacts_etl_spark.operators.asof import interval_join
+    from parity_references import interval_join
 
     left = spark.createDataFrame(
         [(i, _ts(s)) for i, s in enumerate(lts)], "event_id int, ts timestamp"

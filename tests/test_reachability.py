@@ -6,14 +6,15 @@ contract, the benchmark, the two CLIs and the streaming drivers:
 
 - the module check walks imports; a module that only tests import fails;
 - the function check walks names over the reached modules; a top-level
-  ``def`` or ``class`` that no shipping path names fails, unless it is a
-  parity reference a test compares a shipping fast path against;
+  ``def`` or ``class`` that no shipping path names fails;
 - the method check applies the same walk to each method of a top-level
   class: a method is its own def, reached when reached code names it
   (dunder methods are roots), and a class reaches only what its bases,
   decorators and non-def body name.
 
-Code that fails any check belongs under ``tests/`` or nowhere.
+Code that fails any check belongs under ``tests/`` or nowhere: the slow
+references that tests compare shipping fast paths against live in
+``tests/parity_references.py``.
 """
 
 from __future__ import annotations
@@ -26,17 +27,6 @@ PKG = "trde703_openfoodfacts_etl_spark"
 
 ENTRY_FILES = ["__spark_entry__.py", "bench.py"]
 ENTRY_MODULES = [f"{PKG}.pipeline_cli", f"{PKG}.inspect_cli", f"{PKG}.streaming.pipeline"]
-
-#: package functions no shipping path calls, kept because a test compares a
-#: shipping fast path against them: name -> that test
-PARITY_REFERENCES = {
-    "reference_normalize": "tests/test_normalize.py::test_vectorized_matches_reference_scalar",
-    "mingram_fingerprint_expr": "tests/test_text_functions.py::test_mingram_fingerprint_vec_matches_expr",
-    "corpus_plane_buckets_expr": "tests/test_similarity.py::test_corpus_plane_buckets_vectorized_matches_expr",
-    "cosine_neardup_pairs": "tests/test_asof_interval.py::test_cosine_neardup_matmul_matches_declarative",
-    "interval_join": "tests/test_asof_interval.py::test_q39_count_form_matches_pair_enumeration",
-}
-
 
 def _package_modules() -> dict[str, str]:
     """Dotted module name -> file path, for every .py under the package."""
@@ -198,15 +188,13 @@ def _unreached_defs() -> dict[str, list[tuple[str, bool]]]:
 def test_every_package_function_is_reached_from_a_shipping_path():
     unreached = [
         qual
-        for n, found in _unreached_defs().items()
-        if n not in PARITY_REFERENCES
+        for found in _unreached_defs().values()
         for qual, is_method in found
         if not is_method
     ]
     assert unreached == [], (
         f"functions no shipping path calls: {unreached}; call them from a "
-        "shipping path, move them under tests/, or delete them (a parity "
-        "reference a test compares against goes into PARITY_REFERENCES)"
+        "shipping path, move them under tests/, or delete them"
     )
 
 
@@ -221,17 +209,3 @@ def test_every_package_method_is_reached_from_a_shipping_path():
         f"methods no shipping path calls: {unreached}; call them from a "
         "shipping path or delete them"
     )
-
-
-def test_parity_references_are_unreached_and_compared_by_their_test():
-    unreached = _unreached_defs()
-    for name, test_id in PARITY_REFERENCES.items():
-        assert name in unreached, (
-            f"{name} is reached from a shipping path; drop it from PARITY_REFERENCES"
-        )
-        path, test = test_id.split("::")
-        tree = _parse(os.path.join(REPO, path))
-        assert any(
-            isinstance(n, ast.FunctionDef) and n.name == test for n in tree.body
-        ), f"{test_id} does not exist"
-        assert name in _names([tree]), f"{path} does not call {name}"

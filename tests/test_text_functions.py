@@ -12,10 +12,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from trde703_openfoodfacts_etl_spark.functions.text import (  # noqa: E402
-    mingram_fingerprint_expr,
-    mingram_fingerprint_vec,
-)
+from parity_references import mingram_fingerprint_expr  # noqa: E402
+from trde703_openfoodfacts_etl_spark.functions.text import mingram_fingerprint_vec  # noqa: E402
 
 ADVERSARIAL = [
     None,

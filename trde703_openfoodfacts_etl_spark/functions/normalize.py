@@ -47,23 +47,6 @@ def normalize_key(s: pd.Series) -> pd.Series:
     return _normalize_series(s, lowercase=True)
 
 
-def reference_normalize(value: str | None, lowercase: bool = False) -> str | None:
-    """Independent scalar implementation of ENGINE_NORM_SPEC for test
-    oracles (plain python, per row — never used by the engine)."""
-    import re
-
-    if value is None:
-        return None
-    import unicodedata
-
-    v = unicodedata.normalize("NFD", value)
-    if lowercase:
-        v = v.lower()
-    v = re.sub(_MARKS_RE, "", v)
-    v = re.sub(r"\s+", " ", v).strip()
-    return v
-
-
 def with_normalized_text(df, src: str = "text", dst: str = "text_norm"):
     """Batch transform hook for the CDC pipeline: adds the normalized text
     column (vectorized). Plug into run_incremental(transform=...)."""

@@ -97,50 +97,26 @@ def fingerprint_expr(col):
     return F.md5(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "))
 
 
-def mingram_fingerprint_expr(col, n: int = 3):
-    """Winnowing-style fingerprint as a pure codegen expression: the minimum
-    md5 over the word ``n``-grams of the whitespace-normalized text (window
-    = whole document; equivalently MinHash with k=1 over shingles). Robust
-    to small edits anywhere but at the selected gram; md5-hex string min is
-    engine-portable, so the exact same value is computable in ANSI SQL
-    (DuckDB oracle parity) — unlike a Karp-Rabin numeric fingerprint,
-    whose uint64 wrap-around isn't SQL.
-    Word grams, not char grams: ~15× fewer md5 evaluations per document
-    for the same near-dup sensitivity. Texts shorter than n words hash
-    whole."""
-    def fp_of(t):
-        # t is a lambda-bound variable: the tokenization evaluates once per
-        # row (Catalyst has no CSE through lambdas — referencing the split
-        # expression inside the per-index lambda would re-tokenize per gram)
-        cnt = F.size(t)
-        grams = F.when(
-            cnt < n, F.array(F.md5(F.concat_ws(" ", t)))
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), cnt - n),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(t, i + 1, n))),
-            )
-        )
-        return F.array_min(grams)
-
-    toks = F.split(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "), " ")
-    return F.element_at(F.transform(F.array(toks), fp_of), 1)
-
-
 def mingram_fingerprint_vec(col, n: int = 3):
-    """Value-identical fast path for :func:`mingram_fingerprint_expr`.
+    """Winnowing-style fingerprint: the minimum md5 over the word
+    ``n``-grams of the whitespace-normalized text (window = whole document;
+    equivalently MinHash with k=1 over shingles). Texts shorter than n
+    words hash whole. md5-hex string min is engine-portable, so the same
+    value is computable in ANSI SQL (the q27 oracle).
 
-    The per-gram ``md5(concat_ws(...))`` chain runs INTERPRETED inside the
-    transform lambda (no codegen through higher-order functions) — ~27 µs
-    of CPU per gram; at a 50k-doc corpus that was 2.3 s of q27 (r6). Here
+    In a pure-expression form the per-gram ``md5(concat_ws(...))`` chain
+    runs INTERPRETED inside the transform lambda (no codegen through
+    higher-order functions) — ~27 µs of CPU per gram; at a 50k-doc corpus
+    that was 2.3 s of q27 (r6). Here
     normalization (trim → lower → whitespace-collapse) stays a JVM
     expression — so every locale/Unicode-sensitive step keeps Spark
     semantics — and the Python side performs only byte-exact operations:
     split on a single space, single-space join, UTF-8 encode (the same
     bytes Spark's md5() hashes), hashlib.md5 hexdigest (C speed), and min
     over lowercase-hex ASCII strings (Python str < == UTF8String binary
-    <). Parity with the expression form is pinned by
-    tests/test_text_functions.py across Unicode/edge corpora."""
+    <). Parity with the pure-expression form
+    (tests/parity_references.py) is pinned by tests/test_text_functions.py
+    across Unicode/edge corpora."""
 
     @F.pandas_udf("string")
     def _fp(texts: pd.Series) -> pd.Series:

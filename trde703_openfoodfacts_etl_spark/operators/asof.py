@@ -1,8 +1,8 @@
-"""Temporal joins Spark lacks as built-ins: as-of join and interval join.
+"""As-of join, which Spark lacks as a built-in.
 
-Both are implemented as compositions of existing DataFrame ops (the brief's
-preferred path for custom operators) — no UDFs, no nested-loop joins, no
-driver-side iteration — so Catalyst/AQE keep optimizing around them.
+It is a composition of existing DataFrame ops (the brief's preferred path
+for custom operators) — no UDFs, no nested-loop joins, no driver-side
+iteration — so Catalyst/AQE keep optimizing around it.
 
 As-of join (each left row matched to the latest right row with
 ``right_ts <= left_ts`` for the same key) is the classic point-in-time
@@ -20,16 +20,6 @@ At 100 TB this is shuffle-optimal: volume is |left| + |right| rows exactly
 once, partitioned by key; a sort-merge or broadcast as-of would still need
 the same exchange plus an O(matches) join. A hot key costs O(key size) in
 one task.
-
-Interval join (left.ts ∈ [right.start, right.end], **no equi key**) would
-fall to BroadcastNestedLoopJoin in vanilla Spark — O(|L|·|R|) comparisons.
-The bucketed form turns it into an equi-join: explode each right interval
-into the fixed-width time buckets it covers, bucket each left timestamp,
-join on the bucket, then apply the exact range predicate. Work becomes
-O(pairs sharing a bucket) and shuffles hash-partition on the bucket — the
-standard overlap-join technique (also how range-join hints work in
-closed-source Spark forks). Each qualifying pair appears exactly once
-(the left row lives in exactly one bucket), so no dedup pass is needed.
 """
 
 from __future__ import annotations
@@ -158,52 +148,3 @@ def asof_join(
         *[c for c in cols if c not in (_PAY, _SIDE, _TS, _TB)],
         *[pay[c].alias(c) for c in payload_cols],
     )
-
-
-def interval_join(
-    left,
-    right,
-    left_ts: str,
-    right_start: str,
-    right_end: str,
-    bucket_seconds: int = 7 * 86400,
-):
-    """Join left rows to right intervals containing them
-    (``right_start <= left_ts <= right_end``) with NO equi key, via
-    fixed-width time bucketing. Returns the joined pairs (all columns of
-    both inputs); each qualifying pair appears exactly once.
-
-    ``bucket_seconds`` should be on the order of the typical interval
-    length: too small explodes right rows into many buckets, too large
-    packs unrelated rows into one bucket. Both misconfigurations are
-    correct, just slower.
-
-    Right rows with a NULL or inverted interval (``right_end < right_start``
-    — bad data, sentinel timestamps) are dropped before the bucket explode:
-    they can never satisfy the range predicate, and without the pre-filter
-    Spark's ``sequence(start, stop)`` on an inverted pair would generate a
-    DESCENDING bucket sequence, silently exploding one malformed row into
-    |start_bucket - end_bucket| + 1 rows before the exact filter drops them.
-    """
-    b = F.lit(bucket_seconds)
-    l_b = left.withColumn(
-        "__bucket", F.floor(F.col(left_ts).cast("timestamp").cast("double") / b)
-    )
-    # compare the CAST bounds (same domain the bucketing uses): raw-column
-    # comparison would misorder string timestamps in non-canonical formats
-    # ('2024-1-9' vs '2024-01-10' lexicographically) and silently drop
-    # valid intervals
-    _rs = F.col(right_start).cast("timestamp")
-    _re = F.col(right_end).cast("timestamp")
-    r_b = right.filter(_rs.isNotNull() & _re.isNotNull() & (_rs <= _re)).withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(right_start).cast("timestamp").cast("double") / b),
-                F.floor(F.col(right_end).cast("timestamp").cast("double") / b),
-            )
-        ),
-    )
-    _lt = F.col(left_ts).cast("timestamp")
-    joined = l_b.join(r_b, "__bucket").filter((_lt >= _rs) & (_lt <= _re))
-    return joined.drop("__bucket")

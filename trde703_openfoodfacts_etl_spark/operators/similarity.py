@@ -10,13 +10,13 @@ oracle of q28/q29):
   the candidate search is an equi-join on bucket ids, not a cross join.
 - :func:`corpus_ivf_topk` — IVF: every vector goes to its nearest
   pseudo-centroid; probes search only their ``nprobe`` nearest cells.
-- :func:`cosine_neardup_pairs` / :func:`cosine_neardup_pairs_matmul` —
-  blocked-exact near-duplicate pairs.
+- :func:`cosine_neardup_pairs_matmul` — blocked-exact near-duplicate pairs.
 
-Dot products run either as JVM higher-order functions (the ``*_expr``
-forms, kept as parity references) or as numpy twins that sum left to right
-and so return bit-identical doubles (:func:`cosine_vec`,
-:func:`corpus_plane_buckets`).
+Every dot product and cosine runs in numpy over Arrow batches (pandas
+UDFs): :func:`_matrix` turns a list column into a float64 matrix, and
+:func:`_seqdot` sums the products left to right, the rounding sequence of
+the oracle's SQL fold, so the doubles are bit-identical. One rule covers
+NULL and zero-norm vectors; :func:`_matrix` states it.
 """
 
 from __future__ import annotations
@@ -25,220 +25,165 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import spread as _spread
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def _matrix(s: pd.Series, width: int | None = None) -> np.ndarray:
+    """The vectors of ``s`` as a float64 matrix, one row each. ``width`` is
+    the vector length (default: the first non-NULL vector's); a vector of
+    another length raises ``ValueError``.
+
+    The rule for degenerate input, for every kernel in this module:
+
+    - a NULL vector reads as the zero vector: its dot with anything is 0,
+      so it sets no LSH sign bit (bucket 0, as ``SQL_Q28``'s
+      ``CASE WHEN dot > 0`` gives);
+    - a cosine with a zero-norm side is NULL (NaN in numpy, which Arrow
+      hands to Spark as NULL), as DuckDB's ``x / 0 = NULL`` gives in
+      ``_sql_cos``;
+    - NULL cosines sort after every number (``DESC NULLS LAST`` in both
+      engines) and ties go to the smaller id, so a NULL or zero vector
+      ranks last, takes the smallest ``cent_id`` as its IVF cell and fails
+      any cosine threshold.
+    """
+    valid = s.notna().to_numpy()
+    rows = s.to_numpy()[valid]
+    if width is None:
+        width = len(rows[0]) if len(rows) else 0
+    for v in rows:
+        if len(v) != width:
+            raise ValueError(
+                f"vectors in one batch differ in length: expected {width}, found {len(v)}"
+            )
+    m = np.zeros((len(s), width))
+    if len(rows):
+        m[valid] = np.stack(rows)
+    return m
 
 
-def cosine_expr(a, b):
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+def _seqdot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise dot products, summed strictly left to right (``cumsum``):
+    float32→double casts are exact and each product rounds once, so this
+    reproduces the oracle's ``_SQL_DOT`` fold bit for bit. ``b`` may be a
+    single vector, broadcast against every row of ``a``."""
+    p = a * b
+    return np.cumsum(p, axis=1)[:, -1] if p.shape[1] else np.zeros(len(p))
+
+
+def _norm(a: np.ndarray) -> np.ndarray:
+    return np.sqrt(_seqdot(a, a))
+
+
+def _cos(dot, norm_a, norm_b):
+    """``dot / (norm_a * norm_b)``, NaN (NULL) where a norm is zero."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return dot / (norm_a * norm_b)
 
 
 def cosine_vec(a, b):
-    """Value-identical vectorized twin of :func:`cosine_expr` (r6): per
-    Arrow batch, numpy computes dot and norms with SEQUENTIAL summation
-    (`np.cumsum` over elementwise double products) — the same rounding
-    sequence as the SQL left fold, so the doubles are bit-identical and
-    rank orderings cannot drift. sqrt/multiply/divide are single-rounding
-    IEEE ops in both engines. The HOF fold runs interpreted (~µs per
-    64-dim pair); this is the re-rank hot path of the ANN operators."""
+    """Row-wise cosine of two vector columns, per Arrow batch in numpy."""
 
     @F.pandas_udf("double")
-    def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if not len(xs):
-            return pd.Series([], dtype="float64")
-        A = np.stack(xs.to_numpy()).astype(np.float64)
-        B = np.stack(ys.to_numpy()).astype(np.float64)
-        dot = np.cumsum(A * B, axis=1)[:, -1]
-        na = np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
-        nb = np.sqrt(np.cumsum(B * B, axis=1)[:, -1])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(dot / (na * nb))
+    def _cosine(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        m = _matrix(pd.concat([xs, ys], ignore_index=True))  # one width for both
+        x, y = m[: len(xs)], m[len(xs):]
+        return pd.Series(_cos(_seqdot(x, y), _norm(x), _norm(y)))
 
-    return _cos(a, b)
-
-
-def cosine_neardup_pairs(df, threshold: float, block_col: str | None = None,
-                         id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Embedding-cosine near-duplicate PAIRS: all (a, b) with
-    ``cos(a, b) >= threshold`` and ``a.id < b.id``, exact within blocks.
-
-    Blocked-exact is the standard shape for near-dup detection over a
-    corpus: block on cheap metadata (``block_col`` — language, cluster id,
-    length bucket, shard), then verify exactly within each block. The join
-    is a hash equi-join on the block key (one shuffle, AQE-skew-safe); the
-    cosine is pure JVM higher-order functions — no UDF, no cross join
-    across blocks. Cost is Σ_blocks |b|², so block sizes bound the work;
-    with no natural block, feed ``corpus_plane_buckets`` output as the
-    block (sign-LSH blocking, approximate recall) — this function is the
-    exact verifier either way.
-
-    Unblocked (``block_col=None``) is a full cross join — correctness
-    baseline for small corpora only.
-    """
-    # Norms are per-ROW, not per-pair: compute each side's norm once before
-    # the join (O(n·d)) so the per-pair work is a single dot product
-    # (O(pairs·d)) — 3× less higher-order-function work than a naive
-    # cosine_expr per pair, and the win grows with block size.
-    norm = F.sqrt(_dot(F.col(vec_col), F.col(vec_col)))
-    a = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"), norm.alias("_na"),
-        *( [F.col(block_col).alias("_blk")] if block_col else [] ),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"), norm.alias("_nb"),
-        *( [F.col(block_col).alias("_blk")] if block_col else [] ),
-    )
-    j = a.join(b, "_blk") if block_col else a.crossJoin(b)
-    return (
-        j.filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
+    return _cosine(a, b)
 
 
 def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str,
                                 id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Same contract as :func:`cosine_neardup_pairs` (blocked-exact pairs,
-    ``id_a < id_b``, cos ≥ threshold) with the per-block pair scoring done
-    as ONE numpy/BLAS matmul inside ``applyInPandas`` — the production
-    kernel for dense similarity (like the LSH/IVF scorers): a block of m
-    d-dim vectors costs one m×d · d×m GEMM instead of m²/2 interpreted
-    higher-order-function dot products. Each block must fit one executor
-    task (m² score matrix): bound block sizes upstream (that is what the
-    blocking key is for) or sub-block with LSH buckets.
+    """Embedding-cosine near-duplicate PAIRS: all (a, b) in one block with
+    ``cos(a, b) >= threshold`` and ``a.id < b.id``, exact within blocks,
+    cosine rounded to 6 places.
+
+    The per-block pair scoring is ONE numpy/BLAS matmul inside
+    ``applyInPandas``: a block of m d-dim vectors costs one m×d · d×m GEMM.
+    Each block must fit one executor task (m² score matrix): bound block
+    sizes upstream (that is what the blocking key is for) or sub-block with
+    LSH buckets. BLAS sums in its own order, so a cosine may differ from the
+    sequential fold by ~1e-12; a threshold needs that margin.
 
     NULL blocks are dropped (rows with ``block_col IS NULL`` emit no
-    pairs), exactly like the declarative form's equi-join on the block
-    key — without the filter, groupBy would lump all NULL-block rows into
-    one group and emit pairs the equi-join form never produces.
+    pairs), as an equi-join on the block key drops them — without the
+    filter, groupBy would lump all NULL-block rows into one group. NULL
+    vectors are dropped too: by the :func:`_matrix` rule they pair with
+    nothing.
     """
-    df = df.filter(F.col(block_col).isNotNull())
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
+    df = df.filter(F.col(block_col).isNotNull() & F.col(vec_col).isNotNull())
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        V = _matrix(pdf[vec_col])
         norms = np.linalg.norm(V, axis=1, keepdims=True)
         norms[norms == 0.0] = np.nan  # zero vectors match nothing (cos undefined)
         V = V / norms
         G = V @ V.T
-        iu, ju = np.triu_indices(m, k=1)
+        iu, ju = np.triu_indices(len(pdf), k=1)
         s = G[iu, ju]
-        keep = s >= threshold  # NaN fails, matching the SQL form's null-drop
+        keep = s >= threshold  # NaN fails, as a NULL cosine does in SQL
         return pd.DataFrame(
-            # round like the declarative form so the two are drop-in equal
             {"id_a": ids[iu[keep]], "id_b": ids[ju[keep]], "cos": np.round(s[keep], 6)}
         )
 
-    return df.groupBy(block_col).applyInPandas(kernel, out_schema)
+    return df.groupBy(block_col).applyInPandas(kernel, "id_a long, id_b long, cos double")
 
 
-def _plane_map(spark, plane_ids: list[int], per_band: int):
-    """(plane_id, band, weight=2^pos) literal mapping for data-derived LSH."""
-    rows = [
-        (int(pid), i // per_band, 1 << (i % per_band))
-        for i, pid in enumerate(sorted(plane_ids))
-    ]
-    return spark.createDataFrame(rows, "plane_id long, band int, weight long")
+def _index(corpus, ids, what: str, id_col: str, vec_col: str):
+    """``(sorted ids as an array, their vectors as a float64 matrix)``: the ANN index,
+    collected once at plan build. Raises ``ValueError`` naming the ids the
+    corpus lacks."""
+    ids = sorted({int(i) for i in ids})
+    if not ids:
+        raise ValueError(f"no {what} ids given")
+    got = dict(corpus.filter(F.col(id_col).isin(ids)).select(id_col, vec_col).collect())
+    missing = [i for i in ids if i not in got]
+    if missing:
+        raise ValueError(f"{what} ids missing from the corpus: {missing}")
+    return np.array(ids, dtype=np.int64), _matrix(pd.Series([got[i] for i in ids], dtype=object))
 
 
-def corpus_plane_buckets_expr(df, planes, id_col="vec_id", vec_col="embedding",
-                              out_id="id"):
-    """Sign-bit LSH bucket per (vector, band), hyperplanes = corpus vectors —
-    the declarative reference form: broadcast the tiny plane table, one
-    projection computes dot signs, one partial-aggregated groupBy packs
-    sign bits into the band bucket. Using corpus vectors as hyperplanes
-    makes the whole construction expressible in ANSI SQL — the DuckDB
-    oracle recomputes identical buckets (dots are sequential left folds on
-    both sides, so the doubles are bit-identical). Kept as the parity
-    reference for :func:`corpus_plane_buckets` (tests/test_similarity.py);
-    the HOF fold runs interpreted (no codegen through lambdas), ~2.3 s for
-    20k vectors × 12 planes (r6)."""
-    bit = (_dot(F.col(vec_col), F.col("_p")) > 0).cast("long")
-    return (
-        df.select(F.col(id_col).alias(out_id), F.col(vec_col))
-        .crossJoin(F.broadcast(planes).select("band", "weight", F.col("_p")))
-        .select(out_id, "band", (bit * F.col("weight")).alias("_contrib"))
-        .groupBy(out_id, "band")
-        .agg(F.sum("_contrib").alias("bucket"))
-    )
+def _buckets(V: np.ndarray, planes: np.ndarray, per_band: int) -> np.ndarray:
+    """Sign-bit LSH buckets, one column per band: plane ``i`` adds
+    ``2^(i % per_band)`` to band ``i // per_band`` when its dot with the
+    vector is > 0."""
+    out = np.zeros((len(V), (len(planes) - 1) // per_band + 1), dtype=np.int64)
+    for i, p in enumerate(planes):
+        out[:, i // per_band] += (_seqdot(V, p) > 0) << (i % per_band)
+    return out
 
 
-def corpus_plane_buckets(df, planes, id_col="vec_id", vec_col="embedding",
-                         out_id="id"):
-    """Value-identical vectorized form of :func:`corpus_plane_buckets_expr`.
-
-    The tiny plane table (an ANN index — 12 rows) is collected at plan
-    build; per Arrow batch, numpy computes each plane's dot with
-    SEQUENTIAL summation (`np.cumsum` over the elementwise double
-    products), which reproduces the SQL left fold's rounding bit-for-bit:
-    float32→double casts are exact, each product is one double rounding,
-    and cumsum adds strictly left-to-right — so sign decisions (and hence
-    buckets) cannot drift from the declarative/oracle form. Also removes
-    the 12× row blowup of the crossJoin and its aggregate."""
-    rows = sorted(
-        planes.select("band", "weight", "_p").collect(),
-        key=lambda r: (r["band"], r["weight"]),
-    )
-    P = np.array([list(r["_p"]) for r in rows], dtype=np.float32).astype(np.float64)
-    band_of = [int(r["band"]) for r in rows]
-    weight_of = [int(r["weight"]) for r in rows]
-    n_bands = max(band_of) + 1
+def corpus_plane_buckets(df, planes: np.ndarray, per_band: int, id_col="vec_id",
+                         vec_col="embedding", out_id="id"):
+    """``(out_id, band, bucket)`` rows: the :func:`_buckets` of each vector
+    against the hyperplanes ``planes`` (rows in band order). The planes are
+    corpus vectors, so the DuckDB oracle recomputes identical buckets."""
 
     @F.pandas_udf("array<long>")
-    def _buckets(vs: pd.Series) -> pd.Series:
-        if not len(vs):
-            return pd.Series([], dtype="object")
-        V = np.stack(vs.to_numpy()).astype(np.float64)
-        out = np.zeros((len(vs), n_bands), dtype=np.int64)
-        for i in range(P.shape[0]):
-            dots = np.cumsum(V * P[i][None, :], axis=1)[:, -1]
-            out[:, band_of[i]] += (dots > 0) * weight_of[i]
-        return pd.Series(list(out))
+    def _bks(vs: pd.Series) -> pd.Series:
+        return pd.Series(list(_buckets(_matrix(vs, planes.shape[1]), planes, per_band)))
 
     return df.select(
-        F.col(id_col).alias(out_id), _buckets(F.col(vec_col)).alias("_bks")
+        F.col(id_col).alias(out_id), _bks(F.col(vec_col)).alias("_bks")
     ).select(out_id, F.posexplode("_bks").alias("band", "bucket"))
 
 
 def corpus_lsh_topk(corpus, probes, plane_ids: list[int], bands: int = 3,
                     k: int = 10, id_col: str = "vec_id",
                     vec_col: str = "embedding"):
-    """Random-hyperplane LSH top-k with corpus-vector hyperplanes.
+    """Random-hyperplane LSH top-k with corpus-vector hyperplanes (sorted
+    by id, ``len(plane_ids) // bands`` per band).
 
     Bucket equi-join, then exact cosine re-rank of the candidates. No spread():
-    the plane join + bucket aggregate shuffle the corpus anyway, so the
-    extra round-robin stage only adds latency (r6 A/B at both SFs)."""
-    per_band = len(plane_ids) // bands
-    pm = _plane_map(corpus.sparkSession, plane_ids, per_band)
-    planes = pm.join(
-        corpus.select(F.col(id_col).alias("plane_id"), F.col(vec_col).alias("_p")),
-        "plane_id",
-    )
-    cb = corpus_plane_buckets(corpus, planes, id_col, vec_col, "neighbor_id")
-    pb = corpus_plane_buckets(probes, planes, id_col, vec_col, "probe_id")
+    the bucket join shuffles the corpus anyway, so the extra round-robin
+    stage only adds latency (r6 A/B at both SFs)."""
+    _, planes = _index(corpus, plane_ids, "plane", id_col, vec_col)
+    per_band = len(planes) // bands
+    cb = corpus_plane_buckets(corpus, planes, per_band, id_col, vec_col, "neighbor_id")
+    pb = corpus_plane_buckets(probes, planes, per_band, id_col, vec_col, "probe_id")
     cand = (
         pb.join(cb, ["band", "bucket"])
         .filter(F.col("probe_id") != F.col("neighbor_id"))
@@ -259,69 +204,48 @@ def corpus_lsh_topk(corpus, probes, plane_ids: list[int], bands: int = 3,
     )
 
 
+def _top_cells(V: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
+    """Per row of ``V``, the row indices of its ``n`` nearest centroids
+    (rows of ``C``, in id order): cosine descending, NULL last, ties to the
+    smaller index — ``SQL_Q29``'s ``ORDER BY s DESC, cent_id``."""
+    dots = np.empty((len(V), len(C)))
+    for j, c in enumerate(C):
+        dots[:, j] = _seqdot(V, c)
+    s = _cos(dots, _norm(V)[:, None], _norm(C)[None, :])
+    return np.argsort(np.where(np.isnan(s), np.inf, -s), axis=1, kind="stable")[:, :n]
+
+
 def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3,
                     k: int = 10, id_col: str = "vec_id",
                     vec_col: str = "embedding"):
-    """IVF top-k with corpus-vector pseudo-centroids, fully declarative.
+    """IVF top-k with corpus-vector pseudo-centroids.
 
-    Cell assignment is a partial-aggregated ``max_by`` over the broadcast
-    centroid table (never a per-row window); each probe fans out to its
-    ``nprobe`` best cells; exact cosine re-ranks inside probed cells. The
-    centroid choice (corpus rows, deterministic ids) makes the exact result
-    recomputable in the SQL oracle. A production deployment replaces the
-    fixed ids with sampled/k-means centroids and writes the corpus bucketed
-    by cell (shuffle-free probes)."""
-    centsrc = corpus
-    corpus = _spread(corpus)  # single-row-group inputs: dot on every core
-    cents = F.broadcast(
-        centsrc.filter(F.col(id_col).isin([int(c) for c in sorted(centroid_ids)]))
-        .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("_c"))
-    )
-    # corpus cell = argmax cosine(v, centroid); ties → smallest cent_id.
-    # r6: vectorized — centroids collected at plan build (the IVF index),
-    # cosines per Arrow batch via cumsum-sequential numpy (bit-identical
-    # to the declarative fold; see cosine_vec). Strict > with ascending
-    # cent_id order keeps the smallest id on exact ties, and NaN cosines
-    # map to +inf first-wins, matching Spark's NaN-greatest max_by. The
-    # former crossJoin+max_by form (reconstructed in
-    # tests/test_similarity.py as the parity reference) blew the corpus
-    # up 8× through an interpreted fold.
-    crows = sorted(cents.collect(), key=lambda r: r["cent_id"])
-    C = np.array([list(r["_c"]) for r in crows], dtype=np.float32).astype(np.float64)
-    cids = [int(r["cent_id"]) for r in crows]
-    cnorm = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
+    The centroids (the IVF index) are collected at plan build. One numpy
+    kernel, :func:`_top_cells`, gives each corpus vector its nearest cell
+    and each probe its ``nprobe`` nearest cells; exact cosine re-ranks
+    inside the probed cells. The centroid choice (corpus rows,
+    deterministic ids) makes the exact result recomputable in the SQL
+    oracle. A production deployment replaces the fixed ids with
+    sampled/k-means centroids and writes the corpus bucketed by cell
+    (shuffle-free probes)."""
+    cids, C = _index(corpus, centroid_ids, "centroid", id_col, vec_col)
 
-    @F.pandas_udf("long")
-    def _cell(vs: pd.Series) -> pd.Series:
-        if not len(vs):
-            return pd.Series([], dtype="int64")
-        V = np.stack(vs.to_numpy()).astype(np.float64)
-        vnorm = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-        best = np.full(len(vs), cids[0], dtype=np.int64)
-        bestv = np.full(len(vs), -np.inf)
-        for i in range(C.shape[0]):
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos_i = np.cumsum(V * C[i][None, :], axis=1)[:, -1] / (vnorm * cnorm[i])
-            cos_i = np.where(np.isnan(cos_i), np.inf, cos_i)
-            m = cos_i > bestv
-            best[m] = cids[i]
-            bestv[m] = cos_i[m]
-        return pd.Series(best)
+    def cells(n):
+        @F.pandas_udf("array<long>")
+        def _cells(vs: pd.Series) -> pd.Series:
+            return pd.Series(list(cids[_top_cells(_matrix(vs, C.shape[1]), C, n)]))
 
-    corpus_cells = corpus.select(
+        return _cells
+
+    corpus_cells = _spread(corpus).select(  # single-row-group inputs: every core
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
-        _cell(F.col(vec_col)).alias("cell"),
+        cells(1)(F.col(vec_col))[0].alias("cell"),
     )
-    wp = W.partitionBy("probe_id").orderBy(F.desc("_pc"), F.asc("cent_id"))
-    probe_cells = (
-        probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pv"))
-        .crossJoin(cents)
-        .select("probe_id", "_pv", "cent_id",
-                cosine_expr(F.col("_pv"), F.col("_c")).alias("_pc"))
-        .withColumn("_rn", F.row_number().over(wp))
-        .filter(F.col("_rn") <= nprobe)
-        .select("probe_id", "_pv", F.col("cent_id").alias("cell"))
+    probe_cells = probes.select(
+        F.col(id_col).alias("probe_id"),
+        F.col(vec_col).alias("_pv"),
+        F.explode(cells(nprobe)(F.col(vec_col))).alias("cell"),
     )
     w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (

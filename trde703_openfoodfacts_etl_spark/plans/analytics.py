@@ -521,28 +521,21 @@ FROM documents GROUP BY lang
 
 def q20_ann_bruteforce(spark, sf_dir):
     """Brute-force cosine top-5 for 5 probe vectors: broadcast probes ×
-    corpus, dot product via zip_with/aggregate (JVM higher-order fns, no
-    UDF), rank via window. Integer output only (float32-vs-float64 safe)."""
-    e = load(spark, sf_dir, "embeddings", spread=True)
+    corpus, cosine per Arrow batch in numpy (operators/similarity.py
+    cosine_vec), rank via window. Integer output only (float32-vs-float64
+    safe). No spread(): the numpy kernel is light per row, and the extra
+    round-robin shuffle cost more than it bought (sf0.1 A/B, 4 cores)."""
+    from ..operators.similarity import cosine_vec
+
+    e = load(spark, sf_dir, "embeddings")
     probes = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p")
     )
     corpus = e.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("v"))
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     j = F.broadcast(probes).crossJoin(corpus).filter(F.col("probe_id") != F.col("neighbor_id"))
-    cos = dot(F.col("p"), F.col("v")) / (
-        F.sqrt(dot(F.col("p"), F.col("p"))) * F.sqrt(dot(F.col("v"), F.col("v")))
-    )
     w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
-        j.select("probe_id", "neighbor_id", cos.alias("cos"))
+        j.select("probe_id", "neighbor_id", cosine_vec(F.col("p"), F.col("v")).alias("cos"))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
         .select("probe_id", "rank", "neighbor_id")
@@ -808,12 +801,10 @@ FROM s GROUP BY 1
 
 def q27_fingerprint(spark, sf_dir):
     """Winnowing-style document fingerprints: min md5 over word 3-grams of
-    the normalized text — a pure codegen expression (functions/text.py
-    mingram_fingerprint_expr; evaluated via the value-identical
-    vectorized twin mingram_fingerprint_vec — the per-gram md5 chain is
-    interpreted inside the HOF lambda, r6: 2.3 s → 0.5 s), portable to
-    the SQL oracle because the md5
-    hex-string min is engine-independent (the Karp-Rabin numeric variant
+    the normalized text (functions/text.py mingram_fingerprint_vec, a
+    pandas UDF; as a HOF expression the per-gram md5 chain ran
+    interpreted, r6: 2.3 s → 0.5 s), portable to the SQL oracle because
+    the md5 hex-string min is engine-independent (the Karp-Rabin numeric variant
     stays in the library for production use; its uint64 wrap semantics
     aren't SQL-expressible). Output: collision structure."""
     from ..functions.text import mingram_fingerprint_vec
@@ -867,8 +858,8 @@ def _sql_cos(a, b):
 
 def q28_ann_lsh(spark, sf_dir):
     """Random-hyperplane LSH ANN with corpus-vector hyperplanes
-    (operators/similarity.py corpus_lsh_topk): bucket equi-join + exact
-    cosine re-rank, fully declarative. Hyperplanes are corpus rows, so the
+    (operators/similarity.py corpus_lsh_topk): numpy sign-bit buckets,
+    bucket equi-join + exact cosine re-rank. Hyperplanes are corpus rows, so the
     oracle recomputes identical buckets (sequential-fold double dots on both
     sides) — the approximate index becomes hash-checkable. Integer ranks
     only (float32 cos stays out of the hash)."""
@@ -911,9 +902,10 @@ SELECT probe_id, rank, neighbor_id FROM r WHERE rank <= 5
 
 def q29_ann_ivf(spark, sf_dir):
     """IVF-cell ANN with corpus-vector pseudo-centroids
-    (operators/similarity.py corpus_ivf_topk): partial-agg max_by cell
-    assignment, nprobe=3 cell fanout, exact cosine re-rank — and an oracle
-    that re-derives the identical cells. Integer ranks only."""
+    (operators/similarity.py corpus_ivf_topk): one numpy top-n cell
+    kernel assigns corpus cells and the nprobe=3 probe cells, exact cosine
+    re-ranks — and an oracle that re-derives the identical cells. Integer
+    ranks only."""
     from ..operators.similarity import corpus_ivf_topk
 
     e = load(spark, sf_dir, "embeddings")
@@ -1535,9 +1527,9 @@ WINDOW w2 AS (PARTITION BY conv_id, turn_idx
 def q37_cosine_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs (the 5th dedup family next to
     exact/MinHash/SimHash/Jaccard): blocked-exact — one numpy/BLAS matmul
-    per block via applyInPandas (similarity.cosine_neardup_pairs_matmul;
-    the declarative JVM-HOF form exists as cosine_neardup_pairs and is
-    pair-tested against this one). Id-pairs out, integers only; the float
+    per block via applyInPandas (similarity.cosine_neardup_pairs_matmul,
+    pair-tested against a JVM-HOF fold in tests/parity_references.py).
+    Id-pairs out, integers only; the float
     threshold has a verified >2e-3 margin on the test corpus (BLAS-vs-
     sequential summation differs by ~1e-12), so both engines agree on
     membership."""
@@ -1692,10 +1684,10 @@ def _attach_range_count(probes, lut, keys, sub_us):
 
 def q39_interval_join(spark, sf_dir):
     """Interval (range) join with NO equi key: every event falling inside
-    the 30-minute window after any signup event. The general pair-
-    enumerating operator (operators/asof.py interval_join) stays the
-    engine's interval-join primitive; this AGGREGATE over the pairs is
-    computed without materializing them — at sf1.0 the true pair count is
+    the 30-minute window after any signup event. This AGGREGATE over the
+    pairs is computed without materializing them (the pair-enumerating
+    bucketed interval join it replaced is the test reference in
+    tests/parity_references.py) — at sf1.0 the true pair count is
     1.4e8 and enumerating it (plus an Expand for the two countDistincts)
     was 100 s of the 265 s suite (guide §1.2: fix the distributed
     algorithm first).
