@@ -4,8 +4,23 @@ import datetime as dt
 
 import duckdb
 import pandas as pd
+from pyspark.sql import types as T
 
-from trde703_openfoodfacts_etl_spark.schema import CDC_SCHEMA, CDC_SCHEMA_V2
+from trde703_openfoodfacts_etl_spark.schema import CDC_ENVELOPE_FIELDS, CDC_SCHEMA
+
+#: v2 adds a metadata column mid-stream and widens turn_idx (FIXTURES.md §3).
+CDC_SCHEMA_V2 = T.StructType(
+    CDC_ENVELOPE_FIELDS
+    + [
+        T.StructField("conv_id", T.StringType(), False),
+        T.StructField("turn_idx", T.LongType(), False),  # widened int32→int64
+        T.StructField("role", T.StringType(), True),
+        T.StructField("text", T.StringType(), True),
+        T.StructField("tool", T.StringType(), True),
+        T.StructField("tool_meta", T.StringType(), True),  # added column
+        T.StructField("ts", T.TimestampType(), True),
+    ]
+)
 
 
 def ts(sec: int) -> dt.datetime:
@@ -13,8 +28,6 @@ def ts(sec: int) -> dt.datetime:
 
 
 def _nullable(schema):
-    from pyspark.sql import types as T
-
     return T.StructType([T.StructField(f.name, f.dataType, True) for f in schema.fields])
 
 

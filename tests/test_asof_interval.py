@@ -50,14 +50,6 @@ def test_asof_inclusive(spark):
     assert out.count() == 5  # left-outer: every left row exactly once
 
 
-def test_asof_strict(spark):
-    out = asof_join(
-        _left(spark), _right(spark), on="key", left_ts="ts", right_ts="rts", strict=True
-    )
-    got = {(r.key, r.ev): r.state for r in out.collect()}
-    assert got[("k1", 101)] == "s0"  # strict: row AT ts=5 not visible
-
-
 def test_asof_preserves_left_columns(spark):
     out = asof_join(_left(spark), _right(spark), on="key", left_ts="ts", right_ts="rts")
     assert set(out.columns) == {"key", "ts", "ev", "state"}
@@ -161,28 +153,6 @@ def test_interval_join_plan_has_no_nested_loop(spark):
     assert "NestedLoop" not in plan, plan
 
 
-def test_asof_tolerance(spark):
-    out = asof_join(
-        _left(spark), _right(spark), on="key", left_ts="ts", right_ts="rts",
-        tolerance_seconds=3,
-    )
-    got = {(r.key, r.ev): r.state for r in out.collect()}
-    assert got == {
-        ("k1", 100): "s0",   # ts=1, rts=0 -> 1s stale, within 3s
-        ("k1", 101): "s5",   # exact match, 0s stale
-        ("k1", 102): "s7",   # ts=10, rts=7 -> 3s stale, inclusive bound
-        ("k2", 103): None,
-        ("k3", 104): None,
-    }
-    tight = asof_join(
-        _left(spark), _right(spark), on="key", left_ts="ts", right_ts="rts",
-        tolerance_seconds=0.5,
-    )
-    got_tight = {(r.key, r.ev): r.state for r in tight.collect()}
-    assert got_tight[("k1", 100)] is None   # 1s stale > 0.5s
-    assert got_tight[("k1", 101)] == "s5"   # exact match survives
-
-
 def test_asof_null_right_ts_never_matches(spark):
     right = spark.createDataFrame(
         [("k1", None, "phantom"), ("k1", _ts(2), "real")],
@@ -206,11 +176,6 @@ def test_asof_carries_rows_atomically(spark):
     left = spark.createDataFrame([("k1", _ts(3), 1)], "key string, ts timestamp, ev int")
     row = asof_join(left, right, on="key", left_ts="ts", right_ts="rts").collect()[0]
     assert row.tag == "b" and row.price is None  # ts=2 row, NOT price from ts=1
-
-    # tolerance applies to the matched ROW's ts, never a mixed-in column's
-    tol = asof_join(left, right, on="key", left_ts="ts", right_ts="rts",
-                    tolerance_seconds=1).collect()[0]
-    assert tol.tag == "b" and tol.price is None  # ts=2 is 1s stale: fresh
 
 
 def test_interval_join_drops_inverted_and_null_intervals(spark):
@@ -364,8 +329,8 @@ def test_q39_count_form_matches_on_random_events(spark, tmp_path):
 
 def test_asof_right_tiebreak_matches_pre_dedup(spark):
     """r6: right_tiebreak folds the right-side max_by dedup into the window
-    sort. In both modes (inclusive/strict) the result must equal deduping
-    upstream with max_by(payload, tiebreak)."""
+    sort. The result must equal deduping upstream with max_by(payload,
+    tiebreak)."""
     import pyspark.sql.functions as SF
 
     left = spark.createDataFrame(
@@ -384,16 +349,15 @@ def test_asof_right_tiebreak_matches_pre_dedup(spark):
         .agg(SF.max_by(SF.struct("tb", "state"), "tb").alias("s"))
         .select("key", "rts", SF.col("s.tb").alias("tb"), SF.col("s.state").alias("state"))
     )
-    for strict in (False, True):
-        got = asof_join(
-            left, right, on="key", left_ts="ts", right_ts="rts",
-            payload_cols=["tb", "state"], strict=strict, right_tiebreak="tb",
-        ).orderBy("key", "ts").collect()
-        want = asof_join(
-            left, latest, on="key", left_ts="ts", right_ts="rts",
-            payload_cols=["tb", "state"], strict=strict,
-        ).orderBy("key", "ts").collect()
-        assert [tuple(r) for r in got] == [tuple(r) for r in want], strict
+    got = asof_join(
+        left, right, on="key", left_ts="ts", right_ts="rts",
+        payload_cols=["tb", "state"], right_tiebreak="tb",
+    ).orderBy("key", "ts").collect()
+    want = asof_join(
+        left, latest, on="key", left_ts="ts", right_ts="rts",
+        payload_cols=["tb", "state"],
+    ).orderBy("key", "ts").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
 def test_range_count_is_zero_past_the_span(spark):

@@ -81,21 +81,39 @@ def test_connected_components_multihop(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
-def test_connected_components_raises_when_not_converged(spark):
-    """A diameter larger than max_iter must fail loudly — silently
+def test_connected_components_raises_when_not_converged(spark, monkeypatch):
+    """A diameter larger than CC_MAX_ITER must fail loudly — silently
     returning non-minimal labels would report one component as several."""
-    import pytest
-
-    from trde703_openfoodfacts_etl_spark.operators.dedup import connected_components
+    from trde703_openfoodfacts_etl_spark.operators import dedup
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
+    monkeypatch.setattr(dedup, "CC_MAX_ITER", 2)
     with pytest.raises(RuntimeError, match="not converged"):
-        connected_components(chain, max_iter=2)
-    # and with enough rounds the same chain converges to one cluster
-    got = connected_components(chain, max_iter=50)
+        dedup.connected_components(chain)
+    # and with the default rounds the same chain converges to one cluster
+    monkeypatch.undo()
+    got = dedup.connected_components(chain)
     assert {r.cluster_id for r in got.collect()} == {0}
+
+
+def test_minhash_signatures_over_a_spread_scan_runs_no_job_at_build(spark, docs, tmp_path):
+    """q24 spreads its scan and hands it to minhash_signatures. Building the
+    signatures must not spread it again: spread() reads ``df.rdd``, which on
+    a frame with an exchange runs that shuffle at plan time."""
+    from trde703_openfoodfacts_etl_spark import spread
+
+    path = str(tmp_path / "docs.parquet")
+    docs.coalesce(1).write.parquet(path)
+    d = spread(spark.read.parquet(path))
+    sc = spark.sparkContext
+    sc.setJobGroup("minhash-build", "minhash_signatures build")
+    try:
+        minhash_signatures(d, num_hashes=64, shingle_n=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("minhash-build")) == []
 
 
 def test_ngram_jaccard_bitmap_filter_lossless_on_repetitive_corpus(spark):

@@ -1,5 +1,6 @@
 """Every package module, top-level function and class method is reached
-from a shipping entry point.
+from a shipping entry point, and every package option and module-level
+name is used by code outside tests.
 
 Pure AST (nothing is imported, no Spark), starting from the driver
 contract, the benchmark, the two CLIs and the streaming drivers:
@@ -10,11 +11,17 @@ contract, the benchmark, the two CLIs and the streaming drivers:
 - the method check applies the same walk to each method of a top-level
   class: a method is its own def, reached when reached code names it
   (dunder methods are roots), and a class reaches only what its bases,
-  decorators and non-def body name.
+  decorators and non-def body name;
+- the option check resolves every call in code outside ``tests/`` by name
+  and fails on a defaulted or keyword-only parameter that no such call
+  passes;
+- the module-level name check fails on a name a package module assigns
+  (``X = ...``) that no code outside ``tests/`` reads.
 
 Code that fails any check belongs under ``tests/`` or nowhere: the slow
 references that tests compare shipping fast paths against live in
-``tests/parity_references.py``.
+``tests/parity_references.py``. An option only tests set becomes a module
+constant that tests monkeypatch.
 """
 
 from __future__ import annotations
@@ -208,4 +215,189 @@ def test_every_package_method_is_reached_from_a_shipping_path():
     assert unreached == [], (
         f"methods no shipping path calls: {unreached}; call them from a "
         "shipping path or delete them"
+    )
+
+
+# Option and module-level name checks -----------------------------------
+
+#: Code that may set a package option or read a package name: everything
+#: but tests.
+CALLERS = [PKG, "__spark_entry__.py", "bench.py", "bench_extra.py", "perfbench", "scripts"]
+
+#: ``(def, parameter) -> (twin def, twin parameter)``: an option that only
+#: tests set on ``def`` but that shares one code path with a twin that code
+#: outside tests sets. The mirror stays as long as its twin is set.
+MIRRORS = {
+    (f"{PKG}.sources.genfeed.generate_segments", "v2_from_segment"):
+        (f"{PKG}.sources.genfeed.generate_segments_spark", "v2_from_segment"),
+    (f"{PKG}.streaming.pipeline.run_incremental", "auto_rebucket_target_bytes"):
+        (f"{PKG}.streaming.pipeline.run_stream", "auto_rebucket_target_bytes"),
+}
+
+
+def _caller_files() -> list[str]:
+    out = []
+    for entry in CALLERS:
+        path = os.path.join(REPO, entry)
+        if path.endswith(".py"):
+            out.append(path)
+            continue
+        for dirpath, dirnames, files in os.walk(path):
+            dirnames[:] = [d for d in dirnames if not d.startswith((".", "_")) and d != "tests"]
+            out += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+def _options() -> dict[str, list[tuple[str, list[str], set[str], int]]]:
+    """Def name -> ``(qualified name, positional params, options, offset)``
+    for every package def, nested ones too. Options are the defaulted and
+    keyword-only parameters; ``offset`` is 1 where a call through an
+    attribute binds the first parameter (methods, ``__init__``)."""
+    out: dict[str, list] = {}
+
+    def visit(body, prefix, in_class):
+        for stmt in body:
+            if isinstance(stmt, ast.ClassDef):
+                visit(stmt.body, f"{prefix}.{stmt.name}", True)
+            elif isinstance(stmt, _FUNCS):
+                a = stmt.args
+                pos = [p.arg for p in a.posonlyargs + a.args]
+                opts = set(pos[len(pos) - len(a.defaults):] if a.defaults else [])
+                opts |= {p.arg for p in a.kwonlyargs}
+                static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                             for d in stmt.decorator_list)
+                offset = 1 if in_class and not static else 0
+                qual = f"{prefix}.{stmt.name}"
+                out.setdefault(stmt.name, []).append((qual, pos, opts, offset))
+                visit(stmt.body, qual, False)
+            elif hasattr(stmt, "body"):
+                for field in ("body", "orelse", "finalbody"):
+                    visit(getattr(stmt, field, []), prefix, in_class)
+                for h in getattr(stmt, "handlers", []):
+                    visit(h.body, prefix, in_class)
+
+    for m, path in _package_modules().items():
+        visit(_parse(path).body, m, False)
+    return out
+
+
+def _dict_keys(node) -> set[str]:
+    """String keys of every ``{...}`` literal and ``dict(...)`` call under
+    ``node``."""
+    keys: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Dict):
+            keys |= {k.value for k in n.keys if isinstance(k, ast.Constant)}
+        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "dict":
+            keys |= {k.arg for k in n.keywords if k.arg}
+    return keys
+
+
+def _passed() -> set[tuple[str, str]]:
+    """``(qualified def, parameter)`` for every option a caller outside tests
+    passes, at a call resolved by name: ``f(...)`` and ``x.f(...)`` reach
+    every def named ``f``; ``C(...)`` and ``cls(...)`` reach ``C.__init__``.
+    A call passes a parameter by keyword, by position, or as a key of a
+    ``**`` dict given inline or through a name assigned in the same file."""
+    defs = _options()
+    out: set[tuple[str, str]] = set()
+    for path in _caller_files():
+        tree = _parse(path)
+        assigned: dict[str, set[str]] = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Assign):
+                for t in n.targets:
+                    if isinstance(t, ast.Name):
+                        assigned.setdefault(t.id, set()).update(_dict_keys(n.value))
+        classes = [c for c in ast.walk(tree) if isinstance(c, ast.ClassDef)]
+        enclosing = {id(n): c.name for c in classes for n in ast.walk(c)}
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+            if name == "cls":
+                name = enclosing.get(id(call))
+            targets = [(d, isinstance(f, ast.Attribute)) for d in defs.get(name, [])]
+            targets += [(d, True) for d in defs.get("__init__", [])
+                        if d[0].rsplit(".", 2)[-2] == name]
+            if not targets:
+                continue
+            kws: set[str] = set()
+            for k in call.keywords:
+                if k.arg:
+                    kws.add(k.arg)
+                elif isinstance(k.value, ast.Name):
+                    kws |= assigned.get(k.value.id, set())
+                else:
+                    kws |= _dict_keys(k.value)
+            npos = len(call.args)
+            for i, a in enumerate(call.args):
+                if isinstance(a, ast.Starred):
+                    npos = i
+                    break
+            for (qual, pos, opts, offset), bound in targets:
+                shift = offset if bound else 0
+                given = kws | set(pos[shift:shift + npos])
+                out |= {(qual, p) for p in opts & given}
+    return out
+
+
+def test_every_package_option_is_set_outside_tests():
+    options = {
+        (qual, p) for found in _options().values() for qual, _, opts, _ in found for p in opts
+    }
+    passed = _passed()
+    lost = sorted(twin for twin in MIRRORS.values() if twin not in passed)
+    assert lost == [], (
+        f"MIRRORS twins no caller outside tests sets: {lost}; drop the mirror "
+        "too, or give the twin a caller"
+    )
+    unset = sorted(f"{qual}({p})" for qual, p in options - passed - MIRRORS.keys())
+    assert unset == [], (
+        f"options no code outside tests passes: {unset}; inline the one value "
+        "as a constant, give the option a shipping caller, or delete it"
+    )
+
+
+def _module_names() -> list[str]:
+    """``module.NAME`` for every name a package module binds with a
+    top-level ``NAME = ...`` or ``NAME: T = ...``, dunders aside."""
+    out = []
+    for m, path in _package_modules().items():
+        for stmt in _parse(path).body:
+            if isinstance(stmt, ast.Assign):
+                targets = stmt.targets
+            elif isinstance(stmt, ast.AnnAssign):
+                targets = [stmt.target]
+            else:
+                continue
+            out += [
+                f"{m}.{n.id}" for t in targets for n in ast.walk(t)
+                if isinstance(n, ast.Name) and not n.id.startswith("__")
+            ]
+    return out
+
+
+def _read_names() -> set[str]:
+    """Every name code outside tests reads: a loaded ``NAME``, an
+    ``x.NAME``, or a ``from m import NAME``."""
+    out: set[str] = set()
+    for path in _caller_files():
+        for n in ast.walk(_parse(path)):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.ImportFrom):
+                out |= {a.name for a in n.names}
+    return out
+
+
+def test_every_package_module_level_name_is_read_outside_tests():
+    read = _read_names()
+    unread = sorted(q for q in _module_names() if q.rsplit(".", 1)[1] not in read)
+    assert unread == [], (
+        f"module-level names no code outside tests reads: {unread}; move "
+        "them under tests/ or delete them"
     )

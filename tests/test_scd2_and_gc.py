@@ -1,5 +1,5 @@
 """Snapshot CAS multi-writer safety, the vacuum keep window for time
-travel, and configurable quality gates (VERDICT r1 #6-#10).
+travel, and the quality gates' bounds and alert levels (VERDICT r1 #6-#10).
 """
 
 from __future__ import annotations
@@ -9,7 +9,8 @@ import json
 import pytest
 
 from trde703_openfoodfacts_etl_spark.operators.merge import apply_batch
-from trde703_openfoodfacts_etl_spark.quality import QualityThresholds, table_quality_report
+from trde703_openfoodfacts_etl_spark import quality
+from trde703_openfoodfacts_etl_spark.quality import table_quality_report
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable, SnapshotConflict
 
@@ -41,7 +42,7 @@ def test_snapshot_cas_conflict_and_retry(spark, tmp_path):
     assert texts["w1"] == "from-a" and texts["w2"] == "from-b"
 
 
-def test_quality_thresholds_and_alert_levels(spark):
+def test_quality_thresholds_and_alert_levels(spark, monkeypatch):
     good = spark.createDataFrame(
         [("c1", 0, "user", "hello world", None, None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
@@ -51,7 +52,7 @@ def test_quality_thresholds_and_alert_levels(spark):
     assert {g["gate"] for g in rpt["gates"]} == {
         "completeness", "uniqueness", "invalid_role_rate", "blank_text_rate"}
 
-    # failing fixture: blank text + invalid role trips configurable bounds
+    # failing fixture: blank text + invalid role trips tightened bounds
     bad = spark.createDataFrame(
         [
             ("c1", 0, "user", "", None, None),
@@ -59,15 +60,17 @@ def test_quality_thresholds_and_alert_levels(spark):
         ],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    strict = QualityThresholds(max_blank_text_rate=0.1, max_invalid_role_rate=0.1)
-    rpt2 = table_quality_report(bad, thresholds=strict)
+    monkeypatch.setattr(quality, "MAX_BLANK_TEXT_RATE", 0.1)
+    monkeypatch.setattr(quality, "MAX_INVALID_ROLE_RATE", 0.1)
+    rpt2 = table_quality_report(bad)
     assert not rpt2["passed"] and rpt2["alert_level"] == "fail"
     failing = {g["gate"] for g in rpt2["gates"] if g["level"] == "fail"}
     assert "blank_text_rate" in failing and "invalid_role_rate" in failing
     # the same data passes under lenient bounds
-    lenient = QualityThresholds(max_blank_text_rate=0.9, max_invalid_role_rate=0.9,
-                                min_completeness=0.1)
-    assert table_quality_report(bad, thresholds=lenient)["passed"]
+    monkeypatch.setattr(quality, "MAX_BLANK_TEXT_RATE", 0.9)
+    monkeypatch.setattr(quality, "MAX_INVALID_ROLE_RATE", 0.9)
+    monkeypatch.setattr(quality, "MIN_COMPLETENESS", 0.1)
+    assert table_quality_report(bad)["passed"]
     # report is JSON-serializable (sink contract)
     json.dumps(rpt2)
 

@@ -125,8 +125,8 @@ def test_top_cells_orders_cosine_desc_null_last_ties_to_smaller_index():
 
 def test_corpus_plane_buckets_vectorized_matches_expr(spark, tmp_path):
     e = spark.read.parquet(f"{_edge_dir(tmp_path)}/embeddings.parquet")
-    _, planes = _index(e, PLANES, "plane", "vec_id", "embedding")
-    fast = corpus_plane_buckets(e, planes, 4).orderBy("id", "band").collect()
+    _, planes = _index(e, PLANES, "plane")
+    fast = corpus_plane_buckets(e, planes, 4, "id").orderBy("id", "band").collect()
     pm = spark.createDataFrame(
         [(p, i // 4, 1 << (i % 4)) for i, p in enumerate(PLANES)],
         "plane_id long, band int, weight long",
@@ -144,7 +144,7 @@ def test_corpus_ivf_cells_match_hof_argmax(spark, tmp_path):
     max_by over (cosine, -cent_id), where a NULL cosine loses to any
     number and all-NULL falls to the smallest cent_id."""
     e = spark.read.parquet(f"{_edge_dir(tmp_path)}/embeddings.parquet")
-    cids, C = _index(e, CENTROIDS, "centroid", "vec_id", "embedding")
+    cids, C = _index(e, CENTROIDS, "centroid")
     pdf = e.orderBy("vec_id").toPandas()
     fast = cids[_top_cells(_matrix(pdf["embedding"]), C, 1)[:, 0]]
     cents = e.filter(F.col("vec_id").isin(CENTROIDS)).select(

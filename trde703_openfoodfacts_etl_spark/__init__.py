@@ -41,7 +41,12 @@ def spread(df):
     The guard keeps this scale-safe: an input that already has at least
     ``SPREAD_MIN_FILL``·defaultParallelism partitions (e.g. a real multi-file
     100 TB corpus) is returned unchanged — this must never become a
-    forced full-corpus shuffle."""
+    forced full-corpus shuffle.
+
+    ``df`` must be a scan: the partition count comes from ``df.rdd``, and
+    on a frame that already has an exchange, that runs the upstream
+    shuffle at plan time under AQE. Spread the scan once, where it is
+    loaded, and never spread a spread frame."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

@@ -47,7 +47,7 @@ def normalize_key(s: pd.Series) -> pd.Series:
     return _normalize_series(s, lowercase=True)
 
 
-def with_normalized_text(df, src: str = "text", dst: str = "text_norm"):
-    """Batch transform hook for the CDC pipeline: adds the normalized text
-    column (vectorized). Plug into run_incremental(transform=...)."""
-    return df.withColumn(dst, normalize_text(F.col(src)))
+def with_normalized_text(df):
+    """Batch transform hook for the CDC pipeline: adds ``text_norm``, the
+    normalized ``text`` (vectorized). Plug into run_incremental(transform=...)."""
+    return df.withColumn("text_norm", normalize_text(F.col("text")))

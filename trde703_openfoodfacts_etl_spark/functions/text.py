@@ -97,10 +97,10 @@ def fingerprint_expr(col):
     return F.md5(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "))
 
 
-def mingram_fingerprint_vec(col, n: int = 3):
+def mingram_fingerprint_vec(col):
     """Winnowing-style fingerprint: the minimum md5 over the word
-    ``n``-grams of the whitespace-normalized text (window = whole document;
-    equivalently MinHash with k=1 over shingles). Texts shorter than n
+    3-grams of the whitespace-normalized text (window = whole document;
+    equivalently MinHash with k=1 over shingles). Texts shorter than 3
     words hash whole. md5-hex string min is engine-portable, so the same
     value is computable in ANSI SQL (the q27 oracle).
 
@@ -129,13 +129,13 @@ def mingram_fingerprint_vec(col, n: int = 3):
                 out.append(None)
                 continue
             w = t.split(" ")
-            if len(w) < n:
+            if len(w) < 3:
                 out.append(md5(t.encode("utf-8")).hexdigest())
             else:
                 out.append(
                     min(
-                        md5(" ".join(w[i : i + n]).encode("utf-8")).hexdigest()
-                        for i in range(len(w) - n + 1)
+                        md5(" ".join(w[i : i + 3]).encode("utf-8")).hexdigest()
+                        for i in range(len(w) - 2)
                     )
                 )
         return pd.Series(out, dtype="object")

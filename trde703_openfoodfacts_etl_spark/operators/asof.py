@@ -38,20 +38,12 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload_cols: list[str] | None = None,
-    strict: bool = False,
-    tolerance_seconds: float | None = None,
     right_tiebreak: str | None = None,
 ):
     """For every left row, attach the latest right row with
-    ``right[right_ts] <= left[left_ts]`` (``<`` when ``strict``) sharing the
-    key columns ``on``. Right payload columns are null when no right row
-    precedes the left row (left-outer as-of semantics, matching DuckDB's
-    ``LEFT ASOF JOIN``).
-
-    ``tolerance_seconds`` bounds staleness (pandas ``merge_asof``'s
-    ``tolerance``): a carried right row older than the bound is treated as
-    no match (payload nulled). Applied post-window — a pure projection, no
-    extra shuffle.
+    ``right[right_ts] <= left[left_ts]`` sharing the key columns ``on``.
+    Right payload columns are null when no right row precedes the left row
+    (left-outer as-of semantics, matching DuckDB's ``LEFT ASOF JOIN``).
 
     ``right`` must be unique per (key, right_ts) — dedupe upstream if not,
     or the carried row among ties is unspecified. ``right_tiebreak`` (a
@@ -65,9 +57,9 @@ def asof_join(
     stays decided by the side flag. Right rows with a NULL
     ``right_ts`` never match (DuckDB ASOF / pandas merge_asof semantics).
     Left rows with a NULL ``left_ts`` always get a NULL payload (no match):
-    they sort nulls-first in the window, before every right row, and with a
-    tolerance set the freshness comparison is NULL too. This matches DuckDB
-    ASOF; pandas ``merge_asof`` would instead raise on NULL keys.
+    they sort nulls-first in the window, before every right row. This
+    matches DuckDB ASOF; pandas ``merge_asof`` would instead raise on NULL
+    keys.
     """
     from pyspark.sql import types as T
 
@@ -84,14 +76,9 @@ def asof_join(
     # The whole right payload is carried as ONE struct, so the window's
     # last(ignoreNulls) moves right ROWS atomically — per-column carry would
     # back-fill a legitimately-NULL payload column from an older right row,
-    # silently mixing columns of different versions. The matched row's own
-    # right_ts rides inside the struct for the tolerance check.
-    _RTSF = "__asof_rts"
+    # silently mixing columns of different versions.
     _PAY = "__asof_payload"
-    pay_type = T.StructType(
-        [T.StructField(c, right.schema[c].dataType) for c in payload_cols]
-        + [T.StructField(_RTSF, T.TimestampType())]
-    )
+    pay_type = T.StructType([T.StructField(c, right.schema[c].dataType) for c in payload_cols])
     _TB = "__asof_tiebreak"
     l_tagged = (
         left.withColumn(_SIDE, F.lit(1))
@@ -102,13 +89,7 @@ def asof_join(
         right.filter(F.col(right_ts).isNotNull())  # NULL right_ts: no match
         .withColumn(_SIDE, F.lit(0))
         .withColumn(_TS, F.col(right_ts).cast("timestamp"))
-        .withColumn(
-            _PAY,
-            F.struct(
-                *[F.col(c) for c in payload_cols],
-                F.col(right_ts).cast("timestamp").alias(_RTSF),
-            ),
-        )
+        .withColumn(_PAY, F.struct(*[F.col(c) for c in payload_cols]))
     )
     if right_tiebreak is not None:
         l_tagged = l_tagged.withColumn(
@@ -126,10 +107,10 @@ def asof_join(
     u = l_tagged.unionByName(r_tagged)
 
     # Inclusive: a right row at the same ts is visible to the left row
-    # (side 0 sorts before side 1). Strict: left sorts first. The optional
-    # tiebreak orders equal-ts right rows among themselves (nulls-first
-    # asc, so left rows' NULL tiebreak never reorders them vs each other).
-    order = [F.col(_TS).asc(), F.col(_SIDE).asc() if not strict else F.col(_SIDE).desc()]
+    # (side 0 sorts before side 1). The optional tiebreak orders equal-ts
+    # right rows among themselves (nulls-first asc, so left rows' NULL
+    # tiebreak never reorders them vs each other).
+    order = [F.col(_TS).asc(), F.col(_SIDE).asc()]
     if right_tiebreak is not None:
         order.append(F.col(_TB).asc_nulls_first())
     w = W.partitionBy(*keys).orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
@@ -137,14 +118,7 @@ def asof_join(
         *[c for c in cols if c != _PAY],
         F.last(_PAY, ignorenulls=True).over(w).alias(_PAY),
     )
-    out = filled.filter(F.col(_SIDE) == 1)
-    pay = F.col(_PAY)
-    if tolerance_seconds is not None:
-        fresh = (
-            F.col(_TS).cast("double") - pay[_RTSF].cast("double")
-        ) <= F.lit(float(tolerance_seconds))
-        pay = F.when(fresh, pay)
-    return out.select(
+    return filled.filter(F.col(_SIDE) == 1).select(
         *[c for c in cols if c not in (_PAY, _SIDE, _TS, _TB)],
-        *[pay[c].alias(c) for c in payload_cols],
+        *[F.col(_PAY)[c].alias(c) for c in payload_cols],
     )

@@ -1,9 +1,11 @@
 """Deduplication family for training-data pipelines.
 
-Scalable designs only: every method reduces to hash-groupBy or
-bucket-equi-join shapes — never an O(n²) cross join — so they survive
-100 TB corpora on a real cluster. (The reference's only dedup is LWW/
-dropDuplicates, SURVEY.md §2.4 A5; these generalize to content dedup.)
+Every operator reads the ``documents`` table's ``doc_id`` (long) and
+``text`` columns. Scalable designs only: every method reduces to
+hash-groupBy or bucket-equi-join shapes — never an O(n²) cross join — so
+they survive 100 TB corpora on a real cluster. (The reference's only dedup
+is LWW/dropDuplicates, SURVEY.md §2.4 A5; these generalize to content
+dedup.)
 Exact dedup is a plain ``groupBy(fingerprint_expr(text))``, written
 inline by q18.
 
@@ -59,9 +61,8 @@ def word_shingles(col, n: int = 3):
     return F.element_at(F.transform(F.array(toks), shingles_of), 1)
 
 
-def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 3, threshold: float = 0.8):
-    """All pairs with word-n-gram Jaccard ≥ threshold. EXACT output.
+def ngram_jaccard_pairs(df, threshold: float = 0.8):
+    """All pairs with word-3-gram Jaccard ≥ threshold. EXACT output.
 
     Scale shape = prefix-filtered similarity join (Bayardo et al. AllPairs /
     SSJoin): rank each document's shingles by ascending global document
@@ -76,8 +77,8 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     """
     df = _spread(df)  # single-row-group inputs: shingle on every core
     sh = df.select(
-        F.col(id_col).alias("_id"),
-        word_shingles(F.col(text_col), n).alias("_sh"),
+        F.col("doc_id").alias("_id"),
+        word_shingles(F.col("text")).alias("_sh"),
     ).withColumn("_size", F.size("_sh"))
     ex = sh.select("_id", "_size", F.explode("_sh").alias("_g")).withColumn(
         "_gh", F.xxhash64("_g")
@@ -200,9 +201,9 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
         .distinct()
     )
     csh = (
-        df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+        df.select(F.col("doc_id").alias("_id"), F.col("text").alias("_t"))
         .join(cids, "_id", "left_semi")
-        .select("_id", word_shingles(F.col("_t"), n).alias("_sh"))
+        .select("_id", word_shingles(F.col("_t")).alias("_sh"))
     )
     sa = csh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
     sb = csh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
@@ -217,9 +218,10 @@ def ngram_jaccard_pairs(df, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def minhash_signatures(df, text_col: str = "text", id_col: str = "doc_id",
-                       num_hashes: int = 64, shingle_n: int = 3):
-    """MinHash signature per document, fully columnar.
+def minhash_signatures(df, num_hashes: int = 64, shingle_n: int = 3):
+    """MinHash signature per document, fully columnar. ``df`` is not spread
+    here: :func:`~trde703_openfoodfacts_etl_spark.spread` takes a scan only,
+    so the caller spreads the scan it loads (q24 does).
 
     h_i(s) = (a_i * h31(s) + b_i) mod p over each shingle, with
     h31 = xxhash64 reduced into a 31-bit prime field so a_i*h31+b_i stays
@@ -238,8 +240,7 @@ def minhash_signatures(df, text_col: str = "text", id_col: str = "doc_id",
         b = (b * 1103515245 + 12345) % P
         params.append((a or 1, b))
     ex = (
-        _spread(df)
-        .select(F.col(id_col).alias("_id"), word_shingles(F.col(text_col), shingle_n).alias("_sh"))
+        df.select(F.col("doc_id").alias("_id"), word_shingles(F.col("text"), shingle_n).alias("_sh"))
         .select("_id", F.explode("_sh").alias("_g"))
         .select("_id", F.pmod(F.xxhash64("_g"), F.lit(P)).alias("_h"))
     )
@@ -288,12 +289,11 @@ def minhash_signatures(df, text_col: str = "text", id_col: str = "doc_id",
     return (
         partial.groupBy("_id")
         .agg(*[F.min(f"mh_{i}").alias(f"mh_{i}") for i in range(num_hashes)])
-        .withColumnRenamed("_id", id_col)
+        .withColumnRenamed("_id", "doc_id")
     )
 
 
-def minhash_lsh_candidates(sig, id_col: str = "doc_id",
-                           num_hashes: int = 64, bands: int = 16):
+def minhash_lsh_candidates(sig, num_hashes: int = 64, bands: int = 16):
     """Candidate pairs from banded LSH over precomputed signatures.
 
     Only (id, band-bucket hash) rides the band explode — 16 bytes/row — not
@@ -302,7 +302,7 @@ def minhash_lsh_candidates(sig, id_col: str = "doc_id",
     onto the *deduplicated candidate set* by the caller if needed."""
     rows = num_hashes // bands
     buckets = sig.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.explode(
             F.array(*[
                 F.xxhash64(F.lit(bi), *[F.col(f"mh_{bi * rows + r}") for r in range(rows)])
@@ -320,10 +320,10 @@ def minhash_lsh_candidates(sig, id_col: str = "doc_id",
     )
 
 
-def simhash_near_dups(df, text_col: str = "text", id_col: str = "doc_id",
-                      chunks: int = 4, max_hamming: int | None = None):
+def simhash_near_dups(df, max_hamming: int | None = None):
     """SimHash near-dup candidates: equal 16-bit chunk of the 64-bit
-    signature (pigeonhole: Hamming ≤ chunks-1 guarantees ≥1 equal chunk).
+    signature (pigeonhole: Hamming ≤ 3 guarantees ≥1 of the 4 chunks is
+    equal).
     Returns candidate pairs with exact Hamming distance.
 
     ``max_hamming`` pushes the caller's Hamming threshold INSIDE the
@@ -336,12 +336,12 @@ def simhash_near_dups(df, text_col: str = "text", id_col: str = "doc_id",
     into a long ((chunk_idx << 16) | value — bijective for 16-bit chunks)
     so the join keys are primitive."""
     sig = _spread(df).select(
-        F.col(id_col).alias("_id"), simhash64(F.col(text_col)).alias("_sig")
+        F.col("doc_id").alias("_id"), simhash64(F.col("text")).alias("_sig")
     )
     # one UDF pass: sig feeds both join sides (same executor-local-persist
     # tradeoff as ngram_jaccard_pairs' postings)
     sig = sig.localCheckpoint(eager=False)
-    width = 64 // chunks
+    chunks, width = 4, 16
     # bitwiseAND, not %: Spark's % follows the dividend's sign, so a negative
     # signature's chunk 0 (shift by 0 keeps the sign) would get a negative
     # remainder and miss collisions with positive-signature docs.
@@ -372,7 +372,7 @@ def _free_local_checkpoint(df) -> None:
 
     ``DataFrame.unpersist()`` only clears cache-manager entries, not the
     internal RDD a localCheckpoint pins, and waiting for JVM GC + the
-    ContextCleaner leaves up to max_iter label snapshots resident. The
+    ContextCleaner leaves up to CC_MAX_ITER label snapshots resident. The
     analyzed plan of a checkpointed frame is a ``LogicalRDD`` whose ``rdd``
     IS the pinned RDD — unpersist that. Best-effort: under Spark Connect
     (no ``_jdf``) or a future plan-shape change this degrades to the old
@@ -399,10 +399,13 @@ def _free_local_checkpoint(df) -> None:
 _free_local_checkpoint.failures = 0
 
 
-def connected_components(edges, src: str = "id_a", dst: str = "id_b",
-                         max_iter: int = 50):
-    """Connected components over an undirected edge list — the cluster
-    step of document dedup (near-dup PAIRS → dedup GROUPS, so one
+#: rounds after which :func:`connected_components` gives up (read at call time)
+CC_MAX_ITER = 50
+
+
+def connected_components(edges):
+    """Connected components over an undirected ``(id_a, id_b)`` edge list —
+    the cluster step of document dedup (near-dup PAIRS → dedup GROUPS, so one
     representative per group survives). Returns (id, cluster_id) with
     cluster_id = the component's minimum node id (canonical, algorithm-
     independent).
@@ -422,20 +425,20 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
     recursive CTE (UNION-deduped label reachability) and must agree
     exactly: CC is unique for a given graph regardless of algorithm.
     """
-    a, b = F.col(src).alias("a"), F.col(dst).alias("b")
     # Materialize the symmetric edge list ONCE: it is consumed every round
     # (and its upstream plan — e.g. the whole near-dup similarity join in
     # q59 — would otherwise re-execute twice per iteration). Same
     # executor-local-persist tradeoff as ngram_jaccard_pairs' postings.
     sym = (
-        edges.select(a, b)
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
+        .union(edges.select(F.col("id_b").alias("a"), F.col("id_a").alias("b")))
         .localCheckpoint(eager=True)
     )
     labels = (
         sym.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
     ).localCheckpoint(eager=True)
     changed = 0
+    max_iter = CC_MAX_ITER
     for _ in range(max_iter):
         neigh = (
             sym.join(labels, sym["a"] == labels["id"])
@@ -455,7 +458,7 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
         )
         # the changed-count action above is the last consumer of the OLD
         # round's snapshot — free its blocks now, or executor storage holds
-        # up to max_iter full label snapshots for the life of the job
+        # up to CC_MAX_ITER full label snapshots for the life of the job
         _free_local_checkpoint(labels)
         labels = new_labels
         if changed == 0:
@@ -463,7 +466,7 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
     if changed != 0:
         # Returning here would hand back NON-minimal labels (one component
         # reported as several clusters) with no indication — fail loudly;
-        # diameter > max_iter means the caller should raise max_iter.
+        # diameter > CC_MAX_ITER means CC_MAX_ITER should be raised.
         # The raise path frees its checkpoints too: the error message
         # invites catch-and-retry, and a retry loop must not accumulate
         # pinned edge-list + label snapshots per failed attempt.
@@ -472,7 +475,7 @@ def connected_components(edges, src: str = "id_a", dst: str = "id_b",
         raise RuntimeError(
             f"connected_components: not converged after {max_iter} rounds "
             f"({changed} labels still changing — graph diameter exceeds "
-            "max_iter); raise max_iter"
+            "CC_MAX_ITER); raise CC_MAX_ITER"
         )
     # the returned frame is backed by its own checkpoint; the edge list is
     # no longer needed

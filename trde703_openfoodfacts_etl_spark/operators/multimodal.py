@@ -24,15 +24,15 @@ from pyspark.sql import types as T
 from .. import spread as _spread
 
 
-def media_from_documents(docs, payload_chars: int = 2048):
+def media_from_documents(docs):
     """Derive a deterministic media table FROM the documents table: every
     column is a pure Spark-native expression of (doc_id, text), so an
     independent SQL engine can reproduce the exact same table and verify
     the decode output.
 
-    payload = UTF-8 bytes of the ASCII-stripped text (an opaque stand-in
-    for real image/audio bytes); kind/width/height/duration are arithmetic
-    on doc_id. The decode path downstream treats payload as opaque bytes —
+    payload = UTF-8 bytes of the first 2048 characters of the ASCII-stripped
+    text (an opaque stand-in for real image/audio bytes);
+    kind/width/height/duration are arithmetic on doc_id. The decode path downstream treats payload as opaque bytes —
     the mapInPandas plumbing is identical to the real-codec case.
     """
     docs = _spread(docs)  # single-row-group inputs: strip/encode on every core
@@ -54,7 +54,7 @@ def media_from_documents(docs, payload_chars: int = 2048):
         .alias("height"),
         F.when(kind != "image", (F.lit(1000) + F.pmod(F.col("doc_id") * 17, F.lit(59000))).cast("int"))
         .alias("duration_ms"),
-        F.encode(F.substring(ascii_text, 1, payload_chars), "UTF-8").alias("payload"),
+        F.encode(F.substring(ascii_text, 1, 2048), "UTF-8").alias("payload"),
     )
 
 

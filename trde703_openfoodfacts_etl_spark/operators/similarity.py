@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over the ``embeddings`` table: ``vec_id`` (long) and
+``embedding`` (array<float>).
 
 Every operator here takes its hyperplanes or centroids from corpus rows
 with fixed ids, so the exact result is recomputable in SQL (the DuckDB
@@ -93,8 +94,7 @@ def cosine_vec(a, b):
     return _cosine(a, b)
 
 
-def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str,
-                                id_col: str = "vec_id", vec_col: str = "embedding"):
+def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str):
     """Embedding-cosine near-duplicate PAIRS: all (a, b) in one block with
     ``cos(a, b) >= threshold`` and ``a.id < b.id``, exact within blocks,
     cosine rounded to 6 places.
@@ -112,12 +112,12 @@ def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str,
     vectors are dropped too: by the :func:`_matrix` rule they pair with
     nothing.
     """
-    df = df.filter(F.col(block_col).isNotNull() & F.col(vec_col).isNotNull())
+    df = df.filter(F.col(block_col).isNotNull() & F.col("embedding").isNotNull())
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        ids = pdf[id_col].to_numpy()
-        V = _matrix(pdf[vec_col])
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        V = _matrix(pdf["embedding"])
         norms = np.linalg.norm(V, axis=1, keepdims=True)
         norms[norms == 0.0] = np.nan  # zero vectors match nothing (cos undefined)
         V = V / norms
@@ -132,14 +132,14 @@ def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str,
     return df.groupBy(block_col).applyInPandas(kernel, "id_a long, id_b long, cos double")
 
 
-def _index(corpus, ids, what: str, id_col: str, vec_col: str):
+def _index(corpus, ids, what: str):
     """``(sorted ids as an array, their vectors as a float64 matrix)``: the ANN index,
     collected once at plan build. Raises ``ValueError`` naming the ids the
     corpus lacks."""
     ids = sorted({int(i) for i in ids})
     if not ids:
         raise ValueError(f"no {what} ids given")
-    got = dict(corpus.filter(F.col(id_col).isin(ids)).select(id_col, vec_col).collect())
+    got = dict(corpus.filter(F.col("vec_id").isin(ids)).select("vec_id", "embedding").collect())
     missing = [i for i in ids if i not in got]
     if missing:
         raise ValueError(f"{what} ids missing from the corpus: {missing}")
@@ -156,8 +156,7 @@ def _buckets(V: np.ndarray, planes: np.ndarray, per_band: int) -> np.ndarray:
     return out
 
 
-def corpus_plane_buckets(df, planes: np.ndarray, per_band: int, id_col="vec_id",
-                         vec_col="embedding", out_id="id"):
+def corpus_plane_buckets(df, planes: np.ndarray, per_band: int, out_id: str):
     """``(out_id, band, bucket)`` rows: the :func:`_buckets` of each vector
     against the hyperplanes ``planes`` (rows in band order). The planes are
     corpus vectors, so the DuckDB oracle recomputes identical buckets."""
@@ -167,31 +166,29 @@ def corpus_plane_buckets(df, planes: np.ndarray, per_band: int, id_col="vec_id",
         return pd.Series(list(_buckets(_matrix(vs, planes.shape[1]), planes, per_band)))
 
     return df.select(
-        F.col(id_col).alias(out_id), _bks(F.col(vec_col)).alias("_bks")
+        F.col("vec_id").alias(out_id), _bks(F.col("embedding")).alias("_bks")
     ).select(out_id, F.posexplode("_bks").alias("band", "bucket"))
 
 
-def corpus_lsh_topk(corpus, probes, plane_ids: list[int], bands: int = 3,
-                    k: int = 10, id_col: str = "vec_id",
-                    vec_col: str = "embedding"):
+def corpus_lsh_topk(corpus, probes, plane_ids: list[int], bands: int = 3, k: int = 10):
     """Random-hyperplane LSH top-k with corpus-vector hyperplanes (sorted
     by id, ``len(plane_ids) // bands`` per band).
 
     Bucket equi-join, then exact cosine re-rank of the candidates. No spread():
     the bucket join shuffles the corpus anyway, so the extra round-robin
     stage only adds latency (r6 A/B at both SFs)."""
-    _, planes = _index(corpus, plane_ids, "plane", id_col, vec_col)
+    _, planes = _index(corpus, plane_ids, "plane")
     per_band = len(planes) // bands
-    cb = corpus_plane_buckets(corpus, planes, per_band, id_col, vec_col, "neighbor_id")
-    pb = corpus_plane_buckets(probes, planes, per_band, id_col, vec_col, "probe_id")
+    cb = corpus_plane_buckets(corpus, planes, per_band, "neighbor_id")
+    pb = corpus_plane_buckets(probes, planes, per_band, "probe_id")
     cand = (
         pb.join(cb, ["band", "bucket"])
         .filter(F.col("probe_id") != F.col("neighbor_id"))
         .select("probe_id", "neighbor_id")
         .dropDuplicates(["probe_id", "neighbor_id"])
     )
-    pv = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("_pv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+    pv = probes.select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("_pv"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
     w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
         cand.join(F.broadcast(pv), "probe_id")
@@ -215,9 +212,7 @@ def _top_cells(V: np.ndarray, C: np.ndarray, n: int) -> np.ndarray:
     return np.argsort(np.where(np.isnan(s), np.inf, -s), axis=1, kind="stable")[:, :n]
 
 
-def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3,
-                    k: int = 10, id_col: str = "vec_id",
-                    vec_col: str = "embedding"):
+def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3, k: int = 10):
     """IVF top-k with corpus-vector pseudo-centroids.
 
     The centroids (the IVF index) are collected at plan build. One numpy
@@ -228,7 +223,7 @@ def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3,
     oracle. A production deployment replaces the fixed ids with
     sampled/k-means centroids and writes the corpus bucketed by cell
     (shuffle-free probes)."""
-    cids, C = _index(corpus, centroid_ids, "centroid", id_col, vec_col)
+    cids, C = _index(corpus, centroid_ids, "centroid")
 
     def cells(n):
         @F.pandas_udf("array<long>")
@@ -238,14 +233,14 @@ def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3,
         return _cells
 
     corpus_cells = _spread(corpus).select(  # single-row-group inputs: every core
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        cells(1)(F.col(vec_col))[0].alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("_cv"),
+        cells(1)(F.col("embedding"))[0].alias("cell"),
     )
     probe_cells = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).alias("_pv"),
-        F.explode(cells(nprobe)(F.col(vec_col))).alias("cell"),
+        F.col("vec_id").alias("probe_id"),
+        F.col("embedding").alias("_pv"),
+        F.explode(cells(nprobe)(F.col("embedding"))).alias("cell"),
     )
     w = W.partitionBy("probe_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (

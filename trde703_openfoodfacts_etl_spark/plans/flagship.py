@@ -80,8 +80,9 @@ def _tree_max_mtime(root: str, cutoff: float) -> float:
 
 
 def sweep_stale_scratch(max_age_hours: float = 6.0) -> int:
-    """Remove leftover ``cdc_*`` temp lakes from PRIOR processes (crashes,
-    kills) whose ENTIRE tree is older than ``max_age_hours`` (see
+    """Remove leftover ``cdc_*`` temp lakes (:func:`_replay` names every
+    lake so) from PRIOR processes (crashes, kills) whose ENTIRE tree is
+    older than ``max_age_hours`` (see
     :func:`_tree_max_mtime` — root mtime alone misses nested writes by a
     concurrent process). Called at bench start; safe to call anywhere —
     this process's own live lakes are always skipped."""
@@ -95,7 +96,7 @@ def sweep_stale_scratch(max_age_hours: float = 6.0) -> int:
     for name in os.listdir(SCRATCH):
         p = os.path.join(SCRATCH, name)
         if (
-            name.startswith(("cdc_replay_", "cdc_changes_", "cdc_tt_", "cdc_tq_"))
+            name.startswith("cdc_")
             and p not in live
             and os.path.isdir(p)
             and _tree_max_mtime(p, cutoff) < cutoff
@@ -128,30 +129,45 @@ def _as_cdc(events_df):
     )
 
 
-def cdc_replay(spark, sf_dir: str, n_batches: int = 3, mode: str = "cow"):
-    """Replay sf_dir/events.parquet through the lake engine; return final state.
+def _replay(spark, sf_dir: str, prefix: str, n_batches: int, mode: str = "cow"):
+    """Replay sf_dir/events.parquet (:func:`_as_cdc`) into a fresh scratch
+    lake ``cdc_<prefix>…`` in ``n_batches`` lsn-contiguous batches; return
+    ``(lake, [apply_batch metrics per batch])``. Each caller has its own
+    ``prefix``: scratch retention is per prefix.
+
+    Contiguous lsn ranges, not pmod: each batch's scan prunes parquet row
+    groups via event_id min/max stats instead of re-reading the whole file
+    per batch (LWW is order-independent, so any split converges). The
+    bounds probe reads one column. With two batches the first is
+    ``lsn < lo + (hi - lo) // 2 + 1``, the oracles' ``mid`` split."""
+    from ..operators.merge import apply_batch
+    from ..sources.lake import LakeTable
+    from .analytics import load
+
+    lake = LakeTable.create(
+        spark, _scratch_lake_root(f"cdc_{prefix}"), EVENT_LAKE_SCHEMA, num_buckets=8
+    )
+    ev = _as_cdc(load(spark, sf_dir, "events"))
+    lo, hi = ev.agg(F.min("lsn"), F.max("lsn")).first()
+    step = (int(hi) - int(lo)) // n_batches + 1
+    metrics = []
+    for i in range(n_batches):
+        lo_i, hi_i = int(lo) + i * step, int(lo) + (i + 1) * step
+        metrics.append(apply_batch(
+            lake, ev.filter((F.col("lsn") >= lo_i) & (F.col("lsn") < hi_i)), i,
+            mode=mode,
+        ))
+    return lake, metrics
+
+
+def cdc_replay(spark, sf_dir: str, mode: str = "cow"):
+    """Replay sf_dir/events.parquet through the lake engine in three
+    batches; return final state.
 
     ``mode="mor"`` replays merge-on-read (delta appends + one compaction) —
     gated as q54 under the SAME oracle as the COW q00, so the driver proves
     both write paths converge to the identical LWW state."""
-    from ..operators.merge import apply_batch
-    from ..sources.lake import LakeTable
-
-    root = _scratch_lake_root(f"cdc_replay_{mode}_")
-    lake = LakeTable.create(spark, root, EVENT_LAKE_SCHEMA, num_buckets=8)
-    ev = _as_cdc(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    # contiguous lsn ranges, not pmod: each batch's scan prunes parquet row
-    # groups via event_id min/max stats instead of re-reading the whole file
-    # per batch (LWW is order-independent, so any split converges). The
-    # bounds probe reads one column.
-    lo, hi = ev.agg(F.min("lsn"), F.max("lsn")).first()
-    step = (int(hi) - int(lo)) // n_batches + 1
-    for i in range(n_batches):
-        lo_i, hi_i = int(lo) + i * step, int(lo) + (i + 1) * step
-        apply_batch(
-            lake, ev.filter((F.col("lsn") >= lo_i) & (F.col("lsn") < hi_i)), i,
-            mode=mode,
-        )
+    lake, _ = _replay(spark, sf_dir, f"replay_{mode}_", 3, mode=mode)
     if mode == "mor":
         lake.compact()
     return lake.read().select("conv_id", "turn_idx", "role", "text", "ts")
@@ -166,16 +182,7 @@ def cdc_changes(spark, sf_dir: str):
     diff of two independent LWW materializations (events < mid vs all) —
     valid because the merge is associative: state after batch 1 IS the LWW
     of the first half."""
-    from ..operators.merge import apply_batch
-    from ..sources.lake import LakeTable
-
-    root = _scratch_lake_root("cdc_changes_")
-    lake = LakeTable.create(spark, root, EVENT_LAKE_SCHEMA, num_buckets=8)
-    ev = _as_cdc(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    lo, hi = ev.agg(F.min("lsn"), F.max("lsn")).first()
-    mid = int(lo) + (int(hi) - int(lo)) // 2 + 1
-    m1 = apply_batch(lake, ev.filter(F.col("lsn") < mid), 0)
-    m2 = apply_batch(lake, ev.filter(F.col("lsn") >= mid), 1)
+    lake, (m1, m2) = _replay(spark, sf_dir, "changes_", 2)
     return lake.changes(m1["snapshot_id"], m2["snapshot_id"]).select(
         "conv_id", "turn_idx", "role", "text", "ts", "change_type"
     )
@@ -261,16 +268,7 @@ def cdc_time_travel(spark, sf_dir: str):
     (`lake.read(snapshot_id=...)`) — the oracle materializes LWW over only
     the first half of the feed, so the gate proves historical reads return
     exactly the state that existed at that commit."""
-    from ..operators.merge import apply_batch
-    from ..sources.lake import LakeTable
-
-    root = _scratch_lake_root("cdc_tt_")
-    lake = LakeTable.create(spark, root, EVENT_LAKE_SCHEMA, num_buckets=8)
-    ev = _as_cdc(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    lo, hi = ev.agg(F.min("lsn"), F.max("lsn")).first()
-    mid = int(lo) + (int(hi) - int(lo)) // 2 + 1
-    m1 = apply_batch(lake, ev.filter(F.col("lsn") < mid), 0)
-    apply_batch(lake, ev.filter(F.col("lsn") >= mid), 1)  # head moves on
+    lake, (m1, _) = _replay(spark, sf_dir, "tt_", 2)  # head moves on
     past = lake.read(snapshot_id=m1["snapshot_id"])
     return (
         past.groupBy("role")

@@ -14,9 +14,9 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
-def top_tools(df, k: int = 10):
+def top_tools(df):
     """analytics.sql:5-20 (top-10 brands by product count + quality) →
-    top-k tools by call count + avg text length, HAVING-gated."""
+    top-10 tools by call count + avg text length, HAVING-gated."""
     return (
         df.filter(F.col("tool").isNotNull())
         .groupBy("tool")
@@ -26,7 +26,7 @@ def top_tools(df, k: int = 10):
         )
         .filter(F.col("n_calls") >= 5)
         .orderBy(F.desc("n_calls"), F.asc("tool"))
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -94,9 +94,9 @@ def completeness_by_role(df):
     )
 
 
-def anomaly_listing(df, k: int = 50):
+def anomaly_listing(df):
     """analytics.sql:100-125 (CASE-ladder anomaly classification + outer
-    join listing) → classified per-turn anomalies, worst first."""
+    join listing) → the first 50 classified per-turn anomalies."""
     blank = F.col("text").isNull() | (F.trim(F.col("text")) == "")
     anomaly = (
         F.when(blank & (F.col("role") != "tool"), "empty_text")
@@ -110,7 +110,7 @@ def anomaly_listing(df, k: int = 50):
         .filter(F.col("anomaly").isNotNull())
         .select("conv_id", "turn_idx", "role", "anomaly")
         .orderBy("anomaly", "conv_id", "turn_idx")
-        .limit(k)
+        .limit(50)
     )
 
 
@@ -127,9 +127,10 @@ def weekly_evolution(df):
     )
 
 
-def tool_conversation_matrix(df, min_count: int = 3):
+def tool_conversation_matrix(df):
     """analytics.sql:160-176 (country×category matrix, COUNT DISTINCT,
-    HAVING) → role×tool usage matrix over distinct conversations."""
+    HAVING) → role×tool usage matrix over distinct conversations, pairs in
+    at least 3 conversations."""
     return (
         df.filter(F.col("tool").isNotNull())
         .groupBy("role", "tool")
@@ -137,7 +138,7 @@ def tool_conversation_matrix(df, min_count: int = 3):
             F.countDistinct("conv_id").alias("n_conversations"),
             F.count(F.lit(1)).alias("n_turns"),
         )
-        .filter(F.col("n_conversations") >= min_count)
+        .filter(F.col("n_conversations") >= 3)
     )
 
 

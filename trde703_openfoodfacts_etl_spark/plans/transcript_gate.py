@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from . import transcript_analytics as TA
-from .flagship import EVENT_LAKE_SCHEMA, _as_cdc, _scratch_lake_root
+from .flagship import _replay
 
 def _tool_expr():
     """Deterministic tool derivation (mirrored in _STATE_CTE below); built
@@ -35,10 +35,10 @@ def _tool_expr():
 _TQ_STATE: dict[str, object] = {}
 
 
-def transcript_state(spark, sf_dir: str, n_batches: int = 2):
-    """Replay sf_dir/events.parquet through the lake once per process and
-    return the live state with the derived ``tool`` column; memoized so the
-    seven gated queries share the replay."""
+def transcript_state(spark, sf_dir: str):
+    """Replay sf_dir/events.parquet through the lake in two batches, once
+    per process, and return the live state with the derived ``tool``
+    column; memoized so the seven gated queries share the replay."""
     # key the memo on the live session too: a DataFrame cached under a
     # stopped SparkSession is unusable and must be rebuilt under the new one
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -47,21 +47,10 @@ def transcript_state(spark, sf_dir: str, n_batches: int = 2):
         return cached
     import hashlib
 
-    from ..operators.merge import apply_batch
-    from ..sources.lake import LakeTable
-
     # prefix carries a digest of the FULL sf_dir (two dirs sharing a
     # basename must not share a scratch family)
-    root = _scratch_lake_root(
-        f"cdc_tq_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_"
-    )
-    lake = LakeTable.create(spark, root, EVENT_LAKE_SCHEMA, num_buckets=8)
-    ev = _as_cdc(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    lo, hi = ev.agg(F.min("lsn"), F.max("lsn")).first()
-    step = (int(hi) - int(lo)) // n_batches + 1
-    for i in range(n_batches):
-        lo_i, hi_i = int(lo) + i * step, int(lo) + (i + 1) * step
-        apply_batch(lake, ev.filter((F.col("lsn") >= lo_i) & (F.col("lsn") < hi_i)), i)
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    lake, _ = _replay(spark, sf_dir, f"tq_{digest}_", 2)
     state = (
         lake.read()
         .select("conv_id", "turn_idx", "role", "text", "ts")

@@ -6,60 +6,48 @@ uniqueness / validity / anomaly rates — but computes every metric in a single
 ``agg`` over conditional sums instead of the reference's ~20 separate
 ``count()`` actions that each recompute full lineage (SURVEY.md §2.4 A1).
 
-Gate bounds are configurable (the reference's QUALITY_THRESHOLDS,
-etl/config.py:47-57, and alert levels, docs/quality_rules.md:346-351):
-each gate evaluates to ok / warn / fail, ``passed`` is derived from the
-gates, and the report carries the bound next to the observed value so an
-operator can see *how close* a metric is to tripping.
+Gate bounds are module constants, as the reference keeps its
+QUALITY_THRESHOLDS in config (etl/config.py:47-57), with its alert levels
+(docs/quality_rules.md:346-351): each gate evaluates to ok / warn / fail,
+``passed`` is derived from the gates, and the report carries the bound next
+to the observed value so an operator can see *how close* a metric is to
+tripping. The bounds are read at call time.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
-
-@dataclass(frozen=True)
-class QualityThresholds:
-    """Configurable gate bounds (fractions in [0,1] unless noted).
-
-    ``warn_margin``: a passing metric within this relative margin of its
-    bound reports level 'warn' instead of 'ok' (early alert).
-    """
-
-    min_completeness: float = 0.70
-    min_uniqueness: float = 1.0  # fraction of keys that must be unique
-    max_invalid_role_rate: float = 0.05
-    max_blank_text_rate: float = 0.30
-    warn_margin: float = 0.05
+#: gate bounds, fractions in [0,1]
+MIN_COMPLETENESS = 0.70
+MIN_UNIQUENESS = 1.0  # fraction of keys that must be unique
+MAX_INVALID_ROLE_RATE = 0.05
+MAX_BLANK_TEXT_RATE = 0.30
+#: a passing metric within this margin of its bound reports 'warn', not 'ok'
+WARN_MARGIN = 0.05
 
 
-def _gate(name: str, value: float, bound: float, direction: str, margin: float) -> dict:
+def _gate(name: str, value: float, bound: float, direction: str) -> dict:
     """direction 'min': value must be >= bound; 'max': value must be <= bound.
     All metrics are fractions in [0,1]; the warn band is clamped to the
     metric's ideal (1.0 for min, 0.0 for max) so a perfect value never
     warns even when the bound sits at the domain edge."""
     if direction == "min":
         ok = value >= bound
-        near = ok and value < min(bound + margin, 1.0)
+        near = ok and value < min(bound + WARN_MARGIN, 1.0)
     else:
         ok = value <= bound
-        near = ok and value > max(bound - margin, 0.0)
+        near = ok and value > max(bound - WARN_MARGIN, 0.0)
     level = "fail" if not ok else ("warn" if near else "ok")
     return {"gate": name, "value": round(value, 6), "bound": bound,
             "direction": direction, "level": level}
 
 
-def table_quality_report(
-    df,
-    snapshot_id: int | None = None,
-    thresholds: QualityThresholds | None = None,
-) -> dict:
+def table_quality_report(df, snapshot_id: int | None = None) -> dict:
     """Table-level gates over the live lake state (transcript schema)."""
-    th = thresholds or QualityThresholds()
     blank = F.col("text").isNull() | (F.trim(F.col("text")) == "")
     row = df.select(
         F.count(F.lit(1)).alias("rows"),
@@ -85,12 +73,10 @@ def table_quality_report(
     invalid_rate = 0.0 if rows == 0 else int(row["invalid_role"] or 0) / rows
     blank_rate = 0.0 if rows == 0 else int(row["blank_text"] or 0) / rows
     gates = [
-        _gate("completeness", completeness, th.min_completeness, "min", th.warn_margin),
-        _gate("uniqueness", uniqueness, th.min_uniqueness, "min", th.warn_margin),
-        _gate("invalid_role_rate", invalid_rate, th.max_invalid_role_rate, "max",
-              th.warn_margin),
-        _gate("blank_text_rate", blank_rate, th.max_blank_text_rate, "max",
-              th.warn_margin),
+        _gate("completeness", completeness, MIN_COMPLETENESS, "min"),
+        _gate("uniqueness", uniqueness, MIN_UNIQUENESS, "min"),
+        _gate("invalid_role_rate", invalid_rate, MAX_INVALID_ROLE_RATE, "max"),
+        _gate("blank_text_rate", blank_rate, MAX_BLANK_TEXT_RATE, "max"),
     ]
     levels = [g["level"] for g in gates]
     rpt = {
@@ -113,10 +99,10 @@ def table_quality_report(
             "max_turn_idx": int(row["max_turn_idx"] or 0),
         },
         "thresholds": {
-            "min_completeness": th.min_completeness,
-            "min_uniqueness": th.min_uniqueness,
-            "max_invalid_role_rate": th.max_invalid_role_rate,
-            "max_blank_text_rate": th.max_blank_text_rate,
+            "min_completeness": MIN_COMPLETENESS,
+            "min_uniqueness": MIN_UNIQUENESS,
+            "max_invalid_role_rate": MAX_INVALID_ROLE_RATE,
+            "max_blank_text_rate": MAX_BLANK_TEXT_RATE,
         },
         "gates": gates,
         "alert_level": ("fail" if "fail" in levels

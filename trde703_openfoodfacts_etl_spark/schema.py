@@ -43,27 +43,9 @@ CDC_ENVELOPE_FIELDS = [
 #: Full CDC event schema (v1): envelope + payload.
 CDC_SCHEMA = T.StructType(CDC_ENVELOPE_FIELDS + TRANSCRIPT_FIELDS)
 
-#: v2 adds a metadata column mid-stream and widens turn_idx (FIXTURES.md §3).
-CDC_SCHEMA_V2 = T.StructType(
-    CDC_ENVELOPE_FIELDS
-    + [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.LongType(), False),  # widened int32→int64
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("tool_meta", T.StringType(), True),  # added column
-        T.StructField("ts", T.TimestampType(), True),
-    ]
-)
-
 #: Natural key of the lake table (analog of reference barcode `code`,
 #: reference: docs/data_dictionary.md:105).
 KEY_COLS = ["conv_id", "turn_idx"]
-
-#: LWW ordering (ts, lsn) — replaces reference
-#: desc(coalesce(last_modified_t, 0)) (etl/bronze_to_silver.py:230-232).
-ORDER_COLS = ["ts", "lsn"]
 
 #: Internal lake bookkeeping columns (never part of the user schema).
 META_DELETED = "_deleted"

@@ -230,7 +230,6 @@ def run_stream(
     segments_dir: str,
     source_schema,
     checkpoint_dir: str,
-    stream_id: str = "stream",
     transform=None,
     max_files_per_trigger: int = 4,
     mode: str = "cow",
@@ -243,7 +242,8 @@ def run_stream(
 
     Runs with the available-now trigger (drains everything currently in the
     WAL directory, then stops) so tests and bench runs are synchronous; a
-    production deployment drops the trigger for continuous tailing.
+    production deployment drops the trigger for continuous tailing. Batch
+    ids are recorded in the lake under the stream id ``"stream"``.
 
     Each microbatch runs the step shared with :func:`run_incremental`
     (:func:`_batch_step`) inside ``foreachBatch``, so the maintenance knobs
@@ -270,7 +270,7 @@ def run_stream(
         .parquet(segments_dir)
     )
     step, metrics = _batch_step(
-        lake, stream_id, transform, mode, auto_compact_after,
+        lake, "stream", transform, mode, auto_compact_after,
         auto_vacuum_every, vacuum_keep_snapshots, auto_rebucket_target_bytes,
     )
     declared = {f.name: f.dataType for f in source_schema.fields}
