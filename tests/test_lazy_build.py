@@ -1,0 +1,72 @@
+"""Building a query's DataFrame (``fn(spark, sf_dir)``) runs no Spark job:
+the work belongs to the action, where every timer sees it. Entries that
+still run jobs while they build are listed in ``EAGER`` with the action
+behind them, and are not built here."""
+
+from __future__ import annotations
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import __spark_entry__ as entrymod  # noqa: E402
+
+_REPLAY = "CDC replay: the lake commits each batch while the plan is built"
+_TQ = "reads q47's memoized CDC replay (transcript_state), which replays on first use"
+_CHECKPOINT = (
+    "localCheckpoint over an exchange: AQE runs the stages below it when the "
+    "checkpoint takes its RDD"
+)
+
+EAGER = {
+    "q00_cdc_replay": _REPLAY,
+    "q54_cdc_replay_mor": _REPLAY,
+    "q40_cdc_changelog": _REPLAY,
+    "q44_sql_surface": _REPLAY,
+    "q45_time_travel": _REPLAY,
+    "q47_top_tools": _REPLAY,
+    "q48_role_distribution": _TQ,
+    "q49_conversation_stats": _TQ,
+    "q50_completeness_by_role": _TQ,
+    "q51_anomaly_listing": _TQ,
+    "q52_weekly_evolution": _TQ,
+    "q53_tool_matrix": _TQ,
+    "q59_dedup_clusters": "connected_components: eager checkpoint and count per round",
+    "q35_percentiles": "exact_quantiles collects run counts, then the rank rows",
+    "q28_ann_lsh": "corpus_lsh_topk collects the plane vectors (similarity._index)",
+    "q29_ann_ivf": "corpus_ivf_topk collects the centroid vectors (similarity._index)",
+    "q21_ngram_jaccard": _CHECKPOINT + " (the exploded shingles, the candidates)",
+    "q24_minhash_lsh": _CHECKPOINT + " (the LSH candidates)",
+    "q25_simhash": _CHECKPOINT + " (the spread signatures)",
+    "q39_interval_join": _CHECKPOINT + " (the range-count lookup table)",
+    "q43_contamination": _CHECKPOINT + " (the per-source fingerprint counts)",
+}
+
+
+def build_jobs(spark, name: str, build) -> int:
+    """Spark jobs that ``build()`` runs, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, f"{name} build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_every_allowlisted_entry_exists():
+    assert set(EAGER) <= set(entrymod.queries())
+
+
+def test_registry_entries_build_without_spark_jobs(spark, sf_dir):
+    eager = {}
+    for name, fn in entrymod.queries().items():
+        if name in EAGER:
+            continue
+        n = build_jobs(spark, name, lambda: fn(spark, sf_dir))
+        if n:
+            eager[name] = n
+    assert eager == {}, f"entries that ran Spark jobs while building: {eager}"

@@ -20,6 +20,8 @@ def _builtin(df, group_cols, value_col, probs):
     )
     res = {}
     for r in out.collect():
+        if r["_p"] is None:  # all values NULL: no quantiles
+            continue
         g = tuple(r[c] for c in group_cols)
         for qi, v in enumerate(r["_p"]):
             res[(g, qi)] = v
@@ -84,14 +86,75 @@ def test_multi_column_group_and_int_values(spark):
     _compare(df, ["g1", "g2"], "v")
 
 
+def test_empty_input(spark):
+    df = spark.createDataFrame([], "g string, v double")
+    assert exact_quantiles(df, ["g"], "v", PROBS).collect() == []
+    _compare(df, ["g"], "v")
+
+
+def test_all_null_values(spark):
+    df = spark.createDataFrame([("a", None), ("a", None), ("b", None)], "g string, v double")
+    assert exact_quantiles(df, ["g"], "v", PROBS).collect() == []
+    _compare(df, ["g"], "v")
+    # an all-NULL group next to a group with values: only the latter
+    mixed = df.union(spark.createDataFrame([("c", 2.0), ("c", 4.0)], "g string, v double"))
+    _compare(mixed, ["g"], "v")
+
+
+def test_single_row(spark):
+    df = spark.createDataFrame([("a", 3.5)], "g string, v double")
+    _compare(df, ["g"], "v")
+
+
+def test_one_group_over_every_partition(spark):
+    """One group range-partitioned over all 16 partitions: every target
+    rank's row id is the first id of some partition's run plus an offset,
+    so rank → id must carry across each partition boundary."""
+    rng = random.Random(3)
+    vals = [float(rng.randrange(500)) for _ in range(4_000)]
+    df = spark.createDataFrame([("only", v) for v in vals], "g string, v double")
+    probs = [i / 40 for i in range(41)]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    try:
+        pids = df.repartitionByRange(16, "g", "v").select(F.spark_partition_id()).distinct()
+        assert pids.count() == 16
+        _compare(df, ["g"], "v", probs=probs)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _plans_run_under(spark, description, action):
+    """Physical plans of the SQL executions ``action`` runs, tagged with a
+    job description and read back from the SQL status store."""
+    sc = spark.sparkContext
+    sc.setJobDescription(description)
+    try:
+        action()
+    finally:
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(store.executionsList())
+    return [e.physicalPlanDescription() for e in execs if e.description() == description]
+
+
 def test_plan_has_no_value_buffer_aggregate(spark):
     """The scale claim: no percentile() aggregate (per-group value buffer)
-    and no single-task-per-group window anywhere in the job — the heavy
-    stages are a range-partitioned sort and a mapInPandas extraction."""
+    and no single-task-per-group window in any job the operator runs — the
+    heavy stages are a range-partitioned sort and an id-set selection — and
+    no MapInPandas / PythonMapInArrow node: ranks are selected in the JVM.
+    The returned frame is a small local relation, so the jobs' own plans
+    are read back from the SQL status store."""
     df = spark.createDataFrame(
-        [("a", float(i)) for i in range(100)], "g string, v double"
+        [(g, float(i)) for g in "ab" for i in range(200)], "g string, v double"
     )
-    out = exact_quantiles(df, ["g"], "v", [0.5])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "percentile" not in plan.lower()
-    assert "Window" not in plan
+    plans = _plans_run_under(
+        spark, "exact_quantiles plan check",
+        lambda: exact_quantiles(df, ["g"], "v", PROBS).collect(),
+    )
+    assert len(plans) >= 2  # the counts pass and the selection
+    for plan in plans:
+        assert "percentile" not in plan.lower(), plan
+        assert "Window" not in plan, plan
+        assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan, plan

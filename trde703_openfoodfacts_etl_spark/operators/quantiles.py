@@ -15,16 +15,19 @@ exact ``quantile_cont`` semantics, no per-group value buffer anywhere:
 2. ``repartitionByRange(P, *group, value)`` + ``sortWithinPartitions``, with
    P = ``spark.sql.shuffle.partitions`` — a distributed sort; each task
    holds one range partition, never one group;
-3. one pass counts rows per (partition, group) — P×G count rows to the
-   driver, which turns each target rank r = p·(n−1) into (partition,
-   local offset) coordinates by prefix-summing counts in partition order;
-4. one ``mapInPandas`` pass extracts exactly the rows at those offsets —
-   ≤ 2·|probs| rows per group ever leave the executors;
+3. the sorted projection is tagged with ``monotonically_increasing_id()``
+   — partition index · 2^33 + row offset within the partition — and one
+   pass counts rows per (partition, group) and takes each run's first id:
+   P×G rows to the driver, which turns each target rank r = p·(n−1) into
+   a row id by prefix-summing counts in partition order;
+4. one JVM-side selection (a filter on that id set) collects exactly the
+   rows at those ranks — ≤ 2·|probs| rows per group ever leave the
+   executors, and no Python worker runs;
 5. the floor/ceil ranked values interpolate Spark/DuckDB-style
    (v = lo + (hi − lo)·(r − ⌊r⌋)) and return as a small DataFrame.
 
 The skinny projection is persisted (MEMORY_AND_DISK) between the two passes
-so both jobs read the identical range partitioning — RangePartitioner
+so both jobs read the identical range partitioning and ids — RangePartitioner
 samples its boundaries at shuffle time, so recomputing the exchange could
 re-draw them; persisting pins them, and at 10^12 rows the persisted
 projection is ~1% of table bytes spread across executor local disks. The
@@ -42,8 +45,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _V = "_v"
-_PID = "_pid"
-_GRANK = "_grank"
+_ID = "_id"
+
+#: bits of ``monotonically_increasing_id()`` that hold the row offset within
+#: a partition; the partition index sits above them
+_OFFSET_BITS = 33
 
 
 def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float]):
@@ -53,6 +59,10 @@ def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float
     per requested probability, ``_qi`` indexing into ``probs``. NULL values
     are ignored (``percentile`` / ``quantile_cont`` semantics); groups whose
     values are all NULL produce no rows.
+
+    Ranks become row ids through ``monotonically_increasing_id()``, which
+    holds the row offset within a partition in its low 33 bits: one range
+    partition may hold at most 2^33 (about 8.6·10^9) rows.
     """
     spark = df.sparkSession
     gcols = list(group_cols)
@@ -63,91 +73,53 @@ def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float
     rp = (
         vals.repartitionByRange(P, *gcols, _V)
         .sortWithinPartitions(*gcols, _V)
-        .withColumn(_PID, F.spark_partition_id())
+        .withColumn(_ID, F.monotonically_increasing_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        counts = rp.groupBy(_PID, *gcols).agg(F.count("*").alias("_n")).collect()
-
-        per_group: dict[tuple, list] = defaultdict(list)
+        # a group's rows in one partition are contiguous in sort order, so
+        # its run there holds ids first .. first + n − 1
+        counts = (
+            rp.groupBy(F.shiftright(F.col(_ID), _OFFSET_BITS), *gcols)
+            .agg(F.count("*").alias("_n"), F.min(_ID).alias("_first"))
+            .collect()
+        )
+        runs: dict[tuple, list] = defaultdict(list)
         for r in counts:
-            per_group[tuple(r[c] for c in gcols)].append((r[_PID], r["_n"]))
+            runs[tuple(r[c] for c in gcols)].append((r["_first"], r["_n"]))
+
+        def row_id(lst, rank):
+            for first, n in lst:
+                if rank < n:
+                    return first + rank
+                rank -= n
 
         # driver-side rank planning (P×G counts, G×|probs| targets — tiny)
-        needed: dict[int, dict] = defaultdict(dict)  # pid -> {(gkey, local): global}
-        targets = []  # (gkey, qi, lo_rank, hi_rank, frac)
-        for gkey, lst in per_group.items():
-            lst.sort()
-            prefix, acc = [], 0
-            for pid, c in lst:
-                prefix.append((pid, acc, c))
-                acc += c
-            n = acc
+        targets = []  # (gkey, qi, lo_id, hi_id, frac)
+        for gkey, lst in runs.items():
+            lst.sort()  # partition order
+            n = sum(c for _, c in lst)
             for qi, p in enumerate(probs):
                 r = p * (n - 1)
-                lo, hi = math.floor(r), math.ceil(r)
-                for grank in {lo, hi}:
-                    for pid, start, c in prefix:
-                        if start <= grank < start + c:
-                            needed[pid][(gkey, grank - start)] = grank
-                            break
-                targets.append((gkey, qi, lo, hi, float(r - lo)))
+                lo = math.floor(r)
+                targets.append(
+                    (gkey, qi, row_id(lst, lo), row_id(lst, math.ceil(r)), float(r - lo))
+                )
 
-        gfields = [df.schema[c] for c in gcols]
-        picked_schema = T.StructType(
-            list(gfields)
-            + [T.StructField(_GRANK, T.LongType()), T.StructField(_V, T.DoubleType())]
-        )
-        needed_b = spark.sparkContext.broadcast(dict(needed))
-
-        def _extract(batches):
-            import pandas as pd
-
-            want = None
-            want_by_g: dict[tuple, dict] = {}
-            seen: dict[tuple, int] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if want is None:
-                    want = needed_b.value.get(int(pdf[_PID].iloc[0]), {})
-                    for (gkey, local), grank in want.items():
-                        want_by_g.setdefault(gkey, {})[local] = grank
-                if not want:
-                    continue
-                out = []
-                # rows arrive (group, value)-sorted; per-group running offset
-                # turns batch positions into partition-local ranks
-                for gvals, sub in pdf.groupby(gcols, sort=False, dropna=False):
-                    raw = gvals if isinstance(gvals, tuple) else (gvals,)
-                    # pandas groupby surfaces NULL keys as NaN/NaT — map back
-                    # to None so keys match the driver's plan and the Arrow
-                    # return column
-                    gkey = tuple(None if pd.isna(x) else x for x in raw)
-                    off = seen.get(gkey, 0)
-                    seen[gkey] = off + len(sub)
-                    ranks = want_by_g.get(gkey)
-                    if not ranks:
-                        continue
-                    for local, grank in ranks.items():
-                        if off <= local < off + len(sub):
-                            out.append((*gkey, grank, float(sub[_V].iloc[local - off])))
-                if out:
-                    yield pd.DataFrame(out, columns=gcols + [_GRANK, _V])
-
-        picked = {
-            (tuple(r[c] for c in gcols), r[_GRANK]): r[_V]
-            for r in rp.mapInPandas(_extract, schema=picked_schema).collect()
-        }
+        picked = {}
+        if targets:
+            # sorted: the same ids give the same plan and generated code
+            ids = sorted({t[k] for t in targets for k in (2, 3)})
+            picked = dict(rp.filter(F.col(_ID).isin(ids)).select(_ID, _V).collect())
     finally:
         rp.unpersist()
 
     out_schema = T.StructType(
-        list(gfields)
+        [df.schema[c] for c in gcols]
         + [T.StructField("_qi", T.IntegerType()), T.StructField("_q", T.DoubleType())]
     )
     rows = []
     for gkey, qi, lo, hi, frac in targets:
-        vlo, vhi = picked[(gkey, lo)], picked[(gkey, hi)]
+        vlo, vhi = picked[lo], picked[hi]
         rows.append((*gkey, qi, vlo + (vhi - vlo) * frac))
     return spark.createDataFrame(rows, out_schema)

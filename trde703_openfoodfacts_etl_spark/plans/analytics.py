@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..schema import parquet_table_schema
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings",
@@ -31,8 +33,13 @@ def load(spark, sf_dir: str, name: str, spread: bool = False):
     measurement: q56 3.3 s → 0.5 s at sf1.0 from this alone). Queries
     whose cost is post-shuffle (windows, joins keyed downstream) skip it —
     the exchange already spreads them, and the extra shuffle would be pure
-    overhead."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    overhead.
+
+    The schema comes from the parquet footer
+    (:func:`~trde703_openfoodfacts_etl_spark.schema.parquet_table_schema`),
+    so building a plan over the table runs no schema-inference job."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_table_schema(path)).parquet(path)
     if spread:
         from .. import spread as _spread
 
