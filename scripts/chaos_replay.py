@@ -86,6 +86,7 @@ def install_chaos(lake_cls, io_obj, plan: dict, kill_exc=ChaosKill):
     orig_compact = lake_cls.compact
     orig_rebucket = lake_cls.rebucket
     orig_remove = io_obj.remove
+    orig_remove_data_file = io_obj.remove_data_file
 
     def commit(self, *a, **kw):
         if should_die("pre_commit"):
@@ -150,12 +151,18 @@ def install_chaos(lake_cls, io_obj, plan: dict, kill_exc=ChaosKill):
             raise kill_exc("mid_vacuum")
         return orig_remove(path)
 
+    def remove_data_file(path, root):
+        if should_die("mid_vacuum"):
+            raise kill_exc("mid_vacuum")
+        return orig_remove_data_file(path, root)
+
     lake_cls.commit = commit
     lake_cls._write_snapshot = write_snapshot
     lake_cls.write_bucket_files = write_bucket_files
     lake_cls.compact = compact
     lake_cls.rebucket = rebucket
     io_obj.remove = remove
+    io_obj.remove_data_file = remove_data_file
 
     def uninstall():
         lake_cls.commit = orig_commit
@@ -164,6 +171,7 @@ def install_chaos(lake_cls, io_obj, plan: dict, kill_exc=ChaosKill):
         lake_cls.compact = orig_compact
         lake_cls.rebucket = orig_rebucket
         io_obj.remove = orig_remove
+        io_obj.remove_data_file = orig_remove_data_file
 
     return uninstall
 

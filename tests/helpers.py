@@ -136,3 +136,42 @@ def assert_matches_oracle(name: str, got: pd.DataFrame, want: pd.DataFrame):
     for col in g.columns:
         for i, (x, y) in enumerate(zip(g[col], w[col])):
             assert _values_equal(x, y), f"{name}.{col}[{i}]: {x!r} != {y!r}"
+
+
+def plans_run_under(spark, description, action):
+    """Physical plans of the SQL executions ``action`` runs, tagged with a
+    job description and read back from the SQL status store."""
+    sc = spark.sparkContext
+    sc.setJobDescription(description)
+    try:
+        action()
+    finally:
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(store.executionsList())
+    return [e.physicalPlanDescription() for e in execs if e.description() == description]
+
+
+def python_rdd_scans(df) -> list[str]:
+    """The RDD scans (``LogicalRDD``) in ``df``'s analyzed plan whose RDD
+    lineage holds a ``PythonRDD``, i.e. rows that Python workers produce
+    (``createDataFrame`` from a Python list, for one). Walks the plan and
+    the lineage only: runs no job."""
+    as_java = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    found = []
+    plans = [df._jdf.queryExecution().analyzed()]
+    while plans:
+        node = plans.pop()
+        plans.extend(as_java(node.children()))
+        plans.extend(as_java(node.subqueries()))
+        if node.nodeName() != "LogicalRDD":
+            continue
+        rdds = [node.rdd()]
+        while rdds:
+            rdd = rdds.pop()
+            if rdd.getClass().getName() == "org.apache.spark.api.python.PythonRDD":
+                found.append(node.toString())
+                break
+            rdds.extend(d.rdd() for d in as_java(rdd.dependencies()))
+    return found

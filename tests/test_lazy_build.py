@@ -1,7 +1,13 @@
 """Building a query's DataFrame (``fn(spark, sf_dir)``) runs no Spark job:
 the work belongs to the action, where every timer sees it. Entries that
 still run jobs while they build are listed in ``EAGER`` with the action
-behind them, and are not built here."""
+behind them, and are not built here.
+
+No built plan scans rows that Python workers produce: a driver-local frame
+comes from an Arrow table (a ``LocalRelation``), never from a Python list
+(an RDD scan over a ``PythonRDD``, which starts Python workers to produce a
+handful of rows). The two driver-local frames the engine builds, the empty
+lake read and the quantile result, are checked directly."""
 
 from __future__ import annotations
 
@@ -11,6 +17,11 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from helpers import plans_run_under, python_rdd_scans  # noqa: E402
+from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA  # noqa: E402
+from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments  # noqa: E402
+from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable  # noqa: E402
+from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental  # noqa: E402
 
 _REPLAY = "CDC replay: the lake commits each batch while the plan is built"
 _TQ = "reads q47's memoized CDC replay (transcript_state), which replays on first use"
@@ -62,11 +73,37 @@ def test_every_allowlisted_entry_exists():
 
 
 def test_registry_entries_build_without_spark_jobs(spark, sf_dir):
-    eager = {}
+    eager, python_rows = {}, {}
     for name, fn in entrymod.queries().items():
         if name in EAGER:
             continue
-        n = build_jobs(spark, name, lambda: fn(spark, sf_dir))
+        built = []
+        n = build_jobs(spark, name, lambda: built.append(fn(spark, sf_dir)))
         if n:
             eager[name] = n
+        scans = python_rdd_scans(built[0])
+        if scans:
+            python_rows[name] = scans
     assert eager == {}, f"entries that ran Spark jobs while building: {eager}"
+    assert python_rows == {}, f"entries that scan Python-produced rows: {python_rows}"
+
+
+def test_empty_lake_read_is_a_local_relation(spark, tmp_path):
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    for df in (lake.read(), lake.read(include_deleted=True, with_meta=True)):
+        assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+        assert python_rdd_scans(df) == []
+
+
+def test_first_cow_batch_into_empty_lake_scans_no_python_rows(spark, tmp_path):
+    """A COW batch into an empty lake reads the empty state twice (change
+    detection and the payload write); neither job scans an RDD."""
+    wal = str(tmp_path / "wal")
+    generate_segments(wal, n_convs=20, n_events=300, n_segments=1, seed=2)
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    plans = plans_run_under(
+        spark, "first COW batch", lambda: run_incremental(lake, wal, mode="cow")
+    )
+    assert len(plans) >= 2  # change detection and the payload write
+    for plan in plans:
+        assert "ExistingRDD" not in plan, plan

@@ -78,3 +78,22 @@ def test_quality_gate_drops_null_keys(spark, tmp_path):
     ]), 0)
     assert m["gated_out"] == 2
     assert lake_state_pdf(lake)["text"].tolist() == ["keep"]
+
+
+def test_cow_batch_over_empty_lake_first_batch_matches_oracle(spark, tmp_path):
+    """The first COW batch merges against the empty lake read (an empty
+    local relation); the second merges against the files the first wrote.
+    Both states equal the DuckDB LWW replay of the segments applied."""
+    from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments
+    from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental
+
+    from helpers import assert_states_equal, duckdb_replay_oracle
+
+    wal = str(tmp_path / "wal")
+    segs = generate_segments(wal, n_convs=30, n_events=1_500, n_segments=2, seed=9)
+    lake = _lake(spark, tmp_path, "empty_first")
+    run_incremental(lake, wal, mode="cow", max_batches=1)
+    assert_states_equal(lake_state_pdf(lake), duckdb_replay_oracle(segs[0]))
+    run_incremental(lake, wal, mode="cow")
+    assert lake.snapshot()["streams"]["default"] == 1
+    assert_states_equal(lake_state_pdf(lake), duckdb_replay_oracle(f"{wal}/*.parquet"))

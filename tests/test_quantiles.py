@@ -3,12 +3,17 @@
 
 from __future__ import annotations
 
+import datetime as dt
+import os
 import random
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from trde703_openfoodfacts_etl_spark.operators.quantiles import exact_quantiles
+
+from helpers import plans_run_under, python_rdd_scans
 
 PROBS = [0.0, 0.25, 0.5, 0.75, 0.95, 1.0]
 
@@ -124,19 +129,77 @@ def test_one_group_over_every_partition(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def _plans_run_under(spark, description, action):
-    """Physical plans of the SQL executions ``action`` runs, tagged with a
-    job description and read back from the SQL status store."""
-    sc = spark.sparkContext
-    sc.setJobDescription(description)
+def _typed_rows(key):
+    """Values in three keyed groups and one NULL-keyed group."""
+    rng = random.Random(5)
+    keys = [key(0), key(1), key(40), None]
+    return [(keys[i % 4], float(rng.randrange(100))) for i in range(400)]
+
+
+def test_date_group_keys(spark):
+    rows = _typed_rows(lambda d: dt.date(2024, 1, 1) + dt.timedelta(days=d))
+    _compare(spark.createDataFrame(rows, "g date, v double"), ["g"], "v")
+
+
+@pytest.fixture
+def driver_tz_new_york():
+    """The driver's local time zone set to a non-UTC zone: ``collect()``
+    returns timestamps as naive datetimes in this zone."""
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if prev is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = prev
+    time.tzset()
+
+
+def test_timestamp_group_keys_in_non_utc_driver_zone(spark, driver_tz_new_york):
+    """The result's timestamp keys carry Spark's instants, not the naive
+    local datetimes ``collect()`` gave back read as UTC (5 h early here)."""
+    rows = _typed_rows(lambda h: dt.datetime(2024, 3, 9, 12) + dt.timedelta(hours=h))
+    df = spark.createDataFrame(rows, "g timestamp, v double")
+    _compare(df, ["g"], "v")
+    got = exact_quantiles(df, ["g"], "v", [0.5]).select(F.unix_micros("g")).collect()
+    want = df.select(F.unix_micros("g")).distinct().collect()
+    assert sorted(got, key=str) == sorted(want, key=str)
+
+
+def test_typed_empty_input(spark):
+    df = spark.createDataFrame([], "g timestamp, d date, v double")
+    out = exact_quantiles(df, ["g", "d"], "v", PROBS)
+    assert out.schema.fieldNames() == ["g", "d", "_qi", "_q"]
+    assert out.collect() == []
+
+
+def test_arrow_conversion_disabled(spark):
+    """A ``pyarrow.Table`` goes through Arrow whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says: the result is a
+    local relation either way."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
     try:
-        action()
+        rows = _typed_rows(lambda d: dt.date(2024, 1, 1) + dt.timedelta(days=d))
+        df = spark.createDataFrame(rows, "g date, v double")
+        _compare(df, ["g"], "v")
+        out = exact_quantiles(df, ["g"], "v", PROBS)
+        assert out._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
     finally:
-        sc.setJobDescription(None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    execs = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(store.executionsList())
-    return [e.physicalPlanDescription() for e in execs if e.description() == description]
+        spark.conf.set(key, prev)
+
+
+def test_result_is_a_local_relation(spark):
+    """The result is built from an Arrow table: no action on it starts a
+    Python worker, where a frame made from a Python list is an RDD scan
+    over a ``PythonRDD``."""
+    df = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", 3.0)], "g string, v double")
+    out = exact_quantiles(df, ["g"], "v", PROBS)
+    assert out._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    assert python_rdd_scans(out) == []
+    assert python_rdd_scans(df)  # the check sees a Python-list frame
 
 
 def test_plan_has_no_value_buffer_aggregate(spark):
@@ -149,7 +212,7 @@ def test_plan_has_no_value_buffer_aggregate(spark):
     df = spark.createDataFrame(
         [(g, float(i)) for g in "ab" for i in range(200)], "g string, v double"
     )
-    plans = _plans_run_under(
+    plans = plans_run_under(
         spark, "exact_quantiles plan check",
         lambda: exact_quantiles(df, ["g"], "v", PROBS).collect(),
     )

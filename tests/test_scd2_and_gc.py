@@ -135,21 +135,30 @@ def test_auto_vacuum_bounds_files_keeps_travel_window(spark, tmp_path):
     run_incremental(lake, wal, segments_per_batch=1,
                     auto_vacuum_every=2, vacuum_keep_snapshots=3)
 
-    manifests = glob.glob(os.path.join(str(tmp_path / "lake"), "manifests", "snapshot-*.json"))
+    root = str(tmp_path / "lake")
+    manifests = glob.glob(os.path.join(root, "manifests", "snapshot-*.json"))
     assert 1 <= len(manifests) <= 4  # keep window (+ at most one post-vacuum commit)
-    # every remaining data file is referenced by a kept snapshot (no orphans)
-    data_files = glob.glob(os.path.join(str(tmp_path / "lake"), "data", "**", "*.parquet"),
-                           recursive=True)
     live = set()
-    n_buckets = 0
     kept_ids = []
     for m in manifests:
         s = json.load(open(m))
-        n_buckets = len(s["buckets"])
         kept_ids.append(s["snapshot_id"])
         for b in s["buckets"].values():
             live.update(fe["path"] for fe in b["files"])
-    assert len(data_files) <= len(live) + n_buckets
+    # nothing else under data/: every file is a data file a kept snapshot
+    # names or its checksum sidecar (no orphaned sidecars, no _SUCCESS
+    # markers), and every directory holds one of those files
+    allowed = live | {
+        os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc") for p in live
+    }
+    files, dirs = set(), set()
+    for dirpath, dirnames, filenames in os.walk(os.path.join(root, "data")):
+        dirs.update(os.path.relpath(os.path.join(dirpath, d), root) for d in dirnames)
+        files.update(os.path.relpath(os.path.join(dirpath, f), root) for f in filenames)
+    assert files <= allowed, sorted(files - allowed)[:5]
+    live_dirs = {os.path.dirname(p) for p in live}
+    live_dirs |= {os.path.dirname(d) for d in live_dirs}
+    assert dirs <= live_dirs, sorted(dirs - live_dirs)[:5]
     # state equals the oracle after vacuuming mid-ingest
     assert_states_equal(lake_state_pdf(lake), duckdb_replay_oracle(f"{wal}/*.parquet"))
     # time travel to the oldest kept snapshot still resolves

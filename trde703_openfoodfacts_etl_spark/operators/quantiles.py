@@ -22,9 +22,12 @@ exact ``quantile_cont`` semantics, no per-group value buffer anywhere:
    a row id by prefix-summing counts in partition order;
 4. one JVM-side selection (a filter on that id set) collects exactly the
    rows at those ranks — ≤ 2·|probs| rows per group ever leave the
-   executors, and no Python worker runs;
+   executors;
 5. the floor/ceil ranked values interpolate Spark/DuckDB-style
-   (v = lo + (hi − lo)·(r − ⌊r⌋)) and return as a small DataFrame.
+   (v = lo + (hi − lo)·(r − ⌊r⌋)) and return as a small DataFrame built
+   from an Arrow table: a local relation, where a Python list would be a
+   Python RDD scan. No step, and no action on the result, starts a Python
+   worker.
 
 The skinny projection is persisted (MEMORY_AND_DISK) between the two passes
 so both jobs read the identical range partitioning and ids — RangePartitioner
@@ -40,9 +43,11 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 _V = "_v"
 _ID = "_id"
@@ -118,8 +123,25 @@ def exact_quantiles(df, group_cols: list[str], value_col: str, probs: list[float
         [df.schema[c] for c in gcols]
         + [T.StructField("_qi", T.IntegerType()), T.StructField("_q", T.DoubleType())]
     )
-    rows = []
-    for gkey, qi, lo, hi, frac in targets:
-        vlo, vhi = picked[lo], picked[hi]
-        rows.append((*gkey, qi, vlo + (vhi - vlo) * frac))
-    return spark.createDataFrame(rows, out_schema)
+    rows = [
+        (*gkey, qi, picked[lo] + (picked[hi] - picked[lo]) * frac)
+        for gkey, qi, lo, hi, frac in targets
+    ]
+    table = pa.Table.from_arrays(
+        [
+            _arrow_column([r[i] for r in rows], f.dataType)
+            for i, f in enumerate(out_schema.fields)
+        ],
+        names=out_schema.fieldNames(),
+    )
+    return spark.createDataFrame(table, out_schema)
+
+
+def _arrow_column(values, dt):
+    """Arrow array of ``collect()``-ed values of Spark type ``dt``.
+    ``collect()`` returns a ``TimestampType`` value as a naive datetime in
+    the driver's local time zone, which pyarrow would read as UTC; convert
+    it to Spark's internal microseconds since the epoch as Spark does."""
+    if isinstance(dt, T.TimestampType):
+        values = [dt.toInternal(v) for v in values]
+    return pa.array(values, type=to_arrow_type(dt))

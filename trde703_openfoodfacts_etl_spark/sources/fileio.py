@@ -18,6 +18,7 @@ the engine:
 | ``parquet_stats``      | ``pq.read_metadata`` + ``os.path.getsize``: rows, bytes, ``_row_hash`` null count (= tombstones), max ``_lsn`` | same footer read via pyarrow's fsspec (a ranged GET of the footer) |
 | ``walk_files``         | ``os.walk``             | paginated ListObjectsV2              |
 | ``remove``             | ``os.remove``           | DELETE object                        |
+| ``remove_data_file``   | ``os.remove`` of the file and its ``.crc`` sidecar, ``os.rmdir`` of the directories left empty | DELETE object |
 | ``makedirs``           | ``os.makedirs``         | no-op (object stores have no dirs)   |
 
 Single-writer-per-stream is NOT assumed: correctness of concurrent commits
@@ -27,6 +28,7 @@ every listed backend provides.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
@@ -67,8 +69,6 @@ class LocalManifestIO:
         finally:
             # missing_ok: an orphan-sweeper (vacuum) may have raced us on a
             # long-stalled temp; its absence must not shadow the link result
-            import contextlib
-
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
 
@@ -117,6 +117,23 @@ class LocalManifestIO:
 
     def remove(self, path: str) -> None:
         os.remove(path)
+
+    def remove_data_file(self, path: str, root: str) -> None:
+        """Remove a data file that Spark wrote under ``root``, the checksum
+        sidecar that Hadoop's local filesystem writes next to it
+        (``.<name>.crc``), and each directory up to ``root`` that the
+        removal leaves empty. An object store has neither sidecars nor
+        directories: there this is one DELETE."""
+        os.remove(path)
+        d, name = os.path.split(path)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(d, f".{name}.crc"))
+        while d != root:
+            try:
+                os.rmdir(d)  # fails unless empty
+            except OSError:
+                return
+            d = os.path.dirname(d)
 
     def mtime(self, path: str) -> float:
         """Last-modified unix time (object store: LastModified metadata).

@@ -37,6 +37,7 @@ import uuid
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schema import (
     KEY_COLS,
@@ -267,7 +268,11 @@ class LakeTable:
 
         ``snap`` overrides the committed snapshot — the merge passes its
         in-flight (schema-evolved, not yet committed) snapshot so current
-        rows conform to the batch's unified schema."""
+        rows conform to the batch's unified schema.
+
+        A read that lists no files (a fresh table, or only buckets without
+        files) returns an empty local relation, not a scan: no job and no
+        Python worker runs for it."""
         snap = snap or self.snapshot(snapshot_id)
         unified = self.user_schema(snap)
         phys_unified = _physical_schema(unified)
@@ -353,7 +358,12 @@ class LakeTable:
                 ddf = lww_reduce(_assemble(merged), KEY_COLS, nonkey)
             df = ddf if df is None else df.unionByName(ddf)
         if df is None:
-            df = self.spark.createDataFrame([], phys_unified)
+            # no files: an empty Arrow table becomes an empty LocalRelation,
+            # which the optimizer prunes from a union; an empty Python list
+            # would be a Python RDD scan that starts Python workers
+            df = self.spark.createDataFrame(
+                to_arrow_schema(phys_unified).empty_table(), phys_unified
+            )
         if not include_deleted:
             df = df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False)))
         if not with_meta:
@@ -396,6 +406,9 @@ class LakeTable:
             writer.sortWithinPartitions(META_BUCKET, *KEY_COLS)
             .write.mode("overwrite")
             .partitionBy(META_BUCKET)
+            # no _SUCCESS marker: the manifest CAS is the lake's commit
+            # record, and vacuum removes only the files manifests name
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
             .parquet(out)
         )
         entries: dict[int, list[dict]] = {}
@@ -420,9 +433,9 @@ class LakeTable:
                     }
                 )
         if not entries:
-            # empty write (e.g. a fully-gated MOR batch): the epoch dir holds
-            # only a _SUCCESS marker and would otherwise sit orphaned forever
-            # (vacuum removes parquet files, not bare dirs)
+            # empty write (e.g. a fully-gated MOR batch): no manifest will
+            # name the epoch dir, and vacuum, which walks files, would never
+            # see it if it is left empty
             self.io.remove_tree(out)
         return entries
 
@@ -701,6 +714,8 @@ class LakeTable:
     def vacuum(self, keep_snapshots: int = 2) -> list[str]:
         """Delete data files referenced only by snapshots older than the
         newest `keep_snapshots` (and those manifests). Returns removed paths.
+        Each file goes with its checksum sidecar and with the directories
+        its removal leaves empty.
 
         Also sweeps commit-temp litter: a writer that died between its CAS
         temp write and the link leaves ``snapshot-*.json.tmp.*`` behind
@@ -731,10 +746,11 @@ class LakeTable:
             for binfo in s["buckets"].values():
                 live.update(fe["path"] for fe in binfo["files"])
         removed = []
-        for full in self.io.walk_files(os.path.join(self.root, DATA_DIR)):
+        data_root = os.path.join(self.root, DATA_DIR)
+        for full in self.io.walk_files(data_root):
             rel = os.path.relpath(full, self.root)
             if full.endswith(".parquet") and rel not in live:
-                self.io.remove(full)
+                self.io.remove_data_file(full, data_root)
                 removed.append(rel)
         for sid in ids:
             if sid not in keep:
