@@ -7,7 +7,11 @@ No built plan scans rows that Python workers produce: a driver-local frame
 comes from an Arrow table (a ``LocalRelation``), never from a Python list
 (an RDD scan over a ``PythonRDD``, which starts Python workers to produce a
 handful of rows). The two driver-local frames the engine builds, the empty
-lake read and the quantile result, are checked directly."""
+lake read and the quantile result, are checked directly.
+
+A lake read or a WAL batch read plans from the file list the driver already
+holds (the manifest, ``list_segments``): Spark lists those files on the
+driver, never in a job with one task per file, however many they are."""
 
 from __future__ import annotations
 
@@ -21,7 +25,15 @@ from helpers import plans_run_under, python_rdd_scans  # noqa: E402
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA  # noqa: E402
 from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments  # noqa: E402
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable  # noqa: E402
-from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental  # noqa: E402
+from trde703_openfoodfacts_etl_spark.streaming.pipeline import (  # noqa: E402
+    list_segments,
+    read_batch,
+    run_incremental,
+)
+
+#: Spark's default ``spark.sql.sources.parallelPartitionDiscovery.threshold``:
+#: above it, an unset threshold lists the named files in a Spark job
+SPARK_DEFAULT_LISTING_THRESHOLD = 32
 
 _REPLAY = "CDC replay: the lake commits each batch while the plan is built"
 _TQ = "reads q47's memoized CDC replay (transcript_state), which replays on first use"
@@ -107,3 +119,32 @@ def test_first_cow_batch_into_empty_lake_scans_no_python_rows(spark, tmp_path):
     assert len(plans) >= 2  # change detection and the payload write
     for plan in plans:
         assert "ExistingRDD" not in plan, plan
+
+
+def _data_files(lake) -> int:
+    return sum(len(b["files"]) for b in lake.snapshot()["buckets"].values())
+
+
+def test_lake_read_lists_its_files_without_a_spark_job(spark, tmp_path):
+    """A MOR lake whose read names more files than Spark's default listing
+    threshold, before and after compaction: 40 buckets, 2 delta batches."""
+    wal = str(tmp_path / "wal")
+    generate_segments(wal, n_convs=400, n_events=2_000, n_segments=2, seed=4)
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=40)
+    run_incremental(lake, wal, mode="mor")
+    assert _data_files(lake) > SPARK_DEFAULT_LISTING_THRESHOLD
+    assert build_jobs(spark, "mor-read", lake.read) == 0
+    assert build_jobs(spark, "mor-read-meta", lambda: lake.read(
+        include_deleted=True, with_meta=True)) == 0
+    lake.compact()
+    assert not any(b.get("delta") for b in lake.snapshot()["buckets"].values())
+    assert _data_files(lake) > SPARK_DEFAULT_LISTING_THRESHOLD
+    assert build_jobs(spark, "compacted-read", lake.read) == 0
+
+
+def test_batch_read_lists_its_segments_without_a_spark_job(spark, tmp_path):
+    wal = str(tmp_path / "wal")
+    generate_segments(wal, n_convs=40, n_events=1_200, n_segments=40, seed=5)
+    paths = list_segments(wal)
+    assert len(paths) > SPARK_DEFAULT_LISTING_THRESHOLD
+    assert build_jobs(spark, "wal-batch-read", lambda: read_batch(spark, paths)) == 0

@@ -184,6 +184,31 @@ def test_changes_and_time_travel_past_vacuum_fail_loudly(spark, tmp_path):
     assert lake.changes(from_snapshot=lake.latest_id() - 1).count() >= 0
 
 
+def test_vacuum_keeping_no_snapshot_raises(spark, tmp_path):
+    """keep_snapshots=0 would keep every snapshot (``ids[-0:]`` is the whole
+    list) and delete nothing, silently: it raises and names what to pass,
+    from vacuum itself and from the incremental driver's upkeep."""
+    import os
+
+    from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments
+    from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental
+
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    for i in range(3):
+        apply_batch(lake, make_events(spark, [("U", 10 + i, "c1", 0, "user", f"v{i}", None, i)]), i)
+    manifests = sorted(os.listdir(tmp_path / "lake" / "manifests"))
+    for keep in (0, -1):
+        with pytest.raises(ValueError, match="keep_snapshots=1"):
+            lake.vacuum(keep_snapshots=keep)
+    assert sorted(os.listdir(tmp_path / "lake" / "manifests")) == manifests
+
+    wal = str(tmp_path / "wal")
+    generate_segments(wal, n_convs=10, n_events=200, n_segments=1, seed=6)
+    driven = LakeTable.create(spark, str(tmp_path / "driven"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    with pytest.raises(ValueError, match="keep_snapshots=1"):
+        run_incremental(driven, wal, auto_vacuum_every=1, vacuum_keep_snapshots=0)
+
+
 _CHILD_WRITER_SRC = """
 import sys
 from pyspark.sql import SparkSession, functions as F

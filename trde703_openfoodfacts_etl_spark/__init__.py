@@ -65,6 +65,28 @@ def spread(df):
 #: then 2, then 2 classes, and metaspace held at 186–190 MB.
 CODEGEN_CACHE_MAX_ENTRIES = 2000
 
+#: named paths above which Spark lists files in a distributed job
+#: (``spark.sql.sources.parallelPartitionDiscovery.threshold``, default 32).
+#: Every multi-path read in the engine names files the driver has already
+#: enumerated (``LakeTable.read`` from the manifest, ``read_batch`` from
+#: ``list_segments``), and that job runs while the plan is built, one task
+#: per file (up to 10,000 tasks). Plan build of
+#: ``spark.read.parquet(*paths)`` over a local filesystem on 4 cores, CPU s
+#: (driver and JVM) / wall s:
+#:
+#: ======  =======================  =========================
+#: paths   distributed              driver-side
+#: ======  =======================  =========================
+#: 64      2.2–2.5 / 0.60–0.69      0.24–0.26 / 0.08
+#: 512     7.8–8.9 / 2.2–2.5        0.28–0.60 / 0.13–0.18
+#: 4096    51–57 / 14.6–16.2        0.89–1.05 / 0.74–0.83
+#: 16384   134 / 56                 3.2 / 2.9
+#: ======  =======================  =========================
+#:
+#: Driver-side listing is cheaper at every size, up to four times
+#: ``REBUCKET_MAX_BUCKETS`` files, so no path count turns the job on.
+PARALLEL_LISTING_THRESHOLD = 2**31 - 1
+
 
 def build_session(
     app_name: str = "transcript-cdc-engine",
@@ -86,6 +108,14 @@ def build_session(
     query library stay compiled from one run of a query to the next instead
     of being evicted and recompiled, and ``spark.driver.memory`` defaults to
     a quarter of physical memory (``SPARK_DRIVER_MEM`` overrides it).
+
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` is
+    :data:`PARALLEL_LISTING_THRESHOLD`, so a read of files the driver named
+    is listed on the driver while the plan is built, never in a Spark job.
+    Python call-site capture (``spark.python.sql.dataFrameDebugging.enabled``)
+    keeps PySpark's default, on. PySpark reads that flag once per Python
+    process, so setting it through ``extra_conf`` takes effect only in the
+    process's first session.
     """
     from pyspark.sql import SparkSession
 
@@ -121,6 +151,10 @@ def build_session(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(PARALLEL_LISTING_THRESHOLD),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{phys_mb // 4}m"))

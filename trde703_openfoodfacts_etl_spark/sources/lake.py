@@ -722,7 +722,16 @@ class LakeTable:
         (chaos-campaign finding — the old id parse choked on it). Temps
         older than :data:`COMMIT_TEMP_ORPHAN_SEC` are removed; younger ones
         are left for the in-flight writer. The temp-name convention is the
-        IO backend's private business, so the sweep asks the seam."""
+        IO backend's private business, so the sweep asks the seam.
+
+        ``keep_snapshots`` below 1 raises ``ValueError``: the newest
+        snapshot is the table, so at least one is always kept."""
+        if keep_snapshots < 1:
+            raise ValueError(
+                f"vacuum(keep_snapshots={keep_snapshots}): the newest snapshot is "
+                "the table and is always kept; pass keep_snapshots=1 to keep only "
+                "it, or more to keep older snapshots readable for time travel"
+            )
         mdir = os.path.join(self.root, MANIFEST_DIR)
         names = self.io.list_names(mdir)
         now = time.time()
