@@ -9,6 +9,8 @@ these; they live here, outside the package.
   NULL dot sets no sign bit.
 - :func:`mingram_fingerprint_expr` — the pure-expression form of
   ``functions.text.mingram_fingerprint_vec``.
+- :func:`minhash_signatures_expr` — the hash-aggregate form of
+  ``operators.dedup.minhash_signatures``' numpy segment-min.
 - :func:`reference_normalize` — a scalar ``ENGINE_NORM_SPEC``
   (``functions/normalize.py``).
 - :func:`interval_join` — the pair-enumerating bucketed interval join the
@@ -23,6 +25,7 @@ import unicodedata
 from pyspark.sql import functions as F
 
 from trde703_openfoodfacts_etl_spark.functions.normalize import _MARKS_RE
+from trde703_openfoodfacts_etl_spark.operators.dedup import word_shingles
 
 
 def _dot(a, b):
@@ -109,6 +112,26 @@ def mingram_fingerprint_expr(col, n: int = 3):
 
     toks = F.split(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "), " ")
     return F.element_at(F.transform(F.array(toks), fp_of), 1)
+
+
+def minhash_signatures_expr(df, num_hashes: int = 64, shingle_n: int = 3):
+    """MinHash signature per ``doc_id`` as one hash aggregate: column
+    ``mh_i`` is ``min(pmod(a_i * h + b_i, P))`` over the document's shingle
+    hashes ``h = pmod(xxhash64(shingle), P)``, with the parameter walk that
+    ``minhash_signatures`` seeds."""
+    P = 2147483647
+    a, b, params = 0x9E3779B9, 0x7F4A7C15, []
+    for _ in range(num_hashes):
+        a = (a * 1103515245 + 12345) % P
+        b = (b * 1103515245 + 12345) % P
+        params.append((a or 1, b))
+    h = df.select(
+        "doc_id", F.explode(word_shingles(F.col("text"), shingle_n)).alias("_g")
+    ).select("doc_id", F.pmod(F.xxhash64("_g"), F.lit(P)).alias("_h"))
+    return h.groupBy("doc_id").agg(*[
+        F.min(F.pmod(F.col("_h") * F.lit(ai) + F.lit(bi), F.lit(P))).alias(f"mh_{i}")
+        for i, (ai, bi) in enumerate(params)
+    ])
 
 
 def reference_normalize(value: str | None, lowercase: bool = False) -> str | None:

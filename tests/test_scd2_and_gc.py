@@ -209,6 +209,27 @@ def test_vacuum_keeping_no_snapshot_raises(spark, tmp_path):
         run_incremental(driven, wal, auto_vacuum_every=1, vacuum_keep_snapshots=0)
 
 
+@pytest.mark.parametrize("driver", ["incremental", "stream"])
+def test_driver_rejects_keeping_no_snapshot_before_first_batch(spark, tmp_path, driver):
+    """Both drivers check ``vacuum_keep_snapshots`` before the first batch,
+    not at the first auto-vacuum: the lake's head does not move."""
+    from trde703_openfoodfacts_etl_spark.schema import CDC_SCHEMA
+    from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments
+    from trde703_openfoodfacts_etl_spark.streaming.pipeline import run_incremental, run_stream
+
+    wal = str(tmp_path / "wal")
+    generate_segments(wal, n_convs=10, n_events=200, n_segments=2, seed=6)
+    lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=4)
+    head = lake.latest_id()
+    upkeep = dict(auto_vacuum_every=1, vacuum_keep_snapshots=0)
+    with pytest.raises(ValueError, match="keep_snapshots=1"):
+        if driver == "incremental":
+            run_incremental(lake, wal, **upkeep)
+        else:
+            run_stream(lake, wal, CDC_SCHEMA, str(tmp_path / "ckpt"), **upkeep)
+    assert lake.latest_id() == head
+
+
 _CHILD_WRITER_SRC = """
 import sys
 from pyspark.sql import SparkSession, functions as F

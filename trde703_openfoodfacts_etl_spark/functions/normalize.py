@@ -14,6 +14,11 @@ Spec (ENGINE_NORM_SPEC — the pytest oracle implements this independently):
 3. Collapse runs of whitespace to a single space; strip ends.
 Null in → null out. ``normalize_key`` additionally lowercases first
 (the reference applies ``lower()`` before its UDF, etl/silver_to_gold.py:94).
+
+Both UDFs call :func:`~trde703_openfoodfacts_etl_spark.forget_zip_importers`
+first, as every Python function the package hands to Spark does: without
+it, each task of a reused worker re-read ``pyspark.zip`` and the
+``spark-core`` jar before its first row.
 """
 
 from __future__ import annotations
@@ -21,6 +26,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import forget_zip_importers
 
 #: combining-mark blocks removed after NFD decomposition
 _COMBINING = "̀-ͯ᪰-᫿᷀-᷿⃐-⃿︠-︯"
@@ -39,11 +46,13 @@ def _normalize_series(s: pd.Series, lowercase: bool) -> pd.Series:
 
 @F.pandas_udf(T.StringType())
 def normalize_text(s: pd.Series) -> pd.Series:
+    forget_zip_importers()
     return _normalize_series(s, lowercase=False)
 
 
 @F.pandas_udf(T.StringType())
 def normalize_key(s: pd.Series) -> pd.Series:
+    forget_zip_importers()
     return _normalize_series(s, lowercase=True)
 
 

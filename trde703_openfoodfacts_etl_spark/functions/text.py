@@ -4,6 +4,8 @@ Everything here is either a JVM-side column expression (whole-stage codegen,
 oracle-checkable 1:1 in ANSI SQL) or an Arrow-batched pandas UDF (numpy
 kernels, no per-row Python). Quality scoring generalizes the reference's
 completeness/anomaly expressions (etl/utils/quality.py:20-88) to documents.
+Each pandas UDF calls
+:func:`~trde703_openfoodfacts_etl_spark.forget_zip_importers` first.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import forget_zip_importers
 
 # ---------------------------------------------------------------------------
 # JVM-side expressions (preferred path: codegen, pushdown, SQL-oracle parity)
@@ -120,6 +124,7 @@ def mingram_fingerprint_vec(col):
 
     @F.pandas_udf("string")
     def _fp(texts: pd.Series) -> pd.Series:
+        forget_zip_importers()
         import hashlib
 
         md5 = hashlib.md5
@@ -161,6 +166,7 @@ def lang_id(texts: pd.Series) -> pd.Series:
     """Heuristic language ID: CJK codepoint share → zh; else the language
     whose stopword profile hits the most tokens; 'und' when nothing hits.
     Vectorized: one pass of pandas str kernels per profile."""
+    forget_zip_importers()
     s = texts.fillna("")
     cjk = s.str.count(r"[一-鿿]")
     total = s.str.len().replace(0, 1)
@@ -186,6 +192,7 @@ def simhash64(texts: pd.Series) -> pd.Series:
     total token occurrences), the per-token ±1 bit rows live in one int8
     matrix, and each document's 64 bit-votes are a numpy gather + sum —
     ~15× the naive per-occurrence-md5 kernel, same signatures bit-for-bit."""
+    forget_zip_importers()
     import hashlib
 
     def token_row(tok: str) -> np.ndarray:

@@ -15,7 +15,9 @@ inline by q18.
 - MinHash + LSH: k hash functions over shingles (universal hashing of
   xxhash64 shingle hashes), banded into b bands; docs sharing a band
   bucket are candidates. q24 composes :func:`minhash_signatures` and
-  :func:`minhash_lsh_candidates` and verifies with exact Jaccard.
+  :func:`minhash_lsh_candidates` and verifies with exact Jaccard. The
+  per-hash minima run in one ``mapInPandas`` function, which calls
+  :func:`~trde703_openfoodfacts_etl_spark.forget_zip_importers` first.
 - SimHash: 64-bit signature (vectorized pandas UDF, functions/text.py),
   near-dups = equal 16-bit chunk (Hamming ≤ 3 in expectation) → band join.
 - connected components: near-dup pairs → dedup clusters (q59).
@@ -28,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import forget_zip_importers
 from .. import spread as _spread
 from ..functions.text import simhash64
 
@@ -260,6 +263,7 @@ def minhash_signatures(df, num_hashes: int = 64, shingle_n: int = 3):
     out_schema = ", ".join(["_id long"] + [f"mh_{i} long" for i in range(num_hashes)])
 
     def _seg_min(batches):
+        forget_zip_importers()
         import pandas as pd
 
         acc: dict[int, np.ndarray] = {}

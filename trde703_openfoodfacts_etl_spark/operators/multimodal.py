@@ -9,7 +9,9 @@ Design for 100 TB: media bytes live in their own column so Parquet column
 pruning skips them unless the query touches them; decode/feature steps are
 ``mapInPandas`` (streaming Arrow batches, bounded memory via
 spark.sql.execution.arrow.maxRecordsPerBatch) — never collect, never
-per-row Python.
+per-row Python. The ``mapInPandas`` function calls
+:func:`~trde703_openfoodfacts_etl_spark.forget_zip_importers` first, as
+every Python function the package hands to Spark does.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import forget_zip_importers
 from .. import spread as _spread
 
 
@@ -85,6 +88,7 @@ def decode_features(df):
     )
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        forget_zip_importers()
         for pdf in batches:
             feats = []
             byte_sums = []

@@ -17,7 +17,9 @@ Every dot product and cosine runs in numpy over Arrow batches (pandas
 UDFs): :func:`_matrix` turns a list column into a float64 matrix, and
 :func:`_seqdot` sums the products left to right, the rounding sequence of
 the oracle's SQL fold, so the doubles are bit-identical. One rule covers
-NULL and zero-norm vectors; :func:`_matrix` states it.
+NULL and zero-norm vectors; :func:`_matrix` states it. Each pandas UDF and
+the ``applyInPandas`` kernel calls
+:func:`~trde703_openfoodfacts_etl_spark.forget_zip_importers` first.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .. import forget_zip_importers
 from .. import spread as _spread
 
 
@@ -87,6 +90,7 @@ def cosine_vec(a, b):
 
     @F.pandas_udf("double")
     def _cosine(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        forget_zip_importers()
         m = _matrix(pd.concat([xs, ys], ignore_index=True))  # one width for both
         x, y = m[: len(xs)], m[len(xs):]
         return pd.Series(_cos(_seqdot(x, y), _norm(x), _norm(y)))
@@ -115,6 +119,7 @@ def cosine_neardup_pairs_matmul(df, threshold: float, block_col: str):
     df = df.filter(F.col(block_col).isNotNull() & F.col("embedding").isNotNull())
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        forget_zip_importers()
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         V = _matrix(pdf["embedding"])
@@ -163,6 +168,7 @@ def corpus_plane_buckets(df, planes: np.ndarray, per_band: int, out_id: str):
 
     @F.pandas_udf("array<long>")
     def _bks(vs: pd.Series) -> pd.Series:
+        forget_zip_importers()
         return pd.Series(list(_buckets(_matrix(vs, planes.shape[1]), planes, per_band)))
 
     return df.select(
@@ -228,6 +234,7 @@ def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3, k:
     def cells(n):
         @F.pandas_udf("array<long>")
         def _cells(vs: pd.Series) -> pd.Series:
+            forget_zip_importers()
             return pd.Series(list(cids[_top_cells(_matrix(vs, C.shape[1]), C, n)]))
 
         return _cells

@@ -83,6 +83,17 @@ REBUCKET_MAX_BUCKETS = 4096
 COMMIT_TEMP_ORPHAN_SEC = 3600.0
 
 
+def check_keep_snapshots(keep_snapshots: int) -> None:
+    """Raise ``ValueError`` if ``keep_snapshots`` is below 1: the newest
+    snapshot is the table, so :meth:`LakeTable.vacuum` always keeps it."""
+    if keep_snapshots < 1:
+        raise ValueError(
+            f"vacuum(keep_snapshots={keep_snapshots}): the newest snapshot is "
+            "the table and is always kept; pass keep_snapshots=1 to keep only "
+            "it, or more to keep older snapshots readable for time travel"
+        )
+
+
 class SnapshotConflict(Exception):
     """Another writer committed the same snapshot id first (CAS lost)."""
 
@@ -724,14 +735,9 @@ class LakeTable:
         are left for the in-flight writer. The temp-name convention is the
         IO backend's private business, so the sweep asks the seam.
 
-        ``keep_snapshots`` below 1 raises ``ValueError``: the newest
-        snapshot is the table, so at least one is always kept."""
-        if keep_snapshots < 1:
-            raise ValueError(
-                f"vacuum(keep_snapshots={keep_snapshots}): the newest snapshot is "
-                "the table and is always kept; pass keep_snapshots=1 to keep only "
-                "it, or more to keep older snapshots readable for time travel"
-            )
+        ``keep_snapshots`` below 1 raises ``ValueError``
+        (:func:`check_keep_snapshots`)."""
+        check_keep_snapshots(keep_snapshots)
         mdir = os.path.join(self.root, MANIFEST_DIR)
         names = self.io.list_names(mdir)
         now = time.time()

@@ -43,7 +43,7 @@ from ..schema import (
     merge_schemas,
     widen,
 )
-from ..sources.lake import LakeTable
+from ..sources.lake import LakeTable, check_keep_snapshots
 
 
 def _natural_key(path: str) -> str:
@@ -135,7 +135,11 @@ def _batch_step(
     same conditions.
 
     Returns ``(step, applied)``: ``step(df, batch_id, segment_hwm=None)``
-    applies one batch and appends its metrics to the ``applied`` list."""
+    applies one batch and appends its metrics to the ``applied`` list.
+    With ``auto_vacuum_every`` set, a ``vacuum_keep_snapshots`` below 1
+    raises vacuum's ``ValueError`` here, before any batch commits."""
+    if auto_vacuum_every is not None:
+        check_keep_snapshots(vacuum_keep_snapshots)
     applied: list[dict] = []
 
     def step(df, batch_id: int, segment_hwm: str | None = None) -> None:
@@ -191,7 +195,8 @@ def run_incremental(
     data files only they reference) beyond the newest
     ``vacuum_keep_snapshots`` — long-running ingest keeps a bounded file
     count while time travel stays available inside the keep window (the
-    maintenance-job analog of ``maybe_compact``).
+    maintenance-job analog of ``maybe_compact``). A ``vacuum_keep_snapshots``
+    below 1 raises ``ValueError`` before the first batch.
     ``auto_rebucket_target_bytes``: after each batch, grow the bucket count
     (``LakeTable.maybe_rebucket``, geometric) once the median bytes per
     occupied bucket crosses the target — the table's layout keeps pace with
