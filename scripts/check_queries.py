@@ -3,6 +3,9 @@
 optimization-round inner loop (full run: scripts/full_correctness.py).
 
 Run:  python scripts/check_queries.py q39_interval_join[,q21_...] [sf_dir]
+
+The session is sized by ``build_session``: ``SPARK_GRAFT_CPUS`` cores (32 if
+unset) and as many shuffle partitions.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ from trde703_openfoodfacts_etl_spark.plans.analytics import TABLES  # noqa: E402
 def main() -> None:
     names = sys.argv[1].split(",")
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
-    spark = build_session(app_name="check_queries", cores=32, shuffle_partitions=32)
+    spark = build_session(app_name="check_queries")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")

@@ -18,6 +18,9 @@ oracle column is a hash MISMATCH even when the values are numerically equal
 (the exact q57 failure mode of round 3).
 
 Run:  python scripts/full_correctness.py [sf_dir] [round_tag]
+
+The session is sized by ``build_session``: ``SPARK_GRAFT_CPUS`` cores (32 if
+unset) and as many shuffle partitions.
 """
 
 from __future__ import annotations
@@ -80,7 +83,7 @@ def _hash(df: pd.DataFrame) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     tag = sys.argv[2] if len(sys.argv) > 2 else "r04"
-    spark = build_session(app_name="full_correctness", cores=32, shuffle_partitions=32)
+    spark = build_session(app_name="full_correctness")
 
     con = duckdb.connect()
     for t in TABLES:

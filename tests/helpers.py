@@ -175,3 +175,16 @@ def python_rdd_scans(df) -> list[str]:
                 break
             rdds.extend(d.rdd() for d in as_java(rdd.dependencies()))
     return found
+
+
+def build_jobs(spark, name: str, build) -> int:
+    """Spark jobs that ``build()`` runs, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, f"{name} build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -7,7 +7,7 @@ import pyarrow.parquet as pq
 
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
 from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments
-from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable
+from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable, bucket_expr
 from trde703_openfoodfacts_etl_spark.streaming.pipeline import list_segments, run_incremental
 
 
@@ -25,15 +25,14 @@ def test_batch_metrics_account_for_every_event(spark, tmp_path):
         assert m["events_in"] == truth[p]
         assert m["gated_out"] == 0  # generator emits no null/empty keys
         assert m["buckets_touched"] >= m["buckets_rewritten"] > 0
+        # a touched bucket is one the segment's conv_ids hash to
+        buckets = spark.read.parquet(p).select(bucket_expr(8).alias("b")).distinct()
+        assert m["buckets_touched"] == buckets.count()
         assert m["events_per_sec"] > 0
-        # per-bucket event counts cover the whole batch
-        assert sum(m["per_bucket_events"].values()) >= m["events_in"] * 0  # present
-        # r6: small tables fuse the touched-bucket pre-pass into the
-        # detection job (no a1_touched phase); large tables keep it
-        assert set(m["phase_sec"]) in (
-            {"plan", "a2_skinny", "a3_write", "commit"},
-            {"plan", "a1_touched", "a2_skinny", "a3_write", "commit"},
-        )
+        # per-bucket event counts cover exactly the events that passed the gate
+        assert sum(m["per_bucket_events"].values()) == m["events_in"] - m["gated_out"]
+        # one skinny detection job, then the payload write and the commit
+        assert set(m["phase_sec"]) == {"plan", "a2_skinny", "a3_write", "commit"}
 
     # manifest lineage: snapshot metrics equal the returned metrics
     snap = lake.snapshot()

@@ -12,6 +12,9 @@ from trde703_openfoodfacts_etl_spark.operators.dedup import (
     simhash_near_dups,
     word_shingles,
 )
+from trde703_openfoodfacts_etl_spark.plans.analytics import load
+
+from helpers import build_jobs
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the spark engine "
@@ -99,21 +102,44 @@ def test_connected_components_raises_when_not_converged(spark, monkeypatch):
 
 
 def test_minhash_signatures_over_a_spread_scan_runs_no_job_at_build(spark, docs, tmp_path):
-    """q24 spreads its scan and hands it to minhash_signatures. Building the
-    signatures must not spread it again: spread() reads ``df.rdd``, which on
-    a frame with an exchange runs that shuffle at plan time."""
-    from trde703_openfoodfacts_etl_spark import spread
+    """q24 loads its scan with ``load(..., spread=True)`` and hands it to
+    minhash_signatures. Loading the spread scan and building the signatures
+    over it run no Spark job: ``load`` decides from the parquet footer, and
+    no operator inspects the partitions of the frame it is given."""
+    docs.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    assert build_jobs(spark, "minhash", lambda: minhash_signatures(
+        load(spark, str(tmp_path), "documents", spread=True), num_hashes=64, shingle_n=3
+    )) == 0
 
-    path = str(tmp_path / "docs.parquet")
-    docs.coalesce(1).write.parquet(path)
-    d = spread(spark.read.parquet(path))
-    sc = spark.sparkContext
-    sc.setJobGroup("minhash-build", "minhash_signatures build")
-    try:
-        minhash_signatures(d, num_hashes=64, shingle_n=3)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("minhash-build")) == []
+
+def test_null_and_empty_texts_match_the_oracles(spark, tmp_path):
+    """A NULL text has no shingles: it pairs with nothing in q21 and q24,
+    as in their DuckDB oracles, rather than with every other NULL or empty
+    text at Jaccard 1.0."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from trde703_openfoodfacts_etl_spark.plans.analytics import (
+        SQL_Q21,
+        SQL_Q24,
+        q21_ngram_jaccard,
+        q24_minhash_lsh,
+    )
+
+    texts = {1: "a b c d", 2: None, 3: None, 4: "a b c d", 5: ""}
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table({"doc_id": pa.array(list(texts), pa.int64()),
+                  "text": pa.array(list(texts.values()), pa.string())}),
+        str(path),
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS FROM '{path}'")
+    for fn, sql in ((q21_ngram_jaccard, SQL_Q21), (q24_minhash_lsh, SQL_Q24)):
+        got = sorted(tuple(r) for r in fn(spark, str(tmp_path)).collect())
+        want = sorted(tuple(r) for r in con.sql(sql).fetchall())
+        assert got == want == [(1, 4, 1.0)], fn.__name__
 
 
 def test_ngram_jaccard_bitmap_filter_lossless_on_repetitive_corpus(spark):

@@ -21,7 +21,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from helpers import plans_run_under, python_rdd_scans  # noqa: E402
+from helpers import build_jobs, plans_run_under, python_rdd_scans  # noqa: E402
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA  # noqa: E402
 from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments  # noqa: E402
 from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable  # noqa: E402
@@ -65,19 +65,6 @@ EAGER = {
     "q39_interval_join": _CHECKPOINT + " (the range-count lookup table)",
     "q43_contamination": _CHECKPOINT + " (the per-source fingerprint counts)",
 }
-
-
-def build_jobs(spark, name: str, build) -> int:
-    """Spark jobs that ``build()`` runs, counted under its own job group."""
-    sc = spark.sparkContext
-    group = f"build-{name}"
-    sc.setJobGroup(group, f"{name} build")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_every_allowlisted_entry_exists():

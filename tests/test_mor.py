@@ -113,13 +113,16 @@ def test_mor_delete_and_late_event(spark, tmp_path):
     assert lake_state_pdf(lake)["text"].tolist() == ["b"]
 
 
-def test_mor_apply_runs_single_action_no_collect(spark, tmp_path, monkeypatch):
-    """The MOR fast path must run exactly ONE action per batch (the delta
-    write) and ZERO driver collects — the touched-bucket set and observe()
-    metrics ride the write. Regression guard against reintroducing the
-    separate touched-buckets scan (a full extra pass over every batch).
-    The same holds for compact() and rebucket(): no stats pass after the
-    rewrite."""
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+def test_apply_batch_runs_no_extra_action(spark, tmp_path, monkeypatch, mode):
+    """A non-empty batch runs no action beyond its mode's own, and no
+    count. MOR runs exactly ONE action (the delta write) and ZERO driver
+    collects: the touched-bucket set and observe() metrics ride the write.
+    COW makes exactly one collect, the skinny change detection, which also
+    yields the touched buckets: no pre-pass materializes the batch first.
+    Regression guard against reintroducing a separate touched-buckets scan
+    (a full extra pass over every batch). The same holds for compact() and
+    rebucket(): no stats pass after the rewrite."""
     # the concrete class: Spark 4's classic DataFrame overrides collect and
     # count, so patching the pyspark.sql.DataFrame base would count nothing
     DataFrame = type(spark.range(0))
@@ -138,17 +141,18 @@ def test_mor_apply_runs_single_action_no_collect(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         DataFrame, "count", lambda self: calls.__setitem__("count", calls["count"] + 1) or orig_count(self)
     )
-    res = apply_batch(lake, batch, batch_id=1, mode="mor")
-    assert calls == {"collect": 0, "count": 0}, calls
+    res = apply_batch(lake, batch, batch_id=1, mode=mode)
+    expected = {"collect": 0 if mode == "mor" else 1, "count": 0}
+    assert calls == expected, calls
     assert res["rows_written"] == 3 and res["buckets_touched"] >= 1
 
     # maintenance: compact() and rebucket() take their manifest stats from
     # the written files' footers, so the rewrite is their only action
     snap = lake.compact()
-    assert calls == {"collect": 0, "count": 0}, calls
+    assert calls == expected, calls
     assert sum(b["rows"] for b in snap["buckets"].values()) == 3
     snap = lake.rebucket(8)
-    assert calls == {"collect": 0, "count": 0}, calls
+    assert calls == expected, calls
     assert sum(b["rows"] for b in snap["buckets"].values()) == 3
 
 

@@ -110,34 +110,3 @@ def test_structured_streaming_maintained_mor(spark, tmp_path, wal_dir):
     assert lake.snapshot()["num_buckets"] > 2  # policy fired mid-stream
     assert max(lake.delta_pressure().values(), default=0) <= 1  # compaction kept pace
     assert_states_equal(lake_state_pdf(lake), duckdb_replay_oracle(f"{wal_dir}/*.parquet"))
-
-
-def test_fused_and_pruned_change_detect_agree(spark, tmp_path, wal_dir, monkeypatch):
-    """r6: the COW change-detect has two execution shapes gated on manifest
-    row stats (fused single-job vs touched-bucket-pruned two-phase). Force
-    each shape over the same feed: final state, per-batch metrics, and the
-    touched/rewritten bucket sets must be identical."""
-    from trde703_openfoodfacts_etl_spark.operators import merge as M
-
-    states, metas = [], []
-    for tag, limit in (("fused", 10**9), ("pruned", 0)):
-        monkeypatch.setattr(M, "FUSED_DETECT_MAX_ROWS", limit)
-        lake = LakeTable.create(
-            spark, str(tmp_path / f"lake_{tag}"), TRANSCRIPT_SCHEMA, num_buckets=8
-        )
-        metrics = run_incremental(lake, wal_dir, segments_per_batch=1)
-        states.append(lake_state_pdf(lake))
-        metas.append(
-            [
-                {
-                    k: m.get(k)
-                    for k in (
-                        "batch_id", "events_in", "gated_out", "buckets_touched",
-                        "buckets_rewritten", "rows_written", "per_bucket_events",
-                    )
-                }
-                for m in metrics
-            ]
-        )
-    assert_states_equal(states[0], states[1])
-    assert metas[0] == metas[1]

@@ -27,40 +27,6 @@ import sys
 __version__ = "0.1.0"
 
 
-#: share of the default parallelism at which spread() leaves an input alone
-SPREAD_MIN_FILL = 0.5
-
-
-def spread(df):
-    """Round-robin repartition a pathologically under-partitioned input up
-    to the session's default parallelism — and a NO-OP otherwise.
-
-    The driver's test tables are single-row-group parquet files, so every
-    scan is one task no matter what ``maxPartitionBytes`` says (a parquet
-    row group is indivisible): all per-row work downstream — regex/HOF
-    expression packs, pandas UDFs, per-row GEMM probes — runs on one core
-    (guide §2.5 input skew: "one huge unsplittable file"). Repartitioning
-    costs one shuffle of the (small) under-partitioned input and buys
-    cluster-wide parallelism for the expensive per-row stage.
-
-    The guard keeps this scale-safe: an input that already has at least
-    ``SPREAD_MIN_FILL``·defaultParallelism partitions (e.g. a real multi-file
-    100 TB corpus) is returned unchanged — this must never become a
-    forced full-corpus shuffle.
-
-    ``df`` must be a scan: the partition count comes from ``df.rdd``, and
-    on a frame that already has an exchange, that runs the upstream
-    shuffle at plan time under AQE. Spread the scan once, where it is
-    loaded, and never spread a spread frame."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — inspection only; fall back to no-op
-        return df
-    return df if cur >= max(1, int(target * SPREAD_MIN_FILL)) else df.repartition(target)
-
-
 def forget_zip_importers() -> None:
     """Delete every ``zipimporter`` from ``sys.path_importer_cache``.
 
@@ -172,11 +138,12 @@ def build_session(
         # InferFiltersFromGenerate synthesizes `isnotnull AND size > 0` on
         # every explode input; when the exploded array is an EXPRESSION
         # (e.g. the dedup family's word-shingling), the whole expression is
-        # cloned into that filter and pushed below the spread repartition —
-        # evaluating the heavy array build twice, once on the un-spread
-        # scan (r6 measurement: 5.9 s → 1.2 s on the q24 postings build at
-        # sf1.0). Generate itself already skips null/empty inputs, so
-        # excluding the rule never changes results.
+        # cloned into that filter and pushed below the repartition of a
+        # spread scan (plans.analytics.load) — evaluating the heavy array
+        # build twice, once on the un-spread scan (r6 measurement: 5.9 s →
+        # 1.2 s on the q24 postings build at sf1.0). Generate itself
+        # already skips null/empty inputs, so excluding the rule never
+        # changes results.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",

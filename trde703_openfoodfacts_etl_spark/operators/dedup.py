@@ -31,12 +31,13 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .. import forget_zip_importers
-from .. import spread as _spread
 from ..functions.text import simhash64
 
 
 def word_shingles(col, n: int = 3):
     """Distinct word n-grams as an array column — pure higher-order fns.
+    A NULL text has no shingles (NULL), so it drops out of every explode
+    and pairs with nothing, as in the oracles.
 
     The tokenization is bound ONCE into a lambda scope
     (``transform(array(toks), t -> ...)``): Catalyst does not
@@ -61,7 +62,7 @@ def word_shingles(col, n: int = 3):
         )
 
     toks = F.split(F.regexp_replace(F.lower(F.trim(col)), r"\s+", " "), " ")
-    return F.element_at(F.transform(F.array(toks), shingles_of), 1)
+    return F.when(col.isNotNull(), F.element_at(F.transform(F.array(toks), shingles_of), 1))
 
 
 def ngram_jaccard_pairs(df, threshold: float = 0.8):
@@ -78,7 +79,6 @@ def ngram_jaccard_pairs(df, threshold: float = 0.8):
     exact Jaccard via one shingle-array join. A length filter
     (t·|B| ≤ |A|) prunes mismatched sizes before verification.
     """
-    df = _spread(df)  # single-row-group inputs: shingle on every core
     sh = df.select(
         F.col("doc_id").alias("_id"),
         word_shingles(F.col("text")).alias("_sh"),
@@ -222,9 +222,7 @@ def ngram_jaccard_pairs(df, threshold: float = 0.8):
 
 
 def minhash_signatures(df, num_hashes: int = 64, shingle_n: int = 3):
-    """MinHash signature per document, fully columnar. ``df`` is not spread
-    here: :func:`~trde703_openfoodfacts_etl_spark.spread` takes a scan only,
-    so the caller spreads the scan it loads (q24 does).
+    """MinHash signature per document, fully columnar.
 
     h_i(s) = (a_i * h31(s) + b_i) mod p over each shingle, with
     h31 = xxhash64 reduced into a 31-bit prime field so a_i*h31+b_i stays
@@ -339,7 +337,7 @@ def simhash_near_dups(df, max_hamming: int | None = None):
     runs one pass, not once per join side, and chunk buckets are packed
     into a long ((chunk_idx << 16) | value — bijective for 16-bit chunks)
     so the join keys are primitive."""
-    sig = _spread(df).select(
+    sig = df.select(
         F.col("doc_id").alias("_id"), simhash64(F.col("text")).alias("_sig")
     )
     # one UDF pass: sig feeds both join sides (same executor-local-persist

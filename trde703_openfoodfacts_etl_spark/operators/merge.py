@@ -15,14 +15,23 @@ Execution design (what survives 100 TB):
    without manual salting, AQE mops up residual imbalance. A window
    (`row_number`) would sort every event of the hot key into one task.
 
-2. **Skinny change detection.** Deciding *what changed* never moves the
-   payload: a hash-only projection of the batch (key, bucket, order-key,
-   row-hash) is merged against a hash-only read of the current state
-   (parquet column pruning — the text column is not read). One shuffle of
-   ~40 bytes/key instead of the full row. Output: per-bucket changed-row
-   counts, event counts and high-watermark LSNs, in one collect. The
-   rewritten buckets' live-row and tombstone counts are not aggregated at
-   all: the lake reads them from the written files' parquet footers.
+2. **Skinny change detection, one job per batch.** Deciding *what
+   changed* never moves the payload: a hash-only projection of the raw
+   batch (key, bucket, order-key, row-hash) is merged against a hash-only
+   read of every bucket's current state (parquet column pruning — the
+   text column is not read). One shuffle of ~40 bytes/key instead of the
+   full row. Output: per-bucket changed-row counts, event counts and
+   high-watermark LSNs, in one collect, which also names the touched
+   buckets (those with batch events). The rewritten buckets' live-row and
+   tombstone counts are not aggregated at all: the lake reads them from
+   the written files' parquet footers. The state read is not pruned to
+   the touched buckets first: a WAL segment touches every bucket, so a
+   pruning pre-pass (materialize the batch winners, collect their
+   buckets) only adds a job. On 4 cores, 8.6M state rows in 16 buckets, a
+   1M-event segment: 139 CPU s / 45.7 s wall in one job against 151 /
+   51.9 with the pre-pass (medians of 4). Pruning pays only for a batch
+   confined to few buckets (one of 16: 10.9 against 38.9 CPU s), which
+   no shipping path produces.
 
 3. **Copy-on-write restricted to changed buckets.** Only buckets with real
    changes are rewritten (redelivered/no-op batches rewrite nothing — the
@@ -71,19 +80,6 @@ from ..sources.lake import (
 )
 
 ENVELOPE_COLS = ("op", "lsn", "event_ts")
-
-#: COW change-detect shape gate (manifest live+dead rows, known driver-side
-#: before any job runs): at or below this, the touched-bucket pre-pass —
-#: an extra materialize-the-batch-winners job + collect per batch — costs
-#: more than letting the detection job scan every bucket's skinny columns
-#: (~30 B/row), so a1 fuses into a2 (r6: one job instead of three per
-#: batch; sf1.0-shape replay 12.9 s → 9.5 s). Above it, the pre-pass pays
-#: for itself by pruning the state read to touched buckets — the
-#: O(changed)-not-O(table) property that matters at thousands of buckets.
-#: At the default, the fused path's extra skinny scan is bounded by
-#: ~8M × 30 B ≈ 240 MB spread over the cluster; deployments can tune it
-#: per-table via this module constant.
-FUSED_DETECT_MAX_ROWS = 8_000_000
 
 #: apply_batch re-applies a batch at most this many times after losing the
 #: manifest CAS to another writer, then raises the SnapshotConflict.
@@ -310,36 +306,15 @@ def _apply_batch_once(
             append=True,
         )
 
-    # ---- action 1 (COW only): skinny in-batch LWW pre-aggregate --------------
-    # ONE narrow scan of the batch serves BOTH the touched-bucket set and the
-    # change detection: the per-key in-batch winner (row-hash, tombstone flag,
-    # order key — ~40 bytes/key, never the payload). COW thus scans the batch
-    # exactly twice end-to-end: here (skinny) and in action 3 (payload). LWW
-    # is associative, so pre-deduping the batch then merging with state is
-    # identical to merging raw events; map-side partial aggregation reduces
-    # hot keys before the exchange either way.
-    #
-    # TWO execution shapes, chosen from manifest stats BEFORE any job runs:
-    # - small table (≤ FUSED_DETECT_MAX_ROWS live+dead rows): the touched-
-    #   bucket pre-pass job would cost more than just scanning every
-    #   bucket's skinny columns, so the batch aggregate feeds the change-
-    #   detection job DIRECTLY (no checkpoint, no extra action) and the
-    #   touched set falls out of the same collect (buckets with batch
-    #   events). One Spark job for a1+a2 instead of three.
-    # - large table: materialize the batch winners (eager localCheckpoint),
-    #   collect their buckets, and prune the state read to exactly the
-    #   touched buckets — the O(changed)-not-O(table) path that matters at
-    #   thousands of buckets.
-    # physical file rows (per-file parquet footer counts carried in the
-    # manifest) — exactly what the fused skinny scan would read; bucket-
-    # level "rows" can be None for as-yet-uncompacted MOR delta buckets
-    total_state_rows = sum(
-        int(fe.get("rows") or 0)
-        for b in snap["buckets"].values()
-        for fe in b["files"]
-    )
-    fused = total_state_rows <= FUSED_DETECT_MAX_ROWS
-
+    # ---- COW change detection: ONE skinny job (module docstring #2) --------
+    # RAW batch rows union every bucket's skinny state → one LWW aggregate →
+    # per-bucket changed-row and event counts and HWMs in one collect; the
+    # touched buckets are those with batch events. A per-key pre-aggregate
+    # of the batch would shuffle it by key only for the union to erase the
+    # partitioning and shuffle it by the same key again: LWW is associative,
+    # so one aggregate over raw∪state rows is identical, and map-side
+    # partials still reduce hot keys. COW thus scans the batch exactly twice
+    # end to end: here (skinny) and in the payload write below.
     def _skinny(rows, cur: bool):
         """Hash-only projection of physical rows (module docstring #2).
         Batch rows count as events and carry their lsn into the HWM."""
@@ -354,56 +329,11 @@ def _apply_batch_once(
             F.lit(cur).alias("_cur"),
         )
 
-    sk_rows = _skinny(env, cur=False)
-    if fused:
-        # RAW batch rows feed the detection aggregate directly: a per-key
-        # pre-aggregate here would shuffle the batch by key only for the
-        # union to erase the partitioning and shuffle it by the same key
-        # again (LWW is associative, so one aggregate over raw∪state rows
-        # is identical; map-side partials still reduce hot keys)
-        sk_batch = sk_rows
-        read_buckets = None
-        touched: list[int] = []  # derived from the detection collect below
-    else:
-        sk_batch = (
-            sk_rows.groupBy(*KEY_COLS)
-            .agg(
-                F.max_by(F.struct("_h", "_d", "ts", META_LSN), lww_order()).alias("_w"),
-                F.sum("_n_events").alias("_n_events"),
-                F.max("_max_lsn").alias("_max_lsn"),
-            )
-            .select(
-                *KEY_COLS,
-                *[F.col(f"_w.{c}").alias(c) for c in ("_h", "_d", "ts", META_LSN)],
-                "_n_events",
-                "_max_lsn",
-                F.lit(False).alias("_cur"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        pre = _obs_pre()
-        touched = sorted(
-            int(r[0])
-            for r in sk_batch.select(bucket_expr(num_buckets).alias(META_BUCKET))
-            .distinct()
-            .collect()
-        )
-        _t["a1_touched"] = time.time()
-        if not touched:
-            return _commit_empty(pre)
-        read_buckets = list(touched)
-
-    # ---- action 2: skinny change detection (hash-only, no payload moves) -----
-    # Batch winners union current state (touched buckets only on the large-
-    # table path) → one LWW aggregate; output: per-bucket changed-row and
-    # event counts + HWMs.
-    sk_cur = _skinny(
-        lake.read(buckets=read_buckets, include_deleted=True, with_meta=True, snap=snap),
-        cur=True,
-    )
+    sk_cur = _skinny(lake.read(include_deleted=True, with_meta=True, snap=snap), cur=True)
     cur = F.col("_cur")
     sk = (
-        sk_batch.unionByName(sk_cur)
+        _skinny(env, cur=False)
+        .unionByName(sk_cur)
         .groupBy(*KEY_COLS)
         .agg(
             F.max_by(
@@ -434,19 +364,16 @@ def _apply_batch_once(
         .collect()
     )
     _t["a2_skinny"] = time.time()
-    if fused:
-        # the touched set falls out of the same collect: buckets that saw
-        # ≥1 batch event (untouched buckets appear too — state-only rows —
-        # with n_events = 0 and n_changed = 0)
-        pre = _obs_pre()
-        touched = sorted(int(r[META_BUCKET]) for r in sk if r["n_events"] > 0)
-        sk = [r for r in sk if r["n_events"] > 0]
-        if not touched:
-            return _commit_empty(pre)
+    pre = _obs_pre()
+    # untouched buckets appear too (state-only rows) with n_events = 0 and
+    # n_changed = 0
+    sk = [r for r in sk if r["n_events"] > 0]
+    if not sk:
+        return _commit_empty(pre)
     changed_buckets = sorted(int(r[META_BUCKET]) for r in sk if r["n_changed"] > 0)
     bucket_hwm = {int(r[META_BUCKET]): int(r["hwm"]) for r in sk if r["hwm"] is not None}
 
-    # ---- action 3: full-payload merge + write, changed buckets only ----------
+    # ---- full-payload merge + write, changed buckets only --------------------
     # ONE payload shuffle end-to-end (see _write_winners): raw batch events
     # of the changed buckets union their current state.
     replaced: dict[int, list[dict]] = {}
@@ -462,7 +389,7 @@ def _apply_batch_once(
     return _commit(
         pre, replaced, bucket_hwm,
         {
-            "buckets_touched": len(touched),
+            "buckets_touched": len(sk),
             "buckets_rewritten": len(changed_buckets),
             "per_bucket_events": {int(r[META_BUCKET]): int(r["n_events"]) for r in sk},
         },

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import forget_zip_importers
-from .. import spread as _spread
 
 
 def media_from_documents(docs):
@@ -38,7 +37,6 @@ def media_from_documents(docs):
     kind/width/height/duration are arithmetic on doc_id. The decode path downstream treats payload as opaque bytes —
     the mapInPandas plumbing is identical to the real-codec case.
     """
-    docs = _spread(docs)  # single-row-group inputs: strip/encode on every core
     ascii_text = F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), r"[^\x20-\x7e]", "")
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),

@@ -30,7 +30,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .. import forget_zip_importers
-from .. import spread as _spread
 
 
 def _matrix(s: pd.Series, width: int | None = None) -> np.ndarray:
@@ -180,9 +179,9 @@ def corpus_lsh_topk(corpus, probes, plane_ids: list[int], bands: int = 3, k: int
     """Random-hyperplane LSH top-k with corpus-vector hyperplanes (sorted
     by id, ``len(plane_ids) // bands`` per band).
 
-    Bucket equi-join, then exact cosine re-rank of the candidates. No spread():
-    the bucket join shuffles the corpus anyway, so the extra round-robin
-    stage only adds latency (r6 A/B at both SFs)."""
+    Bucket equi-join, then exact cosine re-rank of the candidates. q28 does
+    not spread the corpus scan: the bucket join shuffles the corpus anyway,
+    so the extra round-robin stage only adds latency (r6 A/B at both SFs)."""
     _, planes = _index(corpus, plane_ids, "plane")
     per_band = len(planes) // bands
     cb = corpus_plane_buckets(corpus, planes, per_band, "neighbor_id")
@@ -239,7 +238,7 @@ def corpus_ivf_topk(corpus, probes, centroid_ids: list[int], nprobe: int = 3, k:
 
         return _cells
 
-    corpus_cells = _spread(corpus).select(  # single-row-group inputs: every core
+    corpus_cells = corpus.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("_cv"),
         cells(1)(F.col("embedding"))[0].alias("cell"),

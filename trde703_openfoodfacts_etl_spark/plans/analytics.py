@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..schema import parquet_table_schema
+from ..schema import parquet_table_footer
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
@@ -24,26 +24,38 @@ TABLES = [
 ]
 
 
+#: share of the default parallelism, in parquet row groups, at which
+#: ``load(spread=True)`` leaves a scan alone
+SPREAD_MIN_FILL = 0.5
+
+
 def load(spark, sf_dir: str, name: str, spread: bool = False):
-    """Read a test table. ``spread=True`` routes through the package-level
-    :func:`~trde703_openfoodfacts_etl_spark.spread` guard — used by the
-    queries whose per-row work (regex packs, HOFs, pandas UDFs, vector
-    math) dominates the scan: the driver's tables are single-row-group
-    parquet files, so without it that work runs on ONE core (r6
-    measurement: q56 3.3 s → 0.5 s at sf1.0 from this alone). Queries
-    whose cost is post-shuffle (windows, joins keyed downstream) skip it —
-    the exchange already spreads them, and the extra shuffle would be pure
-    overhead.
+    """Read a test table. The schema and the row-group count come from the
+    parquet footers
+    (:func:`~trde703_openfoodfacts_etl_spark.schema.parquet_table_footer`),
+    so building a plan over the table runs no Spark job.
 
-    The schema comes from the parquet footer
-    (:func:`~trde703_openfoodfacts_etl_spark.schema.parquet_table_schema`),
-    so building a plan over the table runs no schema-inference job."""
+    ``spread=True`` round-robins a table of fewer than
+    ``SPREAD_MIN_FILL``·defaultParallelism row groups over the default
+    parallelism, and returns any other table unchanged. A row group is
+    indivisible, so the single-row-group test tables scan in ONE task
+    whatever ``maxPartitionBytes`` says, and per-row work on the scan runs
+    on one core (input skew: one huge unsplittable file). The
+    queries whose per-row work dominates the scan (regex packs, HOFs,
+    pandas UDFs, vector math) ask for it (r6 measurement: q56 3.3 s → 0.5 s
+    at sf1.0 from this alone); those whose cost is post-shuffle (windows,
+    joins keyed downstream) do not, since the exchange already spreads them
+    and the extra shuffle would be pure overhead. A table of many row groups
+    (a real multi-file corpus) is never forced through a full shuffle. This
+    is the only place the engine spreads a scan: an operator takes the
+    frame it is given."""
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(parquet_table_schema(path)).parquet(path)
+    schema, row_groups = parquet_table_footer(path)
+    df = spark.read.schema(schema).parquet(path)
     if spread:
-        from .. import spread as _spread
-
-        df = _spread(df)
+        target = spark.sparkContext.defaultParallelism
+        if row_groups < max(1, int(target * SPREAD_MIN_FILL)):
+            df = df.repartition(target)
     return df
 
 
@@ -530,8 +542,9 @@ def q20_ann_bruteforce(spark, sf_dir):
     """Brute-force cosine top-5 for 5 probe vectors: broadcast probes ×
     corpus, cosine per Arrow batch in numpy (operators/similarity.py
     cosine_vec), rank via window. Integer output only (float32-vs-float64
-    safe). No spread(): the numpy kernel is light per row, and the extra
-    round-robin shuffle cost more than it bought (sf0.1 A/B, 4 cores)."""
+    safe). The scan is not spread: the numpy kernel is light per row, and
+    the extra round-robin shuffle cost more than it bought (sf0.1 A/B, 4
+    cores)."""
     from ..operators.similarity import cosine_vec
 
     e = load(spark, sf_dir, "embeddings")
@@ -575,7 +588,7 @@ def q21_ngram_jaccard(spark, sf_dir):
     computes the unfiltered exact join)."""
     from ..operators.dedup import ngram_jaccard_pairs
 
-    d = load(spark, sf_dir, "documents")
+    d = load(spark, sf_dir, "documents", spread=True)
     return ngram_jaccard_pairs(d, threshold=0.5).select(
         "id_a", "id_b", F.round("jaccard", 4).alias("jaccard")
     )
@@ -724,7 +737,7 @@ def q25_simhash(spark, sf_dir):
     sharing ≥1 equal 16-bit chunk, Hamming ≤ 12."""
     from ..operators.dedup import simhash_near_dups
 
-    d = load(spark, sf_dir, "documents")
+    d = load(spark, sf_dir, "documents", spread=True)
     # threshold pushed into the operator (pre-dedup; same pair set — the
     # Hamming distance is a pure function of the signatures)
     return simhash_near_dups(d, max_hamming=12).select(
@@ -915,9 +928,11 @@ def q29_ann_ivf(spark, sf_dir):
     ranks only."""
     from ..operators.similarity import corpus_ivf_topk
 
-    e = load(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < 5)
-    return corpus_ivf_topk(e, probes, centroid_ids=_Q29_CENTROIDS, nprobe=3, k=5)
+    # the corpus cells are a pandas UDF per vector, so the corpus scan is
+    # spread; the 5 probes are not worth a shuffle
+    corpus = load(spark, sf_dir, "embeddings", spread=True)
+    probes = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5)
+    return corpus_ivf_topk(corpus, probes, centroid_ids=_Q29_CENTROIDS, nprobe=3, k=5)
 
 
 SQL_Q29 = f"""
@@ -959,7 +974,7 @@ def q30_media_features(spark, sf_dir):
     decode bit-for-bit."""
     from ..operators.multimodal import decode_features, media_from_documents
 
-    d = load(spark, sf_dir, "documents")
+    d = load(spark, sf_dir, "documents", spread=True)
     feats = decode_features(media_from_documents(d))
     return (
         feats.groupBy("kind")
@@ -1419,7 +1434,7 @@ def q59_dedup_clusters(spark, sf_dir):
     correct algorithm must hash-match."""
     from ..operators.dedup import connected_components, ngram_jaccard_pairs
 
-    d = load(spark, sf_dir, "documents")
+    d = load(spark, sf_dir, "documents", spread=True)
     pairs = ngram_jaccard_pairs(d, threshold=0.5).select("id_a", "id_b")
     cc = connected_components(pairs)
     return (

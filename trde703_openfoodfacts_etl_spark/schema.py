@@ -203,31 +203,38 @@ def arrow_schema_of_parquet(path: str) -> T.StructType:
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def parquet_table_schema(path: str) -> T.StructType:
-    """The schema ``spark.read.parquet(path)`` infers, read from one parquet
-    footer on the driver: passing it to ``spark.read.schema(...)`` skips the
-    Spark job that inference runs on every read.
+def parquet_table_footer(path: str) -> tuple[T.StructType, int]:
+    """``(schema, row groups)`` of a parquet table, read from its footers on
+    the driver. The schema is the one ``spark.read.parquet(path)`` infers:
+    passing it to ``spark.read.schema(...)`` skips the Spark job that
+    inference runs on every read. A parquet row group is the unit a scan
+    task reads, so the row-group count bounds the tasks a scan of the table
+    can spread over.
 
     ``path`` is a parquet file or a Spark-written directory; a directory's
-    schema is that of its first data file (names starting with ``_`` or
-    ``.`` are skipped, as Spark skips them). A footer that carries Spark's
-    own schema record is read from that record, as Spark's inference does
-    (an INT96 column is a ``TimestampType``, not the naive nanosecond
-    timestamp Arrow sees). Any other footer is converted from Arrow, with
-    zone-less timestamps as ``TimestampNTZType``, again as Spark infers
-    them. The WAL reader keeps :func:`arrow_schema_of_parquet` for its own
-    schema diff."""
+    schema is that of its first data file and its row groups are summed
+    over its data files (names starting with ``_`` or ``.`` are skipped, as
+    Spark skips them). A footer that carries Spark's own schema record is
+    read from that record, as Spark's inference does (an INT96 column is a
+    ``TimestampType``, not the naive nanosecond timestamp Arrow sees). Any
+    other footer is converted from Arrow, with zone-less timestamps as
+    ``TimestampNTZType``, again as Spark infers them. The WAL reader keeps
+    :func:`arrow_schema_of_parquet` for its own schema diff."""
     import json
     import os
 
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
+    files = [path]
     if os.path.isdir(path):
-        first = min(f for f in os.listdir(path) if not f.startswith(("_", ".")))
-        path = os.path.join(path, first)
-    footer = pq.read_schema(path)
+        files = sorted(
+            os.path.join(path, f) for f in os.listdir(path) if not f.startswith(("_", "."))
+        )
+    metas = [pq.read_metadata(f) for f in files]
+    row_groups = sum(m.num_row_groups for m in metas)
+    footer = metas[0].schema.to_arrow_schema()
     recorded = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
     if recorded is not None:
-        return T.StructType.fromJson(json.loads(recorded))
-    return from_arrow_schema(footer, prefer_timestamp_ntz=True)
+        return T.StructType.fromJson(json.loads(recorded)), row_groups
+    return from_arrow_schema(footer, prefer_timestamp_ntz=True), row_groups
