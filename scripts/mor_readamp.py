@@ -63,7 +63,11 @@ def main() -> None:
     from trde703_openfoodfacts_etl_spark import build_session
     from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA
     from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments_spark
-    from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable, bucket_expr
+    from trde703_openfoodfacts_etl_spark.sources.lake import (
+        LakeTable,
+        bucket_expr,
+        distinct_files,
+    )
     from trde703_openfoodfacts_etl_spark.streaming.pipeline import (
         list_segments,
         run_incremental,
@@ -183,10 +187,9 @@ def main() -> None:
         run_incremental(ab_lake, wal_d, stream_id="append",
                         segments_per_batch=100, mode="mor")
         snap = ab_lake.snapshot()
-        drows = sum(int(fe.get("rows") or 0) for bi in snap["buckets"].values()
-                    for fe in bi["files"] if fe.get("delta"))
-        brows = sum(int(fe.get("rows") or 0) for bi in snap["buckets"].values()
-                    for fe in bi["files"] if not fe.get("delta"))
+        files = [fe for fe, _ in distinct_files(snap).values()]
+        drows = sum(int(fe.get("rows") or 0) for fe in files if fe.get("delta"))
+        brows = sum(int(fe.get("rows") or 0) for fe in files if not fe.get("delta"))
 
         def _scan():
             t0 = time.time()

@@ -24,7 +24,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from helpers import build_jobs, plans_run_under, python_rdd_scans  # noqa: E402
 from trde703_openfoodfacts_etl_spark.schema import TRANSCRIPT_SCHEMA  # noqa: E402
 from trde703_openfoodfacts_etl_spark.sources.genfeed import generate_segments  # noqa: E402
-from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable  # noqa: E402
+from trde703_openfoodfacts_etl_spark.sources.lake import LakeTable, distinct_files  # noqa: E402
 from trde703_openfoodfacts_etl_spark.streaming.pipeline import (  # noqa: E402
     list_segments,
     read_batch,
@@ -109,20 +109,31 @@ def test_first_cow_batch_into_empty_lake_scans_no_python_rows(spark, tmp_path):
 
 
 def _data_files(lake) -> int:
-    return sum(len(b["files"]) for b in lake.snapshot()["buckets"].values())
+    """Distinct data files of the head snapshot: every bucket a MOR batch
+    touched lists that batch's shared delta file."""
+    return len(distinct_files(lake.snapshot()))
 
 
 def test_lake_read_lists_its_files_without_a_spark_job(spark, tmp_path):
     """A MOR lake whose read names more files than Spark's default listing
-    threshold, before and after compaction: 40 buckets, 2 delta batches."""
+    threshold: 40 compacted buckets under a shared delta batch, then with
+    half the buckets compacted again (the delta file's scan keeps the rows
+    of the buckets that still list it), then fully compacted."""
     wal = str(tmp_path / "wal")
     generate_segments(wal, n_convs=400, n_events=2_000, n_segments=2, seed=4)
     lake = LakeTable.create(spark, str(tmp_path / "lake"), TRANSCRIPT_SCHEMA, num_buckets=40)
-    run_incremental(lake, wal, mode="mor")
+    run_incremental(lake, wal, mode="mor", max_batches=1)
+    lake.compact()
+    run_incremental(lake, wal, mode="mor")  # resumes with the second segment
+    assert any(b.get("delta") for b in lake.snapshot()["buckets"].values())
     assert _data_files(lake) > SPARK_DEFAULT_LISTING_THRESHOLD
     assert build_jobs(spark, "mor-read", lake.read) == 0
     assert build_jobs(spark, "mor-read-meta", lambda: lake.read(
         include_deleted=True, with_meta=True)) == 0
+    lake.compact(buckets=list(range(20)))
+    assert any(b.get("delta") for b in lake.snapshot()["buckets"].values())
+    assert _data_files(lake) > SPARK_DEFAULT_LISTING_THRESHOLD
+    assert build_jobs(spark, "partly-compacted-read", lake.read) == 0
     lake.compact()
     assert not any(b.get("delta") for b in lake.snapshot()["buckets"].values())
     assert _data_files(lake) > SPARK_DEFAULT_LISTING_THRESHOLD

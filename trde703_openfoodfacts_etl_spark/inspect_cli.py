@@ -16,7 +16,7 @@ import json
 
 def inspect_lake(root: str) -> dict:
     """Manifest-only structural report of a lake table."""
-    from .sources.lake import LakeTable
+    from .sources.lake import LakeTable, bucket_bytes, distinct_files
     from .schema import schema_from_json
 
     lake = LakeTable(None, root)
@@ -37,16 +37,21 @@ def inspect_lake(root: str) -> dict:
         st = schema_from_json(sj)
         schemas[schema_id] = [f"{f.name}: {f.dataType.simpleString()}" for f in st.fields]
 
-    buckets = {}
-    for b, info in sorted(latest["buckets"].items(), key=lambda kv: int(kv[0])):
-        buckets[b] = {
-            "files": len(info.get("files", [])),
+    # per bucket: the files it lists (a shared merge-on-read delta file is
+    # listed by every bucket its batch touched) and its share of their bytes
+    shares = bucket_bytes(latest)
+    buckets = {
+        b: {
+            "files": len(info["files"]),
             "rows": info.get("rows"),
             "tombstones": info.get("tombstones", 0),
             "hwm_lsn": info.get("hwm_lsn"),
             "delta": bool(info.get("delta")),
-            "bytes": sum(fe.get("bytes", 0) for fe in info.get("files", [])),
+            "bytes": round(shares[int(b)]),
         }
+        for b, info in sorted(latest["buckets"].items(), key=lambda kv: int(kv[0]))
+    }
+    files = distinct_files(latest)
 
     return {
         "root": root,
@@ -60,6 +65,8 @@ def inspect_lake(root: str) -> dict:
         "stream_hwm": latest.get("stream_hwm", {}),
         "watermark_ts": latest.get("watermark_ts"),
         "buckets": buckets,
+        "files": len(files),
+        "bytes": sum(fe["bytes"] for fe, _ in files.values()),
         "lineage": [
             {
                 "snapshot_id": s["snapshot_id"],
@@ -93,9 +100,8 @@ def main() -> None:
           f"watermark_ts: {rpt['watermark_ts']}")
     live = sum(b["rows"] or 0 for b in rpt["buckets"].values())
     dead = sum(b["tombstones"] for b in rpt["buckets"].values())
-    files = sum(b["files"] for b in rpt["buckets"].values())
-    size = sum(b["bytes"] for b in rpt["buckets"].values())
-    print(f"data: {live} live rows, {dead} tombstones, {files} files, {size} bytes")
+    print(f"data: {live} live rows, {dead} tombstones, {rpt['files']} files, "
+          f"{rpt['bytes']} bytes")
 
 
 if __name__ == "__main__":

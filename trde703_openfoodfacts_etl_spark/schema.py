@@ -168,10 +168,17 @@ def conform(df, target: T.StructType):
 
     The Spark-first lift of the reference's defensive projection
     (etl/bronze_to_silver.py:59-181): one declarative select Catalyst can
-    prune/push through, no per-column ifs at runtime.
+    prune/push through, no per-column ifs at runtime. A frame whose column
+    names and types already are ``target``'s, in order, is returned as is:
+    the identity select plans to the same executed plan, but costs a cast
+    and an alias (py4j calls) per column on every read.
     """
     from pyspark.sql import functions as F
 
+    if [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in target.fields
+    ]:
+        return df
     cols = set(df.columns)
     exprs = []
     for f in target.fields:

@@ -6,7 +6,11 @@ semantics the north rule needs itself (see SURVEY.md §7.1):
 - **data layout**: parquet files under ``data/epoch=<snapshot>/_bucket=<b>/``;
   the table is hash-bucketed on ``conv_id`` (``pmod(xxhash64(conv_id), P)``)
   so a whole conversation co-locates in one bucket → manifest-driven
-  partition pruning for merges and conversation-local queries;
+  partition pruning for merges and conversation-local queries. A
+  merge-on-read delta batch is the exception: it writes one key-sorted file
+  per write task straight under ``data/epoch=<snapshot>/``, and every bucket
+  the batch touched lists that shared file; a read keeps only the rows of
+  the buckets that list it;
 - **snapshots**: numbered JSON manifests under ``manifests/``; a commit is a
   write-temp + atomic ``os.rename``; readers resolve ``latest = max(id)``.
   Old snapshots stay readable (time travel) until vacuumed;
@@ -151,6 +155,29 @@ def _bucket_entry(files: list[dict], hwm_lsn: int) -> dict:
     }
 
 
+def distinct_files(snap: dict) -> dict[str, tuple[dict, set[int]]]:
+    """Each data file a snapshot names, once: path → (its manifest entry,
+    the buckets that list it). A merge-on-read delta file is listed by
+    every bucket its batch touched, any other file by its one bucket; row,
+    byte and file counts over a snapshot go through here so that a shared
+    file counts once."""
+    out: dict[str, tuple[dict, set[int]]] = {}
+    for b, binfo in snap["buckets"].items():
+        for fe in binfo["files"]:
+            out.setdefault(fe["path"], (fe, set()))[1].add(int(b))
+    return out
+
+
+def bucket_bytes(snap: dict) -> dict[int, float]:
+    """Bytes per bucket, a shared delta file's bytes split evenly over the
+    buckets that list it, so the buckets add up to the table."""
+    out = {int(b): 0.0 for b in snap["buckets"]}
+    for fe, listing in distinct_files(snap).values():
+        for b in listing:
+            out[b] += fe["bytes"] / len(listing)
+    return out
+
+
 def _physical_schema(user_schema: T.StructType) -> T.StructType:
     return T.StructType(
         list(user_schema.fields)
@@ -277,6 +304,14 @@ class LakeTable:
         schema, unions by name. Bucket pruning = simply not listing files of
         other buckets (manifest-driven partition pruning).
 
+        A delta file may hold rows of several buckets (a merge-on-read batch
+        writes one file per write task, listed by every bucket it touched).
+        Each delta path is read once, keeping the rows of the requested
+        buckets that list it: the scan gets a bucket filter only when some
+        bucket of the snapshot does not list the file (a partial
+        :meth:`compact`, a copy-on-write batch over a merge-on-read lake, a
+        bucket-pruned read, or an older per-bucket delta file).
+
         ``snap`` overrides the committed snapshot — the merge passes its
         in-flight (schema-evolved, not yet committed) snapshot so current
         rows conform to the batch's unified schema.
@@ -287,36 +322,46 @@ class LakeTable:
         snap = snap or self.snapshot(snapshot_id)
         unified = self.user_schema(snap)
         phys_unified = _physical_schema(unified)
+        every = {int(b) for b in snap["buckets"]}
+        wanted = every if buckets is None else every & set(buckets)
         # one pass over the file entries, each classified as clean (its
         # bucket has no pending deltas), base (the key-unique compacted
         # part of a delta bucket) or delta (appended, delta-tagged): only
         # delta buckets pay the merge-on-read LWW aggregate, clean buckets
-        # stream straight through (union afterwards)
-        clean: dict[int, list[str]] = {}
-        base: dict[int, list[str]] = {}
-        delta: dict[int, list[str]] = {}
+        # stream straight through (union afterwards). Groups are keyed by
+        # (schema_id, buckets to keep), the latter None for a whole file.
+        clean: dict[tuple, list[str]] = {}
+        base: dict[tuple, list[str]] = {}
+        delta: dict[tuple, list[str]] = {}
         base_rows = delta_rows = 0
-        for b, binfo in snap["buckets"].items():
-            if buckets is not None and int(b) not in buckets:
+        for path, (fe, listing) in distinct_files(snap).items():
+            keep = listing & wanted
+            if not keep:
                 continue
-            for fe in binfo["files"]:
-                if not binfo.get("delta"):
-                    group = clean
-                elif fe.get("delta"):
-                    group = delta
-                    delta_rows += fe["rows"]
-                else:
-                    group = base
-                    base_rows += fe["rows"]
-                group.setdefault(fe["schema_id"], []).append(
-                    os.path.join(self.root, fe["path"])
-                )
+            if fe.get("delta"):
+                group = delta
+                delta_rows += fe["rows"]
+            elif any(snap["buckets"][str(b)].get("delta") for b in listing):
+                group = base
+                base_rows += fe["rows"]
+            else:
+                group = clean
+            # only a delta file holds rows of several buckets
+            whole = keep == every or not fe.get("delta")
+            group.setdefault(
+                (fe["schema_id"], None if whole else tuple(sorted(keep))), []
+            ).append(os.path.join(self.root, path))
 
-        def _assemble(groups_: dict[int, list[str]]):
+        def _assemble(groups_: dict[tuple, list[str]]):
             df_ = None
-            for sid_, paths in sorted(groups_.items()):
+            for (sid_, keep), paths in sorted(
+                groups_.items(), key=lambda kv: (kv[0][0], kv[0][1] or ())
+            ):
                 phys = _physical_schema(schema_from_json(snap["schemas"][str(sid_)]))
-                part = conform(self.spark.read.schema(phys).parquet(*paths), phys_unified)
+                part = self.spark.read.schema(phys).parquet(*paths)
+                if keep is not None:
+                    part = part.filter(bucket_expr(snap["num_buckets"]).isin(*keep))
+                part = conform(part, phys_unified)
                 df_ = part if df_ is None else df_.unionByName(part)
             return df_
 
@@ -363,8 +408,8 @@ class LakeTable:
                     )
             else:
                 merged = {
-                    sid_: base.get(sid_, []) + delta.get(sid_, [])
-                    for sid_ in base.keys() | delta.keys()
+                    key: base.get(key, []) + delta.get(key, [])
+                    for key in base.keys() | delta.keys()
                 }
                 ddf = lww_reduce(_assemble(merged), KEY_COLS, nonkey)
             df = ddf if df is None else df.unionByName(ddf)
@@ -389,19 +434,31 @@ class LakeTable:
         snapshot_id: int,
         schema_id: int,
         pre_partitioned: bool = False,
-    ) -> dict[int, list[dict]]:
-        """Write a physical DataFrame (user cols + meta cols + _bucket) as
-        one parquet file per bucket under data/epoch=<snapshot_id>/, return
-        {bucket: [file entries]} for the manifest. Each entry carries the
-        file's footer stats: physical ``rows``, ``bytes``, ``tombstones``
-        (the ``_row_hash`` null count) and ``max_lsn`` — everything the
-        manifest's per-bucket stats derive from, with no extra Spark job.
+    ) -> dict[int | None, list[dict]]:
+        """Write a physical DataFrame (user cols + meta cols, plus _bucket
+        for a bucketed write) under data/epoch=<snapshot_id>/ and return
+        {bucket: [file entries]} for the manifest, each written file once.
+        Each entry carries the file's footer stats: physical ``rows``,
+        ``bytes``, ``tombstones`` (the ``_row_hash`` null count) and
+        ``max_lsn`` — everything the manifest's per-bucket stats derive
+        from, with no extra Spark job. This is the only method that writes
+        lake data files.
 
-        ``pre_partitioned=True`` means the caller's plan is already
-        bucket-clustered (e.g. the merge reuses its aggregate exchange) — no
-        extra shuffle is added; each task's rows split into per-bucket files
-        by the dynamic-partition writer. Otherwise one repartition by bucket
-        puts each bucket in one task."""
+        With a ``_bucket`` column the write is bucketed: one file per bucket
+        under ``_bucket=<b>/``. ``pre_partitioned=True`` means the caller's
+        plan is already bucket-clustered (e.g. the merge reuses its
+        aggregate exchange) — no extra shuffle is added; each task's rows
+        split into per-bucket files by the dynamic-partition writer.
+        Otherwise one repartition by bucket puts each bucket in one task.
+
+        Without a ``_bucket`` column each write task writes one key-sorted
+        file straight under the epoch dir, whatever buckets its rows fall
+        in; the result is ``{None: [entries]}`` and the caller names the
+        buckets that list them (a merge-on-read delta batch).
+
+        Spark's first write task writes a schema-only file when it gets no
+        rows; such files are removed, and so is an epoch dir left with no
+        file (a fully gated batch), since no manifest will name it."""
         # unique suffix: two writers racing toward the same child snapshot id
         # must never share a data directory (the CAS on the manifest decides
         # the winner; the loser's files stay orphaned until vacuum)
@@ -409,30 +466,43 @@ class LakeTable:
             DATA_DIR, f"epoch={snapshot_id}-{uuid.uuid4().hex[:8]}"
         )
         out = os.path.join(self.root, rel_epoch)
-        writer = df if pre_partitioned else df.repartition(META_BUCKET)
-        (
+        bucketed = META_BUCKET in df.columns
+        if bucketed:
             # prefixing the sort with the partition column satisfies the file
             # writer's required ordering, so Spark skips its own re-sort and
             # files stay key-sorted (stable (conv_id, turn_idx) reads).
-            writer.sortWithinPartitions(META_BUCKET, *KEY_COLS)
-            .write.mode("overwrite")
-            .partitionBy(META_BUCKET)
+            writer = (
+                (df if pre_partitioned else df.repartition(META_BUCKET))
+                .sortWithinPartitions(META_BUCKET, *KEY_COLS)
+                .write.partitionBy(META_BUCKET)
+            )
+        else:
+            writer = df.sortWithinPartitions(*KEY_COLS).write
+        (
+            writer.mode("overwrite")
             # no _SUCCESS marker: the manifest CAS is the lake's commit
             # record, and vacuum removes only the files manifests name
             .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
             .parquet(out)
         )
-        entries: dict[int, list[dict]] = {}
-        for d in self.io.list_names(out):
-            if not d.startswith(f"{META_BUCKET}="):
-                continue
-            b = int(d.split("=")[1])
+        if bucketed:
+            dirs = {
+                int(d.split("=")[1]): d
+                for d in self.io.list_names(out)
+                if d.startswith(f"{META_BUCKET}=")
+            }
+        else:
+            dirs = {None: ""}
+        entries: dict[int | None, list[dict]] = {}
+        for b, d in dirs.items():
             for fn in self.io.list_names(os.path.join(out, d)):
                 if not fn.endswith(".parquet"):
                     continue
-                rows, nbytes, tombstones, max_lsn = self.io.parquet_stats(
-                    os.path.join(out, d, fn)
-                )
+                path = os.path.join(out, d, fn)
+                rows, nbytes, tombstones, max_lsn = self.io.parquet_stats(path)
+                if rows == 0:
+                    self.io.remove_data_file(path, out)
+                    continue
                 entries.setdefault(b, []).append(
                     {
                         "path": os.path.join(rel_epoch, d, fn),
@@ -463,7 +533,8 @@ class LakeTable:
         watermark_ts: float | None = None,
     ) -> dict:
         """Produce + atomically write the child snapshot: replace (COW) or
-        append (MOR delta) file lists for written buckets, bump per-bucket
+        append (MOR delta; one shared file may be appended to several
+        buckets) file lists for written buckets, bump per-bucket
         high-watermark LSN, record the applied batch id (idempotence marker)
         and batch metrics. A replaced bucket's live-row and tombstone counts
         are summed from its file entries' footer stats."""
@@ -526,15 +597,19 @@ class LakeTable:
         return sum(b.get("rows") or 0 for b in snap["buckets"].values())
 
     def delta_pressure(self) -> dict[int, int]:
-        """Delta file count per MOR bucket (compaction-policy signal)."""
+        """Writes per MOR bucket (compaction-policy signal): the distinct
+        directories its files sit in, i.e. its compacted base, if any, plus
+        one per delta batch since. A delta batch counts once however many
+        write tasks wrote its shared files, so the signal counts batches,
+        not cores or batch size."""
         return {
-            int(b): len(binfo["files"])
+            int(b): len({os.path.dirname(fe["path"]) for fe in binfo["files"]})
             for b, binfo in self.snapshot()["buckets"].items()
             if binfo.get("delta")
         }
 
     def maybe_compact(self, max_delta_files: int = 8) -> dict | None:
-        """Auto-compaction policy: fold buckets whose delta file count
+        """Auto-compaction policy: fold buckets whose :meth:`delta_pressure`
         exceeds the threshold (read amplification bound). In production this
         runs as an async maintenance job; inline here."""
         todo = [b for b, n in self.delta_pressure().items() if n > max_delta_files]
@@ -665,13 +740,14 @@ class LakeTable:
         would be futile — prevents a repeated grow-to-cap storm on a
         degenerate hot-key-only table)."""
         snap = self.snapshot()
-        occupied = [b for b in snap["buckets"].values() if b["files"]]
+        occupied = [int(b) for b, binfo in snap["buckets"].items() if binfo["files"]]
         if not occupied:
             return None
         cur = int(snap["num_buckets"])
         if len(occupied) * 2 < cur:
             return None
-        sizes = sorted(sum(fe["bytes"] for fe in b["files"]) for b in occupied)
+        per_bucket = bucket_bytes(snap)
+        sizes = sorted(per_bucket[b] for b in occupied)
         if sizes[len(sizes) // 2] <= target_bucket_bytes:
             return None
         if cur >= REBUCKET_MAX_BUCKETS:

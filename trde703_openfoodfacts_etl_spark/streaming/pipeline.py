@@ -189,8 +189,9 @@ def run_incremental(
     (:func:`_batch_step`), right after :func:`read_batch` returns.
     ``transform`` (optional) maps the raw batch DataFrame → enriched batch
     (e.g. vectorized text normalization / quality columns) before the merge.
-    ``auto_compact_after`` (MOR): fold buckets down once their delta file
-    count exceeds the threshold (bounds read amplification during ingest).
+    ``auto_compact_after`` (MOR): fold buckets down once their write count
+    (``LakeTable.delta_pressure``: the compacted base plus one per delta
+    batch) exceeds the threshold (bounds read amplification during ingest).
     ``auto_vacuum_every``: every K applied batches, drop snapshots (and the
     data files only they reference) beyond the newest
     ``vacuum_keep_snapshots`` — long-running ingest keeps a bounded file
@@ -200,8 +201,9 @@ def run_incremental(
     ``auto_rebucket_target_bytes``: after each batch, grow the bucket count
     (``LakeTable.maybe_rebucket``, geometric) once the median bytes per
     occupied bucket crosses the target — the table's layout keeps pace with
-    unbounded growth without operator intervention. Every batch is one file
-    per bucket per epoch.
+    unbounded growth without operator intervention. A COW batch writes one
+    file per rewritten bucket per epoch; a MOR batch writes one file per
+    write task, listed by every bucket it touched.
     """
     segs = list_segments(segments_dir)
     hwm = lake.last_segment_hwm(stream_id)
